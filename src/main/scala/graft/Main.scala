@@ -147,9 +147,12 @@ import org.apache.spark.sql.functions._
   * `(id, vec)` columns; override with `idcol=` / `veccol=`.
   *
   * Unlike the reference — which runs one Spark job per rule and eagerly
-  * counts each result (tag_computer.py:60) — every run here is: one
-  * scan per source table, one merge shuffle, one upsert, regardless of
-  * rule count.
+  * counts each result (tag_computer.py:60) — every run here is,
+  * regardless of rule count: one quality-gate aggregation and one tag
+  * scan per source table, one merge shuffle, a pruned snapshot key
+  * probe (incremental runs) or snapshot merge (tag subsets), one
+  * upsert, one pruned validation read, and two stats actions over the
+  * checkpointed result.
   */
 object Main {
 
@@ -230,42 +233,45 @@ object Main {
     require(perTable.nonEmpty, "every source table failed its quality gate")
 
     val assignments = perTable.reduce(_.unionByName(_)).localCheckpoint()
-    val profiles = TagMerger.memoryMerge(Seq(assignments))
+    val profiles = TagMerger.memoryMerge(Seq(assignments)).localCheckpoint()
 
     // incremental = only users absent from the snapshot
     // (main_scheduler.run_incremental_compute); a tag subset merges
     // with existing tags so out-of-scope tags survive. keysFor prunes
     // the snapshot side to the buckets this run's users hash into —
     // a small nightly delta probes a few buckets of a billions-row
-    // snapshot instead of scanning every live file
+    // snapshot instead of scanning every live file. Profiles and users
+    // are checkpointed: the key probe, upsert, validation and stats all
+    // read them, and must not re-run the merge shuffle or the anti-join
     val scopedUsers =
-      if (command == "incremental") profiles.join(store.keysFor(profiles), Seq("user_id"), "left_anti")
+      if (command == "incremental")
+        profiles.join(store.keysFor(profiles), Seq("user_id"), "left_anti").localCheckpoint()
       else profiles
-    val result = (tagScope, store.read()) match {
-      case (Some(_), Some(existing)) =>
+    // the snapshot is only read where a tag subset merges with it
+    val snap = tagScope.flatMap(_ => store.read()) match {
+      case Some(existing) =>
         TagMerger.mergeWithExisting(scopedUsers, existing.select("user_id", "tag_ids"))
-      case _ => scopedUsers
+          .localCheckpoint()
+      case None => scopedUsers
     }
-
-    val snap = result.localCheckpoint()
     store.upsert(snap)
     val missing = store.validateWrite(snap)
 
     // stats reflect the WRITTEN delta (the reference scheduler reports
     // per-run counts): an incremental run must not report hits for
     // users its anti-join excluded, and a tag-subset run must not count
-    // the whole merged snapshot as "tagged this run" — so every number
-    // below is restricted to the users this run actually touched
-    val touched = scopedUsers.select("user_id")
-    val written = snap.join(touched, Seq("user_id"), "left_semi")
-    val hits = assignments.join(touched, Seq("user_id"), "left_semi")
+    // the whole merged snapshot as "tagged this run". `snap` holds
+    // exactly the users this run touched (mergeWithExisting left-joins
+    // from scopedUsers), so it is the written delta; hits restrict the
+    // assignments to those users
+    val hits = assignments.join(scopedUsers.select("user_id"), Seq("user_id"), "left_semi")
       .groupBy("tag_id").count().collect()
       .map(r => r.getAs[Number]("tag_id").intValue() -> r.getLong(1)).toMap
+    val written = snap.agg(count(lit(1)), coalesce(sum(size(col("tag_ids"))), lit(0L))).head()
     RunStats(
       command = command,
-      usersTagged = written.count(),
-      totalAssignments = written.agg(coalesce(sum(size(col("tag_ids"))), lit(0L)))
-        .head().getLong(0),
+      usersTagged = written.getLong(0),
+      totalAssignments = written.getLong(1),
       perTagHits = hits,
       invalidRules = invalid,
       skippedTables = skipped.result(),

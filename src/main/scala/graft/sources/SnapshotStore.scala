@@ -1,10 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FileRelation
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 /** Keyed snapshot store with UPSERT semantics — the Spark-native
   * stand-in for the reference's MySQL `user_tags` table and its
@@ -39,6 +42,19 @@ import java.nio.charset.StandardCharsets
   * probed by band key) reads O(probed fraction) instead of O(store)
   * per query batch.
   *
+  * The manifest is also the store's FILE INDEX. Each data generation
+  * (one `data-*` dir, one write) carries a `.files` sidecar, written
+  * before the manifest commit that publishes it: the generation's
+  * Spark schema and every data file's byte size and modification
+  * time. A read resolves the manifest's file list against those
+  * sidecars and opens a parquet relation directly — no listing job
+  * (Spark lists named files in a job with one task per file past 32
+  * paths) and no footer-merge job; the schema is the generations'
+  * schemas merged exactly as `mergeSchema` merges footers. A read
+  * naming any generation without a sidecar (a store written before
+  * the sidecar existed) falls back to the `mergeSchema` parquet read
+  * for all its files, so old stores read back identically.
+  *
   * On a lakehouse table format the same calls map to `MERGE INTO` —
   * the API is the contract, not the file layout.
   */
@@ -49,6 +65,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private val PartDir = "snap_part"
   private val ManifestPrefix = "manifest-"
   private val BloomFile = ".blooms"
+  private val FilesFile = ".files"
   /** Commit-conflict retries for [[upsert]]: enough for realistic
     * writer fan-in (each retry re-merges against the winner's state),
     * small enough that a livelocked store fails loudly. */
@@ -176,40 +193,104 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   }
 
   /** Write `df` (already bucketed/partitioned) into a fresh immutable
-    * data dir; return bucket → relative file paths. With a partition
-    * column the files sit one level deeper (`snap_bucket=B/snap_part=V/…`),
-    * which is what [[readPartitions]] prunes on. */
+    * data dir with its bloom and file-index sidecars; return bucket →
+    * relative file paths. With a partition column the files sit one
+    * level deeper (`snap_bucket=B/snap_part=V/…`), which is what
+    * [[readPartitions]] prunes on. */
   private def writeData(bucketed: DataFrame, pcol: Option[String]): Map[Int, Seq[String]] = {
     val dataDir = s"data-${java.util.UUID.randomUUID}"
     val layoutCols = BucketCol +: (if (pcol.isDefined) Seq(PartDir) else Nil)
-    // cluster the write by the layout key when a partition column is
-    // in play: partitionBy fans each task out to every (bucket, value)
-    // dir it holds rows for, so an unshuffled bulk load writes
-    // tasks × dirs files (measured: a 450k-doc band-store seed began
-    // writing ~65k small files). One exchange keyed on the layout
-    // writes exactly one file per populated (bucket, value) — the
-    // same price every clustered table write pays. Without a
-    // partition column the dir count equals the touched buckets and
-    // the fan-out is already bounded; compact() handles the rest.
+    // partitionBy fans each task out to every layout dir it holds rows
+    // for, so an unclustered write leaves tasks × dirs files. With a
+    // partition column that is unbounded (measured: a 450k-doc
+    // band-store seed began writing ~65k small files), so the write is
+    // clustered here: one exchange keyed on the layout writes exactly
+    // one file per populated (bucket, value). Without one, the caller
+    // clusters by bucket where the fan-out matters — the copy-on-write
+    // merge rebalances its rewrite, inserts and compaction repartition
+    // by bucket — and compact() folds whatever is left.
     val clustered =
       if (pcol.isDefined) bucketed.repartition(col(BucketCol), col(PartDir))
       else bucketed
     clustered.write.partitionBy(layoutCols: _*).parquet(s"$path/$dataDir")
     writeBlooms(bucketed, dataDir)
     val out = scala.collection.mutable.Map.empty[Int, Vector[String]]
+    val written = Vector.newBuilder[FileStatus]
     val it = fs.listFiles(new Path(s"$path/$dataDir"), true)
     val prefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
     while (it.hasNext) {
-      val f = it.next().getPath
+      val st = it.next()
+      val f = st.getPath
       if (f.getName.endsWith(".parquet")) {
         val rel = f.toUri.getPath.stripPrefix(prefix)
         val bucket = rel.split('/').collectFirst {
           case seg if seg.startsWith(s"$BucketCol=") => seg.stripPrefix(s"$BucketCol=").toInt
         }.getOrElse(sys.error(s"no bucket segment in $rel"))
         out(bucket) = out.getOrElse(bucket, Vector.empty) :+ rel
+        written += st
       }
     }
+    // partitionBy strips the layout columns from the files: the data
+    // schema every footer of this generation carries is the rest
+    writeFileIndex(dataDir,
+      StructType(bucketed.schema.filterNot(f => layoutCols.contains(f.name))), written.result())
     out.toMap
+  }
+
+  // ---- file-index sidecar: manifest-resolved reads ----
+
+  private final case class Generation(schema: StructType, files: Map[String, (Long, Long)])
+
+  /** Persist one generation's file index: `#schema=<Spark schema JSON>`,
+    * then `file<TAB>bytes<TAB>mtime` per data file, paths relative to
+    * the generation dir. */
+  private def writeFileIndex(dataDir: String, schema: StructType, files: Seq[FileStatus]): Unit = {
+    val dirPath = fs.makeQualified(new Path(s"$path/$dataDir")).toUri.getPath.stripSuffix("/") + "/"
+    val body = (s"#schema=${schema.json}" +: files.map { st =>
+      s"${st.getPath.toUri.getPath.stripPrefix(dirPath)}\t${st.getLen}\t${st.getModificationTime}"
+    }).mkString("\n")
+    val out = fs.create(new Path(s"$path/$dataDir/$FilesFile"), true)
+    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** One generation's file index; None when the sidecar is missing or
+    * unreadable (callers fall back to the listing read). */
+  private def generation(dataDir: String): Option[Generation] =
+    try {
+      val in = fs.open(new Path(s"$path/$dataDir/$FilesFile"))
+      val lines = try new String(in.readAllBytes(), StandardCharsets.UTF_8).linesIterator.toVector
+        finally in.close()
+      if (!lines.headOption.exists(_.startsWith("#schema="))) None
+      else Some(Generation(
+        DataType.fromJson(lines.head.stripPrefix("#schema=")).asInstanceOf[StructType],
+        lines.tail.filter(_.nonEmpty).map { l =>
+          val Array(f, len, mtime) = l.split("\t")
+          f -> (len.toLong, mtime.toLong)
+        }.toMap))
+    } catch { case NonFatal(_) => None }
+
+  private def generationDir(file: String): String = file.takeWhile(_ != '/')
+
+  /** The relation over `files` built from their generations' sidecars,
+    * or None when any generation lacks one (or lacks one of the files).
+    * Generations merge in dir-name order, which is the file-path order
+    * a `mergeSchema` read folds footers in (a generation's files share
+    * its dir prefix and one schema). */
+  private def resolvedRead(files: Seq[String]): Option[DataFrame] = {
+    val dirs = files.map(generationDir).distinct.sorted
+    val gens = dirs.flatMap(d => generation(d).map(d -> _)).toMap
+    if (gens.size < dirs.size) return None
+    val fsys = fs
+    val blockSize = fsys.getDefaultBlockSize(new Path(path))
+    val statuses = files.map { f =>
+      val d = generationDir(f)
+      gens(d).files.get(f.substring(d.length + 1)).map { case (len, mtime) =>
+        new FileStatus(len, false, 1, blockSize, mtime, fsys.makeQualified(new Path(s"$path/$f")))
+      }
+    }
+    if (statuses.exists(_.isEmpty)) None
+    else Some(FileRelation.parquet(spark, statuses.flatten,
+      FileRelation.mergeSchemas(spark, dirs.map(gens(_).schema))))
   }
 
   // mergeSchema: a snapshot legitimately mixes file generations
@@ -218,19 +299,21 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   // footers — a plain read takes ONE footer's schema and silently
   // drops or surfaces the evolved column depending on file order.
   // Merging unions the footers (missing columns null), which is the
-  // same contract upsert's allowMissingColumns union promises.
+  // same contract upsert's allowMissingColumns union promises. The
+  // sidecar-resolved relation merges the same way without the jobs.
   private def readFiles(files: Seq[String]): Option[DataFrame] =
     if (files.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => s"$path/$f"): _*))
+    else Some(resolvedRead(files).getOrElse(
+      spark.read.option("mergeSchema", "true").parquet(files.map(f => s"$path/$f"): _*)))
 
-  // key-column-only read WITHOUT schema merging: the key column is the
-  // store's identity and exists in every file generation by
-  // construction, so the collision probe skips the per-footer merge
+  // key-column-only read. The fallback skips schema merging: the key
+  // column is the store's identity and exists in every file generation
+  // by construction, so the collision probe skips the per-footer merge
   // pass a wide mixed-generation file set would otherwise pay
   private def readKeys(files: Seq[String]): Option[DataFrame] =
     if (files.isEmpty) None
-    else Some(spark.read.parquet(files.map(f => s"$path/$f"): _*).select(key))
+    else Some(resolvedRead(files).getOrElse(
+      spark.read.parquet(files.map(f => s"$path/$f"): _*)).select(key))
 
   // ---- bloom sidecar: O(delta) collision probes ----
   //
@@ -360,23 +443,25 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * bloom-cleared). Spec/monitoring surface. */
   private[graft] var lastProbeStats: (Int, Int) = (0, 0)
 
-  /** Touched buckets PROVABLY free of key collisions: every live
-    * generation of the bucket has a readable bloom and no delta key
-    * might be contained. Anything uncertain (oversized delta, missing
-    * sidecar, null key) stays un-cleared and takes the key scan. */
-  private def bloomClearedBuckets(incoming: DataFrame, touched: Set[Int],
-                                  mapping: Map[Int, Seq[String]]): Set[Int] = {
+  /** The delta's touched buckets and, among them, those PROVABLY free
+    * of key collisions: every live generation of the bucket has a
+    * readable bloom and no delta key might be contained. Both come from
+    * ONE bounded collect of the distinct (bucket, key) pairs; a delta
+    * past [[ProbeKeyBound]] keys collects its buckets alone and clears
+    * nothing. Anything uncertain (missing sidecar, null key) stays
+    * un-cleared and takes the key scan. */
+  private def touchedAndCleared(incoming: DataFrame,
+                                mapping: Map[Int, Seq[String]]): (Set[Int], Set[Int]) = {
     val pairs = incoming.select(col(BucketCol), col(key)).distinct()
       .limit(ProbeKeyBound + 1).collect()
-    if (pairs.length > ProbeKeyBound) return Set.empty
+    if (pairs.length > ProbeKeyBound)
+      return (incoming.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet, Set.empty)
     val keysByBucket = pairs.groupBy(_.getInt(0))
       .map { case (b, rs) => b -> rs.map(r => if (r.isNullAt(1)) null else r.get(1)) }
     val bloomCache = scala.collection.mutable.Map.empty[String, Option[Map[Int, BloomFilter]]]
     def bloomsOf(dir: String) = bloomCache.getOrElseUpdate(dir, loadBlooms(dir))
-    touched.filter { b =>
-      val dirs = mapping.getOrElse(b, Nil).map(_.split('/').head).distinct
-      val ks = keysByBucket.getOrElse(b, Array.empty[Any])
-      ks.forall(_ != null) && dirs.forall { d =>
+    val cleared = keysByBucket.collect { case (b, ks) if ks.forall(_ != null) &&
+      mapping.getOrElse(b, Nil).map(generationDir).distinct.forall { d =>
         bloomsOf(d) match {
           case None => false // unknown generation → scan
           case Some(mp) => mp.get(b) match {
@@ -384,8 +469,9 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
             case Some(bf) => !ks.exists(bf.mightContain)
           }
         }
-      }
+      } => b
     }
+    (keysByBucket.keySet, cleared.toSet)
   }
 
   // ---- public API ----
@@ -536,10 +622,12 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   /** UPSERT: rows in `df` replace snapshot rows with the same key; all
     * other snapshot rows are kept (mysql_writer UPSERT semantics).
     * Reads ONLY the files of the buckets the incoming keys hash into
-    * (the touched-bucket list is a ≤`buckets`-element driver collect),
-    * merges with one key-partitioned anti-join + union, writes new
-    * files for those buckets, and publishes a manifest that reuses
-    * every untouched bucket's existing files verbatim.
+    * (the touched buckets come from the bounded (bucket, key) collect
+    * that feeds the bloom probe), merges with one key-partitioned
+    * anti-join + union evaluated once, writes one new file per
+    * rewritten bucket (more only when a bucket is too large for one
+    * task), and publishes a manifest that reuses every untouched
+    * bucket's existing files verbatim.
     *
     * Concurrent writers: the manifest publish detects a lost race and
     * the whole merge re-runs against the winner's state (bounded
@@ -561,8 +649,6 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       val bc = m.recordedBuckets.getOrElse(buckets)
       val pcol = m.recordedPcol
       val incoming = withPart(withBucket(df, bc), pcol)
-      val touched = incoming.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet
       // INSERT FAST PATH, decided per bucket: copy-on-write is only
       // needed where an incoming key actually replaces a stored row.
       // The sidecar blooms clear most buckets of a fresh-keyed delta
@@ -577,7 +663,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       // delta cost a 23 s full rewrite). Replays stay safe by
       // construction — a replayed batch's keys ARE present, so they
       // take the merge path and overwrite.
-      val cleared = bloomClearedBuckets(incoming, touched, m.mapping)
+      val (touched, cleared) = touchedAndCleared(incoming, m.mapping)
       val scanned = (touched -- cleared).toSeq.sorted
       lastProbeStats = (scanned.size, cleared.size)
       val colliding: Set[Int] = readKeys(scanned.flatMap(m.mapping.getOrElse(_, Nil))) match {
@@ -611,9 +697,19 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
           // later code version's batch_id) must land in the snapshot,
           // null-filled on kept rows — projecting incoming onto kept's
           // columns would silently drop it forever
-          writeData(kept.unionByName(
+          val rows = kept.unionByName(
             incoming.filter(col(BucketCol).isin(colliding.toSeq: _*)),
-            allowMissingColumns = true), pcol)
+            allowMissingColumns = true)
+          // checkpointed so the write and both bloom passes read ONE
+          // evaluation of the anti-join. Unpartitioned rows are
+          // rebalanced by bucket first: each bucket lands in one task
+          // (one file per bucket instead of one per task holding its
+          // rows), while AQE still coalesces a small rewrite into few
+          // tasks and splits a large one — a plain repartition(bucket)
+          // would cap a big rewrite at one task per bucket. writeData
+          // clusters a partitioned layout itself.
+          val staged = if (pcol.isDefined) rows else rows.hint("rebalance", col(BucketCol))
+          writeData(staged.localCheckpoint(), pcol)
         }
       // appended buckets keep their existing files AND gain the new
       // ones; colliding buckets are replaced wholesale
@@ -651,10 +747,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       val bc = m.recordedBuckets.getOrElse(buckets)
       val pcol = m.recordedPcol
       val probe = keys.select(key).distinct()
-      val incoming = withBucket(probe, bc)
-      val touched = incoming.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val cleared = bloomClearedBuckets(incoming, touched, m.mapping)
+      val (touched, cleared) = touchedAndCleared(withBucket(probe, bc), m.mapping)
       val scanned = (touched -- cleared).toSeq.sorted
       lastProbeStats = (scanned.size, cleared.size)
       // buckets that actually hold a doomed key (key-column-only scan)
@@ -787,12 +880,12 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
               fs.delete(f.getPath, false); deleted += 1
             }
           }
-          // a generation with no live data left takes its bloom
-          // sidecar with it (same age gate as the data files)
-          val bloomP = new Path(entry.getPath, BloomFile)
-          if (!live.exists(_.startsWith(name + "/")) && fs.exists(bloomP) &&
-              fs.getFileStatus(bloomP).getModificationTime < cutoff)
-            fs.delete(bloomP, false)
+          // a generation with no live data left takes its bloom and
+          // file-index sidecars with it (same age gate as the data files)
+          if (!live.exists(_.startsWith(name + "/"))) for (sidecar <- Seq(BloomFile, FilesFile)) {
+            val p = new Path(entry.getPath, sidecar)
+            if (fs.exists(p) && fs.getFileStatus(p).getModificationTime < cutoff) fs.delete(p, false)
+          }
         } else if (name.startsWith(ManifestPrefix) &&
           !keep.contains(name.stripPrefix(ManifestPrefix).stripSuffix(".txt").toLong) &&
           entry.getModificationTime < cutoff) {

@@ -1,10 +1,63 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 class SnapshotStoreSpec extends SparkSpec {
+
+  /** Job descriptions and SQL physical plans started while `body` runs.
+    * Listener events arrive asynchronously but in order, so a marker
+    * job run before and after `body` brackets exactly its events. */
+  private def recorded[T](body: => T): (T, Seq[String], Seq[String]) = {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[String]()
+    val markers = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d == "spec-marker") markers.incrementAndGet() else jobs.add(d)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    def drain(): Unit = {
+      val seen = markers.get
+      sc.setJobDescription("spec-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 60000
+      while (markers.get == seen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(markers.get > seen, "listener never saw the marker job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain(); jobs.clear(); plans.clear()
+      val out = body
+      drain()
+      (out, jobs.asScala.toSeq, plans.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The reference read a manifest-resolved read must equal: Spark's
+    * own listing + `mergeSchema` footer merge over the same files. */
+  private def mergeSchemaRead(dir: String, files: Seq[String]): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(files.map(f => s"$dir/$f"): _*)
+
+  private def assertSameRead(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what: schema ${got.schema} != ${want.schema}")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want), s"$what: rows differ")
+  }
 
   test("upsert touching one user replaces exactly one bucket's files in the manifest") {
     val s = spark
@@ -61,9 +114,10 @@ class SnapshotStoreSpec extends SparkSpec {
     // overwrite from a 6-way-partitioned frame: up to 6 part files per
     // bucket, the layout a parallel write / micro-batch stream leaves
     store.overwrite((1L to 200L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(6))
-    // a few upserts pile on more generations of touched buckets
-    store.upsert((1L to 50L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
-    store.upsert((51L to 90L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
+    // fresh-key inserts pile on more generations of touched buckets
+    // (a copy-on-write upsert would rewrite each bucket as one file)
+    store.upsert((201L to 250L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
+    store.upsert((251L to 290L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
     val before = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(store.liveFileCount > 4, s"setup should be over-split, got ${store.liveFileCount}")
 
@@ -90,7 +144,8 @@ class SnapshotStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_snap_compact_inc").toString + "/snap"
     val store = new SnapshotStore(spark, dir, buckets = 4)
     store.overwrite((1L to 200L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(6))
-    store.upsert((1L to 200L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
+    // a fresh-key insert appends a generation to every bucket
+    store.upsert((201L to 400L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
     val before = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(store.liveFileCount > 4, "setup must be over-split")
 
@@ -112,10 +167,11 @@ class SnapshotStoreSpec extends SparkSpec {
     import s.implicits._
     val dir = Files.createTempDirectory("graft_snap_compact_evo").toString + "/snap"
     val store = new SnapshotStore(spark, dir, buckets = 4)
-    store.overwrite((1L to 80L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(4))
-    // later code version starts writing batch_id: the upsert nulls it
-    // on kept rows (upsert's allowMissingColumns contract) — buckets
-    // now mix pre- and post-evolution file generations
+    store.overwrite((21L to 80L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(4))
+    // later code version starts writing batch_id: fresh keys append
+    // post-evolution files next to the pre-evolution ones, so buckets
+    // now mix pre- and post-evolution file generations (old rows read
+    // the column as null)
     store.upsert((1L to 20L).map(i => (i, s"u$i", 7L)).toDF("user_id", "v", "batch_id"))
     val before = store.read().get.collect()
       .map(r => r.getLong(0) -> Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
@@ -181,6 +237,24 @@ class SnapshotStoreSpec extends SparkSpec {
     val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "a2", 2L -> "b"))
     assert(store.vacuum(minAgeMs = 0L) == 0L, "second vacuum finds nothing")
+
+    // a generation with no live file left loses its .blooms and .files
+    // sidecars, under the same age gate as its data files
+    val fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def sidecars(gen: String) = Seq(".blooms", ".files")
+      .filter(n => fsys.exists(new Path(s"$dir/$gen/$n")))
+    val retired = store.liveFiles.map(_.takeWhile(_ != '/')).toSet
+    store.upsert(Seq((1L, "a3"), (2L, "b3")).toDF("user_id", "v")) // rewrites every live bucket
+    assert(retired.forall(g => sidecars(g) == Seq(".blooms", ".files")))
+    store.vacuum(keepVersions = 1)
+    assert(retired.forall(g => sidecars(g) == Seq(".blooms", ".files")),
+      "sidecars younger than the retention grace must never be reclaimed")
+    store.vacuum(keepVersions = 1, minAgeMs = 0L)
+    assert(retired.forall(g => sidecars(g).isEmpty), "a dead generation's sidecars must go")
+    assert(store.liveFiles.map(_.takeWhile(_ != '/')).forall(g => sidecars(g) == Seq(".blooms", ".files")),
+      "live generations keep their sidecars")
+    assert(store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a3", 2L -> "b3"))
   }
 
   test("a store reopened with a different bucket count upserts without duplicating keys") {
@@ -440,10 +514,13 @@ class SnapshotStoreSpec extends SparkSpec {
     import s.implicits._
     val dir = Files.createTempDirectory("graft_snap_race2").toString + "/snap"
     val store = new SnapshotStore(spark, dir, buckets = 2)
-    // several upserts over-split the buckets so compact has real work
-    store.overwrite((1L to 20L).map(i => (i, "base")).toDF("user_id", "v"))
-    store.upsert((1L to 20L).map(i => (i, "gen2")).toDF("user_id", "v"))
-    store.upsert((1L to 20L).map(i => (i, "gen3")).toDF("user_id", "v"))
+    // replaced rows in old generations, then a fresh-key insert
+    // over-splits the buckets so compact has real work
+    store.overwrite((1L to 10L).map(i => (i, "base")).toDF("user_id", "v"))
+    store.upsert((1L to 10L).map(i => (i, "gen2")).toDF("user_id", "v"))
+    store.upsert((1L to 10L).map(i => (i, "gen3")).toDF("user_id", "v"))
+    store.upsert((11L to 20L).map(i => (i, "gen3")).toDF("user_id", "v").repartition(6))
+    assert(store.liveFileCount > 2, s"setup must be over-split, got ${store.liveFileCount}")
     val other = new SnapshotStore(spark, dir, buckets = 2)
     var fired = false
     // the hook fires inside compact's commit window (and again inside
@@ -470,5 +547,94 @@ class SnapshotStoreSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "a", 2L -> "B", 9L -> "c"))
     assert(store.validateWrite(Seq((9L, "c")).toDF("user_id", "v")) == 0L)
+  }
+
+  test("manifest-resolved reads equal the mergeSchema read: evolved, partitioned, pre-sidecar stores") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft_snap_parity").toString
+    // schema-evolved, mixed-generation store: pre-evolution files, an
+    // appended generation that adds batch_id, one that adds note in a
+    // different column order, and a copy-on-write merge of two keys.
+    // Generation dirs sort by random UUID, so the merged column order
+    // differs from run to run — both reads must agree anyway.
+    val dir = s"$root/evolved"
+    val store = new SnapshotStore(spark, dir, buckets = 8)
+    store.overwrite((1L to 60L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(3))
+    val firstGen = store.liveFiles.head.takeWhile(_ != '/')
+    store.upsert((61L to 80L).map(i => (i, s"v$i", 7L)).toDF("user_id", "v", "batch_id"))
+    store.upsert((81L to 90L).map(i => (s"n$i", i, s"v$i")).toDF("note", "user_id", "v"))
+    store.upsert(Seq(("n1", 1L, "u1"), ("n2", 2L, "u2")).toDF("note", "user_id", "v"))
+    val live = store.liveFiles
+    assert(live.map(_.takeWhile(_ != '/')).distinct.size == 4 &&
+      live.exists(_.startsWith(firstGen + "/")), "setup: four live generations")
+    assertSameRead(store.read().get, mergeSchemaRead(dir, live), "evolved store")
+    val probe = Seq(3L, 65L).toDF("user_id")
+    assertSameRead(store.readForKeys(probe).get,
+      mergeSchemaRead(dir, store.filesForKeys(probe)), "evolved store, pruned by key")
+
+    // partitioned store: readPartitions over the clustered layout plus
+    // unclustered insert files
+    val pdir = s"$root/partitioned"
+    val pstore = new SnapshotStore(spark, pdir, key = "id", buckets = 4, partitionCol = Some("cell"))
+    pstore.overwrite((1L to 100L).map(i => (i, (i % 8).toInt, s"v$i")).toDF("id", "cell", "v"))
+    pstore.upsert(Seq((200L, 2, "new"), (10L, 2, "updated")).toDF("id", "cell", "v"))
+    assertSameRead(pstore.readPartitions(Seq(2, 5)).get,
+      mergeSchemaRead(pdir, pstore.filesForPartitions(Seq(2, 5))), "partitioned store")
+
+    // a store written before the sidecar existed: dropping the oldest
+    // generation's .files makes every read naming it fall back
+    val fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fsys.delete(new Path(s"$dir/$firstGen/.files"), false))
+    val legacy = new SnapshotStore(spark, dir, buckets = 4)
+    assertSameRead(legacy.read().get, mergeSchemaRead(dir, live), "pre-sidecar store")
+    legacy.upsert(Seq(("n2b", 2L, "u2b")).toDF("note", "user_id", "v"))
+    val got = legacy.read().get.select("user_id", "v", "batch_id", "note").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), Option(r.get(2)), Option(r.getString(3)))).toMap
+    assert(got.size == 90 && got(2L) == (("u2b", None, Some("n2b"))) &&
+      got(85L) == (("v85", None, Some("n85"))) &&
+      got(70L) == (("v70", Some(7L), None)) && got(40L) == (("v40", None, None)))
+    assertSameRead(legacy.read().get, mergeSchemaRead(dir, legacy.liveFiles), "pre-sidecar store after upsert")
+  }
+
+  test("readForKeys over >32 files runs no listing or schema job; a colliding upsert runs its anti-join once") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_jobs").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 400L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(40))
+    val probe = (1L to 40L).toDF("user_id")
+    assert(store.filesForKeys(probe).size > 32, "setup: the probe must name more than 32 files")
+
+    // the probe's bucket collect is the only job a keyed read may run
+    val (_, probeJobs, _) = recorded(store.filesForKeys(probe))
+    val (df, readJobs, _) = recorded(store.readForKeys(probe).get)
+    assert(!readJobs.exists(_.contains("Listing leaf files")), s"listing job ran: $readJobs")
+    assert(readJobs.size == probeJobs.size,
+      s"a keyed read may not list files or merge footers in a job: $readJobs vs $probeJobs")
+    assert(df.filter(col("user_id") <= 40L).count() == 40L)
+
+    // every bucket collides: the anti-join is evaluated once, not once
+    // for the write and again for each bloom pass
+    val delta = (1L to 50L).map(i => (i, s"u$i")).toDF("user_id", "v").localCheckpoint()
+    val (_, _, plans) = recorded(store.upsert(delta))
+    assert(plans.count(_.contains("LeftAnti")) == 1,
+      s"anti-join evaluations: ${plans.count(_.contains("LeftAnti"))}")
+    val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size == 400 && got(7L) == "u7" && got(300L) == "v300")
+  }
+
+  test("copy-on-write rewrite leaves one file per colliding bucket") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_cow").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 200L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(6))
+    store.upsert((1L to 50L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
+    val (_, after) = store.latestManifest().get
+    assert(after.size == 4 && after.values.forall(_.size == 1),
+      s"each rewritten bucket must be one file, got ${after.map { case (b, f) => b -> f.size }}")
+    val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size == 200 && got(1L) == "u1" && got(51L) == "v51")
   }
 }
