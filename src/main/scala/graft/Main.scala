@@ -247,8 +247,10 @@ object Main {
       if (command == "incremental")
         profiles.join(store.keysFor(profiles), Seq("user_id"), "left_anti").localCheckpoint()
       else profiles
-    // the snapshot is only read where a tag subset merges with it
-    val snap = tagScope.flatMap(_ => store.read()) match {
+    // the snapshot is only read where a tag subset merges with it, and
+    // only the scoped users' buckets: mergeWithExisting left-joins from
+    // scopedUsers, so rows of other buckets could never match
+    val snap = tagScope.flatMap(_ => store.readForKeys(scopedUsers)) match {
       case Some(existing) =>
         TagMerger.mergeWithExisting(scopedUsers, existing.select("user_id", "tag_ids"))
           .localCheckpoint()

@@ -47,9 +47,10 @@ final class Scenarios(engine: TagEngine, store: SnapshotStore) {
     * full tags. New users need no existing-merge. */
   def incrementalUsersFullTags(users: DataFrame, rules: Seq[TagRule],
                                regDateCol: String, daysBack: Int, anchor: Column): DataFrame = {
-    val fresh = users
-      .filter(col(regDateCol) >= date_sub(anchor, daysBack))
-      .join(store.keys(), Seq("user_id"), "left_anti")
+    val scoped = users.filter(col(regDateCol) >= date_sub(anchor, daysBack))
+    // keysFor opens only the buckets these users hash into; keys of
+    // other buckets could not match, so the anti-join is unchanged
+    val fresh = scoped.join(store.keysFor(scoped), Seq("user_id"), "left_anti")
     commit(engine.tagDetails(fresh, rules))
   }
 
@@ -78,10 +79,17 @@ final class Scenarios(engine: TagEngine, store: SnapshotStore) {
     commit(mergeWithSnapshot(engine.tagDetails(scoped, subset)))
   }
 
-  private def mergeWithSnapshot(newTags: DataFrame): DataFrame = store.read() match {
-    case Some(existing) =>
-      TagMerger.mergeWithExisting(newTags, existing.select("user_id", "tag_ids"))
-        .select(newTags.columns.map(col): _*)
-    case None => newTags
+  /** Merge with the stored tags of `newTags`' users. Only their buckets
+    * are read (the merge left-joins from `newTags`, so other users'
+    * rows could never match); `newTags` is checkpointed first so the
+    * bucket probe and the merge share one evaluation of the engine. */
+  private def mergeWithSnapshot(newTags: DataFrame): DataFrame = {
+    val tags = newTags.localCheckpoint()
+    store.readForKeys(tags) match {
+      case Some(existing) =>
+        TagMerger.mergeWithExisting(tags, existing.select("user_id", "tag_ids"))
+          .select(tags.columns.map(col): _*)
+      case None => tags
+    }
   }
 }

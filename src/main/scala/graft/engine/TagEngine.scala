@@ -81,6 +81,15 @@ final class TagEngine(anchor: Column = current_date()) {
   /** The single-projection heart: array of hit tag ids (sorted,
     * distinct-by-construction since each rule contributes once). */
   private def hitArray(rules: Seq[TagRule]): Column =
+    // array_sort stays although a profiler points at it: ArraySort is
+    // a CodegenFallback, interpreted per row and keeping the explode
+    // stage out of whole-stage codegen (136 of 664 executor samples of
+    // a 10k-user × 200-rule full re-tag on a 4-core VM). Sorting the
+    // rules by tag id and dropping the sort (and memoryMerge's
+    // sort_array) was SLOWER on that run in 3 of 3 pairs (op p50
+    // 8.51→8.66, 6.57→8.20, 6.12→6.36 s). Not diagnosed; one candidate
+    // is the 200-rule projection compiling into one oversized generated
+    // method once the fallback no longer splits it.
     array_sort(array_compact(array(rules.map { r =>
       when(r.rule.compile(anchor), lit(r.tagId))
     }: _*)))

@@ -18,14 +18,16 @@ import org.apache.spark.sql.DataFrame
   * layer and the cached base survives. Any removed file (delete,
   * replace-merge, compact, vacuum, rm+rebuild) fails the superset
   * check and rebuilds from scratch, which is the only sound response:
-  * a retired file's rows may have been superseded. Layers are capped
-  * (`maxLayers`) so per-read union overhead stays bounded; hitting
-  * the cap merges the two layers with the FEWEST files (LSM-style,
-  * r15) — a delta-sized relayout from the already-cached frames, so a
-  * pure-append history never re-reads its base layer. The r15 first
-  * cut consolidated via a full file re-read instead, which put the
-  * whole-store rebuild (~the first-batch cost) back on every 8th
-  * generation — the exact cost the layering exists to avoid.
+  * a retired file's rows may have been superseded. So does a new file
+  * of a MASKING generation (a merge-on-read upsert): its mask hides
+  * rows of files already cached. Layers are capped (`maxLayers`) so
+  * per-read union overhead stays bounded; hitting the cap merges the
+  * two layers with the FEWEST files (LSM-style, r15) — a delta-sized
+  * relayout from the already-cached frames, so a pure-append history
+  * never re-reads its base layer. The r15 first cut consolidated via
+  * a full file re-read instead, which put the whole-store rebuild
+  * (~the first-batch cost) back on every 8th generation — the exact
+  * cost the layering exists to avoid.
   *
   * Freshness is keyed on the store's generation token (manifest
   * version + live-file hash, never the bare version — a store deleted
@@ -54,18 +56,19 @@ final class LayeredFileCache(store: SnapshotStore, maxLayers: Int = 8)
     * Validates the generation token on every call; layers or rebuilds
     * as the file delta dictates. */
   def frame(): Option[DataFrame] = synchronized {
-    val t = store.latestToken
     def union = Some(layers.map(_._2).reduce(_ unionByName _))
-    if (t.isEmpty) { release(); None }
-    else if (token == t && layers.nonEmpty) union
-    else {
-      val live = store.liveFiles
-      if (live.isEmpty) { release(); None }
-      else {
-        val liveSet = live.toSet
+    store.liveView match {
+      case None => release(); None
+      case Some(view) if token.contains(view.token) && layers.nonEmpty => union
+      case Some(view) if view.files.isEmpty => release(); None
+      case Some(view) =>
+        val live = view.files
         val cachedSet = layers.iterator.flatMap(_._1).toSet
         val newFiles = live.filterNot(cachedSet)
-        if (layers.nonEmpty && cachedSet.subsetOf(liveSet)) {
+        // a masking generation hides rows of files already cached, so
+        // its new files force a rebuild exactly as a retired file does;
+        // only a mask-free append layers
+        if (layers.nonEmpty && cachedSet.subsetOf(live.toSet) && !newFiles.exists(view.masks)) {
           // append-only delta: cache ONLY the new files as a layer
           if (newFiles.nonEmpty)
             layers = layers :+ ((newFiles.toSet, buildLayer(newFiles)))
@@ -85,15 +88,12 @@ final class LayeredFileCache(store: SnapshotStore, maxLayers: Int = 8)
             layers = layers.filterNot(l => l._1 == ka || l._1 == kb) :+
               ((ka ++ kb, merged))
           }
-          token = t
-          union
         } else {
           release()
-          layers = Vector((liveSet, buildLayer(live)))
-          token = t
-          union
+          layers = Vector((live.toSet, buildLayer(live)))
         }
-      }
+        token = Some(view.token)
+        union
     }
   }
 

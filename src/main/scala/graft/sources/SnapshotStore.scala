@@ -1,13 +1,15 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.FileRelation
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+import SnapshotStore._
 
 /** Keyed snapshot store with UPSERT semantics — the Spark-native
   * stand-in for the reference's MySQL `user_tags` table and its
@@ -55,6 +57,26 @@ import scala.util.control.NonFatal
   * the sidecar existed) falls back to the `mergeSchema` parquet read
   * for all its files, so old stores read back identically.
   *
+  * MERGE-ON-READ for small upserts (Iceberg v2 equality deletes, per
+  * bucket): a delta key that may already be stored does not force its
+  * bucket through a rewrite. The delta is appended as a new generation
+  * whose `.mask` sidecar lists, per bucket, the keys it replaces and
+  * the bucket's files that were live when it committed; reads hide a
+  * masked key's rows in exactly those files, so the newest generation
+  * wins. The manifest marks masking generations with a `#mask=` header
+  * line. Masks are correctness data: a read that names a masking
+  * generation whose mask cannot be loaded THROWS rather than return
+  * superseded rows. Key-only reads ([[keys]], [[keysFor]], the
+  * collision probe, [[validateWrite]]) skip masks — a masked key is
+  * always present in the generation that masks it. A bucket FOLDS
+  * (today's key probe plus copy-on-write rewrite through its masks)
+  * instead of masking when the delta holds a large share of its keys,
+  * when it already holds many files or mask keys, or when its key
+  * count is unknown (a generation written before key counts were
+  * recorded — such stores keep copy-on-write until rewritten).
+  * [[delete]] and [[compact]] also read through masks and replace
+  * every file of the buckets they rewrite.
+  *
   * On a lakehouse table format the same calls map to `MERGE INTO` —
   * the API is the contract, not the file layout.
   */
@@ -66,6 +88,24 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private val ManifestPrefix = "manifest-"
   private val BloomFile = ".blooms"
   private val FilesFile = ".files"
+  private val MaskFile = ".mask"
+  private val MaskMarker = "#mask="
+  private val MaskKeyCol = "__graft_mask_key"
+  private val MaskIdCol = "__graft_mask_id"
+  private val MaskFileCol = "__graft_mask_file"
+  /** Fold rule, share: a bloom-hit bucket whose delta holds at least
+    * 1/FoldShare of its live keys is rewritten instead of masked — the
+    * rewrite then costs about what the append does, and masking would
+    * make every later read hide a large share of the bucket. */
+  private val FoldShare = 4
+  /** Fold rule, files: every masked append adds a file per bucket that
+    * each reader of the bucket opens; past this many the bucket is
+    * rewritten back to one file. */
+  private val MaxFilesPerBucket = 8
+  /** Fold rule, mask keys: a read ships the live mask keys of the
+    * buckets it opens to every task as a broadcast relation; this
+    * bounds that relation per bucket. */
+  private val MaxMaskKeysPerBucket = 4096
   /** Commit-conflict retries for [[upsert]]: enough for realistic
     * writer fan-in (each retry re-merges against the winner's state),
     * small enough that a livelocked store fails loudly. */
@@ -90,25 +130,10 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   // ---- manifest protocol ----
 
-  private final case class Manifest(version: Long, recordedBuckets: Option[Int],
-                                    recordedPcol: Option[String],
-                                    mapping: Map[Int, Seq[String]])
+  private def manifestPath(version: Long) = new Path(path, f"$ManifestPrefix$version%012d.txt")
 
-  /** The newest manifest. The recorded bucket count is part of the
-    * layout — an upsert MUST hash with the count the snapshot was
-    * written with, or a key's new row lands in a different bucket than
-    * its old one and the upsert silently duplicates the key. The
-    * recorded partition column binds the same way: later writers keep
-    * splitting by it even if constructed without. */
-  private def latestRaw(): Option[Manifest] = {
-    val root = new Path(path)
-    if (!fs.exists(root)) return None
-    val versions = fs.listStatus(root).map(_.getPath.getName)
-      .filter(n => n.startsWith(ManifestPrefix) && n.endsWith(".txt"))
-      .map(n => n.stripPrefix(ManifestPrefix).stripSuffix(".txt").toLong)
-    if (versions.isEmpty) return None
-    val v = versions.max
-    val in = fs.open(new Path(path, f"$ManifestPrefix$v%012d.txt"))
+  private def readManifest(version: Long): Manifest = {
+    val in = fs.open(manifestPath(version))
     val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
     val lines = text.linesIterator.filter(_.nonEmpty).toSeq
     val recorded = lines.collectFirst {
@@ -117,30 +142,44 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     val pcol = lines.collectFirst {
       case l if l.startsWith("#pcol=") => l.stripPrefix("#pcol=")
     }
+    val masking = lines.collect { case l if l.startsWith(MaskMarker) => l.stripPrefix(MaskMarker) }
     val mapping = lines.filterNot(_.startsWith("#"))
       .map { line => val Array(b, f) = line.split("\t", 2); (b.toInt, f) }
       .groupBy(_._1).map { case (b, fs0) => b -> fs0.map(_._2) }
-    Some(Manifest(v, recorded, pcol, mapping))
+    Manifest(version, recorded, pcol, mapping, masking.toSet)
   }
+
+  /** The newest manifest. The recorded bucket count is part of the
+    * layout — an upsert MUST hash with the count the snapshot was
+    * written with, or a key's new row lands in a different bucket than
+    * its old one and the upsert silently duplicates the key. The
+    * recorded partition column binds the same way: later writers keep
+    * splitting by it even if constructed without. */
+  private def latestRaw(): Option[Manifest] = versions().lastOption.map(readManifest)
 
   private[sources] def latestManifest(): Option[(Long, Map[Int, Seq[String]])] =
     latestRaw().map(m => (m.version, m.mapping))
 
   /** Publish a new manifest version: write to a unique temp name, then
     * a single-file rename — the one atomic primitive object stores
-    * give us (locally: POSIX rename). */
+    * give us (locally: POSIX rename). `masking` names the generations
+    * whose masks readers must apply; a generation with no file left in
+    * `mapping` drops out of the header. */
   private[sources] def commit(version: Long, bucketCount: Int,
                               mapping: Map[Int, Seq[String]],
-                              pcol: Option[String] = None): Unit = {
+                              pcol: Option[String] = None,
+                              masking: Set[String] = Set.empty): Unit = {
     fs.mkdirs(new Path(path))
-    val header = s"#buckets=$bucketCount" +: pcol.map(c => s"#pcol=$c").toSeq
+    val liveGens = mapping.values.flatten.map(generationDir).toSet
+    val header = (s"#buckets=$bucketCount" +: pcol.map(c => s"#pcol=$c").toSeq) ++
+      masking.filter(liveGens).toSeq.sorted.map(MaskMarker + _)
     val body = (header ++ mapping.toSeq.sortBy(_._1)
       .flatMap { case (b, files) => files.sorted.map(f => s"$b\t$f") })
       .mkString("\n")
     val tmp = new Path(path, s".tmp-manifest-${java.util.UUID.randomUUID}")
     val out = fs.create(tmp, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val dst = new Path(path, f"$ManifestPrefix$version%012d.txt")
+    val dst = manifestPath(version)
     // the rename IS the publish — a silent failure (concurrent writer,
     // cross-FS move, transient error) would leave the new data files
     // as unreferenced orphans that vacuum() later deletes, i.e. a
@@ -193,11 +232,16 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   }
 
   /** Write `df` (already bucketed/partitioned) into a fresh immutable
-    * data dir with its bloom and file-index sidecars; return bucket →
-    * relative file paths. With a partition column the files sit one
-    * level deeper (`snap_bucket=B/snap_part=V/…`), which is what
-    * [[readPartitions]] prunes on. */
-  private def writeData(bucketed: DataFrame, pcol: Option[String]): Map[Int, Seq[String]] = {
+    * data dir with its bloom, file-index and (given `masks`) mask
+    * sidecars; return bucket → relative file paths. With a partition
+    * column the files sit one level deeper (`snap_bucket=B/snap_part=V/…`),
+    * which is what [[readPartitions]] prunes on. `known` is the write's
+    * distinct keys per bucket when the caller already collected them:
+    * the blooms and key counts are then built on the driver, and the
+    * write is the only Spark job. */
+  private def writeData(bucketed: DataFrame, pcol: Option[String],
+                        known: Option[Map[Int, Seq[Any]]] = None,
+                        masks: Map[Int, MaskEntry] = Map.empty): Map[Int, Seq[String]] = {
     val dataDir = s"data-${java.util.UUID.randomUUID}"
     val layoutCols = BucketCol +: (if (pcol.isDefined) Seq(PartDir) else Nil)
     // partitionBy fans each task out to every layout dir it holds rows
@@ -207,46 +251,59 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     // clustered here: one exchange keyed on the layout writes exactly
     // one file per populated (bucket, value). Without one, the caller
     // clusters by bucket where the fan-out matters — the copy-on-write
-    // merge rebalances its rewrite, inserts and compaction repartition
+    // merge rebalances its rewrite, appends and compaction repartition
     // by bucket — and compact() folds whatever is left.
     val clustered =
       if (pcol.isDefined) bucketed.repartition(col(BucketCol), col(PartDir))
       else bucketed
     clustered.write.partitionBy(layoutCols: _*).parquet(s"$path/$dataDir")
-    writeBlooms(bucketed, dataDir)
-    val out = scala.collection.mutable.Map.empty[Int, Vector[String]]
-    val written = Vector.newBuilder[FileStatus]
-    val it = fs.listFiles(new Path(s"$path/$dataDir"), true)
-    val prefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
-    while (it.hasNext) {
-      val st = it.next()
-      val f = st.getPath
-      if (f.getName.endsWith(".parquet")) {
-        val rel = f.toUri.getPath.stripPrefix(prefix)
-        val bucket = rel.split('/').collectFirst {
-          case seg if seg.startsWith(s"$BucketCol=") => seg.stripPrefix(s"$BucketCol=").toInt
-        }.getOrElse(sys.error(s"no bucket segment in $rel"))
-        out(bucket) = out.getOrElse(bucket, Vector.empty) :+ rel
-        written += st
-      }
+    val keyCounts = known match {
+      case Some(keys) =>
+        saveBlooms(dataDir, keys.map { case (b, ks) =>
+          val bf = BloomFilter.create(math.max(ks.size.toLong, 64L), BloomFpp)
+          ks.foreach(k => if (k != null) bf.put(k))
+          b -> bf
+        })
+        keys.map { case (b, ks) => b -> ks.size.toLong }
+      case None => writeBlooms(bucketed, dataDir)
     }
+    if (masks.nonEmpty) writeMask(dataDir, bucketed.schema(key).dataType, masks)
+    val prefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
+    val written = parquetFilesUnder(new Path(s"$path/$dataDir"))
+    val out = written.map { st =>
+      val rel = st.getPath.toUri.getPath.stripPrefix(prefix)
+      val bucket = rel.split('/').collectFirst {
+        case seg if seg.startsWith(s"$BucketCol=") => seg.stripPrefix(s"$BucketCol=").toInt
+      }.getOrElse(sys.error(s"no bucket segment in $rel"))
+      bucket -> rel
+    }.groupBy(_._1).map { case (b, fs0) => b -> fs0.map(_._2) }
     // partitionBy strips the layout columns from the files: the data
     // schema every footer of this generation carries is the rest
     writeFileIndex(dataDir,
-      StructType(bucketed.schema.filterNot(f => layoutCols.contains(f.name))), written.result())
-    out.toMap
+      StructType(bucketed.schema.filterNot(f => layoutCols.contains(f.name))), written, keyCounts)
+    out
   }
+
+  /** Every parquet file under `dir`. Walks with `listStatus`: on the
+    * local file system `listFiles` builds a `LocatedFileStatus` per
+    * file, whose permission copy forks `ls -ld` once per file. */
+  private def parquetFilesUnder(dir: Path): Vector[FileStatus] =
+    fs.listStatus(dir).toVector.flatMap { st =>
+      if (st.isDirectory) parquetFilesUnder(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) Vector(st)
+      else Vector.empty
+    }
 
   // ---- file-index sidecar: manifest-resolved reads ----
 
-  private final case class Generation(schema: StructType, files: Map[String, (Long, Long)])
-
   /** Persist one generation's file index: `#schema=<Spark schema JSON>`,
-    * then `file<TAB>bytes<TAB>mtime` per data file, paths relative to
-    * the generation dir. */
-  private def writeFileIndex(dataDir: String, schema: StructType, files: Seq[FileStatus]): Unit = {
+    * `#keys=<bucket:count,…>`, then `file<TAB>bytes<TAB>mtime` per data
+    * file, paths relative to the generation dir. */
+  private def writeFileIndex(dataDir: String, schema: StructType, files: Seq[FileStatus],
+                             keyCounts: Map[Int, Long]): Unit = {
     val dirPath = fs.makeQualified(new Path(s"$path/$dataDir")).toUri.getPath.stripSuffix("/") + "/"
-    val body = (s"#schema=${schema.json}" +: files.map { st =>
+    val counts = keyCounts.toSeq.sorted.map { case (b, n) => s"$b:$n" }.mkString("#keys=", ",", "")
+    val body = (s"#schema=${schema.json}" +: counts +: files.map { st =>
       s"${st.getPath.toUri.getPath.stripPrefix(dirPath)}\t${st.getLen}\t${st.getModificationTime}"
     }).mkString("\n")
     val out = fs.create(new Path(s"$path/$dataDir/$FilesFile"), true)
@@ -263,10 +320,16 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       if (!lines.headOption.exists(_.startsWith("#schema="))) None
       else Some(Generation(
         DataType.fromJson(lines.head.stripPrefix("#schema=")).asInstanceOf[StructType],
-        lines.tail.filter(_.nonEmpty).map { l =>
+        lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
           val Array(f, len, mtime) = l.split("\t")
           f -> (len.toLong, mtime.toLong)
-        }.toMap))
+        }.toMap,
+        lines.collectFirst { case l if l.startsWith("#keys=") =>
+          l.stripPrefix("#keys=").split(',').filter(_.nonEmpty).map { e =>
+            val Array(b, n) = e.split(':')
+            b.toInt -> n.toLong
+          }.toMap
+        }))
     } catch { case NonFatal(_) => None }
 
   private def generationDir(file: String): String = file.takeWhile(_ != '/')
@@ -301,19 +364,126 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   // Merging unions the footers (missing columns null), which is the
   // same contract upsert's allowMissingColumns union promises. The
   // sidecar-resolved relation merges the same way without the jobs.
-  private def readFiles(files: Seq[String]): Option[DataFrame] =
+  // The masks of the masking generations among `files` apply.
+  private def readFiles(files: Seq[String], masking: Set[String]): Option[DataFrame] =
     if (files.isEmpty) None
-    else Some(resolvedRead(files).getOrElse(
-      spark.read.option("mergeSchema", "true").parquet(files.map(f => s"$path/$f"): _*)))
+    else Some(withMasks(resolvedRead(files).getOrElse(
+      spark.read.option("mergeSchema", "true").parquet(files.map(f => s"$path/$f"): _*)),
+      files, masking))
 
-  // key-column-only read. The fallback skips schema merging: the key
-  // column is the store's identity and exists in every file generation
-  // by construction, so the collision probe skips the per-footer merge
+  // key-column-only read, masks NOT applied: a masked key is always
+  // present in the generation that masks it, so the key set is the
+  // same. The fallback skips schema merging: the key column is the
+  // store's identity and exists in every file generation by
+  // construction, so the collision probe skips the per-footer merge
   // pass a wide mixed-generation file set would otherwise pay
   private def readKeys(files: Seq[String]): Option[DataFrame] =
     if (files.isEmpty) None
     else Some(resolvedRead(files).getOrElse(
       spark.read.parquet(files.map(f => s"$path/$f"): _*)).select(key))
+
+  // ---- mask sidecar: merge-on-read deltas ----
+  //
+  // A masking generation's `.mask` holds, per bucket, the store-
+  // relative files that were live in the bucket when it committed and
+  // the keys whose rows it replaces there. A row is hidden when its key
+  // is in a mask of its bucket that lists its file — files are recorded
+  // rather than ordered by dir name, so generation order never matters.
+
+  /** Key types a mask can persist; a store keyed otherwise always folds. */
+  private def maskable(dt: DataType): Boolean =
+    dt == LongType || dt == IntegerType || dt == StringType
+
+  private def writeMask(dataDir: String, keyType: DataType, masks: Map[Int, MaskEntry]): Unit = {
+    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+      fs.create(new Path(s"$path/$dataDir/$MaskFile"), true)))
+    try {
+      out.writeUTF(keyType.json)
+      out.writeInt(masks.size)
+      masks.toSeq.sortBy(_._1).foreach { case (b, e) =>
+        out.writeInt(b)
+        out.writeInt(e.files.size)
+        e.files.foreach(out.writeUTF)
+        out.writeInt(e.keys.size)
+        e.keys.foreach { k =>
+          keyType match {
+            case LongType => out.writeLong(k.asInstanceOf[Number].longValue)
+            case IntegerType => out.writeInt(k.asInstanceOf[Number].intValue)
+            case _ =>
+              val bytes = k.toString.getBytes(StandardCharsets.UTF_8)
+              out.writeInt(bytes.length); out.write(bytes)
+          }
+        }
+      }
+    } finally out.close()
+  }
+
+  /** One masking generation's masks by bucket. Throws when they cannot
+    * be read: without them a read would return superseded rows. */
+  private def maskOf(dataDir: String): Map[Int, MaskEntry] =
+    try {
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
+        fs.open(new Path(s"$path/$dataDir/$MaskFile"))))
+      try {
+        val keyType = DataType.fromJson(in.readUTF())
+        (0 until in.readInt()).map { _ =>
+          val b = in.readInt()
+          val files = Vector.fill(in.readInt())(in.readUTF())
+          val keys = Vector.fill[Any](in.readInt())(keyType match {
+            case LongType => in.readLong()
+            case IntegerType => in.readInt()
+            case _ =>
+              val bytes = new Array[Byte](in.readInt())
+              in.readFully(bytes)
+              new String(bytes, StandardCharsets.UTF_8)
+          })
+          b -> MaskEntry(files, keys)
+        }.toMap
+      } finally in.close()
+    } catch {
+      case NonFatal(e) => throw new IllegalStateException(
+        s"snapshot $path: generation $dataDir masks older rows but its $MaskFile " +
+          "cannot be read; refusing to return superseded rows", e)
+    }
+
+  /** `df` (a read of `files`) without the rows that the masks of the
+    * masking generations among `files` hide. One broadcast anti-join
+    * against a local relation of (mask key, mask id), matched on the
+    * row's key and on its file being one the mask covers — no job per
+    * file, and the plan carries only the covered file names. */
+  private def withMasks(df: DataFrame, files: Seq[String], masking: Set[String]): DataFrame = {
+    val present = files.toSet
+    val masks = files.map(generationDir).distinct.filter(masking).sorted
+      .flatMap(g => maskOf(g).toSeq.sortBy(_._1).map(_._2))
+      .map(e => e.copy(files = e.files.filter(present)))
+      .filter(e => e.files.nonEmpty && e.keys.nonEmpty)
+    if (masks.isEmpty) return df
+    // matched on the store-relative tail of `_metadata.file_path`, which
+    // Spark URL-encodes and qualifies per file source ("file:/" from a
+    // listing, "file:///" from a qualified status): the tail from the
+    // generation dir on is encoded the same way in both
+    val covering = masks.zipWithIndex
+      .flatMap { case (e, i) => e.files.map(f => new Path(f).toUri.toString -> i) }
+      .groupBy(_._1).map { case (f, ids) => f -> ids.map(_._2) }
+    val coveringLit = typedLit(covering)
+    val depths = covering.keys.map(_.count(_ == '/') + 1).toSeq.distinct.sorted
+    val keyType = df.schema(key).dataType
+    def coerce(k: Any): Any = keyType match {
+      case LongType => k.asInstanceOf[Number].longValue
+      case IntegerType => k.asInstanceOf[Number].intValue
+      case StringType => k.toString
+      case _ => k
+    }
+    val hidden = spark.createDataFrame(
+      masks.zipWithIndex.flatMap { case (e, i) => e.keys.map(k => Row(coerce(k), i)) }.asJava,
+      StructType(Seq(StructField(MaskKeyCol, keyType), StructField(MaskIdCol, IntegerType))))
+    val tagged = df.withColumn(MaskFileCol, coalesce(depths.map(d =>
+      try_element_at(coveringLit, substring_index(col("_metadata.file_path"), "/", -d))): _*))
+    tagged.join(broadcast(hidden),
+        tagged(key) === hidden(MaskKeyCol) && array_contains(tagged(MaskFileCol), hidden(MaskIdCol)),
+        "left_anti")
+      .drop(MaskFileCol)
+  }
 
   // ---- bloom sidecar: O(delta) collision probes ----
   //
@@ -321,12 +491,12 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   // upsert once a uniform delta touches every bucket — at 10⁹ rows
   // that is GBs per micro-batch on the WRITE path, the same per-batch
   // scan the read paths were cured of. Each data generation therefore
-  // carries a `.blooms` sidecar (per-bucket key bloom, 1% FPR, sized
+  // carries a `.blooms` sidecar (per-bucket key bloom, 0.1% FPR, sized
   // from that write's per-bucket counts): a small delta tests its
-  // collected keys against a few KB of blooms and key-scans ONLY the
-  // buckets with a bloom hit. The sidecar is advisory — missing or
-  // unreadable blooms (pre-bloom generations, crashed writes) fail
-  // open into the key scan, never into a wrong answer.
+  // collected keys against a few KB of blooms and masks or key-scans
+  // ONLY the buckets with a bloom hit. The sidecar is advisory —
+  // missing or unreadable blooms (pre-bloom generations, crashed
+  // writes) count as a hit on every key, never as a wrong answer.
 
   /** Build and persist per-bucket key blooms for one written data
     * generation. Two O(delta) passes: per-bucket APPROX-DISTINCT key
@@ -341,12 +511,13 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * which broke spark.driver.maxResultSize the first time a
     * token-scale store (27M postings) was written; the salted
     * exchange is delta-sized, write-path-only, and its reduce cost is
-    * explicitly budgeted before it runs. */
-  private def writeBlooms(bucketed: DataFrame, dataDir: String): Unit = {
+    * explicitly budgeted before it runs. Returns the per-bucket key
+    * counts, which the file index records for the fold rule. */
+  private def writeBlooms(bucketed: DataFrame, dataDir: String): Map[Int, Long] = {
     val counts = bucketed.groupBy(BucketCol)
       .agg(approx_count_distinct(col(key)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (counts.isEmpty) return
+    if (counts.isEmpty) return counts
     val bcCounts = spark.sparkContext.broadcast(counts)
     // Salt the build exchange when there are fewer buckets than cores:
     // clustering strictly by bucket serializes a 1-bucket store's
@@ -377,13 +548,13 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
           if (!r.isNullAt(1)) {
             val b = r.getInt(0)
             // fpp 0.1%, not the usual 1%: a k-key delta false-positives
-            // a bucket back into the key scan with probability
+            // a bucket into a mask or the key scan with probability
             // ≈ 1-(1-fpp)^(k/buckets) — at 1% a few-thousand-key delta
             // re-scans half its buckets; at 0.1% it clears >90% for
             // ~1.5× the (tiny) sidecar bytes. The ~5% ACD sizing error
             // only nudges the realized fpp, and the sidecar is advisory.
             m.getOrElseUpdate(b,
-              BloomFilter.create(math.max(bcCounts.value.getOrElse(b, 64L), 64L), 0.001))
+              BloomFilter.create(math.max(bcCounts.value.getOrElse(b, 64L), 64L), BloomFpp))
               .put(r.get(1))
           }
         }
@@ -403,6 +574,11 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       }
       m.toMap
     }
+    saveBlooms(dataDir, blooms)
+    counts
+  }
+
+  private def saveBlooms(dataDir: String, blooms: Map[Int, BloomFilter]): Unit = {
     val out = new java.io.DataOutputStream(
       fs.create(new Path(s"$path/$dataDir/$BloomFile"), true))
     try {
@@ -418,7 +594,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   }
 
   /** The per-bucket blooms of one data generation; None = no/corrupt
-    * sidecar (callers must fail open into the key scan). */
+    * sidecar (callers must treat every key as a possible hit). */
   private def loadBlooms(dataDir: String): Option[Map[Int, BloomFilter]] = {
     val p = new Path(s"$path/$dataDir/$BloomFile")
     try {
@@ -439,40 +615,96 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Probe telemetry of the last upsert: (buckets key-scanned, buckets
+  /** Probe telemetry of the last upsert or delete: (buckets the blooms
+    * could not clear — masked, key-scanned or folded — and buckets
     * bloom-cleared). Spec/monitoring surface. */
   private[graft] var lastProbeStats: (Int, Int) = (0, 0)
 
-  /** The delta's touched buckets and, among them, those PROVABLY free
-    * of key collisions: every live generation of the bucket has a
-    * readable bloom and no delta key might be contained. Both come from
-    * ONE bounded collect of the distinct (bucket, key) pairs; a delta
-    * past [[ProbeKeyBound]] keys collects its buckets alone and clears
-    * nothing. Anything uncertain (missing sidecar, null key) stays
-    * un-cleared and takes the key scan. */
-  private def touchedAndCleared(incoming: DataFrame,
-                                mapping: Map[Int, Seq[String]]): (Set[Int], Set[Int]) = {
+  /** Test hook: false sends every bucket the blooms cannot clear through
+    * the fold (key probe plus copy-on-write), the reference that
+    * merge-on-read specs compare against. */
+  private[sources] var maskDeltas: Boolean = true
+
+  /** ONE bounded collect of the distinct (bucket, key) pairs, tested
+    * against the sidecar blooms. A bucket is cleared when no live
+    * generation of it might hold any of its delta keys; a generation
+    * without a readable bloom might hold every key. Null keys never
+    * match a stored row (upsert and delete join on the key), so they
+    * never block clearing. A delta past [[ProbeKeyBound]] keys collects
+    * its buckets alone and clears nothing. */
+  private def probe(incoming: DataFrame, mapping: Map[Int, Seq[String]]): Probe = {
     val pairs = incoming.select(col(BucketCol), col(key)).distinct()
       .limit(ProbeKeyBound + 1).collect()
-    if (pairs.length > ProbeKeyBound)
-      return (incoming.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet, Set.empty)
+    if (pairs.length > ProbeKeyBound) {
+      val touched = incoming.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+      return Probe(touched, None, touched.map(_ -> Seq.empty[Any]).toMap)
+    }
     val keysByBucket = pairs.groupBy(_.getInt(0))
-      .map { case (b, rs) => b -> rs.map(r => if (r.isNullAt(1)) null else r.get(1)) }
+      .map { case (b, rs) => b -> rs.toSeq.map(r => if (r.isNullAt(1)) null else r.get(1)) }
     val bloomCache = scala.collection.mutable.Map.empty[String, Option[Map[Int, BloomFilter]]]
     def bloomsOf(dir: String) = bloomCache.getOrElseUpdate(dir, loadBlooms(dir))
-    val cleared = keysByBucket.collect { case (b, ks) if ks.forall(_ != null) &&
-      mapping.getOrElse(b, Nil).map(generationDir).distinct.forall { d =>
-        bloomsOf(d) match {
-          case None => false // unknown generation → scan
-          case Some(mp) => mp.get(b) match {
-            case None => true // generation holds no rows of this bucket
-            case Some(bf) => !ks.exists(bf.mightContain)
-          }
-        }
-      } => b
+    val hits = keysByBucket.flatMap { case (b, ks) =>
+      val filters = mapping.getOrElse(b, Nil).map(generationDir).distinct
+        .map(d => bloomsOf(d).map(_.get(b)))
+      val maybe = ks.filter(k => k != null && filters.exists {
+        case None => true // unknown generation: may hold anything
+        case Some(None) => false // generation holds no rows of this bucket
+        case Some(Some(bf)) => bf.mightContain(k)
+      })
+      if (maybe.isEmpty) None else Some(b -> maybe)
     }
-    (keysByBucket.keySet, cleared.toSet)
+    Probe(keysByBucket.keySet, Some(keysByBucket), hits)
   }
+
+  /** The fold rule: which bloom-hit buckets take a masked append, each
+    * with its mask (the bucket's live files and its keys the blooms
+    * might hold). Every other bloom-hit bucket folds. A bucket folds
+    * when the delta holds ≥ 1/[[FoldShare]] of its live keys, when it
+    * would pass [[MaxFilesPerBucket]] files or [[MaxMaskKeysPerBucket]]
+    * live mask keys, or when a live generation of it has no recorded
+    * key count (written before counts were recorded, or without a file
+    * index). Deltas past [[ProbeKeyBound]] keys, and keys of a type a
+    * mask cannot persist, always fold. */
+  private def maskPlan(m: Manifest, p: Probe, keyType: DataType): Map[Int, MaskEntry] = {
+    val keys = p.keys match {
+      case Some(k) if maskDeltas && maskable(keyType) => k
+      case _ => return Map.empty
+    }
+    val genCache = scala.collection.mutable.Map.empty[String, Option[Generation]]
+    val maskCache = scala.collection.mutable.Map.empty[String, Map[Int, MaskEntry]]
+    p.hits.flatMap { case (b, hit) =>
+      val files = m.mapping.getOrElse(b, Nil)
+      val live = files.toSet
+      val gens = files.map(generationDir).distinct
+      val maskKeys = gens.filter(m.masking)
+        .flatMap(g => maskCache.getOrElseUpdate(g, maskOf(g)).get(b))
+        .filter(_.files.exists(live)).map(_.keys.size).sum
+      val counts = gens.map(g => genCache.getOrElseUpdate(g, generation(g))
+        .flatMap(_.keyCounts).map(_.getOrElse(b, 0L)))
+      val fold = counts.exists(_.isEmpty) ||
+        keys(b).size.toLong * FoldShare >= counts.flatten.sum - maskKeys ||
+        files.size >= MaxFilesPerBucket ||
+        maskKeys + hit.size > MaxMaskKeysPerBucket
+      if (fold) None else Some(b -> MaskEntry(files, hit))
+    }
+  }
+
+  /** Buckets among `scanned` holding a row whose key is in `probe` —
+    * the key-column-only collision scan. */
+  private def collisions(m: Manifest, scanned: Seq[Int], probe: DataFrame, bc: Int): Set[Int] =
+    readKeys(scanned.flatMap(m.mapping.getOrElse(_, Nil))) match {
+      case None => Set.empty
+      case Some(existing) =>
+        withBucket(existing, bc)
+          .join(probe, Seq(key), "left_semi")
+          .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+    }
+
+  /** Buckets of `m` that a live mask applies to. */
+  private def maskedBuckets(m: Manifest): Set[Int] =
+    m.masking.flatMap(g => maskOf(g).collect {
+      case (b, e) if e.files.exists(m.mapping.getOrElse(b, Nil).contains) => b
+    })
 
   // ---- public API ----
 
@@ -491,22 +723,29 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   /** The snapshot at the newest committed version. The plan pins the
     * version's file list, so later upserts don't disturb it. */
   def read(): Option[DataFrame] =
-    latestManifest().flatMap { case (_, m) => readFiles(m.values.flatten.toSeq) }
+    latestRaw().flatMap(m => readFiles(m.files, m.masking))
 
   /** The newest committed version's store-relative file list, and a
     * read of an explicit subset of it — the pair a FILE-GRAINED warm
-    * cache needs: after an insert-fast-path add (fresh keys append
-    * files, nothing rewrites), the new live set is a superset of the
+    * cache needs: after a mask-free append (fresh keys append files,
+    * nothing rewrites or masks), the new live set is a superset of the
     * cached one and the cache can read ONLY the delta files instead of
     * rebuilding from the whole store ([[graft.similarity.TextIndex]]
     * warm serving). Callers must treat file names as opaque tokens
     * from [[liveFiles]] — passing names from an older manifest risks
-    * reading vacuumed paths. */
+    * reading vacuumed paths. A subset read applies the masks of the
+    * masking generations among its files. */
   private[graft] def liveFiles: Seq[String] =
-    latestManifest().map(_._2.values.flatten.toSeq).getOrElse(Nil)
+    latestRaw().map(_.files).getOrElse(Nil)
 
   private[graft] def readFileSubset(files: Seq[String]): Option[DataFrame] =
-    readFiles(files)
+    readFiles(files, latestRaw().map(_.masking).getOrElse(Set.empty))
+
+  /** The newest version's generation token, live files and masking
+    * generations from ONE manifest read — [[LayeredFileCache]]'s
+    * freshness check. */
+  private[graft] def liveView: Option[SnapshotStore.LiveView] =
+    latestRaw().map(m => SnapshotStore.LiveView(m.token, m.files, m.masking))
 
   /** Pruned read by partition value: only the live files whose layout
     * path carries one of `values` for the partition column. Files from
@@ -516,15 +755,16 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * touches nProbe of nCells reads nProbe/nCells of the store, not
     * all of it. */
   def readPartitions(values: Seq[Any]): Option[DataFrame] =
-    readFiles(filesForPartitions(values))
+    latestRaw().flatMap(m => readFiles(filesForPartitions(values, m.files), m.masking))
 
   /** The file list [[readPartitions]] would open — exposed so specs
     * (and monitoring) can pin scan-pruning ratios. */
-  private[graft] def filesForPartitions(values: Seq[Any]): Seq[String] = {
+  private[graft] def filesForPartitions(values: Seq[Any]): Seq[String] =
+    filesForPartitions(values, liveFiles)
+
+  private def filesForPartitions(values: Seq[Any], files: Seq[String]): Seq[String] = {
     val wanted = values.map(v => s"$PartDir=$v").toSet
-    latestManifest().map(_._2.values.flatten.toSeq.filter { f =>
-      f.split('/').find(_.startsWith(s"$PartDir=")).forall(wanted.contains)
-    }).getOrElse(Nil)
+    files.filter(_.split('/').find(_.startsWith(s"$PartDir=")).forall(wanted.contains))
   }
 
   /** Pruned keyed read: only the files of the buckets `probe`'s keys
@@ -534,7 +774,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * billions-row snapshot a k-key probe opens ≤min(k, buckets)
     * buckets instead of every live file. */
   def readForKeys(probe: DataFrame): Option[DataFrame] =
-    latestRaw().flatMap(m => readFiles(filesForKeys(probe, m)))
+    latestRaw().flatMap(m => readFiles(filesForKeys(probe, m), m.masking))
 
   /** Both prunes at once: only the files whose bucket one of `probe`'s
     * keys hashes into AND whose partition value is in `values` — the
@@ -544,12 +784,8 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * partitions (the caller's contract — a key whose row lives in an
     * unlisted partition is simply not returned). */
   def readForKeysAndPartitions(probe: DataFrame, values: Seq[Any]): Option[DataFrame] =
-    latestRaw().flatMap { m =>
-      val wanted = values.map(v => s"$PartDir=$v").toSet
-      readFiles(filesForKeys(probe, m).filter { f =>
-        f.split('/').find(_.startsWith(s"$PartDir=")).forall(wanted.contains)
-      })
-    }
+    latestRaw().flatMap(m =>
+      readFiles(filesForPartitions(values, filesForKeys(probe, m)), m.masking))
 
   private[graft] def filesForKeys(probe: DataFrame): Seq[String] =
     latestRaw().map(filesForKeys(probe, _)).getOrElse(Nil)
@@ -569,10 +805,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * embed per-write generation UUIDs, so the file-list hash changes
     * whenever the content can have. The cache-invalidation key for
     * warm readers ([[graft.similarity.PqIndex]] `warmRerank`). */
-  private[graft] def latestToken: Option[(Long, Int)] =
-    latestManifest().map { case (v, m) =>
-      (v, scala.util.hashing.MurmurHash3.orderedHash(m.values.flatten.toSeq.sorted))
-    }
+  private[graft] def latestToken: Option[(Long, Int)] = latestRaw().map(_.token)
 
   /** Committed versions currently on disk, oldest first (shrinks as
     * [[vacuum]] retires old manifests). */
@@ -587,23 +820,17 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   /** Time travel: the snapshot as of a specific committed `version` —
     * free, because manifests are immutable and data files are never
-    * rewritten (a version's file list IS the version). Readable until
-    * [[vacuum]] retires the manifest; None if it already has. The
-    * audit/debug answer ("what did the tags table say before last
-    * night's merge?") the reference's destructive MySQL UPSERT cannot
-    * give. */
-  def readVersion(version: Long): Option[DataFrame] = {
-    val mp = new Path(path, f"$ManifestPrefix$version%012d.txt")
-    if (!fs.exists(mp)) None
+    * rewritten (a version's file list and masks ARE the version).
+    * Readable until [[vacuum]] retires the manifest; None if it
+    * already has. The audit/debug answer ("what did the tags table
+    * say before last night's merge?") the reference's destructive
+    * MySQL UPSERT cannot give. */
+  def readVersion(version: Long): Option[DataFrame] =
+    if (!fs.exists(manifestPath(version))) None
     else {
-      val in = fs.open(mp)
-      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      val files = text.linesIterator
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(_.split("\t", 2)(1)).toSeq
-      readFiles(files)
+      val m = readManifest(version)
+      readFiles(m.files, m.masking)
     }
-  }
 
   /** Full overwrite: new data files + new manifest listing only them
     * (the whole layout is replaced, so the constructor's bucket count
@@ -621,13 +848,29 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   /** UPSERT: rows in `df` replace snapshot rows with the same key; all
     * other snapshot rows are kept (mysql_writer UPSERT semantics).
-    * Reads ONLY the files of the buckets the incoming keys hash into
-    * (the touched buckets come from the bounded (bucket, key) collect
-    * that feeds the bloom probe), merges with one key-partitioned
-    * anti-join + union evaluated once, writes one new file per
-    * rewritten bucket (more only when a bucket is too large for one
-    * task), and publishes a manifest that reuses every untouched
-    * bucket's existing files verbatim.
+    * Only the buckets the incoming keys hash into are touched; every
+    * other bucket keeps its files verbatim. Per touched bucket, from one
+    * bounded collect of the delta's (bucket, key) pairs tested against
+    * the sidecar blooms:
+    *
+    *  - bloom-cleared (no stored key can collide): the bucket's rows
+    *    are APPENDED, nothing is read or rewritten;
+    *  - bloom-hit, small share: APPENDED with a mask that hides the
+    *    older rows of the keys the blooms might hold (merge-on-read —
+    *    see the class doc);
+    *  - bloom-hit and the fold rule fires (large share of the bucket,
+    *    too many files or mask keys, unknown key count — see
+    *    `maskPlan`): a key-column-only probe finds the buckets that
+    *    really collide, and those are rewritten copy-on-write through
+    *    their masks (one key-partitioned anti-join + union evaluated
+    *    once, one new file per bucket unless a bucket is too large for
+    *    one task); the others append.
+    *
+    * All appends — fresh and masked rows — go out in one write job,
+    * one file per bucket, with their blooms, key counts and masks built
+    * on the driver from the collected pairs. Deltas past
+    * [[ProbeKeyBound]] keys skip the blooms and masks and probe every
+    * touched bucket. One manifest publish commits everything.
     *
     * Concurrent writers: the manifest publish detects a lost race and
     * the whole merge re-runs against the winner's state (bounded
@@ -649,48 +892,44 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       val bc = m.recordedBuckets.getOrElse(buckets)
       val pcol = m.recordedPcol
       val incoming = withPart(withBucket(df, bc), pcol)
-      // INSERT FAST PATH, decided per bucket: copy-on-write is only
-      // needed where an incoming key actually replaces a stored row.
-      // The sidecar blooms clear most buckets of a fresh-keyed delta
-      // without touching data at all; the remainder get a
-      // key-column-only probe (column-pruned parquet scan — bytes ∝
-      // keys, not rows×width). Every collision-free touched bucket
-      // just APPENDS its new files to the manifest, zero read, zero
-      // rewrite. This is what keeps a continuously maintained store's
-      // ingest O(delta): a fresh-keyed delta over a uniform hash
-      // touches EVERY bucket, and without the probe each batch
-      // rewrote ~the whole snapshot (measured at sf10: a 1% codes
-      // delta cost a 23 s full rewrite). Replays stay safe by
-      // construction — a replayed batch's keys ARE present, so they
-      // take the merge path and overwrite.
-      val (touched, cleared) = touchedAndCleared(incoming, m.mapping)
-      val scanned = (touched -- cleared).toSeq.sorted
-      lastProbeStats = (scanned.size, cleared.size)
-      val colliding: Set[Int] = readKeys(scanned.flatMap(m.mapping.getOrElse(_, Nil))) match {
-        case None => Set.empty
-        case Some(existing) =>
-          withBucket(existing, bc)
-            .join(df.select(key).distinct(), Seq(key), "left_semi")
-            .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
-      }
-      // inserts land UNCLUSTERED (one file per bucket, no partition
+      // The blooms clear most buckets of a fresh-keyed delta without
+      // touching data at all, and masks absorb small replacements, so
+      // a continuously maintained store's ingest stays O(delta): a
+      // delta over a uniform hash touches EVERY bucket, and rewriting
+      // each touched bucket cost ~the whole snapshot per batch
+      // (measured at sf10: a 1% codes delta cost a 23 s full rewrite).
+      // Replays stay safe by construction — a replayed batch's keys
+      // ARE present, so they mask or fold, never duplicate.
+      val p = probe(incoming, m.mapping)
+      val masks = maskPlan(m, p, incoming.schema(key).dataType)
+      lastProbeStats = (p.hits.size, p.cleared.size)
+      val colliding = collisions(m, (p.hits.keySet -- masks.keySet).toSeq.sorted,
+        df.select(key).distinct(), bc)
+      val appending = p.touched -- colliding
+      // appends land UNCLUSTERED (one file per bucket, no partition
       // dirs): clustering every micro-delta would write one tiny file
       // per (bucket, value) it touches — thousands per streaming batch
       // (measured: a 2k-vec add appended ~1200 files). Pruned reads
       // conservatively include unpartitioned files, so correctness is
       // unchanged, and the next compact() folds them into the
       // clustered layout — the standard ingest-then-recluster trade.
+      // An explicit partition count: with AQE coalescing, a plain
+      // repartition(bucket) of a small delta ran as ONE task writing
+      // every bucket's file in series.
       val inserted =
-        if (colliding.size == touched.size) Map.empty[Int, Seq[String]]
+        if (appending.isEmpty) Map.empty[Int, Seq[String]]
         else {
-          val ins = incoming.filter(!col(BucketCol).isin(colliding.toSeq: _*))
-          writeData(pcol.fold(ins)(_ => ins.drop(PartDir)).repartition(col(BucketCol)), None)
+          val ins = if (colliding.isEmpty) incoming
+            else incoming.filter(!col(BucketCol).isin(colliding.toSeq: _*))
+          val tasks = math.max(1, math.min(appending.size, spark.sparkContext.defaultParallelism))
+          writeData(pcol.fold(ins)(_ => ins.drop(PartDir)).repartition(tasks, col(BucketCol)),
+            None, p.keys.map(_.filter { case (b, _) => appending(b) }), masks)
         }
       val merged: Map[Int, Seq[String]] =
         if (colliding.isEmpty) Map.empty
         else {
           val existing = readFiles(colliding.toSeq.sorted
-            .flatMap(m.mapping.getOrElse(_, Nil))).get
+            .flatMap(m.mapping.getOrElse(_, Nil)), m.masking).get
           val kept = withPart(withBucket(existing, bc), pcol)
             .join(df.select(key).distinct(), Seq(key), "left_anti")
           // schema evolution: a column the incoming frame adds (e.g. a
@@ -716,8 +955,11 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       val appended = inserted.map { case (b, fs0) =>
         b -> (m.mapping.getOrElse(b, Nil) ++ fs0)
       }
+      val newMasking = if (masks.isEmpty) Set.empty[String]
+        else inserted.values.flatten.map(generationDir).toSet
       onBeforeCommit()
-      commit(m.version + 1, bc, (m.mapping -- colliding) ++ appended ++ merged, pcol)
+      commit(m.version + 1, bc, (m.mapping -- colliding) ++ appended ++ merged, pcol,
+        m.masking ++ newMasking)
   }
 
   /** Keyed DELETE: remove every row whose key appears in `keys`; all
@@ -727,7 +969,8 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * only the buckets the keys hash into are considered, the sidecar
     * blooms clear buckets that provably hold none of them (zero I/O),
     * the rest take a key-column-only scan, and only buckets that
-    * actually contain a key are rewritten (anti-join) — O(touched
+    * actually contain a key are rewritten (anti-join, read through
+    * their masks, every file of the bucket replaced) — O(touched
     * buckets), not O(snapshot). A bucket whose every row is deleted
     * drops out of the manifest entirely. Deleting absent keys is a
     * no-op: no rewrite, NO new manifest version (idempotent replays
@@ -746,24 +989,17 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     case Some(m) =>
       val bc = m.recordedBuckets.getOrElse(buckets)
       val pcol = m.recordedPcol
-      val probe = keys.select(key).distinct()
-      val (touched, cleared) = touchedAndCleared(withBucket(probe, bc), m.mapping)
-      val scanned = (touched -- cleared).toSeq.sorted
-      lastProbeStats = (scanned.size, cleared.size)
+      val doomed = keys.select(key).distinct()
+      val p = probe(withBucket(doomed, bc), m.mapping)
+      lastProbeStats = (p.hits.size, p.cleared.size)
       // buckets that actually hold a doomed key (key-column-only scan)
-      val colliding: Set[Int] = readKeys(scanned.flatMap(m.mapping.getOrElse(_, Nil))) match {
-        case None => Set.empty
-        case Some(existing) =>
-          withBucket(existing, bc)
-            .join(probe, Seq(key), "left_semi")
-            .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
-      }
+      val colliding = collisions(m, p.hits.keySet.toSeq.sorted, doomed, bc)
       if (colliding.isEmpty) 0L
       else {
         val existing = readFiles(colliding.toSeq.sorted
-          .flatMap(m.mapping.getOrElse(_, Nil))).get
+          .flatMap(m.mapping.getOrElse(_, Nil)), m.masking).get
         val kept = withPart(withBucket(
-          existing.join(probe, Seq(key), "left_anti"), bc), pcol)
+          existing.join(doomed, Seq(key), "left_anti"), bc), pcol)
           .localCheckpoint() // pin counts + write input to ONE evaluation
         val removed = existing.count() - kept.count()
         // an all-deleted bucket writes no files and must leave the
@@ -771,22 +1007,23 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
         // holds only colliding buckets' rows — existing read just them)
         val rewritten = writeData(kept, pcol)
         onBeforeCommit()
-        commit(m.version + 1, bc, (m.mapping -- colliding) ++ rewritten, pcol)
+        commit(m.version + 1, bc, (m.mapping -- colliding) ++ rewritten, pcol, m.masking)
         removed
       }
   }
 
   /** Rewrite every bucket whose live file list exceeds
-    * `maxFilesPerBucket` into one file per (bucket, partition value)
-    * and publish a new manifest — the small-file countermeasure for
-    * continuously maintained snapshots. A streaming upsert ([[upsert]]
-    * per micro-batch) writes each touched bucket as parallel part
-    * files, so N batches leave O(tasks) live files per hot bucket;
-    * every reader then pays that open/footer cost forever. Compaction
-    * is layout-only: rows are untouched (the merge is a read + union),
-    * readers of older versions keep their pinned file lists (snapshot
+    * `maxFilesPerBucket`, or that a live mask applies to, into one file
+    * per (bucket, partition value) and publish a new manifest — the
+    * small-file countermeasure for continuously maintained snapshots,
+    * and the fold that retires masks. Each upsert appends or rewrites
+    * a generation per touched bucket, so N batches leave O(N) live
+    * files per hot bucket; every reader then pays that open/footer
+    * (and mask) cost forever. Compaction is layout-only: rows are
+    * untouched (the merge is a read through the masks + union), readers
+    * of older versions keep their pinned file lists (snapshot
     * isolation), and the superseded files become vacuum food. Each
-    * over-split bucket lands in exactly one partition (repartition on
+    * compacted bucket lands in exactly one partition (repartition on
     * the bucket column) so the rewrite emits exactly one file per
     * bucket (per partition value when partitioned). Returns the number
     * of buckets compacted.
@@ -795,8 +1032,9 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * buckets — a billions-row store compacts incrementally (each call
     * is one bounded job + one manifest version) instead of rewriting
     * every over-split bucket in a single monolithic commit; repeat
-    * until it returns 0. */
-  /** Concurrent-writer safety: compaction publishes a manifest like
+    * until it returns 0.
+    *
+    * Concurrent-writer safety: compaction publishes a manifest like
     * any writer, so it can lose the commit race to an upsert/delete
     * that landed between its read and its publish — committing the
     * stale mapping anyway would resurrect replaced rows. Same
@@ -811,15 +1049,18 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     case Some(m) =>
       val bc = m.recordedBuckets.getOrElse(buckets)
       val pcol = m.recordedPcol
+      val masked = maskedBuckets(m)
       // with a partition column the layout floor is one file per
       // (bucket, partition value), so the threshold applies per value —
       // judging the whole bucket would see every multi-value bucket as
       // permanently fat and rewrite the store on every compaction.
-      // Files WITHOUT a partition segment (unclustered insert-path
-      // ingest) always mark their bucket fat: they evade partition
-      // pruning until compaction folds them into the clustered layout
-      val fat = m.mapping.filter { case (_, files) =>
-        if (pcol.isEmpty) files.size > maxFilesPerBucket
+      // Files WITHOUT a partition segment (unclustered appends) always
+      // mark their bucket fat: they evade partition pruning until
+      // compaction folds them into the clustered layout. So does a
+      // live mask: every read of the bucket pays for it until a fold
+      val fat = m.mapping.filter { case (b, files) =>
+        if (masked(b)) true
+        else if (pcol.isEmpty) files.size > maxFilesPerBucket
         else {
           val groups = files.groupBy(
             _.split('/').find(_.startsWith(s"$PartDir=")).getOrElse(""))
@@ -834,12 +1075,12 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
         // per bucket, and buckets at different schema versions union
         // with missing columns nulled
         val merged = fat.keys.toSeq.sorted
-          .map(b => readFiles(fat(b)).get.withColumn(BucketCol, lit(b)))
+          .map(b => readFiles(fat(b), m.masking).get.withColumn(BucketCol, lit(b)))
           .reduce(_.unionByName(_, allowMissingColumns = true))
           .repartition(fat.size, col(BucketCol))
         val rewritten = writeData(withPart(merged, pcol), pcol)
         onBeforeCommit()
-        commit(m.version + 1, bc, m.mapping ++ rewritten, pcol)
+        commit(m.version + 1, bc, m.mapping ++ rewritten, pcol, m.masking)
         fat.size
       }
   }
@@ -851,38 +1092,27 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * manifest (the same reason every lakehouse vacuum has a retention
     * window). Run out-of-band. Returns the number of files deleted. */
   def vacuum(keepVersions: Int = 1, minAgeMs: Long = 3600L * 1000L): Long =
-    latestManifest() match {
+    versions().lastOption match {
     case None => 0L
-    case Some((latest, _)) =>
-      val keep = fs.listStatus(new Path(path)).map(_.getPath.getName)
-        .filter(n => n.startsWith(ManifestPrefix))
-        .map(n => n.stripPrefix(ManifestPrefix).stripSuffix(".txt").toLong)
-        .filter(_ > latest - keepVersions)
-        .toSet
-      val live = keep.flatMap { v =>
-        val in = fs.open(new Path(path, f"$ManifestPrefix$v%012d.txt"))
-        val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-        text.linesIterator.filter(l => l.nonEmpty && !l.startsWith("#"))
-          .map(_.split("\t", 2)(1)).toSet
-      }
+    case Some(latest) =>
+      val keep = versions().filter(_ > latest - keepVersions).toSet
+      val live = keep.flatMap(v => readManifest(v).files)
       val cutoff = System.currentTimeMillis() - minAgeMs
+      val prefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
       var deleted = 0L
       for (entry <- fs.listStatus(new Path(path))) {
         val name = entry.getPath.getName
         if (entry.isDirectory && name.startsWith("data-")) {
-          val it = fs.listFiles(entry.getPath, true)
-          val prefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
-          while (it.hasNext) {
-            val f = it.next()
+          for (f <- parquetFilesUnder(entry.getPath)) {
             val rel = f.getPath.toUri.getPath.stripPrefix(prefix)
-            if (f.getPath.getName.endsWith(".parquet") && !live.contains(rel) &&
-                f.getModificationTime < cutoff) {
+            if (!live.contains(rel) && f.getModificationTime < cutoff) {
               fs.delete(f.getPath, false); deleted += 1
             }
           }
-          // a generation with no live data left takes its bloom and
-          // file-index sidecars with it (same age gate as the data files)
-          if (!live.exists(_.startsWith(name + "/"))) for (sidecar <- Seq(BloomFile, FilesFile)) {
+          // a generation with no live data left takes its bloom, file-
+          // index and mask sidecars with it (same age gate as the data
+          // files)
+          if (!live.exists(_.startsWith(name + "/"))) for (sidecar <- Seq(BloomFile, FilesFile, MaskFile)) {
             val p = new Path(entry.getPath, sidecar)
             if (fs.exists(p) && fs.getFileStatus(p).getModificationTime < cutoff) fs.delete(p, false)
           }
@@ -897,32 +1127,30 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   /** Post-write validation (optimized_mysql_writer.py:180-220): every
     * key written must be present in the snapshot. Pruned: only the
-    * written keys' buckets are read, not the whole snapshot. Returns
-    * the number of missing keys (0 = good). */
+    * written keys' buckets are read, key column only (a masked key is
+    * always present in the generation that masks it, so no mask is
+    * needed). Returns the number of missing keys (0 = good). */
   def validateWrite(written: DataFrame): Long = {
     val probe = written.select(key).distinct()
-    readForKeys(probe) match {
+    latestRaw().flatMap(m => readKeys(filesForKeys(probe, m))) match {
       case None => probe.count()
-      case Some(snap) => probe.join(snap.select(key), Seq(key), "left_anti").count()
+      case Some(snap) => probe.join(snap, Seq(key), "left_anti").count()
     }
   }
 
   /** Distinct keys currently in the snapshot (used by incremental-user
     * detection, scenario_scheduler.py:514-531). */
-  def keys(): DataFrame = read() match {
-    case Some(df) => df.select(key).distinct()
-    case None => emptyKeys()
-  }
+  def keys(): DataFrame =
+    latestRaw().flatMap(m => readKeys(m.files)).map(_.distinct()).getOrElse(emptyKeys())
 
   /** Distinct snapshot keys RESTRICTED to the buckets `probe`'s keys
     * hash into — the right-hand side for "which probe keys are new?"
     * anti-joins (incremental-user detection at scale): snapshot keys
     * in other buckets can't match any probe key, so the anti-join
     * result is identical while the scan is O(probed buckets). */
-  def keysFor(probe: DataFrame): DataFrame = readForKeys(probe) match {
-    case Some(df) => df.select(key).distinct()
-    case None => emptyKeys()
-  }
+  def keysFor(probe: DataFrame): DataFrame =
+    latestRaw().flatMap(m => readKeys(filesForKeys(probe, m))).map(_.distinct())
+      .getOrElse(emptyKeys())
 
   private def emptyKeys(): DataFrame = {
     import spark.implicits._
@@ -931,6 +1159,45 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 }
 
 object SnapshotStore {
+  private val BloomFpp = 0.001
+
+  /** One committed version: its recorded layout, bucket → live files,
+    * and the generations among them whose masks hide older rows. */
+  private final case class Manifest(version: Long, recordedBuckets: Option[Int],
+                                    recordedPcol: Option[String],
+                                    mapping: Map[Int, Seq[String]],
+                                    masking: Set[String]) {
+    def files: Seq[String] = mapping.toSeq.sortBy(_._1).flatMap(_._2)
+    def token: (Long, Int) =
+      (version, scala.util.hashing.MurmurHash3.orderedHash(files.sorted))
+  }
+
+  /** One generation's file index. `keyCounts` is its distinct keys per
+    * bucket — the fold rule's input; None for a generation written
+    * before key counts were recorded. */
+  private final case class Generation(schema: StructType, files: Map[String, (Long, Long)],
+                                      keyCounts: Option[Map[Int, Long]])
+
+  /** One bucket's mask: the files it hides rows in, and the keys. */
+  private final case class MaskEntry(files: Seq[String], keys: Seq[Any])
+
+  /** A delta's touched buckets; its distinct keys per bucket when at
+    * most the store's probe bound (None past it); and `hits`, the buckets the
+    * blooms cannot clear, each with the non-null keys some live
+    * generation of the bucket might hold. */
+  private final case class Probe(touched: Set[Int], keys: Option[Map[Int, Seq[Any]]],
+                                 hits: Map[Int, Seq[Any]]) {
+    def cleared: Set[Int] = touched -- hits.keySet
+  }
+
+  /** One committed version as a warm cache sees it: its generation
+    * token, live files, and the generations whose masks hide rows of
+    * older files. */
+  private[graft] final case class LiveView(token: (Long, Int), files: Seq[String],
+                                           masking: Set[String]) {
+    def masks(file: String): Boolean = masking(file.takeWhile(_ != '/'))
+  }
+
   /** Bucket-count guideline for a PARTITIONED store: the layout floor
     * is one file per (bucket, partition), so the only reason to raise
     * buckets above 1 is per-partition data outgrowing the target file

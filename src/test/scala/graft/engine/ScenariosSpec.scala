@@ -71,4 +71,31 @@ class ScenariosSpec extends SparkSpec {
     assert(snapshotTags(store) == Map(7L -> Seq(2), 8L -> Seq(1)))
     assert(store.keys().as[Long].collect().toSet == Set(7L, 8L))
   }
+
+  test("a tag-subset run over users in 2 of 8 buckets opens only those buckets' files") {
+    val dir = Files.createTempDirectory("snap_scoped").toString + "/user_tags"
+    val store = new SnapshotStore(spark, dir, buckets = 8)
+    val many = (1L to 40L).map(i => (i, i * 100.0, "2024-01-01", if (i % 2 == 0) "ok" else "no"))
+      .toDF("user_id", "assets", "d", "kyc")
+      .withColumn("reg_date", col("d").cast("date")).drop("d")
+    val s = new Scenarios(engine, store)
+    s.fullUsersFullTags(many, rules)
+    val full = snapshotTags(store)
+    // each key's bucket, read off the file that holds it
+    val bucketOf = store.read().get.select(col("user_id"), col("_metadata.file_path")).collect()
+      .map(r => r.getLong(0) -> r.getString(1).split('/').find(_.startsWith("snap_bucket=")).get).toMap
+    val two = bucketOf.values.toSeq.distinct.sorted.take(2).toSet
+    val scoped = bucketOf.collect { case (u, b) if two(b) => u }.toSeq
+    // every other bucket's data files move away: opening one fails the run
+    val fsys = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val away = store.liveFiles.filterNot(f => two.exists(b => f.contains(s"/$b/")))
+    assert(away.nonEmpty && away.size < store.liveFiles.size)
+    def move(from: String, to: String) =
+      assert(fsys.rename(new org.apache.hadoop.fs.Path(from), new org.apache.hadoop.fs.Path(to)))
+    away.foreach(f => move(s"$dir/$f", s"$dir/$f.away"))
+    try s.fullUsersSpecificTags(many.filter(col("user_id").isin(scoped: _*)), rules, Set(1))
+    finally away.foreach(f => move(s"$dir/$f.away", s"$dir/$f"))
+    // tag 1 recomputed over the same users: every user keeps its tags
+    assert(snapshotTags(store) == full)
+  }
 }

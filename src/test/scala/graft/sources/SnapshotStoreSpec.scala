@@ -16,15 +16,28 @@ class SnapshotStoreSpec extends SparkSpec {
     * Listener events arrive asynchronously but in order, so a marker
     * job run before and after `body` brackets exactly its events. */
   private def recorded[T](body: => T): (T, Seq[String], Seq[String]) = {
+    val (out, jobs, plans, _) = recordedWithRdd(body)
+    (out, jobs, plans)
+  }
+
+  /** [[recorded]], plus the number of jobs that ran outside any SQL
+    * execution (bare RDD actions). */
+  private def recordedWithRdd[T](body: => T): (T, Seq[String], Seq[String], Int) = {
     val sc = spark.sparkContext
     val jobs = new ConcurrentLinkedQueue[String]()
     val plans = new ConcurrentLinkedQueue[String]()
+    val rddJobs = new java.util.concurrent.atomic.AtomicInteger()
     val markers = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        if (d == "spec-marker") markers.incrementAndGet() else jobs.add(d)
+        val props = Option(e.properties)
+        val d = props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        if (d == "spec-marker") markers.incrementAndGet()
+        else {
+          jobs.add(d)
+          if (props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).isEmpty)
+            rddJobs.incrementAndGet()
+        }
       }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription)
@@ -41,10 +54,10 @@ class SnapshotStoreSpec extends SparkSpec {
     }
     sc.addSparkListener(listener)
     try {
-      drain(); jobs.clear(); plans.clear()
+      drain(); jobs.clear(); plans.clear(); rddJobs.set(0)
       val out = body
       drain()
-      (out, jobs.asScala.toSeq, plans.asScala.toSeq)
+      (out, jobs.asScala.toSeq, plans.asScala.toSeq, rddJobs.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -555,7 +568,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_snap_parity").toString
     // schema-evolved, mixed-generation store: pre-evolution files, an
     // appended generation that adds batch_id, one that adds note in a
-    // different column order, and a copy-on-write merge of two keys.
+    // different column order, and a copy-on-write merge of one bucket.
     // Generation dirs sort by random UUID, so the merged column order
     // differs from run to run — both reads must agree anyway.
     val dir = s"$root/evolved"
@@ -564,7 +577,14 @@ class SnapshotStoreSpec extends SparkSpec {
     val firstGen = store.liveFiles.head.takeWhile(_ != '/')
     store.upsert((61L to 80L).map(i => (i, s"v$i", 7L)).toDF("user_id", "v", "batch_id"))
     store.upsert((81L to 90L).map(i => (s"n$i", i, s"v$i")).toDF("note", "user_id", "v"))
-    store.upsert(Seq(("n1", 1L, "u1"), ("n2", 2L, "u2")).toDF("note", "user_id", "v"))
+    // the copy-on-write merge takes every base key of one bucket — a
+    // delta the fold rule rewrites — that holds neither key 2 (upserted
+    // again below, on the pre-sidecar path) nor key 40
+    val bucketOf = store.read().get.select(col("user_id"), col("_metadata.file_path")).collect()
+      .map(r => r.getLong(0) -> r.getString(1).split('/').find(_.startsWith("snap_bucket=")).get).toMap
+    val target = (1L to 60L).map(bucketOf).find(b => b != bucketOf(2L) && b != bucketOf(40L)).get
+    val merging = (1L to 60L).filter(bucketOf(_) == target)
+    store.upsert(merging.map(i => (s"n$i", i, s"u$i")).toDF("note", "user_id", "v"))
     val live = store.liveFiles
     assert(live.map(_.takeWhile(_ != '/')).distinct.size == 4 &&
       live.exists(_.startsWith(firstGen + "/")), "setup: four live generations")
@@ -630,11 +650,215 @@ class SnapshotStoreSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_snap_cow").toString + "/snap"
     val store = new SnapshotStore(spark, dir, buckets = 4)
     store.overwrite((1L to 200L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(6))
-    store.upsert((1L to 50L).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
+    // half of every bucket's keys: a delta the fold rule rewrites
+    store.upsert(((1L to 50L) ++ (101L to 150L)).map(i => (i, s"u$i")).toDF("user_id", "v").repartition(6))
     val (_, after) = store.latestManifest().get
     assert(after.size == 4 && after.values.forall(_.size == 1),
       s"each rewritten bucket must be one file, got ${after.map { case (b, f) => b -> f.size }}")
     val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got.size == 200 && got(1L) == "u1" && got(51L) == "v51")
+  }
+
+  // ---- merge-on-read: masked delta generations ----
+
+  /** A merge-on-read store and its copy-on-write twin (every bucket the
+    * blooms cannot clear folds), fed the same writes. */
+  private final class Twins(name: String, buckets: Int, key: String = "user_id",
+                            pcol: Option[String] = None) {
+    private val root = Files.createTempDirectory(name).toString
+    val dirs = Seq(s"$root/mor", s"$root/cow")
+    val mor = new SnapshotStore(spark, dirs(0), key, buckets, pcol)
+    val cow = new SnapshotStore(spark, dirs(1), key, buckets, pcol)
+    cow.maskDeltas = false
+    def apply(write: SnapshotStore => Unit): Unit = { write(mor); write(cow) }
+    def assertSame(read: SnapshotStore => Option[DataFrame], what: String): Unit =
+      assertSameRead(read(mor).get, read(cow).get, what)
+  }
+
+  private def masking(store: SnapshotStore): Set[String] = store.liveView.get.masking
+
+  test("merge-on-read: the newest generation wins across three upserts of one key") {
+    val s = spark
+    import s.implicits._
+    val t = new Twins("graft_mor_newest", buckets = 4)
+    t(_.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v")))
+    for (g <- 1 to 3)
+      t(_.upsert(Seq((7L, s"g$g"), (1000L + g, s"n$g")).toDF("user_id", "v")))
+    assert(masking(t.mor).size == 3, s"three masking generations, got ${masking(t.mor)}")
+    assert(masking(t.cow).isEmpty)
+    t.assertSame(_.read(), "full read")
+    t.assertSame(_.readForKeys(Seq(7L, 8L).toDF("user_id")), "keyed read")
+    assert(t.mor.read().get.filter(col("user_id") === 7L).select("v").as[String].collect().toSeq == Seq("g3"))
+    assert(t.mor.validateWrite(Seq(7L, 1003L).toDF("user_id")) == 0L)
+    assert(t.mor.keys().count() == 103L)
+  }
+
+  test("merge-on-read: a delta that adds a column nulls it on old rows; masked rows stay hidden") {
+    val s = spark
+    import s.implicits._
+    val t = new Twins("graft_mor_evolve", buckets = 4)
+    t(_.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v")))
+    t(_.upsert(Seq((7L, "u7", 3L), (8L, "u8", 3L)).toDF("user_id", "v", "batch_id")))
+    assert(masking(t.mor).nonEmpty && masking(t.cow).isEmpty)
+    t.assertSame(_.read(), "evolved read")
+    val got = t.mor.read().get.select("user_id", "v", "batch_id").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), Option(r.get(2)))).toMap
+    assert(got.size == 100 && got(7L) == (("u7", Some(3L))) && got(9L) == (("v9", None)))
+    // the mergeSchema fallback (generations without a file index)
+    // applies the masks too
+    val fsys = new Path(t.dirs.head).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for ((dir, store) <- t.dirs.zip(Seq(t.mor, t.cow));
+         gen <- store.liveFiles.map(_.takeWhile(_ != '/')).distinct)
+      assert(fsys.delete(new Path(s"$dir/$gen/.files"), false))
+    t.assertSame(_.read(), "evolved read without file indexes")
+    assert(t.mor.read().get.filter(col("user_id") === 7L).count() == 1L)
+  }
+
+  test("merge-on-read: delete of a key living in the base and in a delta removes the visible row") {
+    val s = spark
+    import s.implicits._
+    val t = new Twins("graft_mor_delete", buckets = 4)
+    t(_.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v")))
+    t(_.upsert(Seq((7L, "u7")).toDF("user_id", "v")))
+    assert(masking(t.mor).nonEmpty, "setup: key 7's bucket is masked")
+    val removed = (t.mor.delete(Seq(7L).toDF("user_id")), t.cow.delete(Seq(7L).toDF("user_id")))
+    assert(removed == ((1L, 1L)), s"one visible row of key 7 removed, got $removed")
+    t.assertSame(_.read(), "after delete")
+    assert(t.mor.read().get.filter(col("user_id") === 7L).count() == 0L)
+    assert(t.mor.read().get.count() == 99L)
+    assert(masking(t.mor).isEmpty, "the delete rewrote the only masked bucket, every file of it")
+  }
+
+  test("merge-on-read: compact folds masks with rows unchanged") {
+    val s = spark
+    import s.implicits._
+    val t = new Twins("graft_mor_compact", buckets = 4)
+    t(_.overwrite((1L to 200L).map(i => (i, s"v$i")).toDF("user_id", "v")))
+    t(_.upsert(Seq((7L, "u7"), (8L, "u8"), (9L, "u9"), (10L, "u10")).toDF("user_id", "v")))
+    assert(masking(t.mor).nonEmpty)
+    val before = t.mor.read().get.collect().map(_.toString).sorted.toSeq
+    // under the file threshold, yet every masked bucket folds
+    assert(t.mor.compact(maxFilesPerBucket = 8) > 0)
+    assert(masking(t.mor).isEmpty, s"compaction must retire every mask, got ${masking(t.mor)}")
+    assert(t.mor.read().get.collect().map(_.toString).sorted.toSeq == before)
+    t.assertSame(_.read(), "after compact")
+    assert(t.mor.compact(maxFilesPerBucket = 8) == 0, "nothing left to fold")
+    // the retired masking generation's mask goes with its data files
+    val fsys = new Path(t.dirs.head).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def masks() = fsys.listStatus(new Path(t.dirs.head))
+      .count(st => st.isDirectory && fsys.exists(new Path(st.getPath, ".mask")))
+    assert(masks() > 0)
+    t.mor.vacuum(keepVersions = 1, minAgeMs = 0L)
+    assert(masks() == 0, "vacuum must drop a dead generation's mask")
+    assert(t.mor.read().get.collect().map(_.toString).sorted.toSeq == before)
+  }
+
+  test("merge-on-read: readVersion of pre-mask and post-mask versions") {
+    val s = spark
+    import s.implicits._
+    val t = new Twins("graft_mor_tt", buckets = 4)
+    t(_.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v")))
+    t(_.upsert(Seq((7L, "u7")).toDF("user_id", "v")))
+    t(_.upsert(Seq((7L, "w7"), (8L, "w8")).toDF("user_id", "v")))
+    val Seq(v1, v2, v3) = t.mor.versions()
+    assert(t.cow.versions() == Seq(v1, v2, v3))
+    for (v <- Seq(v1, v2, v3)) t.assertSame(_.readVersion(v), s"version $v")
+    def at(v: Long, k: Long) = t.mor.readVersion(v).get.filter(col("user_id") === k)
+      .select("v").as[String].collect().toSeq
+    assert(at(v1, 7L) == Seq("v7") && at(v2, 7L) == Seq("u7") && at(v3, 7L) == Seq("w7"))
+    assert(at(v2, 8L) == Seq("v8") && at(v3, 8L) == Seq("w8"))
+  }
+
+  test("merge-on-read: a partitioned store through readPartitions") {
+    val s = spark
+    import s.implicits._
+    val t = new Twins("graft_mor_pcol", buckets = 4, key = "id", pcol = Some("cell"))
+    t(_.overwrite((1L to 200L).map(i => (i, (i % 4).toInt, s"v$i")).toDF("id", "cell", "v")))
+    // key 10 stays in cell 2; key 11 moves from cell 3 to cell 1
+    t(_.upsert(Seq((10L, 2, "updated"), (11L, 1, "moved")).toDF("id", "cell", "v")))
+    assert(masking(t.mor).nonEmpty && masking(t.cow).isEmpty)
+    // appends are unclustered, so a pruned read may hold rows of other
+    // cells; callers filter on the column
+    for (cells <- Seq(Seq(1), Seq(2), Seq(3), Seq(1, 3)))
+      t.assertSame(_.readPartitions(cells).map(_.filter(col("cell").isin(cells: _*))), s"cells $cells")
+    val cell3 = t.mor.readPartitions(Seq(3)).get.filter(col("cell") === 3)
+    assert(cell3.filter(col("id") === 11L).count() == 0L, "the moved key's old row stays hidden")
+    t.assertSame(_.read(), "full read")
+  }
+
+  test("merge-on-read: a store without key counts keeps copy-on-write") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_mor_legacy").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    val rows = store.read().get.collect().map(_.toString).sorted.toSeq
+    // a generation written before key counts were recorded has no
+    // #keys line in its file index
+    val fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (st <- fsys.listStatus(new Path(dir)) if st.getPath.getName.startsWith("data-")) {
+      val p = new Path(st.getPath, ".files")
+      val in = fsys.open(p)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val out = fsys.create(p, true)
+      try out.write(text.linesIterator.filterNot(_.startsWith("#keys=")).mkString("\n").getBytes("UTF-8"))
+      finally out.close()
+    }
+    assert(store.read().get.collect().map(_.toString).sorted.toSeq == rows, "reads back identically")
+    val (_, before) = store.latestManifest().get
+    store.upsert(Seq((7L, "u7")).toDF("user_id", "v"))
+    assert(masking(store).isEmpty, "no key counts: the bucket folds")
+    val (_, after) = store.latestManifest().get
+    val changed = before.keySet.filter(b => before(b) != after(b))
+    assert(changed.size == 1 && after(changed.head).size == 1 &&
+      !after(changed.head).exists(before(changed.head).contains),
+      s"the colliding bucket is rewritten as one new file, got $changed")
+    assert(store.read().get.filter(col("user_id") === 7L).select("v").as[String].collect().toSeq == Seq("u7"))
+    assert(store.read().get.count() == 100L)
+  }
+
+  test("merge-on-read: a read naming a masking generation without its mask throws") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_mor_nomask").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    store.upsert(Seq((7L, "u7")).toDF("user_id", "v"))
+    val gen = masking(store).head
+    val fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fsys.delete(new Path(s"$dir/$gen/.mask"), false))
+    for ((what, read) <- Seq[(String, () => Option[DataFrame])](
+        "read" -> (() => store.read()),
+        "readForKeys" -> (() => store.readForKeys(Seq(7L).toDF("user_id"))),
+        "readVersion" -> (() => store.readVersion(store.versions().last)))) {
+      val e = intercept[IllegalStateException](read().map(_.collect()))
+      assert(e.getMessage.contains("superseded"), s"$what: ${e.getMessage}")
+    }
+    // key-only reads need no mask
+    assert(store.validateWrite(Seq(7L).toDF("user_id")) == 0L)
+  }
+
+  test("merge-on-read: a small colliding upsert runs no anti-join or bloom job; one file per touched bucket") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_mor_jobs").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 400L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    val (_, before) = store.latestManifest().get
+    val delta = Seq((7L, "u7"), (50L, "u50"), (123L, "u123"), (301L, "u301"), (1001L, "n1"))
+      .toDF("user_id", "v").localCheckpoint()
+    val (_, _, plans, rddJobs) = recordedWithRdd(store.upsert(delta))
+    assert(masking(store).nonEmpty, "setup: the colliding buckets are masked, not folded")
+    assert(!plans.exists(_.contains("LeftAnti")), "no anti-join over the stored buckets")
+    assert(!plans.exists(_.contains("approx_count_distinct")), "no bloom sizing job")
+    assert(rddJobs == 0, s"no bloom build job, got $rddJobs bare RDD jobs")
+    val (_, after) = store.latestManifest().get
+    val added = after.map { case (b, files) => b -> files.filterNot(before.getOrElse(b, Nil).contains) }
+      .filter(_._2.nonEmpty)
+    assert(added.nonEmpty && added.values.forall(_.size == 1),
+      s"one new file per touched bucket, got ${added.map { case (b, f) => b -> f.size }}")
+    assert(before.forall { case (b, files) => files.forall(after(b).contains) }, "nothing rewritten")
+    val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size == 401 && got(7L) == "u7" && got(301L) == "u301" && got(8L) == "v8")
   }
 }
