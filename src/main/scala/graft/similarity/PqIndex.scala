@@ -147,10 +147,8 @@ class PqIndex(spark: SparkSession, dir: String,
   // cell-partitioned from the scan), so InMemoryTableScan's min/max
   // batch pruning on `cell` keeps working per layer — no re-layout
   // needed here, unlike the lexical cache.
-  private val sqWarmCache = new graft.sources.LayeredFileCache(sqStore)({ files =>
-    sqStore.readFileSubset(files)
-      .getOrElse(sys.error(s"warm SQ8 cache: empty file set at $dir"))
-      .select("neighbor_id", "cell", "sq")
+  private val sqWarmCache = new graft.sources.LayeredFileCache(sqStore)({ (rows, _) =>
+    rows.select("neighbor_id", "cell", "sq")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   })(
     // capped LSM merges just persist the delta-sized union: the rows

@@ -133,10 +133,8 @@ class TextIndex(spark: SparkSession, dir: String,
         math.max(1, math.min(loadStats()._3, nFiles)), col("tpart"))
       .sortWithinPartitions("tpart", "word")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  private val warmCache = new graft.sources.LayeredFileCache(store)({ files =>
-    warmLayout(store.readFileSubset(files)
-      .getOrElse(sys.error(s"warm cache: empty file set at $dir"))
-      .select("doc_id", "word", "tf", "dl", "tpart"), files.size)
+  private val warmCache = new graft.sources.LayeredFileCache(store)({ (rows, nFiles) =>
+    warmLayout(rows.select("doc_id", "word", "tf", "dl", "tpart"), nFiles)
   })(warmLayout)
   private[graft] def warmLayerCount: Int = warmCache.layerCount
   private def warmPostingsFrame(): Option[DataFrame] = warmCache.frame()

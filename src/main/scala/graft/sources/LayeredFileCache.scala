@@ -37,14 +37,16 @@ import org.apache.spark.sql.DataFrame
   *
   * `buildLayer` decides the cached LAYOUT (range-partitioning, sort,
   * column pruning, persist level) — the caller owns it because the
-  * layout IS the win (a bare persist measured SLOWER than cold, r14);
-  * it is only ever called with a non-empty file list. `relayout`
-  * applies the SAME layout (including the persist) to an in-memory
-  * union of layers — the merge path's twin of `buildLayer`, handed
-  * the merged file count so partition sizing can match.
+  * layout IS the win (a bare persist measured SLOWER than cold, r14).
+  * The cache reads the layer's files itself, with the masks of the
+  * same manifest read its file list came from, and hands `buildLayer`
+  * those rows and the file count. `relayout` applies the SAME layout
+  * (including the persist) to an in-memory union of layers — the merge
+  * path's twin of `buildLayer`, handed the merged file count so
+  * partition sizing can match.
   */
 final class LayeredFileCache(store: SnapshotStore, maxLayers: Int = 8)
-                            (buildLayer: Seq[String] => DataFrame)
+                            (buildLayer: (DataFrame, Int) => DataFrame)
                             (relayout: (DataFrame, Int) => DataFrame) {
   private var token: Option[(Long, Int)] = None
   private var layers: Vector[(Set[String], DataFrame)] = Vector.empty
@@ -62,6 +64,8 @@ final class LayeredFileCache(store: SnapshotStore, maxLayers: Int = 8)
       case Some(view) if token.contains(view.token) && layers.nonEmpty => union
       case Some(view) if view.files.isEmpty => release(); None
       case Some(view) =>
+        def layer(files: Seq[String]) = buildLayer(store.readFileSubset(view, files)
+          .getOrElse(sys.error("warm cache: empty file set")), files.size)
         val live = view.files
         val cachedSet = layers.iterator.flatMap(_._1).toSet
         val newFiles = live.filterNot(cachedSet)
@@ -71,7 +75,7 @@ final class LayeredFileCache(store: SnapshotStore, maxLayers: Int = 8)
         if (layers.nonEmpty && cachedSet.subsetOf(live.toSet) && !newFiles.exists(view.masks)) {
           // append-only delta: cache ONLY the new files as a layer
           if (newFiles.nonEmpty)
-            layers = layers :+ ((newFiles.toSet, buildLayer(newFiles)))
+            layers = layers :+ ((newFiles.toSet, layer(newFiles)))
           // over the cap: merge the two layers with the FEWEST files
           // (LSM-style) — a delta-sized relayout from the cached
           // frames, never a whole-store file re-read. Materialize the
@@ -90,7 +94,7 @@ final class LayeredFileCache(store: SnapshotStore, maxLayers: Int = 8)
           }
         } else {
           release()
-          layers = Vector((live.toSet, buildLayer(live)))
+          layers = Vector((live.toSet, layer(live)))
         }
         token = Some(view.token)
         union

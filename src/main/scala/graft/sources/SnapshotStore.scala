@@ -61,19 +61,20 @@ import SnapshotStore._
   * bucket): a delta key that may already be stored does not force its
   * bucket through a rewrite. The delta is appended as a new generation
   * whose `.mask` sidecar lists, per bucket, the keys it replaces and
-  * the bucket's files that were live when it committed; reads hide a
-  * masked key's rows in exactly those files, so the newest generation
-  * wins. The manifest marks masking generations with a `#mask=` header
-  * line. Masks are correctness data: a read that names a masking
-  * generation whose mask cannot be loaded THROWS rather than return
-  * superseded rows. Key-only reads ([[keys]], [[keysFor]], the
+  * the generations the bucket held files of when it committed; reads
+  * hide a masked key's rows in exactly those generations, so the newest
+  * generation wins. The manifest marks masking generations with a
+  * `#mask=` header line. Masks are correctness data: a read that names
+  * a masking generation whose mask cannot be loaded THROWS rather than
+  * return superseded rows. Key-only reads ([[keys]], [[keysFor]], the
   * collision probe, [[validateWrite]]) skip masks — a masked key is
   * always present in the generation that masks it. A bucket FOLDS
-  * (today's key probe plus copy-on-write rewrite through its masks)
+  * (the key probe plus a copy-on-write rewrite through its mask)
   * instead of masking when the delta holds a large share of its keys,
-  * when it already holds many files or mask keys, or when its key
-  * count is unknown (a generation written before key counts were
-  * recorded — such stores keep copy-on-write until rewritten).
+  * when it already holds many files, when it already carries a live
+  * mask (so a bucket has at most one), or when its key count is
+  * unknown (a generation written before key counts were recorded —
+  * such stores keep copy-on-write until rewritten).
   * [[delete]] and [[compact]] also read through masks and replace
   * every file of the buckets they rewrite.
   *
@@ -90,22 +91,16 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private val FilesFile = ".files"
   private val MaskFile = ".mask"
   private val MaskMarker = "#mask="
-  private val MaskKeyCol = "__graft_mask_key"
-  private val MaskIdCol = "__graft_mask_id"
-  private val MaskFileCol = "__graft_mask_file"
+  private val MaskGenCol = "__graft_mask_gen"
   /** Fold rule, share: a bloom-hit bucket whose delta holds at least
     * 1/FoldShare of its live keys is rewritten instead of masked — the
     * rewrite then costs about what the append does, and masking would
     * make every later read hide a large share of the bucket. */
   private val FoldShare = 4
-  /** Fold rule, files: every masked append adds a file per bucket that
-    * each reader of the bucket opens; past this many the bucket is
-    * rewritten back to one file. */
+  /** Fold rule, files: every append adds a file per bucket that each
+    * reader of the bucket opens; past this many the bucket is rewritten
+    * back to one file. */
   private val MaxFilesPerBucket = 8
-  /** Fold rule, mask keys: a read ships the live mask keys of the
-    * buckets it opens to every task as a broadcast relation; this
-    * bounds that relation per bucket. */
-  private val MaxMaskKeysPerBucket = 4096
   /** Commit-conflict retries for [[upsert]]: enough for realistic
     * writer fan-in (each retry re-merges against the winner's state),
     * small enough that a livelocked store fails loudly. */
@@ -272,10 +267,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     val written = parquetFilesUnder(new Path(s"$path/$dataDir"))
     val out = written.map { st =>
       val rel = st.getPath.toUri.getPath.stripPrefix(prefix)
-      val bucket = rel.split('/').collectFirst {
-        case seg if seg.startsWith(s"$BucketCol=") => seg.stripPrefix(s"$BucketCol=").toInt
-      }.getOrElse(sys.error(s"no bucket segment in $rel"))
-      bucket -> rel
+      bucketOf(rel).getOrElse(sys.error(s"no bucket segment in $rel")) -> rel
     }.groupBy(_._1).map { case (b, fs0) => b -> fs0.map(_._2) }
     // partitionBy strips the layout columns from the files: the data
     // schema every footer of this generation carries is the rest
@@ -334,6 +326,10 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   private def generationDir(file: String): String = file.takeWhile(_ != '/')
 
+  private def bucketOf(file: String): Option[Int] = file.split('/').collectFirst {
+    case seg if seg.startsWith(s"$BucketCol=") => seg.stripPrefix(s"$BucketCol=").toInt
+  }
+
   /** The relation over `files` built from their generations' sidecars,
     * or None when any generation lacks one (or lacks one of the files).
     * Generations merge in dir-name order, which is the file-path order
@@ -384,11 +380,12 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   // ---- mask sidecar: merge-on-read deltas ----
   //
-  // A masking generation's `.mask` holds, per bucket, the store-
-  // relative files that were live in the bucket when it committed and
-  // the keys whose rows it replaces there. A row is hidden when its key
-  // is in a mask of its bucket that lists its file — files are recorded
-  // rather than ordered by dir name, so generation order never matters.
+  // A masking generation's `.mask` holds, per bucket, the generations
+  // the bucket held files of when it committed and the keys whose rows
+  // it replaces there. A row is hidden when its key is in a mask that
+  // lists its generation. A key hashes to one bucket, so a generation
+  // stands for exactly its files of that bucket; generations are
+  // recorded rather than ordered by dir name, so order never matters.
 
   /** Key types a mask can persist; a store keyed otherwise always folds. */
   private def maskable(dt: DataType): Boolean =
@@ -402,8 +399,8 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       out.writeInt(masks.size)
       masks.toSeq.sortBy(_._1).foreach { case (b, e) =>
         out.writeInt(b)
-        out.writeInt(e.files.size)
-        e.files.foreach(out.writeUTF)
+        out.writeInt(e.gens.size)
+        e.gens.foreach(out.writeUTF)
         out.writeInt(e.keys.size)
         e.keys.foreach { k =>
           keyType match {
@@ -428,7 +425,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
         val keyType = DataType.fromJson(in.readUTF())
         (0 until in.readInt()).map { _ =>
           val b = in.readInt()
-          val files = Vector.fill(in.readInt())(in.readUTF())
+          val gens = Vector.fill(in.readInt())(in.readUTF())
           val keys = Vector.fill[Any](in.readInt())(keyType match {
             case LongType => in.readLong()
             case IntegerType => in.readInt()
@@ -437,7 +434,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
               in.readFully(bytes)
               new String(bytes, StandardCharsets.UTF_8)
           })
-          b -> MaskEntry(files, keys)
+          b -> MaskEntry(gens, keys)
         }.toMap
       } finally in.close()
     } catch {
@@ -446,27 +443,24 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
           "cannot be read; refusing to return superseded rows", e)
     }
 
-  /** `df` (a read of `files`) without the rows that the masks of the
-    * masking generations among `files` hide. One broadcast anti-join
-    * against a local relation of (mask key, mask id), matched on the
-    * row's key and on its file being one the mask covers — no job per
-    * file, and the plan carries only the covered file names. */
+  /** The live masks among `files`, with their buckets: a masking
+    * generation's mask of bucket b is live while the generation's own
+    * file of b is among them — a rewrite of b replaces every file of b,
+    * that one too. */
+  private def liveMasks(files: Seq[String], masking: Set[String]): Seq[(Int, MaskEntry)] = {
+    val held = files.flatMap(f => bucketOf(f).map(generationDir(f) -> _)).toSet
+    held.map(_._1).filter(masking).toSeq.sorted
+      .flatMap(g => maskOf(g).toSeq.sortBy(_._1).filter { case (b, _) => held((g, b)) })
+  }
+
+  /** `df` (a read of `files`) without the rows the live masks among
+    * `files` hide: one broadcast left-anti equi-join on (key,
+    * generation) against a local relation of the masked keys and the
+    * generations each mask covers — no job per file, and no plan
+    * literal that grows with the store. */
   private def withMasks(df: DataFrame, files: Seq[String], masking: Set[String]): DataFrame = {
-    val present = files.toSet
-    val masks = files.map(generationDir).distinct.filter(masking).sorted
-      .flatMap(g => maskOf(g).toSeq.sortBy(_._1).map(_._2))
-      .map(e => e.copy(files = e.files.filter(present)))
-      .filter(e => e.files.nonEmpty && e.keys.nonEmpty)
-    if (masks.isEmpty) return df
-    // matched on the store-relative tail of `_metadata.file_path`, which
-    // Spark URL-encodes and qualifies per file source ("file:/" from a
-    // listing, "file:///" from a qualified status): the tail from the
-    // generation dir on is encoded the same way in both
-    val covering = masks.zipWithIndex
-      .flatMap { case (e, i) => e.files.map(f => new Path(f).toUri.toString -> i) }
-      .groupBy(_._1).map { case (f, ids) => f -> ids.map(_._2) }
-    val coveringLit = typedLit(covering)
-    val depths = covering.keys.map(_.count(_ == '/') + 1).toSeq.distinct.sorted
+    val masks = liveMasks(files, masking).map(_._2)
+    if (masks.forall(_.keys.isEmpty)) return df
     val keyType = df.schema(key).dataType
     def coerce(k: Any): Any = keyType match {
       case LongType => k.asInstanceOf[Number].longValue
@@ -475,14 +469,14 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       case _ => k
     }
     val hidden = spark.createDataFrame(
-      masks.zipWithIndex.flatMap { case (e, i) => e.keys.map(k => Row(coerce(k), i)) }.asJava,
-      StructType(Seq(StructField(MaskKeyCol, keyType), StructField(MaskIdCol, IntegerType))))
-    val tagged = df.withColumn(MaskFileCol, coalesce(depths.map(d =>
-      try_element_at(coveringLit, substring_index(col("_metadata.file_path"), "/", -d))): _*))
-    tagged.join(broadcast(hidden),
-        tagged(key) === hidden(MaskKeyCol) && array_contains(tagged(MaskFileCol), hidden(MaskIdCol)),
-        "left_anti")
-      .drop(MaskFileCol)
+      masks.flatMap(e => for (k <- e.keys; g <- e.gens) yield Row(coerce(k), g)).asJava,
+      StructType(Seq(StructField(key, keyType), StructField(MaskGenCol, StringType))))
+    // a row's generation is the dir right above its bucket dir (the
+    // greedy prefix skips any look-alike segment in the store path)
+    df.withColumn(MaskGenCol,
+        regexp_extract(col("_metadata.file_path"), s".*/(data-[^/]+)/$BucketCol=", 1))
+      .join(broadcast(hidden), Seq(key, MaskGenCol), "left_anti")
+      .drop(MaskGenCol)
   }
 
   // ---- bloom sidecar: O(delta) collision probes ----
@@ -657,35 +651,32 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   }
 
   /** The fold rule: which bloom-hit buckets take a masked append, each
-    * with its mask (the bucket's live files and its keys the blooms
-    * might hold). Every other bloom-hit bucket folds. A bucket folds
-    * when the delta holds ≥ 1/[[FoldShare]] of its live keys, when it
-    * would pass [[MaxFilesPerBucket]] files or [[MaxMaskKeysPerBucket]]
-    * live mask keys, or when a live generation of it has no recorded
-    * key count (written before counts were recorded, or without a file
-    * index). Deltas past [[ProbeKeyBound]] keys, and keys of a type a
-    * mask cannot persist, always fold. */
+    * with its mask (the generations the bucket holds files of, and its
+    * keys the blooms might hold). Every other bloom-hit bucket folds. A
+    * bucket folds when it already carries a live mask — so a bucket has
+    * at most one, and its live key count is the sum of its generations'
+    * recorded counts — when the delta holds ≥ 1/[[FoldShare]] of those
+    * keys, when it would pass [[MaxFilesPerBucket]] files, or when a
+    * live generation of it has no recorded key count (written before
+    * counts were recorded, or without a file index). Deltas past
+    * [[ProbeKeyBound]] keys, and keys of a type a mask cannot persist,
+    * always fold. */
   private def maskPlan(m: Manifest, p: Probe, keyType: DataType): Map[Int, MaskEntry] = {
     val keys = p.keys match {
-      case Some(k) if maskDeltas && maskable(keyType) => k
+      case Some(k) if maskDeltas && maskable(keyType) && p.hits.nonEmpty => k
       case _ => return Map.empty
     }
+    val masked = maskedBuckets(m)
     val genCache = scala.collection.mutable.Map.empty[String, Option[Generation]]
-    val maskCache = scala.collection.mutable.Map.empty[String, Map[Int, MaskEntry]]
     p.hits.flatMap { case (b, hit) =>
       val files = m.mapping.getOrElse(b, Nil)
-      val live = files.toSet
       val gens = files.map(generationDir).distinct
-      val maskKeys = gens.filter(m.masking)
-        .flatMap(g => maskCache.getOrElseUpdate(g, maskOf(g)).get(b))
-        .filter(_.files.exists(live)).map(_.keys.size).sum
       val counts = gens.map(g => genCache.getOrElseUpdate(g, generation(g))
         .flatMap(_.keyCounts).map(_.getOrElse(b, 0L)))
-      val fold = counts.exists(_.isEmpty) ||
-        keys(b).size.toLong * FoldShare >= counts.flatten.sum - maskKeys ||
-        files.size >= MaxFilesPerBucket ||
-        maskKeys + hit.size > MaxMaskKeysPerBucket
-      if (fold) None else Some(b -> MaskEntry(files, hit))
+      val fold = masked(b) || counts.exists(_.isEmpty) ||
+        keys(b).size.toLong * FoldShare >= counts.flatten.sum ||
+        files.size >= MaxFilesPerBucket
+      if (fold) None else Some(b -> MaskEntry(gens, hit))
     }
   }
 
@@ -702,9 +693,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   /** Buckets of `m` that a live mask applies to. */
   private def maskedBuckets(m: Manifest): Set[Int] =
-    m.masking.flatMap(g => maskOf(g).collect {
-      case (b, e) if e.files.exists(m.mapping.getOrElse(b, Nil).contains) => b
-    })
+    liveMasks(m.files, m.masking).map(_._1).toSet
 
   // ---- public API ----
 
@@ -725,27 +714,27 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   def read(): Option[DataFrame] =
     latestRaw().flatMap(m => readFiles(m.files, m.masking))
 
-  /** The newest committed version's store-relative file list, and a
-    * read of an explicit subset of it — the pair a FILE-GRAINED warm
-    * cache needs: after a mask-free append (fresh keys append files,
-    * nothing rewrites or masks), the new live set is a superset of the
-    * cached one and the cache can read ONLY the delta files instead of
-    * rebuilding from the whole store ([[graft.similarity.TextIndex]]
-    * warm serving). Callers must treat file names as opaque tokens
-    * from [[liveFiles]] — passing names from an older manifest risks
-    * reading vacuumed paths. A subset read applies the masks of the
-    * masking generations among its files. */
+  /** The newest committed version's store-relative file list. */
   private[graft] def liveFiles: Seq[String] =
     latestRaw().map(_.files).getOrElse(Nil)
 
-  private[graft] def readFileSubset(files: Seq[String]): Option[DataFrame] =
-    readFiles(files, latestRaw().map(_.masking).getOrElse(Set.empty))
-
   /** The newest version's generation token, live files and masking
-    * generations from ONE manifest read — [[LayeredFileCache]]'s
-    * freshness check. */
-  private[graft] def liveView: Option[SnapshotStore.LiveView] =
+    * generations from ONE manifest read, and a read of a subset of one
+    * view's files — the pair a FILE-GRAINED warm cache
+    * ([[LayeredFileCache]]) needs: after a mask-free append (fresh keys
+    * append files, nothing rewrites or masks), the new live set is a
+    * superset of the cached one and the cache reads ONLY the delta
+    * files instead of rebuilding from the whole store. The subset read
+    * applies the view's masks among its files, so the file list and the
+    * masks always come from one version. Callers must take file names
+    * from the view — names from an older manifest risk reading
+    * vacuumed paths. */
+  private[sources] def liveView: Option[SnapshotStore.LiveView] =
     latestRaw().map(m => SnapshotStore.LiveView(m.token, m.files, m.masking))
+
+  private[sources] def readFileSubset(view: SnapshotStore.LiveView,
+                                      files: Seq[String]): Option[DataFrame] =
+    readFiles(files, view.masking)
 
   /** Pruned read by partition value: only the live files whose layout
     * path carries one of `values` for the partition column. Files from
@@ -859,10 +848,10 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     *    older rows of the keys the blooms might hold (merge-on-read —
     *    see the class doc);
     *  - bloom-hit and the fold rule fires (large share of the bucket,
-    *    too many files or mask keys, unknown key count — see
+    *    too many files, a live mask already, unknown key count — see
     *    `maskPlan`): a key-column-only probe finds the buckets that
     *    really collide, and those are rewritten copy-on-write through
-    *    their masks (one key-partitioned anti-join + union evaluated
+    *    their mask (one key-partitioned anti-join + union evaluated
     *    once, one new file per bucket unless a bucket is too large for
     *    one task); the others append.
     *
@@ -1178,8 +1167,8 @@ object SnapshotStore {
   private final case class Generation(schema: StructType, files: Map[String, (Long, Long)],
                                       keyCounts: Option[Map[Int, Long]])
 
-  /** One bucket's mask: the files it hides rows in, and the keys. */
-  private final case class MaskEntry(files: Seq[String], keys: Seq[Any])
+  /** One bucket's mask: the generations it hides rows in, and the keys. */
+  private final case class MaskEntry(gens: Seq[String], keys: Seq[Any])
 
   /** A delta's touched buckets; its distinct keys per bucket when at
     * most the store's probe bound (None past it); and `hits`, the buckets the
@@ -1193,8 +1182,8 @@ object SnapshotStore {
   /** One committed version as a warm cache sees it: its generation
     * token, live files, and the generations whose masks hide rows of
     * older files. */
-  private[graft] final case class LiveView(token: (Long, Int), files: Seq[String],
-                                           masking: Set[String]) {
+  private[sources] final case class LiveView(token: (Long, Int), files: Seq[String],
+                                             masking: Set[String]) {
     def masks(file: String): Boolean = masking(file.takeWhile(_ != '/'))
   }
 

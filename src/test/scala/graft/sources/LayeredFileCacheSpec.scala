@@ -8,12 +8,12 @@ import java.nio.file.Files
 class LayeredFileCacheSpec extends SparkSpec {
 
   /** A cache over `store` whose layers are plain persisted reads, and
-    * the file lists its layer builds were handed. */
+    * the (file count, row count) of each layer build. */
   private def cacheOver(store: SnapshotStore, maxLayers: Int = 8) = {
-    val built = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    val cache = new LayeredFileCache(store, maxLayers)({ files =>
-      built += files
-      store.readFileSubset(files).get.persist()
+    val built = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val cache = new LayeredFileCache(store, maxLayers)({ (rows, nFiles) =>
+      built += ((nFiles, rows.count()))
+      rows.persist()
     })((rows, _) => rows.persist())
     (cache, built)
   }
@@ -34,7 +34,7 @@ class LayeredFileCacheSpec extends SparkSpec {
     val (cache, built) = cacheOver(store)
     try {
       assert(served(cache).size == 100 && cache.layerCount == 1)
-      assert(built.last.toSet == store.liveFiles.toSet)
+      assert(built.last == ((store.liveFiles.size, 100L)))
 
       // fresh keys: a mask-free append caches only its own files
       val base = store.liveFiles.toSet
@@ -42,7 +42,7 @@ class LayeredFileCacheSpec extends SparkSpec {
       assert(store.liveView.get.masking.isEmpty, "setup: fresh keys append without masks")
       val got = served(cache)
       assert(cache.layerCount == 2 && built.size == 2)
-      assert(built.last.toSet == store.liveFiles.toSet -- base, "only the new files are read")
+      assert(built.last == (((store.liveFiles.toSet -- base).size, 2L)), "only the new files are read")
       assert(got.size == 102 && got(1001L) == "n1")
 
       // a replacement appends a masking generation: the cached base
@@ -51,7 +51,7 @@ class LayeredFileCacheSpec extends SparkSpec {
       assert(store.liveView.get.masking.nonEmpty, "setup: the replacement is masked")
       val replaced = served(cache)
       assert(cache.layerCount == 1 && built.size == 3)
-      assert(built.last.toSet == store.liveFiles.toSet)
+      assert(built.last == ((store.liveFiles.size, 102L)), "a full re-read, through the mask")
       assert(replaced.size == 102 && replaced(7L) == "u7")
 
       // a delete rewrites a bucket: its old files retire, so it rebuilds

@@ -682,10 +682,17 @@ class SnapshotStoreSpec extends SparkSpec {
     import s.implicits._
     val t = new Twins("graft_mor_newest", buckets = 4)
     t(_.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v")))
-    for (g <- 1 to 3)
+    val bucket7 = t.mor.read().get.filter(col("user_id") === 7L).select("_metadata.file_path")
+      .as[String].head().split('/').find(_.startsWith("snap_bucket=")).get.stripPrefix("snap_bucket=").toInt
+    // key 7's bucket: masked, then folded (a bucket carries at most one
+    // live mask), then masked again
+    val baseFiles = t.mor.latestManifest().get._2(bucket7).size
+    for ((g, files) <- Seq(1 -> (baseFiles + 1), 2 -> 1, 3 -> 2)) {
       t(_.upsert(Seq((7L, s"g$g"), (1000L + g, s"n$g")).toDF("user_id", "v")))
-    assert(masking(t.mor).size == 3, s"three masking generations, got ${masking(t.mor)}")
-    assert(masking(t.cow).isEmpty)
+      assert(t.mor.latestManifest().get._2(bucket7).size == files, s"upsert $g")
+      assert(t.mor.read().get.filter(col("user_id") === 7L).select("v").as[String].collect().toSeq == Seq(s"g$g"))
+    }
+    assert(masking(t.mor).nonEmpty && masking(t.cow).isEmpty)
     t.assertSame(_.read(), "full read")
     t.assertSame(_.readForKeys(Seq(7L, 8L).toDF("user_id")), "keyed read")
     assert(t.mor.read().get.filter(col("user_id") === 7L).select("v").as[String].collect().toSeq == Seq("g3"))
@@ -712,6 +719,24 @@ class SnapshotStoreSpec extends SparkSpec {
       assert(fsys.delete(new Path(s"$dir/$gen/.files"), false))
     t.assertSame(_.read(), "evolved read without file indexes")
     assert(t.mor.read().get.filter(col("user_id") === 7L).count() == 1L)
+  }
+
+  test("merge-on-read: a subset read applies the masks of its view's version, not the newest") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_mor_view").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    store.upsert(Seq((7L, "u7")).toDF("user_id", "v"))
+    val view = store.liveView.get
+    assert(view.masking.nonEmpty, "setup: key 7's bucket is masked")
+    // a later commit folds the masked bucket: the masking generation
+    // leaves the newest manifest, but the view still names its files
+    assert(store.compact(maxFilesPerBucket = 8) == 1)
+    assert(store.liveView.get.masking.isEmpty)
+    val got = store.readFileSubset(view, view.files).get
+      .filter(col("user_id") === 7L).select("v").as[String].collect().toSeq
+    assert(got == Seq("u7"), s"the superseded row must stay hidden, got $got")
   }
 
   test("merge-on-read: delete of a key living in the base and in a delta removes the visible row") {
