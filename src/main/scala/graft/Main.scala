@@ -1,10 +1,11 @@
 package graft
 
+import graft.cli.{Args, CorpusCommands, SigCommands, TextCommands, VectorCommands}
 import graft.engine.TagEngine
 import graft.merge.TagMerger
+import graft.pipeline.CorpusPipeline
 import graft.rules.RuleCatalog
 import graft.sources.{DataQuality, SnapshotStore, Tables}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Top-level batch runner — the reference's scheduler entry point
@@ -24,127 +25,11 @@ import org.apache.spark.sql.functions._
   *
   * The LLM-pipeline half is operable from the same entry point — the
   * scheduler surface the reference gives its tag jobs, extended to the
-  * data-curation jobs this engine adds:
-  * {{{
-  *   runMain graft.Main corpus-clean in=<docs.parquet> index=<dir> out=<dir> batch=<id> [scratchcheck=refuse|warn|off]
-  *     # pre-flight disk check: predicted MinHash scratch (2x batch text bytes, the
-  *     # measured PLANS constant) vs local-dir free space — refuse (local mode default)
-  *     # or warn (cluster default) BEFORE the batch dies on ENOSPC hours in
-  *   runMain graft.Main index-build  in=<vectors.parquet> index=<dir> [dim=64 m=8 k=16 cells=<n> buckets=<n> opq=true sq8=true]
-  *     (cells/buckets default to corpus-sized: ~4·sqrt(n) cells, codes-bytes/64MB-file buckets;
-  *      sq8=true writes the in-index re-rank tier — ~dim bytes/vec next to the 8 B codes)
-  *   runMain graft.Main index-add    in=<vectors.parquet> index=<dir>
-  *   runMain graft.Main index-delete in=<ids.parquet> index=<dir>      # takedown path; vacuum after
-  *   runMain graft.Main index-search in=<queries.parquet> index=<dir> out=<dir> [topk=10 probe=<n> allowed=<ids.parquet> vectors=<corpus.parquet> rerank=4]
-  *     (probe defaults to layout-sized: max(4, cells/32) of the index's frozen cell count;
-  *      rerank= WITHOUT vectors= re-ranks against the index's own SQ8 tier)
-  *   runMain graft.Main index-recall in=<queries.parquet> index=<dir> vectors=<corpus.parquet> [topk=10 rerank=0 inindex=true]
-  *     # measured recall vs brute force (rowsOut = recall in micro-units); rerank>0 measures the
-  *     # two-stage path — sweep it until the target clears (candMult ≈ modeSize/topK on clustered data);
-  *     # inindex=true measures the SQ8-tier re-rank (what a vectors-free deployment serves)
-  *   runMain graft.Main index-compact|index-vacuum|sig-compact|sig-vacuum index=<dir> [maxfiles= keep= agems=]
-  *   runMain graft.Main text-index-build|text-index-add|text-index-delete in=<...> index=<dir> [tparts=<n>]
-  *     (tparts defaults to corpus-sized: one term partition per ~1M tokens)
-  *   runMain graft.Main text-index-search in=<queries.parquet> index=<dir> out=<dir> [topk=10 allowed=<doc_ids.parquet>]
-  *   runMain graft.Main hybrid-search in=<(query_id,qtext,vec).parquet> text-index=<dir> index=<dir> out=<dir> [topk=10 rerank=<candMult> allowed=<doc_ids.parquet> wlex=1.0 wvec=1.0]
-  *     # TextIndex × PqIndex ranks fused by the gate-pinned RRF body; rerank= uses the SQ8 tier.
-  *     # Query VALUES may be null per row (text-only / vector-only rows rank by their present
-  *     # side); wlex=/wvec= are weighted-RRF per-side weights (exactly 0 disables a side and
-  *     # skips its index probe); warm=true caches the SQ8 sidecar across calls in-process
-  *   runMain graft.Main serve queries=<dir> out=<dir> [index=<dir>] [text-index=<dir>] [topk=10 rerank=<candMult> allowed= wlex= wvec= warndf=0.5 warm=true pollms=500 maxbatches=0 parallel=1]
-  *     # warndf=0 opts the lexical probe out of the df guard's extra job (the latency knob
-  *     # the r13 adjudication names); text-index-search/hybrid-search take the same warndf=
-  *     # long-lived serving loop: answers each COMPLETE batch subdir (has _SUCCESS) of queries=
-  *     # into out=/<name>, holding the index handles + warm caches open across batches (CDC
-  *     # adds/deletes picked up via the generation token); exits on queries=/.stop (drained
-  *     # first) or after maxbatches. Both indexes = hybrid RRF; one = that side's search alone.
-  *     # A batch that throws is QUARANTINED (out=/<name>/_FAILED; delete to retry) so the
-  *     # queue never wedges; every attempt is journaled to out=/serve_log.jsonl (wall, rows,
-  *     # ok/failed, generation tokens, warm/cold). parallel=N answers each poll round's ready
-  *     # batches concurrently from one process (shared synchronized warm caches)
-  *   runMain graft.Main sig-delete in=<ids.parquet> index=<dir> [idcol=doc_id]
-  *     # dedup-state takedown: clears the ids' band+sig rows so future near-copies of a
-  *     # removed doc stop being suppressed against a ghost canonical; sig-vacuum after
-  *   runMain graft.Main takedown in=<ids.parquet> state=<dag state dir> [idcol=doc_id vacuum=true agems=0 leasettl= asof=<epoch ms>]
-  *     # the ONE-command right-to-be-forgotten sweep: sig + text_index + index stores,
-  *     # the accumulated state/survivors (a later seed rebuild would re-index the doc from
-  *     # them), AND the content artifacts — state/shards (the doc's verbatim text rides the
-  *     # sharded training layout) and state/packs (its BPE token ids are decodable via the
-  *     # frozen vocab the same state dir ships). Runs under the state lease; vacuum=true
-  *     # makes bytes unrecoverable now; each sweep journals its per-surface counts under
-  *     # state/takedowns/ (the proof-of-removal record pipeline-stats renders)
-  *   runMain graft.Main text-index-compact|text-index-vacuum index=<dir> [maxfiles= keep= agems=]
-  *   runMain graft.Main index-stats|text-index-stats|sig-stats index=<dir>   # k=v store report on stdout
-  *   runMain graft.Main corpus-mix    in=<docs.parquet> out=<dir> [budget=20000 alpha=<t^a shares> tokens=pre|bpe]
-  *   runMain graft.Main corpus-split  in=<docs.parquet> out=<dir> [valpct=2 testpct=2]
-  *   runMain graft.Main select-budget in=<docs.parquet> out=<dir> [budget=4000 pruned=true tokens=pre|bpe]
-  *   runMain graft.Main corpus-stats  in=<docs.parquet> out=<dir>
-  *   runMain graft.Main decontaminate in=<docs.parquet> evals=<eval.parquet> out=<dir> [k=5 bloom=false near=false minjaccard=0.8]
-  *   runMain graft.Main contamination-score in=<docs.parquet> evals=<eval.parquet> out=<dir> [k=5]
-  *   runMain graft.Main bpe-train     in=<docs.parquet> out=<merges dir> [merges=1000 maxforms=65536 vocabout=<dir>]
-  *   runMain graft.Main bpe-encode    in=<docs.parquet> out=<dir> [merges=<rank,left,right parquet> vocab=<id,token parquet>]
-  *   runMain graft.Main corpus-pack   in=<docs.parquet> out=<dir> [merges= vocab= budget=512 buckets=<n>]
-  *     (buckets defaults to corpus-sized: one pack-window bucket per ~1M pre-tokens)
-  *   runMain graft.Main corpus-pipeline in=<docs.parquet> out=<dir> [steps=clean,decontaminate,scrub,select,mix,shard,pack
-  *                                    evals= targets= k= minjaccard= frac= w= mindocs= budget= alpha= shards= merges= nmerges= packbudget= buckets=]
-  *     (opt-in step `langid` ASSIGNS lang from the text — the entry stage for raw
-  *      corpora without a lang column (tolerated exactly when the plan contains
-  *      langid); profiles= supplies a (lang, text) slice, else the builtin table.
-  *      Incremental: the profile table freezes under state/langid on the seed
-  *      batch; a conflicting profiles= refuses)
-  *   runMain graft.Main corpus-pipeline in=<delta.parquet> out=<dir> incremental=true state=<dir> batch=<id>
-  *                                    [steps=clean,decontaminate,scrub,select,mix,shard,pack ... compactevery=N maxfiles= journalkeep=N
-  *                                     leasettl=<ms> driftband=<frac>]
-  *                                    # state/ (incremental) or out= (full runs) is guarded by an
-  *                                    # exclusive-writer lease (.lease.txt): an overlapping batch/refit/full
-  *                                    # run refuses naming the holder; a crashed holder's lease breaks after
-  *                                    # leasettl (default 24h, 0 = manual only). The holder HEARTBEATS the
-  *                                    # lease at every stage boundary, so the TTL measures inactivity, not
-  *                                    # runtime — an active long batch is never broken mid-run.
-  *                                    # driftband= widens/narrows the ±25% advisory drift band
-  *                                    # frozen-share mix: the seed batch calibrates per-language keep thresholds
-  *                                    # from its supply (budget= alpha= tokens=) and freezes them under state/mix;
-  *                                    # deltas filter per-doc under the frozen table, unseen languages kept whole
-  *                                    # (loud); per-batch supply evidence accrues for `mix-refit`
-  *                                    # per-batch pack: the seed batch freezes the BPE model + layout under
-  *                                    # state/pack; each batch's packs land at state/packs/batch=<id> —
-  *                                    # (batch, pack_id) is the composite key; journalkeep=N prunes out/runs
-  *                                    # CDC form: delta cleaned vs
-  *                                    # state/sig, survivors/shards appended under state/.../batch=<id>; batch= is the
-  *                                    # replay key; scrub and select fit FROZEN models on the first batch (hot-span
-  *                                    # table under state/scrub; DSIR λ + calibrated threshold under state/select,
-  *                                    # given targets=) and apply them per-doc to every later delta. Each batch's
-  *                                    # run record also lands at out/runs/batch=<id>.json (stats.json = latest run
-  *                                    # only), and compactevery=N compacts the accumulated stores (state/sig +
-  *                                    # both index stores) on batches where batch % N == 0
-  *     (opt-in step `index` builds out/text_index over the survivors, plus out/index
-  *      when vectors=<(id,vec) parquet> is given — minrecall= applies the build-time
-  *      floor; PQ knobs: dim= m= pqk= cells= probe= opq= fitsample= — pqk, because
-  *      k= is the decontaminate shingle size in this namespace)
-  *   runMain graft.Main runs-report   out=<pipeline out dir>   # render out/runs/batch=*.json as the per-batch trajectory table
-  *   runMain graft.Main pipeline-stats state=<dir>  # describe() for the DAG state: fitted stages + frozen knobs +
-  *                                                  # evidence batch counts + drift baselines + lease (metadata reads only)
-  *   runMain graft.Main dsir-select   in=<docs.parquet> targets=<target.parquet> out=<dir> [frac=0.2]
-  *   runMain graft.Main corpus-shard  in=<docs.parquet> out=<dir> [shards=16 write=false]
-  *   runMain graft.Main corpus-scrub  in=<docs.parquet> out=<dir> [w=20 mindocs=3]
-  *   runMain graft.Main scrub-refit   state=<dir> [mindocs=]   # rebuild the frozen span table from accumulated evidence
-  *   runMain graft.Main mix-refit     state=<dir> [budget= alpha=]  # re-calibrate the frozen mix thresholds from accumulated supply
-  *   runMain graft.Main quality-score in=<docs.parquet> out=<dir> [weights=<bucket,weight_milli parquet>]
-  *   runMain graft.Main quality-train good=<docs.parquet> bad=<docs.parquet> out=<weights dir>
-  *   runMain graft.Main langid        in=<docs.parquet> out=<dir> [profiles=<lang,text parquet>]
-  *   runMain graft.Main query name=<any SparkEntry query|list> dir=<warehouse> out=<dir>
-  *   runMain graft.Main sql query=<SQL over graft_* views|list> dir=<warehouse> out=<dir>
-  * }}}
-  * `sql` registers every gate query as a temp view `graft_<name>`
-  * (SparkEntry.registerViews) and runs arbitrary SQL over them — the
-  * whole operator surface for SQL-only users, composable (`SELECT ...
-  * FROM graft_q1_pricing_summary JOIN graft_tag_profiles ...`);
-  * `query=list` prints the view names.
-  * `corpus-clean` is the CDC-incremental clean: each invocation dedups
-  * the new docs against the accumulated [[graft.streaming.SigIndex]]
-  * and appends the survivors' signatures — nightly delta runs compose
-  * exactly like the incremental tag runs. Vector frames default to
-  * `(id, vec)` columns; override with `idcol=` / `veccol=`.
+  * data-curation jobs this engine adds: `runPipeline` dispatches
+  * `<command> k=v…` through one handler table, and each command
+  * family documents its usage lines — [[graft.cli.VectorCommands]],
+  * [[graft.cli.TextCommands]], [[graft.cli.SigCommands]],
+  * [[graft.cli.CorpusCommands]] and [[graft.pipeline.CorpusPipeline]].
   *
   * Unlike the reference — which runs one Spark job per rule and eagerly
   * counts each result (tag_computer.py:60) — every run here is,
@@ -165,17 +50,6 @@ object Main {
       skippedTables: Seq[String],
       missingAfterWrite: Long,
       durationSec: Double)
-
-  private[graft] val PipelineCommands = Set("corpus-clean", "index-build", "index-add",
-    "index-delete", "index-search", "index-recall", "index-compact", "index-vacuum", "index-stats",
-    "sig-compact", "sig-vacuum", "sig-stats", "sig-delete", "serve", "takedown",
-    "text-index-build", "text-index-add", "text-index-delete", "text-index-search",
-    "text-index-compact", "text-index-vacuum", "text-index-stats", "hybrid-search",
-    "corpus-mix", "corpus-split", "select-budget", "corpus-shard",
-    "corpus-stats", "decontaminate", "contamination-score", "dsir-select",
-    "corpus-scrub", "scrub-refit", "mix-refit", "quality-score", "quality-train", "langid",
-    "bpe-train", "bpe-encode", "corpus-pack",
-    "corpus-pipeline", "runs-report", "pipeline-stats", "query", "sql")
 
   def main(args: Array[String]): Unit = {
     val cfg = GraftConfig.fromEnv()
@@ -284,3382 +158,23 @@ object Main {
   final case class PipelineStats(command: String, rowsIn: Long, rowsOut: Long,
                                  durationSec: Double)
 
+  /** Every pipeline command and its handler, contributed by the
+    * command families. */
+  private val Commands: Map[String, Args.Command] =
+    VectorCommands.commands ++ TextCommands.commands ++ SigCommands.commands ++
+      CorpusCommands.commands ++ CorpusPipeline.commands
+
+  /** The commands `main` routes to [[runPipeline]]: exactly the
+    * handler table's keys, so a handled command cannot go unrouted. */
+  private[graft] val PipelineCommands: Set[String] = Commands.keySet
+
   /** One pipeline job; separated from `main` so specs drive it
-    * directly. Commands mirror the tag runner's style: positional
-    * command, `k=v` options. */
+    * directly. The args are parsed once ([[graft.cli.Args]] refuses
+    * an unknown `tokens=` before any command runs), then the command
+    * is looked up in the handler table. */
   def runPipeline(spark: org.apache.spark.sql.SparkSession, args: Seq[String]): PipelineStats = {
-    val t0 = System.nanoTime()
-    val command = args.head
-    val opts = args.tail.filter(_.contains("=")).map { a =>
-      val Array(k, v) = a.split("=", 2); k -> v
-    }.toMap
-    def req(k: String): String =
-      opts.getOrElse(k, sys.error(s"$command requires $k=<...>"))
-    // tokens=pre (default) prices budgets in pre-tokens; tokens=bpe
-    // in trained-BPE tokens under the frozen builtin model — the
-    // budget a training run actually spends (bpe_fertility's table is
-    // the evidence for when the two diverge). Validated HERE, once,
-    // so a misdirected knob refuses before any stage runs and every
-    // consumer (tokenize, score, the frozen-mix denomination sidecar)
-    // reads ONE dispatch that cannot drift.
-    val tokensMode: String = opts.getOrElse("tokens", "pre") match {
-      case m @ ("pre" | "bpe") => m
-      case other => sys.error(s"$command: unknown tokens=$other (pre|bpe)")
-    }
-    val tokenizeFor: DataFrame => DataFrame =
-      if (tokensMode == "bpe") graft.queries.PipelineQueries.tokenizeDocsBpe _
-      else graft.queries.PipelineQueries.tokenizeDocs _
-    val scoreFor: DataFrame => DataFrame =
-      if (tokensMode == "bpe") graft.queries.PipelineQueries.scoreDocsBpe _
-      else graft.queries.PipelineQueries.scoreDocs _
-    // every mix form keeps null-lang docs WHOLE (no language
-    // threshold applies, and they take no budget share — the
-    // mixApplyKeepPoints left-join contract, unified across one-shot
-    // and incremental in r12): say so, because "kept whole" means the
-    // budget does not govern these docs — run langid first if they
-    // should be priced and downsampled like everything else (one
-    // pass over the persisted ~24 B/doc token projection, not the text)
-    def warnNullLang(toked: DataFrame, where: String): Unit = {
-      val n = toked.filter(col("lang").isNull).count()
-      if (n > 0) System.err.println(s"[graft] $where NOTE: $n document(s) " +
-        "have null lang — kept WHOLE, outside the token budget; " +
-        "run langid first if they should be downsampled")
-    }
-    def vectors(path: String): DataFrame =
-      spark.read.parquet(path).select(
-        col(opts.getOrElse("idcol", "id")).as("id"),
-        col(opts.getOrElse("veccol", "vec")).as("vec"))
-    // cells/buckets/probe absent ⇒ 0 ⇒ PqIndex sizes them from the
-    // corpus/layout (a fixed default here silently hands a 100×-grown
-    // corpus a quadratic probe — or, for probe, a collapsed recall:
-    // the sf10 lessons in PLANS.md)
-    def pqIndex(dir: String, warmDefault: String = "false") = new graft.similarity.PqIndex(spark, dir,
-      dim = opts.getOrElse("dim", "64").toInt,
-      m = opts.getOrElse("m", "8").toInt,
-      k = opts.getOrElse("k", "16").toInt,
-      nCells = opts.getOrElse("cells", "0").toInt,
-      nProbe = opts.getOrElse("probe", "0").toInt,
-      opq = opts.getOrElse("opq", "false").toBoolean,
-      buckets = opts.getOrElse("buckets", "0").toInt,
-      fitSampleN = opts.getOrElse("fitsample", "0").toInt,
-      sq8 = opts.getOrElse("sq8", "false").toBoolean,
-      // warm=true caches the SQ8 sidecar across re-rank calls WITHIN
-      // this process (generation-token invalidated) — for the serving
-      // loops; a one-shot CLI call gains nothing. `serve` flips the
-      // default to true (the loop is what the cache is FOR)
-      warmRerank = opts.getOrElse("warm", warmDefault).toBoolean)
-    // tparts absent ⇒ 0 ⇒ TextIndex.build sizes the term layout from
-    // the corpus token mass (same fixed-knob hazard as index-build).
-    // warm= is the SAME knob pqIndex reads: warm=true on hybrid-search
-    // (or serve) warms both sides' caches within this process
-    def textIndex(dir: String, warmDefault: String = "false") = new graft.similarity.TextIndex(spark, dir,
-      termParts = opts.getOrElse("tparts", "0").toInt,
-      warmSearch = opts.getOrElse("warm", warmDefault).toBoolean)
-    def done(rowsIn: Long, rowsOut: Long) =
-      PipelineStats(command, rowsIn, rowsOut, (System.nanoTime() - t0) / 1e9)
-
-    command match {
-      case "corpus-clean" =>
-        val docs = spark.read.parquet(req("in"))
-        cleanScratchPreflight(spark, docs, opts.getOrElse("scratchcheck",
-          if (spark.sparkContext.isLocal) "refuse" else "warn"), "corpus-clean")
-        // bandparts: size the GROWING index for its target corpus at
-        // creation (SigIndex.suggestBandParts); 0 adopts an existing
-        // index's frozen layout — the common reopen case
-        val index = new graft.streaming.SigIndex(spark, req("index"), idCol = "doc_id",
-          bandParts = opts.getOrElse("bandparts", "0").toInt)
-        val kept = graft.queries.PipelineQueries.corpusCleanIncremental(
-          docs, index, opts.getOrElse("batch", "0").toLong).localCheckpoint()
-        kept.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), kept.count())
-      // minrecall=0.8 validates the built layout against brute force
-      // on a bounded self-query sample and fails the build below the
-      // floor (default off — validation costs sample × corpus dots)
-      case "index-build" =>
-        val corpus = vectors(req("in"))
-        pqIndex(req("index")).build(corpus,
-          minRecall = opts.getOrElse("minrecall", "0").toDouble)
-        val n = corpus.count()
-        done(n, n)
-      case "index-add" =>
-        val delta = vectors(req("in"))
-        pqIndex(req("index")).add(delta)
-        val n = delta.count()
-        done(n, n)
-      // the takedown path: rowsOut = ids actually removed from the
-      // index (absent ids are a committed no-op — replays are safe)
-      case "index-delete" =>
-        val ids = spark.read.parquet(req("in"))
-          .select(col(opts.getOrElse("idcol", "id")))
-        val removed = pqIndex(req("index")).remove(ids)
-        done(ids.count(), removed)
-      // allowed=<ids.parquet> restricts candidates to the id set (the
-      // policy/tenant filter) — scored ranks stay within the filter.
-      // vectors=<corpus.parquet> [rerank=4] switches to two-stage
-      // retrieval: PQ shortlist, exact cosine re-rank. rerank=N
-      // WITHOUT vectors= re-ranks against the index's own SQ8 tier
-      // (index-build sq8=true) — the recall dial with nothing but the
-      // index directory shipped
-      case "index-search" =>
-        val queries = vectors(req("in"))
-        val idx = pqIndex(req("index"))
-        val k = opts.getOrElse("topk", "10").toInt
-        val allowedDf = opts.get("allowed").map(p =>
-          spark.read.parquet(p).select(col(opts.getOrElse("idcol", "id")).as("id")))
-        // rerank=0 means OFF everywhere (the index-recall convention):
-        // it serves the plain probed search, never a zero-width rerank.
-        // Negative widths are MEANINGLESS, not off — refuse up front
-        // (the misdirected-knob rule), never silently serve plain
-        val rerankW = opts.get("rerank").map(_.toInt)
-        rerankW.foreach(w => require(w >= 0,
-          s"index-search: rerank=$w — a shortlist width cannot be negative " +
-            "(0 = off, N = re-rank N*topk candidates)"))
-        val hits = ((opts.get("vectors"), rerankW, allowedDf) match {
-          case (Some(vp), rm, a) if rm.forall(_ > 0) =>
-            idx.topKRerank(queries, vectors(vp), k, rm.getOrElse(4), a)
-          case (None, Some(rm), a) if rm > 0 =>
-            idx.topKRerankIndexed(queries, k, rm, a)
-          case (_, _, Some(a)) => idx.topK(queries, k, a)
-          case _ => idx.topK(queries, k)
-        }).localCheckpoint()
-        hits.write.mode("overwrite").parquet(req("out"))
-        done(queries.count(), hits.count())
-      // the candMult tuning loop (PLANS.md r11): measured recall vs
-      // brute force over the corpus for a BOUNDED query batch —
-      // rerank=0 measures the plain probed search, rerank>0 the
-      // two-stage path; sweep rerank= until the target clears, then
-      // serve index-search with that value. rowsOut = recall in
-      // micro-units (0..1000000), so a scheduler can gate on it.
-      case "index-recall" =>
-        val queries = vectors(req("in"))
-        val n = queries.count()
-        require(n <= 10000, s"index-recall: $n queries — the exact side is " +
-          "O(|queries| x |corpus|); bound the batch to <= 10000")
-        val cm = opts.getOrElse("rerank", "0").toInt
-        val k = opts.getOrElse("topk", "10").toInt
-        // inindex=true measures the SQ8-tier path (topKRerankIndexed)
-        // — tune the number the shipped index will actually serve;
-        // vectors= is then only the brute-force ground truth
-        val inIdx = opts.getOrElse("inindex", "false").toBoolean
-        require(!inIdx || cm > 0,
-          "index-recall: inindex=true needs rerank=N > 0 (the SQ8 tier is a re-rank stage)")
-        val r = pqIndex(req("index")).recallAt(queries, vectors(req("vectors")), k, cm, inIdx)
-        System.err.println(f"[graft] index-recall: $r%.4f (topk=$k rerank=$cm " +
-          s"inindex=$inIdx, $n queries)")
-        done(n, math.round(r * 1e6))
-      // maintenance, operable like everything else: compaction bounds
-      // live files (rowsOut = buckets compacted), vacuum reclaims
-      // superseded generations (rowsOut = files deleted) — run
-      // out-of-band of serving, repeatedly for incremental compaction
-      case "index-compact" =>
-        done(0, pqIndex(req("index"))
-          .compact(opts.getOrElse("maxfiles", "1").toInt).toLong)
-      case "index-vacuum" =>
-        done(0, pqIndex(req("index")).vacuum(
-          opts.getOrElse("keep", "1").toInt,
-          opts.getOrElse("agems", (3600L * 1000L).toString).toLong))
-      // lexical retrieval twins of the index-* commands: build/add a
-      // term-partitioned inverted index over (doc_id, text) parquet,
-      // search it with (query_id, qtext) parquet
-      case "text-index-build" =>
-        val corpus = spark.read.parquet(req("in")).select("doc_id", "text")
-        textIndex(req("index")).build(corpus)
-        val n = corpus.count()
-        done(n, n)
-      case "text-index-add" =>
-        val delta = spark.read.parquet(req("in")).select("doc_id", "text")
-        textIndex(req("index")).add(delta)
-        val n = delta.count()
-        done(n, n)
-      case "text-index-delete" =>
-        val ids = spark.read.parquet(req("in"))
-          .select(col(opts.getOrElse("idcol", "doc_id")))
-        val removed = textIndex(req("index")).delete(ids)
-        done(ids.count(), removed)
-      // allowed=<doc_ids.parquet> restricts candidates (corpus-level
-      // BM25 stats by contract — the filter never shifts scores)
-      case "text-index-search" =>
-        val queries = spark.read.parquet(req("in")).select("query_id", "qtext")
-        val hits = textIndex(req("index"))
-          .search(queries, opts.getOrElse("topk", "10").toInt,
-            allowed = opts.get("allowed").map(p =>
-              spark.read.parquet(p).select("doc_id")),
-            warnDfFrac = opts.getOrElse("warndf", "0.5").toDouble)
-          .localCheckpoint()
-        hits.write.mode("overwrite").parquet(req("out"))
-        done(queries.count(), hits.count())
-      // index-served hybrid retrieval: TextIndex ranks × PqIndex
-      // ranks, fused by the ONE RRF body the gate form pins
-      // (SimilarityQueries.fuseRrf). in= carries both modality COLUMNS
-      // per query — (query_id, qtext, vec) — with null values allowed
-      // (a text-only / vector-only row ranks by its present side
-      // alone). rerank=N routes the vector side through the SQ8 tier;
-      // allowed= restricts BOTH sides; wlex=/wvec= are the
-      // weighted-RRF per-side weights (default 1.0 = the gate
-      // arithmetic; exactly 0 disables a side and skips its probe)
-      case "hybrid-search" =>
-        val queries = spark.read.parquet(req("in"))
-          .select("query_id", "qtext", "vec")
-        val cm = opts.getOrElse("rerank", "0").toInt
-        // same misdirected-knob refusal as index-search: a negative
-        // rerank= would silently serve the plain un-reranked search
-        // (the candMult<=0 path) — the caller typed a knob that can
-        // only mean the two-stage path, so refuse instead of ignoring
-        require(cm >= 0, s"rerank=$cm — pass rerank=N>0 for the SQ8 two-stage " +
-          "path, or omit it (0) for the plain probed search")
-        val hits = graft.queries.SimilarityQueries.hybridRrfServed(
-            textIndex(req("text-index")), pqIndex(req("index")), queries,
-            opts.getOrElse("topk", "10").toInt, cm,
-            opts.get("allowed").map(p => spark.read.parquet(p).select("doc_id")),
-            wLex = opts.getOrElse("wlex", "1.0").toDouble,
-            wVec = opts.getOrElse("wvec", "1.0").toDouble,
-            warnDfFrac = opts.getOrElse("warndf", "0.5").toDouble)
-          .localCheckpoint()
-        hits.write.mode("overwrite").parquet(req("out"))
-        done(queries.count(), hits.count())
-      // LONG-LIVED serving loop (r13 VERDICT #3) — the process that
-      // makes the warm caches operable: one-shot CLI calls rebuild the
-      // JVM (and the caches) per call, so `warm=` gained nothing
-      // outside library use. serve watches queries=<dir> for COMPLETE
-      // query batches (a subdirectory carrying Spark's _SUCCESS
-      // marker), answers each into out=/<same-name>/, and holds the
-      // index handles — and their generation-token-keyed warm caches —
-      // open across batches, so batch 2+ pays the warm wall and a CDC
-      // add/delete between batches is picked up by the token check
-      // (one manifest read per batch), never by a process restart.
-      //
-      //   serve queries=<dir> out=<dir> [index=<pq>] [text-index=<ti>]
-      //         [topk=10] [rerank=N] [allowed=<ids.parquet>]
-      //         [wlex=|wvec=] [warm=true] [pollms=500] [maxbatches=0]
-      //
-      // Modes by which indexes are passed: both = hybrid RRF (batch
-      // schema (query_id, qtext, vec) — null modalities per the
-      // hybridRrfServed contract); index= only = vector top-k (batch
-      // schema (idcol, veccol)); text-index= only = BM25 (batch schema
-      // (query_id, qtext)). A processed batch is marked by its
-      // out-dir's own _SUCCESS, so a restarted serve skips answered
-      // batches (idempotent). allowed= is re-read per batch (the
-      // policy table may change between batches — the serveStream
-      // thunk contract). Exit: a `.stop` file in queries= (drained
-      // first: batches already visible are answered before exit), or
-      // maxbatches=N (0 = run until .stop). Readers need no lease —
-      // index reads are snapshot-isolated; takedowns/adds land as new
-      // manifest versions the NEXT batch's token check adopts.
-      // parallel=N (default 1) answers each poll round's ready batches
-      // from a bounded thread pool in THIS process — concurrent query
-      // streams no longer need a second serve process.
-      case "serve" =>
-        val qDir = req("queries")
-        val outDir = req("out")
-        val topK = opts.getOrElse("topk", "10").toInt
-        val cm = opts.getOrElse("rerank", "0").toInt
-        require(cm >= 0, s"rerank=$cm — pass rerank=N>0 for the SQ8 two-stage " +
-          "path, or omit it (0) for the plain probed search")
-        val pollMs = opts.getOrElse("pollms", "500").toLong
-        val maxBatches = opts.getOrElse("maxbatches", "0").toLong
-        // parallel=N answers each poll round's ready batches from a
-        // bounded N-thread pool (Spark schedules concurrent jobs from
-        // one session; the warm caches are synchronized — one thread
-        // builds a layer, the rest read it). Default 1 = the strict
-        // arrival-order loop. Per-batch isolation is unchanged: a
-        // poison batch quarantines itself without taking down the
-        // round (VERDICT-r14 "missing #4" — concurrent batches no
-        // longer need a second process).
-        val par = opts.getOrElse("parallel", "1").toInt
-        require(par >= 1, s"parallel=$par — need >= 1")
-        val ti = opts.get("text-index").map(d => textIndex(d, warmDefault = "true"))
-        val pq = opts.get("index").map(d => pqIndex(d, warmDefault = "true"))
-        require(ti.nonEmpty || pq.nonEmpty,
-          "serve requires index=<dir> and/or text-index=<dir>")
-        val fs0 = new org.apache.hadoop.fs.Path(qDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def hp(s0: String) = new org.apache.hadoop.fs.Path(s0)
-        def readyBatches(): Seq[String] =
-          if (!fs0.exists(hp(qDir))) Seq.empty
-          else fs0.listStatus(hp(qDir)).filter(_.isDirectory)
-            .map(_.getPath.getName)
-            .filter(n => !n.startsWith(".") &&
-              fs0.exists(hp(s"$qDir/$n/_SUCCESS")) &&
-              !fs0.exists(hp(s"$outDir/$n/_SUCCESS")) &&
-              // quarantined: a batch that failed is SKIPPED, not
-              // retried forever — without this a malformed batch
-              // (missing column, both-modalities-null row) would
-              // wedge the queue: the loop crashes, a restart re-reads
-              // the same batch and dies again. The operator deletes
-              // the _FAILED marker to retry after fixing the batch.
-              !fs0.exists(hp(s"$outDir/$n/_FAILED")))
-            .sorted.toSeq
-        def answer(batch: DataFrame): DataFrame = {
-          (ti, pq) match {
-            case (Some(t), Some(p)) =>
-              graft.queries.SimilarityQueries.hybridRrfServed(
-                t, p, batch.select("query_id", "qtext", "vec"), topK, cm,
-                opts.get("allowed").map(a =>
-                  spark.read.parquet(a).select("doc_id")),
-                wLex = opts.getOrElse("wlex", "1.0").toDouble,
-                wVec = opts.getOrElse("wvec", "1.0").toDouble,
-                warnDfFrac = opts.getOrElse("warndf", "0.5").toDouble)
-            case (None, Some(p)) =>
-              val q = batch.select(
-                col(opts.getOrElse("idcol", "id")).as("id"),
-                col(opts.getOrElse("veccol", "vec")).as("vec"))
-              // vector-only allow-lists follow the index-search
-              // convention (idcol=, default "id"); hybrid/lexical use
-              // the doc_id contract of their underlying APIs
-              val aIds = opts.get("allowed").map(a => spark.read.parquet(a)
-                .select(col(opts.getOrElse("idcol", "id")).as("id")))
-              (cm, aIds) match {
-                case (c, a) if c > 0 => p.topKRerankIndexed(q, topK, c, a)
-                case (_, Some(a)) => p.topK(q, topK, a)
-                case _ => p.topK(q, topK)
-              }
-            case (Some(t), None) =>
-              t.search(batch.select("query_id", "qtext"), topK,
-                allowed = opts.get("allowed").map(a =>
-                  spark.read.parquet(a).select("doc_id")),
-                warnDfFrac = opts.getOrElse("warndf", "0.5").toDouble)
-            case (None, None) => sys.error("unreachable: require above")
-          }
-        }
-        var processed = 0L
-        var rowsOut = 0L
-        var stopping = false
-        // serving observability (the runs-report pattern applied to
-        // the serve loop): one JSON record per attempted batch in
-        // out=/serve_log.jsonl — name, wall, rows, ok/failed, the
-        // generation tokens that answered it, and whether those
-        // tokens were WARM (unchanged since the previous batch — a
-        // changed token means that batch paid the cold cache
-        // rebuild). Local filesystems don't support append, so the
-        // log is held in memory and atomically rewritten per batch
-        // (records are ~100 B each); a restarted serve re-reads the
-        // existing file first, so the log survives restarts.
-        val logPath = hp(s"$outDir/serve_log.jsonl")
-        val logLines = scala.collection.mutable.ArrayBuffer[String]()
-        if (fs0.exists(logPath)) {
-          val in = fs0.open(logPath)
-          val prior = try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-          logLines ++= prior.linesIterator.filter(_.nonEmpty)
-        }
-        def jesc(s0: String): String =
-          s0.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                       case '\n' => "\\n"; case '\r' => ""
-                       // Spark error messages carry tabs/control chars
-                       // (plan fragments); raw they make the record
-                       // RFC-invalid for every strict JSON reader
-                       case c if c < ' ' => f"\\u${c.toInt}%04x"
-                       case c => s"$c" }
-        var prevTok: Option[(Option[(Long, Int)], Option[(Long, Int)])] = None
-        // one lock covers the log buffer, the warm/prevTok comparison,
-        // and the processed/rowsOut counters — everything parallel
-        // workers share besides the (already-synchronized) caches
-        val lock = new Object
-        def logBatch(name: String, wallS: Double, rows: Long, ok: Boolean,
-                     err: Option[String]): Unit = lock.synchronized {
-          val tTok = ti.flatMap(_.generationToken)
-          val vTok = pq.flatMap(_.generationToken)
-          val warm = prevTok.contains((tTok, vTok))
-          prevTok = Some((tTok, vTok))
-          def tok(t: Option[(Long, Int)]) =
-            t.map { case (v, h0) => s""""v${v}h$h0"""" }.getOrElse("null")
-          logLines += (f"""{"batch":"${jesc(name)}","wall_s":$wallS%.3f,""" +
-            s""""rows":$rows,"ok":$ok,"warm":$warm,""" +
-            s""""text_token":${tok(tTok)},"vec_token":${tok(vTok)}""" +
-            err.map(e => s""","error":"${jesc(e.take(300))}"""").getOrElse("") + "}")
-          val out = fs0.create(logPath, true)
-          try out.write((logLines.mkString("\n") + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-        }
-        def processOne(name: String): Unit = {
-          val t1 = System.nanoTime()
-          def once(): Long = {
-            val hits = answer(spark.read.parquet(s"$qDir/$name"))
-              .localCheckpoint()
-            hits.write.mode("overwrite").parquet(s"$outDir/$name")
-            val n = hits.count()
-            // release the checkpoint blocks NOW: a long-lived
-            // process must hold zero retired blocks regardless of
-            // GC schedule (the r13 df-guard adjudication's own
-            // argument, applied to this loop per r14 VERDICT #2)
-            hits.unpersist()
-            n
-          }
-          try {
-            // ONE retry before quarantine: under parallel serving an
-            // out-of-band CDC delete + vacuum can retire files a
-            // still-running batch's evicted cache blocks recompute
-            // from (the warm caches re-validate per batch, but a
-            // batch ALREADY in flight holds the old plan) — the retry
-            // re-resolves the new generation and succeeds. A truly
-            // poison batch fails twice (fast — analysis errors die
-            // before any job runs) and quarantines as before.
-            val n = try once() catch { case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[graft] serve: $name attempt 1 failed " +
-                s"(${e.getClass.getSimpleName}) — retrying once before quarantine")
-              once()
-            }
-            val done2 = lock.synchronized { rowsOut += n; processed += 1; processed }
-            val w = (System.nanoTime() - t1) / 1e9
-            logBatch(name, w, n, ok = true, None)
-            System.err.println(f"[graft] serve: $name answered in " +
-              f"$w%.2f s ($done2 batches)")
-          } catch { case scala.util.control.NonFatal(e) =>
-            // poison batch: quarantine it (see readyBatches) and
-            // keep serving — the queue must not wedge behind it
-            val w = (System.nanoTime() - t1) / 1e9
-            val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
-            val mk = fs0.create(hp(s"$outDir/$name/_FAILED"), true)
-            try mk.write(s"$msg\n".getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-            finally mk.close()
-            logBatch(name, w, 0L, ok = false, Some(msg))
-            System.err.println(s"[graft] serve: $name FAILED ($msg) — " +
-              s"quarantined ($outDir/$name/_FAILED); delete the marker " +
-              "to retry after fixing the batch")
-          }
-        }
-        val pool =
-          if (par > 1) Some(java.util.concurrent.Executors.newFixedThreadPool(par))
-          else None
-        try {
-          while (!stopping) {
-            // each poll round is a barrier: submit the round's ready
-            // batches (capped at the remaining maxbatches budget so a
-            // parallel round can't overshoot), await them all, THEN
-            // re-evaluate stop conditions. Out-of-order completion
-            // within a round is fine — batch idempotency is per-batch
-            // (_SUCCESS/_FAILED markers), and the log records arrival
-            // of answers, not queue order.
-            val ready0 = readyBatches()
-            val ready =
-              if (maxBatches > 0)
-                // clamp BEFORE toInt: a maxbatches above Int.MaxValue
-                // ("effectively unlimited") must not truncate to a
-                // 0/negative take that would wedge the loop forever
-                ready0.take(math.min(ready0.size.toLong,
-                  math.max(0L, maxBatches - lock.synchronized(processed))).toInt)
-              else ready0
-            pool match {
-              case Some(p) =>
-                ready.map(n => p.submit(new Runnable {
-                  def run(): Unit = processOne(n)
-                })).foreach(_.get())
-              case None => ready.foreach(processOne)
-            }
-            if (maxBatches > 0 && processed >= maxBatches) stopping = true
-            if (!stopping && ready.isEmpty) {
-              if (fs0.exists(hp(s"$qDir/.stop"))) stopping = true
-              else Thread.sleep(pollMs)
-            }
-          }
-        } finally {
-          pool.foreach(_.shutdownNow())
-          // the cached frames belong to this loop, not the session —
-          // a host embedding several serves must not leak them
-          ti.foreach(_.releaseWarmCache())
-          pq.foreach(_.releaseWarmCache())
-        }
-        done(processed, rowsOut)
-      case "text-index-compact" =>
-        done(0, textIndex(req("index"))
-          .compact(opts.getOrElse("maxfiles", "1").toInt).toLong)
-      case "text-index-vacuum" =>
-        done(0, textIndex(req("index")).vacuum(
-          opts.getOrElse("keep", "1").toInt,
-          opts.getOrElse("agems", (3600L * 1000L).toString).toLong))
-      // the dedup state's takedown path (the third store of the
-      // right-to-be-forgotten sweep: index-delete removes the vectors,
-      // text-index-delete the postings, sig-delete the near-dup
-      // signatures — without it a taken-down doc keeps suppressing
-      // its future near-copies as a ghost canonical). rowsOut = docs
-      // actually removed (absent ids are a committed no-op — replays
-      // are safe); run sig-vacuum after legally-binding takedowns.
-      case "sig-delete" =>
-        val ids = spark.read.parquet(req("in"))
-          .select(col(opts.getOrElse("idcol", "doc_id")))
-        val (docs, bandRows) = new graft.streaming.SigIndex(
-          spark, req("index"), idCol = "doc_id").delete(ids)
-        System.err.println(s"[graft] sig-delete: removed $docs doc(s), " +
-          s"$bandRows band row(s)")
-        done(ids.count(), docs)
-      // ONE-COMMAND right-to-be-forgotten sweep over a DAG state dir:
-      // every store a doc id can live in under state= is swept —
-      // sig (band+sig rows: future near-copies stop being suppressed
-      // against the ghost), text_index (postings + exact stats
-      // shrink), index (codes + SQ8 sidecar), state/survivors
-      // (the accumulated corpus a later index SEED REBUILD would
-      // otherwise re-index the doc from), AND the two CONTENT
-      // artifacts the r14 review caught the sweep missing:
-      // state/shards/batch=* carries the doc's VERBATIM TEXT in the
-      // training-ready layout, and state/packs/batch=* carries its
-      // content as BPE token ids decodable via the frozen vocab the
-      // SAME state dir ships — a removal that skips either leaves the
-      // document's full text on disk. Runs under the state lease
-      // (takedown is a writer; racing a nightly batch would
-      // interleave) with the intra-stage heartbeat. Absent stores are
-      // skipped, absent ids are committed no-ops — replays are safe.
-      // vacuum=true makes the bytes unrecoverable immediately (keep=1,
-      // agems=, default 0 for legally-binding removals); default false
-      // leaves vacuum to the maintenance schedule. State-root dirs
-      // this build does not recognize get a LOUD warning (a future
-      // stage adding a content surface must not be silently skipped).
-      //
-      // Batch-dir scrub discipline (survivors, shards and packs trees
-      // alike): batch=<id> partition dirs are plain parquet (no
-      // manifest), so each touched dir is rewritten via stage → park →
-      // swap → delete-park, all dot-prefixed (the default PathFilter
-      // hides them from every reader), and a repair pass at entry
-      // finishes whatever a crashed sweep left (park with original
-      // restored back; park without original swapped forward... the
-      // park IS the original, so: original present → drop the stale
-      // park; original missing → restore the park; orphan stages
-      // always dropped and redone). A re-run is idempotent end to end.
-      //
-      // Pack rewrite semantics: packs never span batches and the
-      // (batch, pack_id) key is load-bearing for a training job, so a
-      // touched pack KEEPS its pack_id and drops only the doomed
-      // member — surviving members' ids are re-derived by re-encoding
-      // their survivors text under the frozen model (BpeEncodeIds is
-      // deterministic, so the kept segments are byte-identical to the
-      // original encode; the flattened token_ids array records no
-      // per-doc boundaries, which is why the rewrite re-encodes
-      // instead of slicing). A pack whose every member is doomed
-      // drops entirely. n_docs/n_tokens are recomputed. Requires the
-      // frozen model (state/pack/vocab/_SUCCESS) whenever state/packs
-      // exists — refused up front otherwise, before any store is
-      // swept. Shard rewrites keep surviving rows VERBATIM (shard and
-      // shard_pos included): a gap in shard_pos marks the removal,
-      // and every surviving row keeps the position a training job may
-      // have already checkpointed against.
-      //
-      // Each sweep writes a journal record under
-      // state/takedowns/td=<order-independent id-set fingerprint>/
-      // with per-surface removal counts — the operator's
-      // proof-of-removal (pipeline-stats renders the totals); a
-      // replayed takedown overwrites its OWN record (same fingerprint)
-      // rather than double-counting.
-      case "takedown" =>
-        val state = req("state")
-        val ids = spark.read.parquet(req("in"))
-          .select(col(opts.getOrElse("idcol", "doc_id")).as("doc_id"))
-          .distinct().localCheckpoint()
-        val nIds = ids.count()
-        val ttl = opts.getOrElse("leasettl", DefaultLeaseTtlMs.toString).toLong
-        val lease = acquireStateLease(spark, state, "takedown", ttl)
-        val hb = startLeaseHeartbeat(spark, lease, ttl)
-        val fsT = new org.apache.hadoop.fs.Path(state)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def hpT(s0: String) = new org.apache.hadoop.fs.Path(s0)
-        def pExT(p: String): Boolean = fsT.exists(hpT(p))
-        var removed = 0L
-        // per-surface counts for the journal record
-        var swSigDocs = 0L; var swSigBands = 0L; var swPostings = 0L
-        var swVectors = 0L; var swSurvivors = 0L; var swShardRows = 0L
-        var swPackMembers = 0L
-        // finish whatever a crashed prior sweep left under a batch-dir
-        // tree (see the case doc); shared by survivors/shards/packs
-        def repairSweep(root: String): Unit =
-          fsT.listStatus(hpT(root)).foreach { st =>
-            val n = st.getPath.getName
-            if (n.startsWith(".takedown-old-")) {
-              val orig = hpT(s"$root/${n.stripPrefix(".takedown-old-")}")
-              if (fsT.exists(orig)) fsT.delete(st.getPath, true)
-              else require(fsT.rename(st.getPath, orig),
-                s"takedown: could not restore parked dir $n under $root")
-            } else if (n.startsWith(".takedown-stage-"))
-              fsT.delete(st.getPath, true)
-          }
-        // stage → park → swap → delete-park for one batch dir; the
-        // caller writes the staged replacement (already materialized —
-        // never a plan still reading the files being swapped)
-        def swapIn(root: String, b: String)(writeStage: String => Unit): Unit = {
-          val p = s"$root/batch=$b"
-          val stage = s"$root/.takedown-stage-batch=$b"
-          writeStage(stage)
-          val park = s"$root/.takedown-old-batch=$b"
-          require(fsT.rename(hpT(p), hpT(park)), s"takedown: could not park $p")
-          require(fsT.rename(hpT(stage), hpT(p)),
-            s"takedown: could not swap staged rows into $p")
-          fsT.delete(hpT(park), true)
-        }
-        try {
-          val doVacuum = opts.getOrElse("vacuum", "false").toBoolean
-          val ageMs = opts.getOrElse("agems", "0").toLong
-          // validate every layout up front (schema discovery / marker
-          // checks only, no job), so each refusal below fires before
-          // any store is swept — the refuse-before-work convention
-          if (pExT(s"$state/survivors"))
-            require(spark.read.parquet(s"$state/survivors").columns.contains("batch"),
-              s"takedown: $state/survivors has a flat (non-batch=) layout — " +
-                "this is a full-run output, not an incremental state dir; " +
-                "full-run artifacts are regenerable: re-run the pipeline " +
-                "on the cleaned corpus, or delete the survivors dir")
-          if (pExT(s"$state/shards"))
-            require(spark.read.parquet(s"$state/shards").columns.contains("batch"),
-              s"takedown: $state/shards has a flat (non-batch=) layout — " +
-                "this is a full-run output, not an incremental state dir; " +
-                "re-run the shard stage on the cleaned corpus instead")
-          if (pExT(s"$state/packs")) {
-            require(spark.read.parquet(s"$state/packs").columns.contains("batch"),
-              s"takedown: $state/packs has a flat (non-batch=) layout — " +
-                "this is a full-run output, not an incremental state dir; " +
-                "re-run the pack stage on the cleaned corpus instead")
-            // pack rewrites re-encode surviving members under the
-            // frozen model — without it the content sweep cannot be
-            // completed, so refuse BEFORE the other stores are swept
-            // (a half-swept takedown that then fails on packs would
-            // leave the operator believing the doc is gone)
-            require(pExT(s"$state/pack/vocab/_SUCCESS"),
-              s"takedown: $state/packs exists but the frozen BPE model at " +
-                s"$state/pack is missing or incomplete (no vocab/_SUCCESS) — " +
-                "pack rows cannot be rewritten without it; restore the model " +
-                "or delete the packs tree (it is regenerable from survivors)")
-          }
-          // warn LOUDLY on state-root surfaces this build does not
-          // recognize: a future stage persisting per-doc content in a
-          // new tree must fail the completeness claim visibly, never
-          // silently (the r14 lesson — shards/packs were exactly such
-          // silently-skipped trees)
-          val knownSurfaces = Set("sig", "text_index", "index", "survivors",
-            "shards", "packs", "pack", "scrub", "mix", "select", "langid",
-            "decontaminate", "takedowns")
-          if (pExT(state)) fsT.listStatus(hpT(state)).foreach { st0 =>
-            val n = st0.getPath.getName
-            if (st0.isDirectory && !n.startsWith(".") && !knownSurfaces(n))
-              System.err.println(s"[graft] takedown WARNING: $state/$n is not a " +
-                "surface this takedown build knows — if a newer pipeline stage " +
-                "persists per-document content there, this sweep has NOT " +
-                "removed it; verify the tree and extend the sweep")
-          }
-          if (pExT(s"$state/sig")) {
-            val sig = new graft.streaming.SigIndex(spark, s"$state/sig", idCol = "doc_id")
-            val (d, b) = sig.delete(ids)
-            swSigDocs = d; swSigBands = b
-            removed += d
-            if (doVacuum) sig.vacuum(1, ageMs)
-            System.err.println(s"[graft] takedown: sig store -> $d doc(s), $b band row(s)")
-          }
-          if (pExT(s"$state/text_index/stats.txt")) {
-            val ti = textIndex(s"$state/text_index")
-            val p = ti.delete(ids)
-            swPostings = p
-            removed += p
-            if (doVacuum) ti.vacuum(1, ageMs)
-            System.err.println(s"[graft] takedown: text index -> $p posting row(s)")
-          }
-          // layout params are irrelevant to remove/vacuum (keyed store
-          // ops resolve the recorded layout); default-constructed is fine
-          val vi = new graft.similarity.PqIndex(spark, s"$state/index")
-          if (vi.isBuilt) {
-            val v = vi.remove(ids)
-            swVectors = v
-            removed += v
-            if (doVacuum) vi.vacuum(1, ageMs)
-            System.err.println(s"[graft] takedown: vector index -> $v vector(s)")
-          }
-          val survRoot = s"$state/survivors"
-          if (pExT(survRoot)) {
-            repairSweep(survRoot)
-            // ONE discovery pass finds the touched batch dirs (the
-            // batch= partition column) and the doomed row count
-            val surv = spark.read.parquet(survRoot)
-            val touched = surv.join(ids, Seq("doc_id"), "left_semi")
-              .groupBy("batch").agg(count(lit(1)).as("n")).collect()
-            swSurvivors = touched.map(_.getLong(1)).sum
-            removed += swSurvivors
-            touched.map(r => r.get(0).toString).sorted.foreach { b =>
-              // materialize the kept rows FULLY before touching the
-              // original files the plan reads from
-              val kept = spark.read.parquet(s"$survRoot/batch=$b")
-                .join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
-              swapIn(survRoot, b)(stage =>
-                kept.write.mode("overwrite").parquet(stage))
-              kept.unpersist()
-              System.err.println(s"[graft] takedown: survivors batch=$b rewritten")
-            }
-          }
-          // the sharded-training-layout CONTENT sweep: surviving rows
-          // are kept verbatim (shard + shard_pos included — a gap
-          // marks the removal; re-numbering would shift positions a
-          // training job may have checkpointed against), and the
-          // rewrite preserves the one-file-per-shard layout
-          val shardsRoot = s"$state/shards"
-          if (pExT(shardsRoot)) {
-            repairSweep(shardsRoot)
-            val touched = spark.read.parquet(shardsRoot)
-              .join(ids, Seq("doc_id"), "left_semi")
-              .groupBy("batch").agg(count(lit(1)).as("n")).collect()
-            swShardRows = touched.map(_.getLong(1)).sum
-            removed += swShardRows
-            touched.map(r => r.get(0).toString).sorted.foreach { b =>
-              val p = s"$shardsRoot/batch=$b"
-              val nsh = math.max(1,
-                fsT.listStatus(hpT(p)).count(_.getPath.getName.startsWith("shard=")))
-              val kept = spark.read.parquet(p)
-                .join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
-              swapIn(shardsRoot, b)(stage =>
-                kept.repartition(nsh, col("shard"))
-                  .sortWithinPartitions(col("shard"), col("shard_pos"))
-                  .write.mode("overwrite").partitionBy("shard").parquet(stage))
-              kept.unpersist()
-              System.err.println(s"[graft] takedown: shards batch=$b rewritten")
-            }
-          }
-          // the tokenized CONTENT sweep (see the case doc for the
-          // keep-pack_id / re-encode rationale)
-          val packsRoot = s"$state/packs"
-          if (pExT(packsRoot)) {
-            repairSweep(packsRoot)
-            val membersAll = spark.read.parquet(packsRoot)
-              .select(col("batch"), col("pack_id"),
-                posexplode(col("doc_ids")).as(Seq("pos", "doc_id")))
-            val touched = membersAll.join(ids, Seq("doc_id"), "left_semi")
-              .groupBy("batch").agg(count(lit(1)).as("n")).collect()
-            swPackMembers = touched.map(_.getLong(1)).sum
-            removed += swPackMembers
-            if (touched.nonEmpty) {
-              val merges = graft.functions.Bpe.readMerges(spark, s"$state/pack/merges")
-              val vocab = graft.functions.Bpe.readVocab(spark, s"$state/pack/vocab")
-              touched.map(r => r.get(0).toString).sorted.foreach { b =>
-                val p = s"$packsRoot/batch=$b"
-                val packs = spark.read.parquet(p)
-                val members = packs.select(col("pack_id"),
-                  posexplode(col("doc_ids")).as(Seq("pos", "doc_id")))
-                val touchedPacks = members.join(ids, Seq("doc_id"), "left_semi")
-                  .select("pack_id").distinct()
-                // surviving members of touched packs re-encode from
-                // their survivors text (same batch — packs never span
-                // batches); a missing text is a corrupted state dir
-                // and refuses loudly rather than writing a short pack
-                val keptM = members
-                  .join(touchedPacks, Seq("pack_id"), "left_semi")
-                  .join(ids, Seq("doc_id"), "left_anti")
-                require(pExT(s"$state/survivors/batch=$b"),
-                  s"takedown: packs batch=$b is touched but " +
-                    s"$state/survivors/batch=$b does not exist — pack rows " +
-                    "cannot be rewritten without the members' survivors text; " +
-                    "the state dir is inconsistent (a pack batch always has a " +
-                    "survivors batch in the incremental DAG)")
-                val survTexts = spark.read
-                  .parquet(s"$state/survivors/batch=$b").select("doc_id", "text")
-                val withText = keptM.join(survTexts, Seq("doc_id"), "left")
-                  .localCheckpoint()
-                val missing = withText.filter(col("text").isNull).count()
-                require(missing == 0L,
-                  s"takedown: $missing surviving pack member(s) of batch=$b have " +
-                    s"no text under $state/survivors/batch=$b — pack rows cannot " +
-                    "be rewritten without the members' survivors text; the state " +
-                    "dir is inconsistent (packs exist for docs survivors never " +
-                    "recorded)")
-                val rebuilt = withText
-                  .select(col("pack_id"), col("pos"), col("doc_id"),
-                    graft.functions.Bpe.bpeEncodeIds(col("text"), merges, vocab).as("ids"))
-                  .groupBy(col("pack_id"))
-                  .agg(array_sort(collect_list(struct(col("pos"), col("doc_id"), col("ids"))))
-                    .as("items"))
-                  .select(col("pack_id"),
-                    transform(col("items"), x => x.getField("doc_id")).as("doc_ids"),
-                    flatten(transform(col("items"), x => x.getField("ids"))).as("token_ids"))
-                  .withColumn("n_docs", size(col("doc_ids")).cast("long"))
-                  .withColumn("n_tokens", size(col("token_ids")).cast("long"))
-                // fully-doomed packs vanish (no surviving member rows);
-                // untouched packs ride along verbatim
-                val kept = packs.join(touchedPacks, Seq("pack_id"), "left_anti")
-                  .unionByName(rebuilt).localCheckpoint()
-                swapIn(packsRoot, b)(stage =>
-                  kept.write.mode("overwrite").parquet(stage))
-                kept.unpersist(); withText.unpersist()
-                System.err.println(s"[graft] takedown: packs batch=$b rewritten")
-              }
-            }
-          }
-          // the proof-of-removal record: keyed by an order-independent
-          // fingerprint of the id SET, so a replay overwrites its OWN
-          // record instead of double-counting. Counts are CUMULATIVE
-          // across replays (a replayed takedown removes 0 rows — it
-          // must re-affirm the original removal totals, not erase
-          // them with zeros); asof_ms is the LATEST request time.
-          val fpRow = ids.agg(
-            coalesce(sum(xxhash64(col("doc_id"))), lit(0L)),
-            count(lit(1))).head()
-          val fp = java.lang.Long.toHexString(
-            fpRow.getLong(0) ^ (fpRow.getLong(1) * 0x9E3779B97F4A7C15L))
-          val asofMs = opts.get("asof").map(_.toLong)
-            .getOrElse(System.currentTimeMillis())
-          val tdDir = s"$state/takedowns/td=$fp"
-          val tdStage = s"$state/takedowns/.td-stage-$fp"
-          def hasParquet(d: String) = pExT(d) &&
-            fsT.listStatus(hpT(d)).exists(f =>
-              f.getPath.getName.endsWith(".parquet") && f.getLen > 0)
-          // entry-time repair (the sweep's own stage/swap discipline,
-          // applied to the journal): the record is staged then swapped
-          // below, so a crash ANYWHERE in the overwrite leaves either
-          // the old record in place or the newer cumulative record in
-          // the stage — adopt the stage when present (it is strictly
-          // newer), never reset the totals to this replay's zeros and
-          // never die on a parquet-less td= dir forever after
-          if (hasParquet(tdStage)) {
-            fsT.delete(hpT(tdDir), true)
-            require(fsT.rename(hpT(tdStage), hpT(tdDir)),
-              s"takedown: could not repair journal record at $tdDir")
-          } else fsT.delete(hpT(tdStage), true)
-          val priorRow: Option[org.apache.spark.sql.Row] =
-            if (!hasParquet(tdDir)) None
-            else spark.read.parquet(tdDir).take(1).headOption
-          val prior: Map[String, Long] = priorRow match {
-            case None => Map.empty
-            case Some(r) =>
-              Seq("rows_removed", "sig_docs", "sig_band_rows", "posting_rows",
-                "vectors", "survivor_rows", "shard_rows", "pack_members")
-                .map(c => c -> r.getLong(r.fieldIndex(c))).toMap
-          }
-          // vacuumed is cumulative-OR like the counts: a replay without
-          // vacuum= must RE-AFFIRM that the original removal vacuumed
-          // the bytes, not erase the compliance-relevant fact
-          val priorVacuumed = priorRow.exists(r =>
-            r.getBoolean(r.fieldIndex("vacuumed")))
-          def cum(c: String, v: Long) = lit(v + prior.getOrElse(c, 0L)).as(c)
-          // prior counts were COLLECTED above (driver literals), so the
-          // overwrite never reads the files it replaces
-          spark.range(1).select(
-            lit(fp).as("td_key"), lit(asofMs).as("asof_ms"),
-            lit(nIds).as("n_ids"), cum("rows_removed", removed),
-            cum("sig_docs", swSigDocs), cum("sig_band_rows", swSigBands),
-            cum("posting_rows", swPostings), cum("vectors", swVectors),
-            cum("survivor_rows", swSurvivors), cum("shard_rows", swShardRows),
-            cum("pack_members", swPackMembers),
-            lit(doVacuum || priorVacuumed).as("vacuumed"))
-            .coalesce(1).write.mode("overwrite").parquet(tdStage)
-          fsT.delete(hpT(tdDir), true)
-          require(fsT.rename(hpT(tdStage), hpT(tdDir)),
-            s"takedown: could not swap journal record into $tdDir")
-        } finally {
-          hb.close()
-          releaseStateLease(spark, lease)
-        }
-        done(nIds, removed)
-      case "sig-compact" =>
-        done(0, new graft.streaming.SigIndex(spark, req("index"), idCol = "doc_id")
-          .compact(opts.getOrElse("maxfiles", "1").toInt).toLong)
-      case "sig-vacuum" =>
-        done(0, new graft.streaming.SigIndex(spark, req("index"), idCol = "doc_id")
-          .vacuum(opts.getOrElse("keep", "1").toInt,
-            opts.getOrElse("agems", (3600L * 1000L).toString).toLong))
-      // observability for the three persistent stores: one k=v line
-      // per field on stdout — the input to a compact/vacuum/re-seed
-      // decision, without writing a probe program (rowsOut = fields).
-      // One printer so the report format cannot fork across stores
-      case "index-stats" | "text-index-stats" | "sig-stats" =>
-        val kv = command match {
-          case "index-stats" => pqIndex(req("index")).describe()
-          case "text-index-stats" => textIndex(req("index")).describe()
-          case _ =>
-            new graft.streaming.SigIndex(spark, req("index"), idCol = "doc_id").describe()
-        }
-        kv.foreach { case (k0, v) => println(s"$k0=$v") }
-        done(0, kv.size.toLong)
-      // the mixing/selection family, operable like the reference's
-      // scheduler jobs: each reads a (doc_id, lang, text) parquet and
-      // writes the decision frame (ids + assignment, not text — the
-      // caller joins back, so the output stays O(docs), not O(bytes))
-      case "corpus-mix" =>
-        val docs = spark.read.parquet(req("in"))
-        // supply pass + keep filter both consume the token counts:
-        // persist the ~24 B/doc projection instead of tokenizing the
-        // corpus twice (spillable — at 100 TB this is ~2.4 GB/executor
-        // of counts vs a second full-text scan)
-        val toked = tokenizeFor(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        warnNullLang(toked, "corpus-mix")
-        val budget = opts.getOrElse("budget", "20000").toLong
-        // alpha present => temperature-weighted shares (t^alpha);
-        // absent => equal shares (the alpha = 0 limit)
-        val mixed = try (opts.get("alpha") match {
-          case Some(a) => graft.queries.PipelineQueries
-            .corpusMixTemperatureFromToked(toked, budget, a.toDouble)
-          case None => graft.queries.PipelineQueries
-            .corpusMixFromToked(toked, budget)
-        }).localCheckpoint()
-        finally toked.unpersist()
-        mixed.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), mixed.count())
-      case "corpus-split" =>
-        val docs = spark.read.parquet(req("in"))
-        val toPoints = (pct: Double) =>
-          (graft.queries.PipelineQueries.MixHashMod * pct / 100.0).toLong
-        val split = graft.queries.PipelineQueries.corpusSplitDocs(docs,
-          toPoints(opts.getOrElse("valpct", "2").toDouble),
-          toPoints(opts.getOrElse("testpct", "2").toDouble)).localCheckpoint()
-        split.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), split.count())
-      case "select-budget" =>
-        val docs = spark.read.parquet(req("in"))
-        val budget = opts.getOrElse("budget", "4000").toLong
-        // score ONCE into the tiny (doc_id, lang, n_tokens, quality)
-        // projection and persist it spillably: the pruned form's
-        // histogram is a separate action from its final window, so an
-        // unmaterialized frame would tokenize + score the corpus twice
-        // (sf10: 77 s → 44 s, see PLANS.md)
-        val scored = scoreFor(docs)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // pruned (histogram-edge) form by default — bit-identical to
-        // the exact window, sort ∝ budget instead of corpus
-        val picked = try (if (opts.getOrElse("pruned", "true").toBoolean)
-          graft.queries.PipelineQueries.selectBudgetPrunedFromScored(scored, budget)
-        else
-          graft.queries.PipelineQueries.selectBudgetFromScored(scored, budget))
-          .localCheckpoint()
-        finally scored.unpersist()
-        picked.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), picked.count())
-      // run ANY registered operator by name over a warehouse dir — the
-      // whole SparkEntry surface operable without writing code:
-      //   runMain graft.Main query name=q1_pricing_summary dir=<sfDir> out=<dir>
-      // `name=list` prints the registry instead of running.
-      case "query" =>
-        val name = req("name")
-        if (name == "list") {
-          SparkEntry.queries.keys.toSeq.sorted.foreach(println)
-          done(0, SparkEntry.queries.size.toLong)
-        } else {
-          val fn = SparkEntry.queries.getOrElse(name,
-            sys.error(s"unknown query '$name' — run name=list for the registry"))
-          val result = fn(spark, req("dir")).localCheckpoint()
-          result.write.mode("overwrite").parquet(req("out"))
-          done(0, result.count())
-        }
-      // SQL over the registered surface: every gate query is reachable
-      // as a graft_<name> temp view. Only the views the SQL text
-      // references are registered — a few operators do bounded eager
-      // work at frame construction (model fits, stream replays), and
-      // an unrelated query must not pay for them
-      case "sql" =>
-        val q = req("query")
-        if (q == "list") {
-          val names = SparkEntry.queries.keys.toSeq.sorted.map(n => s"graft_$n")
-          names.foreach(println)
-          done(0, names.size.toLong)
-        } else {
-          // word-boundary match, not substring: a query over
-          // graft_corpus_mix_temperature must not also construct the
-          // graft_corpus_mix view (prefix collision — harmless results,
-          // wasted eager work)
-          val referenced = SparkEntry.queries.keySet.filter(n =>
-            s"\\bgraft_${java.util.regex.Pattern.quote(n)}\\b".r
-              .findFirstIn(q).isDefined)
-          SparkEntry.registerViews(spark, req("dir"), referenced)
-          val result = spark.sql(q).localCheckpoint()
-          result.write.mode("overwrite").parquet(req("out"))
-          done(0, result.count())
-        }
-      case "corpus-stats" =>
-        val docs = spark.read.parquet(req("in"))
-        val stats = graft.queries.PipelineQueries.corpusStatsDocs(docs)
-          .localCheckpoint()
-        stats.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), stats.count())
-      case "decontaminate" =>
-        val docs = spark.read.parquet(req("in"))
-        val evals = spark.read.parquet(req("evals"))
-        val k = opts.getOrElse("k", "5").toInt
-        // bloom=true is the frontier-scale form (eval suite too big to
-        // broadcast exactly); identical output by construction.
-        // near=true switches to MinHash near-dup pairs (doc_id,
-        // eval_id, jaccard >= minjaccard) — the reworded-eval catcher.
-        val flagged = (if (opts.getOrElse("near", "false").toBoolean)
-          graft.queries.PipelineQueries.corpusDecontaminateNearDocs(docs, evals,
-            opts.getOrElse("minjaccard", "0.8").toDouble)
-        else if (opts.getOrElse("bloom", "false").toBoolean)
-          graft.queries.PipelineQueries.corpusDecontaminateDocsBloom(docs, evals, k)
-        else
-          graft.queries.PipelineQueries.corpusDecontaminateDocs(docs, evals, k))
-          .localCheckpoint()
-        flagged.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), flagged.count())
-      // graded twin of decontaminate: per-doc eval-overlap fraction
-      // over EVERY training doc (the audit table a curation policy
-      // thresholds on)
-      case "contamination-score" =>
-        val docs = spark.read.parquet(req("in"))
-        val evals = spark.read.parquet(req("evals"))
-        val scored = graft.queries.PipelineQueries.corpusContaminationScoreDocs(
-          docs, evals, opts.getOrElse("k", "5").toInt).localCheckpoint()
-        scored.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), scored.count())
-      // learn a BPE merge table from the corpus (one word-count scan
-      // + bounded driver solve); merges= caps the table size
-      case "bpe-train" =>
-        val docs = spark.read.parquet(req("in")).select("doc_id", "text")
-        val merges = graft.functions.Bpe.train(docs,
-          opts.getOrElse("merges", "1000").toInt,
-          opts.getOrElse("maxforms", graft.functions.Bpe.MaxForms.toString).toInt)
-        graft.functions.Bpe.mergesTable(spark, merges)
-          .coalesce(1).write.mode("overwrite").parquet(req("out"))
-        // vocabout= also writes the induced (id, token) vocabulary —
-        // alphabet from the corpus (exact, not the capped histogram)
-        opts.get("vocabout").foreach { vp =>
-          graft.functions.Bpe.vocabTable(spark,
-              graft.functions.Bpe.vocab(merges, graft.functions.Bpe.alphabet(docs)))
-            .coalesce(1).write.mode("overwrite").parquet(vp)
-        }
-        done(docs.count(), merges.length.toLong)
-      // tokenize under a trained merge table (merges= from bpe-train;
-      // absent -> the builtin gate model). vocab= switches the output
-      // to token IDS (-1 = out-of-vocab, never silent)
-      case "bpe-encode" =>
-        val docs = spark.read.parquet(req("in")).select("doc_id", "text")
-        val merges = opts.get("merges") match {
-          case Some(p) => graft.functions.Bpe.readMerges(spark, p)
-          case None => graft.functions.Bpe.builtin
-        }
-        val enc = (opts.get("vocab") match {
-          case Some(vp) =>
-            val v = graft.functions.Bpe.readVocab(spark, vp)
-            docs.select(col("doc_id"),
-              graft.functions.Bpe.bpeEncodeIds(col("text"), merges, v).as("token_ids"))
-              .withColumn("n_tokens", size(col("token_ids")).cast("long"))
-          case None =>
-            docs.select(col("doc_id"),
-              graft.functions.Bpe.bpeEncode(col("text"), merges).as("tokens"))
-              .withColumn("n_tokens", size(col("tokens")).cast("long"))
-        }).localCheckpoint()
-        enc.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), enc.count())
-      // the materialized tokenizer end: trained-BPE ids packed to the
-      // token budget, one row per pack (the training artifact)
-      case "corpus-pack" =>
-        val docs = spark.read.parquet(req("in")).select("doc_id", "text")
-        val merges = opts.get("merges") match {
-          case Some(p) => graft.functions.Bpe.readMerges(spark, p)
-          case None => graft.functions.Bpe.builtin
-        }
-        val v = opts.get("vocab") match {
-          case Some(vp) => graft.functions.Bpe.readVocab(spark, vp)
-          case None => graft.functions.Bpe.vocab(merges, graft.functions.Bpe.alphabet(docs))
-        }
-        // buckets absent ⇒ 0 ⇒ packTokens sizes the pack window from
-        // the corpus token mass (the r8 fixed-16 default was a
-        // multi-TB single-task sort at 100×; same fix as cells/tparts)
-        val packed = graft.queries.PipelineQueries.packTokens(docs, merges, v,
-          opts.getOrElse("budget", "512").toInt,
-          opts.getOrElse("buckets", "0").toInt).localCheckpoint()
-        packed.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), packed.count())
-      // ONE-SHOT curation DAG — the data-pipeline analog of the
-      // tagging scenario scheduler (reference scenario_scheduler.py):
-      // raw docs flow clean -> decontaminate -> scrub -> select ->
-      // mix -> shard -> pack with consistent intermediates. Scrub
-      // PRECEDES select by design: boilerplate grams shift the DSIR
-      // importance distribution, and with a template footer in place
-      // selection measurably inverts (PipelineE2ESpec pins the same
-      // ordering lesson) — RefinedWeb's ordering. Stages
-      // whose inputs are absent (evals=, targets=) are skipped with a
-      // loud line, steps= limits/reorders, every stage count goes to
-      // stderr, and the text column flows forward WITHOUT re-joins
-      // where the stage allows it (clean/scrub emit text; the keep
-      // stages join survivor ids back — the honest composition cost,
-      // AQE broadcasts the id side when it fits). Outputs under out/:
-      // survivors/ (+ shards/, packs/, merges/, vocab/ when those
-      // stages run).
-      case "corpus-pipeline" =>
-        import org.apache.spark.storage.StorageLevel
-        val base = req("out")
-        // incremental=true turns the DAG into its CDC form: the input
-        // is a DELTA, cleaned against the accumulated SigIndex under
-        // state=, survivors/shards APPENDED under per-batch dirs
-        // (batch= is the replay key — re-running a batch overwrites
-        // its own dirs and reproduces the same survivors, the
-        // dedupNearBatch idempotency). Only the delta-sound stages
-        // are allowed: clean (CDC by construction), decontaminate
-        // (per-doc vs a fixed eval set), select (FROZEN-model DSIR —
-        // the first batch fits λ + a calibrated keep threshold and
-        // persists them under state/select, every later batch scores
-        // its docs under the frozen model: the PqIndex frozen-
-        // quantizer discipline applied to selection, so the decision
-        // is a pure per-doc function and domain drift is an explicit
-        // re-fit, never a silent per-batch model), scrub (the same
-        // discipline: the seed batch freezes the hot-span table,
-        // deltas scrub under it — a cross-batch-only template waits
-        // for an explicit re-fit, exactly like a quantizer refresh),
-        // shard (assignment is a pure function of doc_id, so
-        // per-batch sharding composes), mix (the seed batch calibrates
-        // per-language keep thresholds from its supply and freezes
-        // them — the keep decision becomes a pure per-doc residue
-        // check, supply drift an explicit mix-refit), and pack (packs
-        // are bucket-local and never span batches, so per-batch packs
-        // under the frozen BPE model + layout land in namespaced
-        // batch dirs).
-        val incremental = opts.get("incremental").exists(_.toBoolean)
-        val stateDir = opts.get("state")
-        val batchId = opts.get("batch").map(_.toLong)
-        if (incremental) {
-          require(stateDir.isDefined, "incremental corpus-pipeline requires state=<dir>")
-          require(batchId.isDefined,
-            "incremental corpus-pipeline requires batch=<id> (the replay key)")
-        }
-        // resume=true (full runs): every completed stage persists its
-        // output frame (or a .done marker for side-effect/no-op
-        // stages) under out/stages/, and a re-run with resume=true
-        // restarts at the first INCOMPLETE stage, reading the prior
-        // run's persisted frames instead of recomputing — a crashed
-        // 7-stage run (hours at real scale) costs only its failed
-        // stage. The extra stage writes are the opt-in price of
-        // restartability; a plain run writes nothing extra.
-        // Incremental batches already have a replay unit — the batch —
-        // so resume refuses there.
-        val resume = opts.get("resume").exists(_.toBoolean)
-        require(!(incremental && resume),
-          "resume= applies to full runs only — an incremental batch's replay " +
-            "unit is the batch itself (re-run with the same batch=)")
-        // validated up front (not at the maintenance site at the end of
-        // the run): a misdirected knob must refuse before hours of
-        // stages run, not after
-        val compactEvery = opts.getOrElse("compactevery", "0").toLong
-        require(compactEvery >= 0,
-          s"compactevery=$compactEvery — negative disables nothing loudly; " +
-            "use 0 (or omit) to turn maintenance off")
-        require(compactEvery == 0 || incremental,
-          "compactevery= applies to incremental runs — a full run rebuilds its " +
-            "outputs; there is no accumulated store to maintain")
-        // the drift band is a RELATIVE fraction of the seed rate
-        // (0.25 = ±25%); nonsense refuses up front like every knob —
-        // 0 would warn on every batch (noise), and the band is only
-        // read by incremental stages (a full run has no seed baseline)
-        val driftBand = opts.getOrElse("driftband", "0.25").toDouble
-        require(driftBand > 0.0 && driftBand <= 10.0,
-          s"driftband=$driftBand — must be a relative fraction in (0, 10] " +
-            "(0.25 = warn when a batch rate leaves ±25% of the seed calibration)")
-        require(!opts.contains("driftband") || incremental,
-          "driftband= applies to incremental runs — drift is measured against " +
-            "a frozen seed calibration, which only incremental state has")
-        // maxfiles= is consumed at the maintenance site but must obey
-        // the same rule as compactevery: a malformed or absurd value
-        // refuses HERE, not after hours of stages (maxfiles=0 would
-        // make every bucket "fat" and rewrite the whole store each
-        // maintenance batch)
-        val maintMaxFiles = opts.getOrElse("maxfiles", "1").toInt
-        require(maintMaxFiles >= 1, s"maxfiles=$maintMaxFiles must be >= 1")
-        // journal retention (incremental only, 0 = keep forever): the
-        // vacuum retention pattern applied to out/runs — one file per
-        // batch grows without bound on a long-lived nightly pipeline.
-        // Same up-front rules as compactevery.
-        val journalKeep = opts.getOrElse("journalkeep", "0").toInt
-        require(journalKeep >= 0,
-          s"journalkeep=$journalKeep — negative keeps nothing loudly; " +
-            "use 0 (or omit) to keep every record")
-        require(journalKeep == 0 || incremental,
-          "journalkeep= applies to incremental runs — only they write a journal")
-        val hadoopConf = spark.sparkContext.hadoopConfiguration
-        def pExists(p: String): Boolean = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hadoopConf).exists(hp)
-        }
-        // pqk=, not k=: the DAG's flat option namespace already gives
-        // k= to the decontaminate shingle size, and a silent collision
-        // would either degrade the codebook or (worse) turn
-        // decontamination into 256-word shingles that match nothing —
-        // the packbudget= lesson, applied before it bites
-        def dagPqIndex(dir: String) = new graft.similarity.PqIndex(spark, dir,
-          dim = opts.getOrElse("dim", "64").toInt,
-          m = opts.getOrElse("m", "8").toInt,
-          k = opts.getOrElse("pqk", "16").toInt,
-          nCells = opts.getOrElse("cells", "0").toInt,
-          nProbe = opts.getOrElse("probe", "0").toInt,
-          opq = opts.getOrElse("opq", "false").toBoolean,
-          fitSampleN = opts.getOrElse("fitsample", "0").toInt)
-        // `index` and `langid` are opt-in (never in a default step
-        // list): building retrieval artifacts is a deliberate output,
-        // and a trusted upstream lang column must never be silently
-        // overwritten by the classifier
-        val known = Seq("clean", "decontaminate", "langid", "scrub", "select",
-          "mix", "shard", "pack", "index")
-        val optInSteps = Set("index", "langid")
-        // Every step now has an incremental (frozen-model CDC) form —
-        // mix and pack, the last two, joined in round 11. The
-        // frozen-model stages (scrub/select/mix/pack) are OPT-IN in
-        // incremental mode: whichever delta runs them first becomes
-        // the model's SEED, and that must be a deliberate operator
-        // decision — a step-less invocation against existing state
-        // must not let an arbitrary mid-stream batch freeze an
-        // unrepresentative (possibly empty) model forever
-        val incrementalDefault = Seq("clean", "decontaminate", "shard")
-        val steps = opts.getOrElse("steps",
-            (if (incremental) incrementalDefault
-             else known.filterNot(optInSteps)).mkString(","))
-          .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        steps.foreach(s => require(known.contains(s),
-          s"unknown pipeline step '$s' (known: ${known.mkString(",")})"))
-        // side-effect stages (index appends to the serving stores,
-        // pack writes training packs, shard writes the shard tree)
-        // emit whatever the frame holds WHEN THEY RUN; placed before
-        // a frame-mutating stage they would persist documents a later
-        // stage drops or rewrites, silently breaking the
-        // stores==survivors / artifacts==survivors invariant (same
-        // hazard class as the langid-before-mix guard below)
-        locally {
-          val frameMutating = Seq("clean", "decontaminate", "langid", "scrub",
-            "select", "mix")
-          val sideEffect = Seq("index", "pack", "shard")
-          for (se <- sideEffect if steps.contains(se);
-               s <- frameMutating if steps.contains(s))
-            require(steps.indexOf(se) > steps.indexOf(s),
-              s"plan runs '$se' BEFORE '$s' — its output would include " +
-                "documents that stage later drops or rewrites; " +
-                s"reorder steps so $se follows $s")
-        }
-        // knob refusals above never touch the lease; everything below
-        // this point mutates either state/ (incremental) or out=
-        // (every run), so the run holds an exclusive-writer lease on
-        // the dir it mutates for all of it (released on every exit
-        // path, refusals included — a refused batch did no work and
-        // must not wedge the next cron slot). The FULL-run out= lease
-        // closes the r12 seam: two concurrent full runs into one out=
-        // previously interleaved stage outputs silently — each stage
-        // write individually atomic, the composition corrupt, exactly
-        // the hazard class the state lease already guarded. An
-        // incremental run leases state= (its out= is per-batch by
-        // convention; state/ is the shared mutable thing).
-        val leaseTtl = opts.getOrElse("leasettl", DefaultLeaseTtlMs.toString).toLong
-        val stateLease = Some(try acquireStateLease(spark,
-          if (incremental) stateDir.get else base, "corpus-pipeline", leaseTtl)
-        catch {
-          // a CRASHED run's lease (never released, no heartbeat) also
-          // blocks resume=true — the recovery path — until the TTL.
-          // The lease cannot tell a crash from a live long stage, so
-          // the refusal stays, but a resuming operator gets the
-          // recovery-specific remedy spelled out instead of a puzzle
-          case e: IllegalArgumentException if resume =>
-            throw new IllegalArgumentException(e.getMessage +
-              "\n(resume=true: if this lease belongs to the CRASHED run you " +
-              "are resuming — you know it is dead, the lease does not — " +
-              "delete the named file, or pass leasettl=1 to break it)")
-        })
-        // intra-stage timer: a long STAGE must not out-age the TTL
-        // between the boundary touches below
-        val leaseTimer = stateLease.map(startLeaseHeartbeat(spark, _, leaseTtl))
-        try {
-        val tIn = System.nanoTime()
-        // raw web corpora arrive without a lang column; the langid
-        // step exists to assign one, so its absence is tolerated
-        // EXACTLY when the plan contains that step — otherwise every
-        // lang-keyed stage downstream (select targets, mix shares,
-        // stats) would silently group a null
-        val in0 = spark.read.parquet(req("in"))
-        val raw = (if (in0.columns.contains("lang"))
-            in0.select("doc_id", "lang", "text")
-          else {
-            require(steps.contains("langid"),
-              s"input ${req("in")} has no lang column — add the langid step " +
-                "(steps=...,langid,...) to assign one, placed before any " +
-                "lang-keyed stage")
-            // presence is not enough: a lang-keyed stage running BEFORE
-            // langid would group/join on the null lang — the one-shot
-            // mix's inner threshold join matches nothing on a null key
-            // (silently emptying the corpus) and the frozen-share
-            // incremental mix would keep-all an entirely unlabeled
-            // batch; both mean the stage never did its job
-            val langKeyed = Seq("mix")
-            langKeyed.filter(steps.contains).foreach(k =>
-              require(steps.indexOf("langid") < steps.indexOf(k),
-                s"input ${req("in")} has no lang column and the plan runs '$k' " +
-                  s"BEFORE langid — '$k' keys on lang and a null key would " +
-                  "silently drop (one-shot) or keep-all (incremental) every " +
-                  s"document; reorder steps so langid precedes $k"))
-            in0.select(col("doc_id"), lit(null).cast("string").as("lang"),
-              col("text"))
-          }).persist(StorageLevel.MEMORY_AND_DISK)
-        val rowsIn = raw.count()
-        var cur = raw
-        // per-stage run record, accumulated into out/stats.json — the
-        // record a scheduler checks without scraping stderr: docs
-        // where the stage advanced the frame (absent for side-effect
-        // and skipped stages), wall seconds ALWAYS (the curator's
-        // first question about a slow nightly run), resumed=true when
-        // a prior run's persisted output was adopted instead of
-        // recomputed
-        case class StageRec(stage: String, docs: Option[Long], sec: Double,
-                            resumed: Boolean = false)
-        val recs = scala.collection.mutable.ArrayBuffer[StageRec](
-          StageRec("input", Some(rowsIn), (System.nanoTime() - tIn) / 1e9))
-        // the mix budget actually applied, recorded in stats.json so a
-        // scheduler can tell keep-all from a downsampling run
-        var mixBudget: Option[Long] = None
-        // incremental observability: realized per-batch rates of the
-        // frozen-model stages, drift warnings against the seed
-        // calibration, and the cross-batch emergent-span count — the
-        // numbers that distinguish a healthy 29.8%→27.4% drift from a
-        // pathological 29.8%→3% collapse, which were previously
-        // indistinguishable to the operator
-        val rates = scala.collection.mutable.LinkedHashMap[String, Double]()
-        val driftWarnings = scala.collection.mutable.ArrayBuffer[String]()
-        var scrubEmergent: Option[Long] = None
-        // the clean stage's scratch pre-flight numbers, journaled so
-        // runs-report can show predicted-vs-free and the operator
-        // sizes the next batch without re-running the probe
-        var scratchStats: Option[(Long, Long)] = None
-        def lastDocs: Long = recs.reverseIterator
-          .collectFirst { case r if r.docs.isDefined => r.docs.get }.get
-        def advance(next0: org.apache.spark.sql.DataFrame): Long = {
-          val next = next0.persist(StorageLevel.MEMORY_AND_DISK)
-          val n = next.count()
-          if (cur ne raw) cur.unpersist()
-          cur = next
-          n
-        }
-        // drift band: ±driftband RELATIVE to the seed calibration
-        // (default ±25%) — wide enough for ordinary supply noise,
-        // narrow enough that a collapsed stage cannot hide. Advisory
-        // only (loud warning + stats.json field), never a behavior
-        // change: that is the frozen-model discipline. The 0/0
-        // exclusion (seed > 0) and re-baseline semantics are band-
-        // independent.
-        def checkDrift(key: String, state: String, sidecar: String,
-                       rate: Double): Unit = {
-          rates += key -> rate
-          readLongSidecarIfExists(spark, state, sidecar).foreach { micro =>
-            val seed = micro / 1e6
-            if (seed > 0 && math.abs(rate - seed) / seed > driftBand) {
-              val msg = f"$key rate drift: batch $rate%.4f vs seed calibration $seed%.4f"
-              driftWarnings += msg
-              System.err.println(s"[graft] corpus-pipeline WARNING $msg — the frozen " +
-                "model may no longer fit the incoming data; re-seed to re-fit " +
-                "(frozen-model discipline: drift is reported, never silently absorbed)")
-            }
-          }
-        }
-        // order-independent content fingerprint of a two-string-column
-        // frame: xor of per-row hashes mixed with the row count — the
-        // frozen-model input-identity check (decontaminate's evals,
-        // langid's profile slice)
-        def contentFingerprint(df: org.apache.spark.sql.DataFrame): Long = {
-          val cols = df.columns
-          val r = df.agg(count(lit(1)),
-            coalesce(expr(s"bit_xor(xxhash64(${cols(0)}, ${cols(1)}))"), lit(0L))).head()
-          java.lang.Long.rotateLeft(r.getLong(0), 32) ^ r.getLong(1)
-        }
-        // langid application, shared by both modes: score under the
-        // profile set, swap the lang column, keep (doc_id, lang, text).
-        // The rejoin is doc-grain on doc_id — the scrub-stage shape
-        def applyLangid(prof: graft.functions.LangProfiles.ProfileSet): Long = {
-          val pred = graft.queries.TextQueries.langIdNgram(
-            cur.select("doc_id", "lang", "text"), prof)
-            .select(col("doc_id"), col("predicted_lang"))
-          advance(cur.select("doc_id", "text").join(pred, Seq("doc_id"))
-            .select(col("doc_id"), col("predicted_lang").as("lang"), col("text")))
-        }
-        // resume bookkeeping: the plan record refuses a resume whose
-        // steps/knobs differ from the crashed run's (silently composing
-        // half-old half-new stage outputs would be worse than starting
-        // over), then the completed prefix is the run of stages whose
-        // output parquet (_SUCCESS) or .done marker committed
-        val stagesDir = s"$base/stages"
-        def stagePath(i: Int, s: String) = s"$stagesDir/${i}_$s"
-        val transformStages = Set("clean", "decontaminate", "langid", "scrub",
-          "select", "mix")
-        val completedPrefix: Int =
-          if (!resume) 0
-          else {
-            val planKey = steps.mkString(",") + " | " + opts.toSeq
-              .filterNot { case (k, _) => k == "out" || k == "resume" }
-              .sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" ")
-            val planPath = s"$stagesDir/plan.txt"
-            if (pExists(planPath)) {
-              val prior = readTextFile(spark, planPath).trim
-              require(prior == planKey,
-                s"resume=true but the prior run's plan differs:\n  prior: $prior\n" +
-                  s"  this:  $planKey\n— delete $stagesDir to start clean")
-              steps.zipWithIndex.takeWhile { case (s0, j) =>
-                pExists(s"${stagePath(j, s0)}/_SUCCESS") ||
-                  pExists(s"${stagePath(j, s0)}.done")
-              }.size
-            } else {
-              writeTextFileAtomic(spark, planPath, planKey + "\n")
-              0
-            }
-          }
-        if (completedPrefix > 0)
-          System.err.println("[graft] corpus-pipeline resume: adopting completed " +
-            s"stages ${steps.take(completedPrefix).mkString(",")} from $stagesDir")
-        val P = graft.queries.PipelineQueries
-        steps.zipWithIndex.foreach { case (step, stepIdx) =>
-          // stage-boundary heartbeat: the lease TTL measures
-          // inactivity, not runtime — a long batch that keeps making
-          // stage progress is never broken mid-run, while a crashed
-          // or hung holder (no touch for a full ttl) still is
-          stateLease.foreach(heartbeatStateLease(spark, _))
-          val tStage = System.nanoTime()
-          var docs: Option[Long] = None
-          var resumed = false
-          if (stepIdx < completedPrefix) {
-            resumed = true
-            val dir = stagePath(stepIdx, step)
-            // a transform stage that advanced left its output parquet;
-            // a side-effect/no-op stage left only .done and the frame
-            // flows through unchanged
-            if (pExists(s"$dir/_SUCCESS"))
-              docs = Some(advance(spark.read.parquet(dir)))
-            // a KEEP-ALL mix / skipped transform left only .done; the
-            // marker body carries the count the original run recorded
-            // (empty for side-effect stages and pre-existing markers)
-            else if (pExists(s"$dir.done"))
-              docs = scala.util.Try(
-                readTextFile(spark, s"$dir.done").trim.toLong).toOption
-            // an adopted mix stage ran under THIS plan's budget= (plan
-            // conflicts refuse above), so the run record must carry it
-            // — a null here would misread as keep-all
-            if (step == "mix") mixBudget = opts.get("budget").map(_.toLong)
-            System.err.println(s"[graft] corpus-pipeline $step -> resumed" +
-              docs.map(n => s" ($n docs)").getOrElse(""))
-          } else {
-          step match {
-          case "clean" if incremental =>
-            // the CDC clean: dedup the delta against the accumulated
-            // signature index (bandparts sizes a NEW index; 0 adopts
-            // an existing one's frozen layout — the corpus-clean CLI
-            // contract). Pre-flight the scratch budget first — the
-            // stage's MinHash state killed two sf1000 DAG attempts on
-            // ENOSPC hours in; `cur` is already cached, so the length
-            // pass is one in-memory agg
-            scratchStats = cleanScratchPreflight(spark, cur, opts.getOrElse("scratchcheck",
-              if (spark.sparkContext.isLocal) "refuse" else "warn"),
-              "corpus-pipeline clean")
-            val index = new graft.streaming.SigIndex(spark, s"${stateDir.get}/sig",
-              idCol = "doc_id", bandParts = opts.getOrElse("bandparts", "0").toInt)
-            docs = Some(advance(P.corpusCleanIncremental(cur, index, batchId.get,
-              keepText = true).select("doc_id", "lang", "text")))
-          case "clean" =>
-            scratchStats = cleanScratchPreflight(spark, cur, opts.getOrElse("scratchcheck",
-              if (spark.sparkContext.isLocal) "refuse" else "warn"),
-              "corpus-pipeline clean")
-            docs = Some(advance(P.corpusCleanDocs(cur).select("doc_id", "lang", "text")))
-          // frozen-eval-state CDC decontaminate: the eval set is a
-          // FROZEN MODEL like scrub's span table — the seed batch
-          // derives and persists the distinct eval-gram table (the
-          // exact side's broadcast input) and a copy of the evals
-          // (the near side's input) under state/decontaminate with a
-          // fingerprint + the fit knobs; later batches run entirely
-          // from the frozen state — no evals= dependency per batch,
-          // no per-batch re-shingling of the eval corpus — and an
-          // evals= that IS passed must fingerprint-match (a silently
-          // different eval set would mean batches were decontaminated
-          // against different contracts).
-          case "decontaminate" if incremental =>
-            val decState = s"${stateDir.get}/decontaminate"
-            val gramsPath = s"$decState/grams"
-            val evalsCopy = s"$decState/evals"
-            val fitted = pExists(s"$gramsPath/_SUCCESS")
-            def fingerprint(evals: DataFrame): Long =
-              contentFingerprint(evals.select("doc_id", "text"))
-            if (!fitted && opts.get("evals").isEmpty)
-              System.err.println("[graft] corpus-pipeline decontaminate SKIPPED " +
-                "(no frozen eval state under state/decontaminate and no evals= to seed it)")
-            else {
-              val (k, minJ) =
-                if (fitted) {
-                  val fk = readLongSidecar(spark, decState, "shinglek").toInt
-                  opts.get("k").foreach(v => require(v.toInt == fk,
-                    s"incremental decontaminate: k=$v conflicts with the frozen " +
-                      s"shingle size $fk under $decState — re-seed to change it"))
-                  val fmj = readLongSidecar(spark, decState, "minjmicro")
-                  opts.get("minjaccard").foreach(v =>
-                    require(math.round(v.toDouble * 1e6) == fmj,
-                      s"incremental decontaminate: minjaccard=$v conflicts with the " +
-                        s"frozen threshold ${fmj / 1e6} under $decState — re-seed to change it"))
-                  opts.get("evals").foreach { p =>
-                    val fp = fingerprint(spark.read.parquet(p).select("doc_id", "text"))
-                    require(fp == readLongSidecar(spark, decState, "fingerprint"),
-                      s"incremental decontaminate: evals=$p is NOT the frozen eval set " +
-                        s"under $decState (fingerprint mismatch) — the eval contract is " +
-                        "seed-frozen; re-seed to change it")
-                  }
-                  (fk, fmj / 1e6)
-                } else {
-                  val k0 = opts.getOrElse("k", "5").toInt
-                  val mj = opts.getOrElse("minjaccard", "0.8").toDouble
-                  val evals = spark.read.parquet(opts("evals")).select("doc_id", "text")
-                  // sidecars + the evals copy FIRST; grams/_SUCCESS is
-                  // the commit point (the select/scrub discipline): a
-                  // crash mid-seed leaves fitted=false and re-seeds
-                  writeLongSidecar(spark, decState, "shinglek", k0.toLong)
-                  writeLongSidecar(spark, decState, "minjmicro", math.round(mj * 1e6))
-                  writeLongSidecar(spark, decState, "fingerprint", fingerprint(evals))
-                  evals.write.mode("overwrite").parquet(evalsCopy)
-                  P.decontaminateGrams(evals, k0).select("sh").distinct()
-                    .write.mode("overwrite").parquet(gramsPath)
-                  System.err.println("[graft] corpus-pipeline decontaminate: eval " +
-                    s"state frozen on seed batch (k=$k0, minjaccard=$mj)")
-                  (k0, mj)
-                }
-              val exact = P.corpusDecontaminateDocsFromGrams(cur,
-                spark.read.parquet(gramsPath), k).select("doc_id")
-              val near = P.corpusDecontaminateNearDocs(cur,
-                spark.read.parquet(evalsCopy), minJ).select("doc_id")
-              docs = Some(advance(
-                cur.join(exact.union(near).distinct(), Seq("doc_id"), "left_anti")))
-            }
-          case "decontaminate" => opts.get("evals") match {
-            case Some(p) =>
-              val evals = spark.read.parquet(p).select("doc_id", "text")
-              val exact = P.corpusDecontaminateDocs(cur, evals,
-                opts.getOrElse("k", "5").toInt).select("doc_id")
-              val near = P.corpusDecontaminateNearDocs(cur, evals,
-                opts.getOrElse("minjaccard", "0.8").toDouble).select("doc_id")
-              docs = Some(advance(
-                cur.join(exact.union(near).distinct(), Seq("doc_id"), "left_anti")))
-            case None =>
-              System.err.println("[graft] corpus-pipeline decontaminate SKIPPED (no evals=)")
-          }
-          // langid (opt-in): ASSIGN lang from the text via the
-          // character-trigram classifier — the entry stage for raw
-          // web corpora that arrive without a lang column (every
-          // lang-keyed stage downstream depends on it; place it
-          // before them). Per-doc pure function of (text, profiles),
-          // so it is delta-sound; in incremental mode the profile
-          // TABLE is the frozen model (the select/scrub discipline):
-          // the seed batch derives it (profiles= corpus slice, or the
-          // builtin passages) and persists it under state/langid with
-          // the slice's content fingerprint; later batches score
-          // under the frozen table and a conflicting profiles=
-          // refuses — batches must never be labeled under silently
-          // different classifiers.
-          case "langid" if incremental =>
-            val lgState = s"${stateDir.get}/langid"
-            val rowsPath = s"$lgState/profile_rows"
-            val langsPath = s"$lgState/profile_langs"
-            val fitted = pExists(s"$rowsPath/_SUCCESS")
-            val prof =
-              if (fitted) {
-                opts.get("profiles") match {
-                  case Some(p) =>
-                    readLongSidecarIfExists(spark, lgState, "fingerprint") match {
-                      case Some(fp) =>
-                        val have = contentFingerprint(
-                          spark.read.parquet(p).select("lang", "text"))
-                        require(have == fp,
-                          s"incremental langid: profiles=$p is NOT the frozen profile " +
-                            s"slice under $lgState (fingerprint mismatch) — the " +
-                            "classifier is seed-frozen; re-seed to change it")
-                      case None =>
-                        sys.error(s"incremental langid: the seed batch froze the BUILTIN " +
-                          s"profiles under $lgState; profiles=$p would label later " +
-                          "batches under a different classifier — re-seed to change it")
-                    }
-                  case None => ()
-                }
-                // langs sidecar carries the priority order; rows are
-                // the (plang, tg, w) table — both tiny by construction
-                val langs = spark.read.parquet(langsPath).orderBy("prio")
-                  .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-                val rows = spark.read.parquet(rowsPath)
-                  .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
-                graft.functions.LangProfiles.ProfileSet(langs, rows)
-              } else {
-                val p0 = opts.get("profiles")
-                val prof0 = p0 match {
-                  case Some(p) => graft.queries.TextQueries.deriveLangProfiles(
-                    spark.read.parquet(p).select("lang", "text"))
-                  case None => graft.functions.LangProfiles.builtin
-                }
-                // sidecars + langs FIRST; rows/_SUCCESS is the commit
-                // point (the frozen-stage publish discipline): a crash
-                // mid-seed leaves fitted=false and re-seeds
-                p0 match {
-                  case Some(p) => writeLongSidecar(spark, lgState, "fingerprint",
-                    contentFingerprint(spark.read.parquet(p).select("lang", "text")))
-                  case None =>
-                    // a CRASHED profiles= seed may have left its
-                    // fingerprint sidecar (sidecars publish before the
-                    // commit point); a builtin re-seed must remove it,
-                    // or a later profiles= would fingerprint-match and
-                    // pass while labeling actually ran under the
-                    // builtin — the silent-different-classifier case
-                    // the refusal below exists to prevent
-                    val fpp = new org.apache.hadoop.fs.Path(s"$lgState/fingerprint.txt")
-                    fpp.getFileSystem(hadoopConf).delete(fpp, false)
-                }
-                val s2 = spark
-                import s2.implicits._
-                prof0.languages.toDF("plang", "prio")
-                  .coalesce(1).write.mode("overwrite").parquet(langsPath)
-                prof0.rows.toDF("plang", "tg", "w")
-                  .coalesce(1).write.mode("overwrite").parquet(rowsPath)
-                System.err.println("[graft] corpus-pipeline langid: profile table " +
-                  s"frozen on seed batch (${p0.fold("builtin")(p => s"profiles=$p")}, " +
-                  s"${prof0.languages.size} languages)")
-                prof0
-              }
-            docs = Some(applyLangid(prof))
-          case "langid" =>
-            val prof = opts.get("profiles") match {
-              case Some(p) => graft.queries.TextQueries.deriveLangProfiles(
-                spark.read.parquet(p).select("lang", "text"))
-              case None => graft.functions.LangProfiles.builtin
-            }
-            docs = Some(applyLangid(prof))
-          // frozen-model CDC select: the FIRST batch is the seed —
-          // λ + threshold are fit on it (targets= required at seed
-          // time) and frozen under state/select; later batches score
-          // under the frozen model and never touch targets. The
-          // lambda artifact reuses the quality-weights (bucket,
-          // weight_milli) format and its loud-validation reader.
-          case "select" if incremental =>
-            val selState = s"${stateDir.get}/select"
-            val lamPath = s"$selState/lambda"
-            val fitted = pExists(s"$lamPath/_SUCCESS")
-            if (!fitted && opts.get("targets").isEmpty)
-              // no frozen model and nothing to fit one from: skip like
-              // the non-incremental form — selection participates only
-              // once a seed run supplied targets=
-              System.err.println("[graft] corpus-pipeline select SKIPPED " +
-                "(no frozen model under state/select and no targets= to fit one)")
-            else {
-              val nIn = lastDocs
-              val nBefore = math.max(1L, nIn)
-              if (fitted) {
-                // calibration knobs are part of the frozen model: a
-                // conflicting frac= refuses like scrub's w= — using
-                // the seed calibration silently would let the
-                // operator misattribute the keep rate to the data
-                opts.get("frac").foreach { v =>
-                  val frozen = readLongSidecar(spark, selState, "fracmicro")
-                  require(math.round(v.toDouble * 1e6) == frozen,
-                    s"incremental select: frac=$v conflicts with the frozen " +
-                      s"calibration (frac ${frozen / 1e6}) under $selState — " +
-                      "re-seed to change it")
-                }
-                val lam = readQualityWeights(spark, lamPath)
-                val thr = readLongSidecar(spark, selState, "threshold")
-                val keep = P.dsirScoreDocs(cur.select("doc_id", "text"), lam)
-                  .filter(col("weight_milli") >= thr).select("doc_id")
-                docs = Some(advance(cur.join(keep, Seq("doc_id"))))
-                // the drift signal: a delta whose realized keep rate
-                // diverges from the seed calibration is flagged — the
-                // one number that separates healthy supply noise from
-                // an off-domain delta the frozen model mis-scores. An
-                // EMPTY delta (every doc deduped upstream — a normal
-                // CDC event) has no rate: 0/0 must not cry wolf
-                if (nIn > 0)
-                  checkDrift("select_keep", selState, "seedkeepmicro",
-                    docs.get.toDouble / nBefore)
-              } else {
-                val frac = opts.getOrElse("frac", "0.2").toDouble
-                val targets = spark.read.parquet(opts("targets"))
-                  .select("doc_id", "text")
-                // the fit already scored every seed doc — reuse its
-                // kept set rather than re-scanning the seed text
-                val (l, t, keptSeed) = P.dsirFitModel(
-                  cur.select("doc_id", "text"), targets, frac)
-                // the advance's count IS the kept count (keptSeed ids
-                // are distinct and ⊆ cur's) — no second count job
-                docs = Some(advance(cur.join(keptSeed, Seq("doc_id"))))
-                val seedRate = docs.get.toDouble / nBefore
-                // sidecars FIRST: the lambda parquet's _SUCCESS is
-                // the fitted-model commit point, so a crash before
-                // it leaves a re-fittable state, never a half-model.
-                // seedkeepmicro is the REALIZED seed keep rate — the
-                // baseline every later batch's drift check compares to
-                writeLongSidecar(spark, selState, "threshold", t)
-                writeLongSidecar(spark, selState, "fracmicro",
-                  math.round(frac * 1e6))
-                writeLongSidecar(spark, selState, "seedkeepmicro",
-                  math.round(seedRate * 1e6))
-                graft.queries.TextQueries.qualityWeightsTable(spark, l)
-                  .coalesce(1).write.mode("overwrite").parquet(lamPath)
-                System.err.println("[graft] corpus-pipeline select: frozen model " +
-                  f"fit on seed batch (threshold $t, keep rate $seedRate%.4f)")
-                rates += "select_keep" -> seedRate
-              }
-            }
-          case "select" => opts.get("targets") match {
-            case Some(p) =>
-              val targets = spark.read.parquet(p).select("doc_id", "text")
-              // same default as the standalone dsir-select command —
-              // one silent default, not two
-              val sel = P.corpusDsirSelectDocs(cur.select("doc_id", "text"), targets,
-                opts.getOrElse("frac", "0.2").toDouble).select("doc_id")
-              docs = Some(advance(cur.join(sel, Seq("doc_id"))))
-            case None =>
-              System.err.println("[graft] corpus-pipeline select SKIPPED (no targets=)")
-          }
-          // frozen-model CDC scrub: the seed batch learns the hot-span
-          // table (pass 1 of scrubDocs) and freezes it under
-          // state/scrub with its chunk width; deltas scrub under the
-          // frozen table — a pure per-doc rewrite. The honest frozen-
-          // model caveat, same as frozen quantizers: a template that
-          // only becomes hot ACROSS batches is missed until an
-          // explicit re-fit (delete state/scrub and re-seed).
-          case "scrub" if incremental =>
-            val scrState = s"${stateDir.get}/scrub"
-            val spansPath = s"$scrState/spans"
-            val fitted = pExists(s"$spansPath/_SUCCESS")
-            // a scrub-refit that crashed between its two swap renames
-            // left the old generation at .old.tmp and no live spans —
-            // NOT a seed situation: re-seeding from this batch would
-            // silently replace a calibration that still exists (the
-            // mix stage's rule); re-run scrub-refit to complete the swap
-            require(fitted || !pExists(s"$spansPath.old.tmp/_SUCCESS"),
-              s"incremental scrub: an interrupted scrub-refit left the frozen " +
-                s"spans at $spansPath.old.tmp — re-run scrub-refit to " +
-                "complete the swap before scrubbing further batches")
-            val textOnly = cur.select("doc_id", "text")
-            // every batch (seed included) persists its own span
-            // frequencies under state/scrub/freq/batch=<id> — the
-            // cross-batch evidence the frozen-model caveat needs.
-            // Batches are doc-disjoint (the CDC contract), so summing
-            // df across batch dirs IS the union corpus's distinct-doc
-            // count, and replay overwrites its own dir (idempotent).
-            val freqDir = s"$scrState/freq"
-            val batchFreqPath = s"$freqDir/batch=${batchId.get}"
-            val nIn = lastDocs
-            val nBefore = math.max(1L, nIn)
-            val (w, md, hot) =
-              if (fitted) {
-                val frozenW = readLongSidecar(spark, scrState, "chunkwords").toInt
-                // both fit knobs are part of the frozen model: a
-                // different w= would scrub on misaligned boundaries, a
-                // different mindocs= would claim a threshold the
-                // frozen table never saw — refuse, never silently drift
-                opts.get("w").foreach(v => require(v.toInt == frozenW,
-                  s"incremental scrub: w=$v conflicts with the frozen chunk width " +
-                    s"$frozenW under $scrState — re-seed to change it"))
-                val frozenMd = readLongSidecar(spark, scrState, "mindocs")
-                opts.get("mindocs").foreach(v => require(v.toLong == frozenMd,
-                  s"incremental scrub: mindocs=$v conflicts with the frozen " +
-                    s"fit threshold $frozenMd under $scrState — re-seed to change it"))
-                P.spanFreq(textOnly, frozenW)
-                  .write.mode("overwrite").parquet(batchFreqPath)
-                (frozenW, frozenMd, spark.read.parquet(spansPath)
-                  .select(col("h").cast("long")).collect().map(_.getLong(0)))
-              } else {
-                val fitW = opts.getOrElse("w", P.ScrubChunkWords.toString).toInt
-                val fitMd = opts.getOrElse("mindocs", P.ScrubMinDocs.toString).toInt
-                // one frequency pass feeds BOTH the hot-table fit and
-                // the persisted batch evidence
-                val freq = P.spanFreq(textOnly, fitW)
-                  .persist(StorageLevel.MEMORY_AND_DISK)
-                val h =
-                  try {
-                    val h0 = P.hotSpansFromFreq(freq, fitMd)
-                    freq.write.mode("overwrite").parquet(batchFreqPath)
-                    h0
-                  } finally freq.unpersist()
-                (fitW, fitMd.toLong, h)
-              }
-            // scrub under the (frozen or just-fit) table; the batch
-            // HIT RATE (docs that lost >= 1 span) is the scrub stage's
-            // drift observable
-            val scrubbed = P.scrubWithSpans(textOnly, w, hot)
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            val hitRate =
-              scrubbed.filter(col("n_scrubbed") > 0).count().toDouble / nBefore
-            if (!fitted) {
-              // sidecars (fit knobs + the drift baseline) FIRST: the
-              // spans parquet's _SUCCESS is the fitted-model commit
-              // point (see writeLongSidecar)
-              writeLongSidecar(spark, scrState, "chunkwords", w.toLong)
-              writeLongSidecar(spark, scrState, "mindocs", md)
-              writeLongSidecar(spark, scrState, "seedhitmicro",
-                math.round(hitRate * 1e6))
-              import spark.implicits._
-              hot.toSeq.toDF("h").coalesce(1).write.mode("overwrite").parquet(spansPath)
-              System.err.println("[graft] corpus-pipeline scrub: frozen " +
-                f"${hot.length}-span table fit on seed batch (w=$w, hit rate $hitRate%.4f)")
-              rates += "scrub_hit" -> hitRate
-            } else if (nIn > 0) {
-              // an empty delta has no hit rate: 0/0 must not cry wolf.
-              // A missing baseline means a scrub-refit retired it with
-              // the old model — the first post-refit batch's realized
-              // rate becomes the new one (self-healing, logged)
-              if (readLongSidecarIfExists(spark, scrState, "seedhitmicro").isEmpty) {
-                writeLongSidecar(spark, scrState, "seedhitmicro",
-                  math.round(hitRate * 1e6))
-                System.err.println("[graft] corpus-pipeline scrub: drift baseline " +
-                  f"re-established at $hitRate%.4f (first batch under a re-fit model)")
-              }
-              checkDrift("scrub_hit", scrState, "seedhitmicro", hitRate)
-            }
-            docs = Some(advance(cur.select("doc_id", "lang").join(
-              scrubbed.select(col("doc_id"), col("text_scrubbed").as("text")),
-              Seq("doc_id"))))
-            scrubbed.unpersist()
-            // the cross-batch report: spans whose ACCUMULATED distinct
-            // doc count crossed the frozen threshold but are absent
-            // from the frozen table — the templates the frozen model
-            // is provably missing. Advisory (report + persisted
-            // evidence + suggest re-fit), never silent model mutation.
-            val emergent = spark.read.parquet(freqDir)
-              .groupBy("h").agg(sum("df").as("df"))
-              .filter(col("df") >= md)
-              .join(spark.read.parquet(spansPath).select("h"), Seq("h"), "left_anti")
-              .localCheckpoint()
-            val nEmergent = emergent.count()
-            scrubEmergent = Some(nEmergent)
-            if (nEmergent > 0) {
-              emergent.write.mode("overwrite").parquet(s"$scrState/emergent")
-              System.err.println(s"[graft] corpus-pipeline WARNING scrub: $nEmergent " +
-                s"span(s) crossed mindocs=$md ACROSS batches but are not in the " +
-                s"frozen table (evidence at $scrState/emergent) — these templates " +
-                "are NOT being scrubbed; re-seed state/scrub to re-fit " +
-                "(frozen-model discipline: advisory, never silent mutation)")
-            }
-          case "scrub" =>
-            val scrubbed = P.scrubDocs(cur.select("doc_id", "text"),
-              opts.getOrElse("w", P.ScrubChunkWords.toString).toInt,
-              opts.getOrElse("mindocs", P.ScrubMinDocs.toString).toInt)
-            docs = Some(advance(cur.select("doc_id", "lang").join(
-              scrubbed.select(col("doc_id"), col("text_scrubbed").as("text")),
-              Seq("doc_id"))))
-          // frozen-share CDC mix — the last curation stage to get a
-          // delta form. The naive per-batch mix is WRONG by
-          // construction (each batch's supply recalibrates the
-          // thresholds, so the accumulated survivors equal no
-          // one-shot run), hence the old refusal; the frozen-model
-          // discipline that already works for select/scrub/
-          // decontaminate/langid fixes it: the seed batch calibrates
-          // per-language keep thresholds from ITS supply (the
-          // temperature driver fold, mixKeepPoints) and freezes them
-          // under state/mix; deltas apply the frozen residue filter
-          // per-doc — order-free, batch-composable, replay-idempotent.
-          // Supply drift across batches is exactly what the keep-rate
-          // drift signal watches; re-calibration is the explicit
-          // `mix-refit` (fed by the per-batch supply evidence every
-          // mixing batch appends under state/mix/supply), never a DAG
-          // side effect. A language the seed never saw has no frozen
-          // threshold: it keeps everything, LOUDLY — silently
-          // destroying a new language's whole supply is the DAG's
-          // cardinal sin (the r8 lesson below).
-          case "mix" if incremental =>
-            val mixState = s"${stateDir.get}/mix"
-            val thrPath = s"$mixState/thresholds"
-            // the knobs file doubles as the fitted-model marker: it is
-            // the LAST artifact a seed writes (after the parquet), so
-            // a crashed seed is simply not fitted and re-seeds
-            val fitted = pExists(s"$thrPath/$KnobsFile")
-            // a refit that crashed between its two swap renames left
-            // the old generation at .old.tmp and no live thresholds —
-            // that is NOT a seed situation: re-seeding from this
-            // batch's supply would silently replace a calibration
-            // that still exists; the remedy is re-running mix-refit
-            // (which recovers from the aside dir)
-            require(fitted || !pExists(s"$thrPath.old.tmp/$KnobsFile"),
-              s"incremental mix: an interrupted mix-refit left the frozen " +
-                s"calibration at $thrPath.old.tmp — re-run mix-refit to " +
-                "complete the swap before mixing further batches")
-            if (!fitted && pExists(thrPath))
-              System.err.println("[graft] corpus-pipeline mix: thresholds " +
-                s"exist at $thrPath without a $KnobsFile marker (a crashed " +
-                "seed) — re-seeding over them from this batch's supply")
-            opts.get("budget") match {
-            case None =>
-              // a fitted pipeline must not silently pass a batch
-              // through unmixed because one cron entry lost its
-              // budget= — KEEP-ALL is only safe when no calibration
-              // exists to bypass (r11 review finding)
-              require(!fitted,
-                s"incremental mix: a frozen calibration exists under $mixState " +
-                  "but this batch has no budget= — omitting it would append the " +
-                  "batch UNMIXED to the accumulated survivors; pass the frozen " +
-                  "budget= (or mix-refit / re-seed to change the contract)")
-              System.err.println("[graft] corpus-pipeline mix KEEP-ALL " +
-                "(no budget= — pass budget=<tokens> to downsample to a token budget)")
-              docs = Some(cur.count())
-            case Some(b) =>
-              mixBudget = Some(b.toLong)
-              val nIn = lastDocs
-              val bpeMode = if (tokensMode == "bpe") 1L else 0L
-              val toked = tokenizeFor(cur)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-              try {
-                // fit knobs are part of the frozen model: conflicts
-                // refuse like scrub's w= — a silently different
-                // budget/alpha/denomination would mean batches were
-                // mixed under different contracts. Validated BEFORE
-                // the supply evidence persists: a refused batch must
-                // leave no evidence counted under the wrong
-                // denomination for a later mix-refit to sum (r11
-                // review finding).
-                if (fitted) {
-                  val k = readKnobsFile(spark, thrPath)
-                  require(b.toLong == k("budget"),
-                    s"incremental mix: budget=$b conflicts with the frozen " +
-                      s"calibration (budget ${k("budget")}) under $mixState — " +
-                      "mix-refit budget= to re-calibrate, or re-seed")
-                  opts.get("alpha").foreach { v =>
-                    require(math.round(v.toDouble * 1e6) == k("alphamicro"),
-                      s"incremental mix: alpha=$v conflicts with the frozen " +
-                        s"calibration (alpha ${k("alphamicro") / 1e6}) under $mixState — " +
-                        "mix-refit alpha= to re-calibrate, or re-seed")
-                  }
-                  require(bpeMode == k("bpemode"),
-                    s"incremental mix: tokens=$tokensMode " +
-                      s"conflicts with the frozen denomination under $mixState — " +
-                      "the accumulated supply evidence was counted in it; " +
-                      "re-seed to change denominations")
-                }
-                warnNullLang(toked, "corpus-pipeline incremental mix")
-                // non-null langs only: null-lang docs are kept whole
-                // (the mixApplyKeepPoints left join), take no budget
-                // share, and must not reach the String sort (a null
-                // key NPEs it) or the persisted supply evidence a
-                // later mix-refit sums
-                val supply = toked.filter(col("lang").isNotNull).groupBy("lang")
-                  .agg(sum("n_tokens").as("lang_tokens"))
-                  .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
-                // supply evidence for mix-refit: this batch's
-                // per-language token mass, replay-overwritten under
-                // its own dir (the scrub freq-evidence pattern)
-                locally {
-                  import spark.implicits._
-                  supply.toDF("lang", "lang_tokens").coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(s"$mixState/supply/batch=${batchId.get}")
-                }
-                if (fitted) {
-                  val thr = spark.read.parquet(thrPath)
-                    .select("lang", "keep_points")
-                  val unseen = supply.map(_._1).toSet --
-                    thr.select("lang").collect().map(_.getString(0)).toSet
-                  if (unseen.nonEmpty)
-                    System.err.println("[graft] corpus-pipeline WARNING mix: " +
-                      s"language(s) ${unseen.toSeq.sorted.mkString(",")} have no " +
-                      "frozen threshold (not in the seed supply) — kept WHOLE; " +
-                      "mix-refit to fold the accumulated supply into the model")
-                  val kept = P.mixApplyKeepPoints(toked, thr)
-                    .select("doc_id").localCheckpoint()
-                  docs = Some(advance(cur.join(kept, Seq("doc_id"))))
-                  if (nIn > 0) {
-                    val rate = docs.get.toDouble / math.max(1L, nIn)
-                    // a retired baseline (mix-refit) re-establishes
-                    // from the first post-refit batch, like scrub
-                    if (readLongSidecarIfExists(spark, mixState, "seedkeepmicro").isEmpty) {
-                      writeLongSidecar(spark, mixState, "seedkeepmicro",
-                        math.round(rate * 1e6))
-                      System.err.println("[graft] corpus-pipeline mix: drift " +
-                        f"baseline re-established at $rate%.4f (first batch " +
-                        "under a re-fit model)")
-                    }
-                    checkDrift("mix_keep", mixState, "seedkeepmicro", rate)
-                  }
-                } else {
-                  val alpha = opts.getOrElse("alpha", "0.5").toDouble
-                  import spark.implicits._
-                  val thr = P.mixKeepPoints(supply, b.toLong, alpha)
-                    .toDF("lang", "keep_points")
-                  val kept = P.mixApplyKeepPoints(toked, thr)
-                    .select("doc_id").localCheckpoint()
-                  docs = Some(advance(cur.join(kept, Seq("doc_id"))))
-                  val seedRate = docs.get.toDouble / math.max(1L, nIn)
-                  // drift baseline first (advisory), then the parquet,
-                  // then the knobs file — the completion marker is the
-                  // LAST artifact written
-                  writeLongSidecar(spark, mixState, "seedkeepmicro",
-                    math.round(seedRate * 1e6))
-                  thr.coalesce(1).write.mode("overwrite").parquet(thrPath)
-                  writeKnobsFile(spark, thrPath, Seq(
-                    "budget" -> b.toLong,
-                    "alphamicro" -> math.round(alpha * 1e6),
-                    "bpemode" -> bpeMode))
-                  System.err.println("[graft] corpus-pipeline mix: frozen " +
-                    f"per-language thresholds fit on seed batch (budget $b, " +
-                    f"alpha $alpha, keep rate $seedRate%.4f)")
-                  rates += "mix_keep" -> seedRate
-                }
-              } finally toked.unpersist()
-          }
-          // mix is SAFE BY DEFAULT: without budget= the stage keeps
-          // the full supply and says so — the gate-scale 20k-token
-          // literal as a silent default collapsed a 235k-doc sf10 run
-          // to 317 docs (r8 PLANS.md), and a one-shot DAG must not
-          // destroy 99.9% of its corpus because a knob went unread.
-          // The tokenize is persisted around BOTH its consumers (the
-          // collected supply aggregate and the keep-filter scan) and
-          // released before the stage returns — the CLI corpus-mix
-          // pattern, not the wrapper that leaves the release to the
-          // context cleaner.
-          case "mix" => opts.get("budget") match {
-            case None =>
-              System.err.println("[graft] corpus-pipeline mix KEEP-ALL " +
-                "(no budget= — pass budget=<tokens> to downsample to a token budget)")
-              docs = Some(cur.count())
-            case Some(b) =>
-              mixBudget = Some(b.toLong)
-              val toked = tokenizeFor(cur)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              warnNullLang(toked, "corpus-pipeline mix")
-              val kept = try P.corpusMixTemperatureFromToked(toked, b.toLong,
-                  opts.getOrElse("alpha", "0.5").toDouble)
-                .select("doc_id").localCheckpoint()
-                finally toked.unpersist()
-              docs = Some(advance(cur.join(kept, Seq("doc_id"))))
-          }
-          case "shard" =>
-            // incremental: the delta's rows land under the STATE's
-            // shard tree in a per-batch dir (replay overwrites its own
-            // dir). shardDocs' assignment is a pure function of
-            // (doc_id, shard COUNT), so state/shards/batch=*/shard=k
-            // is the same partition a one-shot run would put those
-            // docs in — PROVIDED every batch uses one count: the count
-            // is frozen by whichever batch shards first (sidecar
-            // state/shards.txt, next to the shards/ tree) and a later
-            // batch's conflicting shards= refuses like scrub's w= —
-            // a silently different count would scatter the same
-            // doc_id across assignments and the accumulated tree
-            // would no longer equal any one-shot run's.
-            val shardsN =
-              if (!incremental) opts.getOrElse("shards", "16").toInt
-              else {
-                if (pExists(s"${stateDir.get}/shards.txt")) {
-                  val frozen = readLongSidecar(spark, stateDir.get, "shards").toInt
-                  opts.get("shards").foreach(v => require(v.toInt == frozen,
-                    s"incremental shard: shards=$v conflicts with the frozen shard " +
-                      s"count $frozen under ${stateDir.get} — re-seed to change it"))
-                  frozen
-                } else {
-                  val n = opts.getOrElse("shards", "16").toInt
-                  writeLongSidecar(spark, stateDir.get, "shards", n.toLong)
-                  n
-                }
-              }
-            val shardOut =
-              if (incremental) s"${stateDir.get}/shards/batch=${batchId.get}"
-              else s"$base/shards"
-            P.writeShards(cur, shardsN, shardOut)
-            System.err.println(s"[graft] corpus-pipeline shard -> written ($shardOut)")
-          // per-batch CDC pack: sound because packs never span batches
-          // by construction (the pack window is bucket-local and this
-          // stage packs only the flowing batch), so each batch's packs
-          // land under state/packs/batch=<id> — replay overwrites its
-          // own dir, and the (batch, pack_id) pair is the composite
-          // key (pack_id alone repeats across batches by design). The
-          // BPE model and the layout knobs are FROZEN on the seed pack
-          // batch (merges+vocab under state/pack, vocab/_SUCCESS the
-          // commit point; budget/bucket-count/nmerges sidecars) so
-          // every batch's token ids and pack shapes come from one
-          // contract — a silently different model would hand the
-          // training job incompatible ids; conflicts refuse like
-          // scrub's w=. The bucket COUNT is resolved at seed (auto ⇒
-          // corpus-sized from the seed) and frozen: a per-batch
-          // re-suggestion would scatter the same doc_id across
-          // layouts.
-          case "pack" if incremental =>
-            val pkState = s"${stateDir.get}/pack"
-            val pkMerges = s"$pkState/merges"
-            val pkVocab = s"$pkState/vocab"
-            val pkFitted = pExists(s"$pkVocab/_SUCCESS")
-            def mergesFp(m: Array[(String, String)]): Long =
-              m.foldLeft(17L) { case (a, (l, r)) =>
-                val h = l.foldLeft(a * 31 + 1)((x, c) => x * 31 + c)
-                r.foldLeft(h * 31 + 7)((x, c) => x * 31 + c)
-              }
-            val (merges, v, pb, bk) =
-              if (pkFitted) {
-                opts.get("packbudget").foreach { x =>
-                  val f = readLongSidecar(spark, pkState, "packbudget")
-                  require(x.toLong == f,
-                    s"incremental pack: packbudget=$x conflicts with the frozen " +
-                      s"budget $f under $pkState — re-seed to change it")
-                }
-                opts.get("buckets").foreach { x =>
-                  val f = readLongSidecar(spark, pkState, "packbuckets")
-                  require(x.toLong == f,
-                    s"incremental pack: buckets=$x conflicts with the frozen " +
-                      s"bucket count $f under $pkState — re-seed to change it")
-                }
-                opts.get("nmerges").foreach { x =>
-                  readLongSidecarIfExists(spark, pkState, "nmerges") match {
-                    case Some(f) => require(x.toLong == f,
-                      s"incremental pack: nmerges=$x conflicts with the frozen " +
-                        s"model's $f under $pkState — re-seed to change it")
-                    case None => sys.error(
-                      s"incremental pack: the frozen model under $pkState came " +
-                        "from merges= (external) — nmerges= does not apply; " +
-                        "re-seed to train a model instead")
-                  }
-                }
-                val fm = graft.functions.Bpe.readMerges(spark, pkMerges)
-                opts.get("merges").foreach { p =>
-                  val ext = graft.functions.Bpe.readMerges(spark, p)
-                  require(mergesFp(ext) == mergesFp(fm),
-                    s"incremental pack: merges=$p is not the frozen BPE model " +
-                      s"under $pkState — batches must pack under ONE model; " +
-                      "re-seed to change it")
-                }
-                (fm, graft.functions.Bpe.readVocab(spark, pkVocab),
-                  readLongSidecar(spark, pkState, "packbudget").toInt,
-                  readLongSidecar(spark, pkState, "packbuckets").toInt)
-              } else {
-                val fm = opts.get("merges") match {
-                  case Some(p) => graft.functions.Bpe.readMerges(spark, p)
-                  case None => graft.functions.Bpe.train(cur,
-                    opts.getOrElse("nmerges", "1000").toInt)
-                }
-                val fv = graft.functions.Bpe.vocab(fm,
-                  graft.functions.Bpe.alphabet(cur))
-                val budget0 = opts.getOrElse("packbudget", "512").toInt
-                val buckets0 = graft.queries.PipelineQueries
-                  .resolvePackBuckets(cur, opts.getOrElse("buckets", "0").toInt)
-                // sidecars FIRST; the vocab parquet's _SUCCESS is the
-                // fitted-model commit point (written after merges so a
-                // crash can never leave vocab without merges)
-                writeLongSidecar(spark, pkState, "packbudget", budget0.toLong)
-                writeLongSidecar(spark, pkState, "packbuckets", buckets0.toLong)
-                // nmerges is frozen ONLY when training ran — it is the
-                // reproducible training request. With merges= the
-                // model is external and the CLI default (1000) never
-                // described it, so freezing it would refuse a later
-                // accurate nmerges= with a number from nowhere; the
-                // sidecar's absence marks the model external instead
-                if (opts.get("merges").isEmpty)
-                  writeLongSidecar(spark, pkState, "nmerges",
-                    opts.getOrElse("nmerges", "1000").toLong)
-                graft.functions.Bpe.mergesTable(spark, fm).coalesce(1)
-                  .write.mode("overwrite").parquet(pkMerges)
-                graft.functions.Bpe.vocabTable(spark, fv).coalesce(1)
-                  .write.mode("overwrite").parquet(pkVocab)
-                System.err.println("[graft] corpus-pipeline pack: frozen BPE " +
-                  s"model (${fm.length} merges) + layout (budget=$budget0, " +
-                  s"buckets=$buckets0) fit on seed batch")
-                (fm, fv, budget0, buckets0)
-              }
-            // a delta whose text contains characters the SEED never
-            // saw encodes them as -1 (UNK) under the frozen vocab —
-            // silent -1s in a training artifact are the pack analog
-            // of mix silently destroying a new language, so they warn
-            // LOUDLY (one distinct-chars aggregate, bounded by the
-            // charset). Fitted batches only: the seed's vocab contains
-            // its own alphabet by construction, so the scan would be a
-            // second full-text pass over the LARGEST batch for zero
-            // information.
-            if (pkFitted) {
-              val vset = v.toSet
-              val novel = graft.functions.Bpe.alphabet(cur).filterNot(vset)
-              if (novel.nonEmpty)
-                System.err.println("[graft] corpus-pipeline WARNING pack: " +
-                  s"${novel.size} character(s) absent from the frozen seed " +
-                  s"vocab (${novel.take(10).mkString("", "", if (novel.size > 10) "…" else "")}) " +
-                  "— their tokens encode as -1 (UNK) in this batch's packs; " +
-                  "re-seed the pack model if the corpus charset has drifted")
-            }
-            P.packTokens(cur, merges, v, pb, bk)
-              .write.mode("overwrite")
-              .parquet(s"${stateDir.get}/packs/batch=${batchId.get}")
-            System.err.println("[graft] corpus-pipeline pack -> written " +
-              s"(${stateDir.get}/packs/batch=${batchId.get})")
-          case "pack" =>
-            val merges = opts.get("merges") match {
-              case Some(p) => graft.functions.Bpe.readMerges(spark, p)
-              case None => graft.functions.Bpe.train(cur,
-                opts.getOrElse("nmerges", "1000").toInt)
-            }
-            val v = graft.functions.Bpe.vocab(merges, graft.functions.Bpe.alphabet(cur))
-            graft.functions.Bpe.mergesTable(spark, merges).coalesce(1)
-              .write.mode("overwrite").parquet(s"$base/merges")
-            graft.functions.Bpe.vocabTable(spark, v).coalesce(1)
-              .write.mode("overwrite").parquet(s"$base/vocab")
-            P.packTokens(cur, merges, v,
-              opts.getOrElse("packbudget", "512").toInt,
-              opts.getOrElse("buckets", "0").toInt)
-              .write.mode("overwrite").parquet(s"$base/packs")
-            System.err.println("[graft] corpus-pipeline pack -> written")
-          // retrieval artifacts over the survivors as they stand at
-          // this point in the DAG: a text index always (the corpus IS
-          // text), a vector index when vectors= supplies the (id, vec)
-          // embeddings (semi-joined to survivor ids — curation
-          // decisions bind the index too). minrecall= gives the DAG's
-          // vector build the same validated floor the standalone
-          // index-build CLI has: an auto-sized layout that under-
-          // recalls fails HERE, at build, not as a serving mystery.
-          // The DAG's buckets= belongs to the pack window; both index
-          // stores self-size their layout.
-          // CDC-maintained retrieval artifacts — the serving half of a
-          // nightly pipeline: the indexes live under state/ (they
-          // accumulate across batches; out/ is per-run). Whichever
-          // batch runs `index` first SEEDS both indexes over the
-          // ACCUMULATED survivors ∪ this batch (so the step can join
-          // an existing state mid-stream without losing history);
-          // every later batch CDC-adds its own survivors under the
-          // frozen models. PqIndex.add / TextIndex.add are keyed
-          // replaces, so batch replays stay idempotent, and takedowns
-          // ride the standalone index-delete / text-index-delete
-          // commands against the same state dirs. The survivor-binding
-          // guarantee of the batch `index` step is preserved: each
-          // batch indexes exactly what it appended to state/survivors.
-          case "index" if incremental =>
-            val tiDir = s"${stateDir.get}/text_index"
-            val viDir = s"${stateDir.get}/index"
-            val survPath = s"${stateDir.get}/survivors"
-            // completion markers: stats.txt is TextIndex.build's LAST
-            // write, so its presence marks a committed build. The
-            // vector side needs isBuilt (models on disk AND a committed
-            // codes manifest): PqIndex.build writes models.txt BEFORE
-            // the much longer full encode, and adopting a crashed seed
-            // as "built" would CDC-add onto a store that never saw the
-            // seed corpus — batches silently missing from serving.
-            val tiBuilt = pExists(s"$tiDir/stats.txt")
-            val viBuilt = dagPqIndex(viDir).isBuilt
-            // the seed corpus: accumulated survivors EXCLUDING this
-            // batch's own rows (a replay has already appended them —
-            // the anti-join keeps the union duplicate-free), plus cur
-            val survExists = pExists(survPath)
-            def fullCorpus(): DataFrame =
-              if (survExists)
-                spark.read.parquet(survPath).select("doc_id", "lang", "text")
-                  .join(cur.select("doc_id"), Seq("doc_id"), "left_anti")
-                  .unionByName(cur.select("doc_id", "lang", "text"))
-              else cur.select("doc_id", "lang", "text")
-            val needFull = !tiBuilt || (opts.contains("vectors") && !viBuilt)
-            // only persist (and thus only unpersist) a frame that is
-            // NOT plan-identical to cur: with no prior survivors,
-            // fullCorpus IS cur modulo a no-op projection, and Spark's
-            // cache identity is the CANONICALIZED plan — persisting it
-            // re-registers cur's own cache entry and the unpersist in
-            // the finally would evict it, forcing the survivors write
-            // after this stage to recompute the entire lineage from
-            // raw input (observed at sf100: a 4.5M-doc seed re-ran
-            // clean's near-dup shingling inside the survivors write)
-            val full = if (needFull && survExists)
-              Some(fullCorpus().persist(StorageLevel.MEMORY_AND_DISK)) else None
-            def fullOrCur: DataFrame = full.getOrElse(fullCorpus())
-            try {
-              if (!tiBuilt) {
-                textIndex(tiDir).build(fullOrCur.select("doc_id", "text"))
-                System.err.println("[graft] corpus-pipeline index -> text index " +
-                  s"SEEDED over the accumulated survivors ($tiDir)")
-              } else {
-                textIndex(tiDir).add(cur.select("doc_id", "text"))
-                System.err.println(s"[graft] corpus-pipeline index -> text index add ($tiDir)")
-              }
-              opts.get("vectors") match {
-                case Some(vp) =>
-                  val scope = if (viBuilt) cur else fullOrCur
-                  val ids = scope.select(col("doc_id").as("id"))
-                  val vecs = vectors(vp).join(ids, Seq("id"), "left_semi")
-                  // a survivor the supplied embeddings don't cover is
-                  // silently absent from vector serving — the same gap
-                  // the vectors=-absent case below warns about, so a
-                  // PARTIAL vectors= must warn too (one anti-join
-                  // count next to the build/add it gates on)
-                  val uncovered = ids.join(vectors(vp), Seq("id"), "left_anti").count()
-                  if (uncovered > 0)
-                    System.err.println("[graft] corpus-pipeline WARNING index: " +
-                      s"$uncovered survivor(s) have no embedding in vectors=$vp — " +
-                      "they are MISSING from the vector side until an index-add " +
-                      "supplies them")
-                  if (!viBuilt) {
-                    try dagPqIndex(viDir).build(vecs,
-                      minRecall = opts.getOrElse("minrecall", "0").toDouble)
-                    catch { case e: Throwable =>
-                      // un-mark the failed seed: build leaves its
-                      // artifacts for diagnosis (the standalone
-                      // contract), but a replayed batch must RE-SEED,
-                      // not adopt a build that failed its recall floor
-                      // (or died mid-encode) and silently add onto it
-                      val mp = new org.apache.hadoop.fs.Path(s"$viDir/models.txt")
-                      mp.getFileSystem(hadoopConf).delete(mp, false)
-                      throw e
-                    }
-                    System.err.println("[graft] corpus-pipeline index -> vector index " +
-                      s"SEEDED over the accumulated survivors ($viDir)")
-                  } else {
-                    dagPqIndex(viDir).add(vecs)
-                    System.err.println(s"[graft] corpus-pipeline index -> vector index add ($viDir)")
-                  }
-                case None =>
-                  // an existing vector index a delta silently skips is
-                  // a serving gap, not a preference — say so loudly
-                  if (viBuilt)
-                    System.err.println("[graft] corpus-pipeline WARNING index: the " +
-                      s"vector index at $viDir exists but this batch passed no " +
-                      "vectors= — its survivors are MISSING from the vector side " +
-                      "until an index-add supplies their embeddings")
-                  else
-                    System.err.println(
-                      "[graft] corpus-pipeline index: vector side SKIPPED (no vectors=)")
-              }
-            } finally full.foreach(_.unpersist())
-          case "index" =>
-            textIndex(s"$base/text_index").build(cur.select("doc_id", "text"))
-            System.err.println("[graft] corpus-pipeline index -> text index built")
-            opts.get("vectors") match {
-              case Some(vp) =>
-                val vecs = vectors(vp)
-                  .join(cur.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-                dagPqIndex(s"$base/index")
-                  .build(vecs, minRecall = opts.getOrElse("minrecall", "0").toDouble)
-                System.err.println("[graft] corpus-pipeline index -> vector index built")
-              case None =>
-                System.err.println(
-                  "[graft] corpus-pipeline index: vector side SKIPPED (no vectors=)")
-            }
-          }
-          if (resume && stepIdx >= completedPrefix) {
-            // commit this stage's resume artifact: the transformed
-            // frame where the stage advanced it, a bare marker where
-            // the frame flowed through (side-effect/no-op stages) —
-            // the parquet _SUCCESS / .done file is the completion mark
-            // the next resume scans for
-            val dir = stagePath(stepIdx, step)
-            if (transformStages(step) && docs.isDefined &&
-                !(step == "mix" && mixBudget.isEmpty))
-              cur.select("doc_id", "lang", "text").write.mode("overwrite").parquet(dir)
-            // the marker carries the stage's doc count (empty for
-            // side-effect stages, which record none) so a resumed run
-            // re-records what the original run recorded — a scheduler
-            // diffing consecutive stats.json records must not see a
-            // KEEP-ALL mix's count disappear on replay
-            else writeTextFileAtomic(spark, s"$dir.done",
-              docs.map(_.toString + "\n").getOrElse(""))
-          }
-          }
-          // adopted stages already logged "-> resumed (N docs)" above;
-          // a second "-> N docs" line would read as a recompute
-          if (!resumed) docs.foreach(n =>
-            System.err.println(s"[graft] corpus-pipeline $step -> $n docs"))
-          recs += StageRec(step, docs, (System.nanoTime() - tStage) / 1e9, resumed)
-        }
-        // incremental: survivors APPEND under a per-batch dir of the
-        // state (overwrite of the batch's own dir = replay-idempotent;
-        // reading state/survivors unions every committed batch via
-        // partition discovery). Full run: the single survivors dir.
-        val tSurv = System.nanoTime()
-        val survivorsOut =
-          if (incremental) s"${stateDir.get}/survivors/batch=${batchId.get}"
-          else s"$base/survivors"
-        cur.select("doc_id", "lang", "text")
-          .write.mode("overwrite").parquet(survivorsOut)
-        val rowsOut = cur.count()
-        recs += StageRec("survivors", Some(rowsOut), (System.nanoTime() - tSurv) / 1e9)
-        // compactevery=N (incremental only, 0 = off): the DAG's own
-        // maintenance pass — every batch whose batch % N == 0 compacts
-        // the stores the pipeline has been appending to (the SigIndex's
-        // per-batch signature appends, the index step's CDC adds),
-        // bounding live-file growth the way the streaming sinks'
-        // compactEvery hook does. Keyed on the REPLAY KEY, not a
-        // since-last counter, so a replayed batch makes the same
-        // decision it made the first time (and compaction is
-        // contents-neutral either way — the store specs pin read
-        // parity across compact). Vacuum stays with the standalone
-        // *-vacuum commands: reclaiming superseded generations is an
-        // age-based retention decision, not per-batch hygiene.
-        if (compactEvery > 0 && batchId.get % compactEvery == 0) {
-          val tM = System.nanoTime()
-          val maxF = maintMaxFiles
-          val parts = scala.collection.mutable.ArrayBuffer[String]()
-          val sigDir = s"${stateDir.get}/sig"
-          if (pExists(sigDir))
-            parts += s"sig=${new graft.streaming.SigIndex(spark, sigDir, idCol = "doc_id").compact(maxF)}"
-          val tiDir = s"${stateDir.get}/text_index"
-          if (pExists(s"$tiDir/stats.txt"))
-            parts += s"text=${textIndex(tiDir).compact(maxF)}"
-          val viDir = s"${stateDir.get}/index"
-          if (dagPqIndex(viDir).isBuilt)
-            parts += s"vec=${dagPqIndex(viDir).compact(maxF)}"
-          System.err.println("[graft] corpus-pipeline maintain -> compacted " +
-            s"buckets ${parts.mkString(" ")} (compactevery=$compactEvery)")
-          recs += StageRec("maintain", None, (System.nanoTime() - tM) / 1e9)
-        }
-        // incremental runs also record their replay key: a scheduler
-        // auditing state/.../batch=* dirs can tie each run record to
-        // its batch without parsing stderr
-        val batchField =
-          if (incremental) s""""batch":${batchId.get},""" else ""
-        // walls at ms resolution, rates at 1e-6 (Double.toString —
-        // locale-safe, valid JSON including any exponent form)
-        def r3(x: Double): Double = math.rint(x * 1000) / 1000
-        val ratesField =
-          if (rates.isEmpty) ""
-          else rates.map { case (k, v) => s""""$k":${math.rint(v * 1e6) / 1e6}""" }
-            .mkString(""""rates":{""", ",", "},")
-        val driftField =
-          if (driftWarnings.isEmpty) ""
-          else driftWarnings.map(m => "\"" + m.replace("\"", "'") + "\"")
-            .mkString(""""drift_warnings":[""", ",", "],")
-        val emergentField =
-          scrubEmergent.map(n => s""""scrub_emergent_spans":$n,""").getOrElse("")
-        val scratchField = scratchStats.map { case (p, f) =>
-          s""""scratch_predicted_bytes":$p,"scratch_free_bytes":$f,""" }.getOrElse("")
-        val stagesJson = recs.map { r =>
-          s"""{"stage":"${r.stage}"""" +
-            r.docs.map(d => s""","docs":$d""").getOrElse("") +
-            s""","sec":${r3(r.sec)}""" +
-            (if (r.resumed) ""","resumed":true""" else "") + "}"
-        }.mkString("[", ",", "]")
-        val statsJson =
-          s"""{$batchField"mix_budget_tokens":${
-            mixBudget.map(_.toString).getOrElse("null")},""" +
-            ratesField + driftField + emergentField + scratchField +
-            s""""stages":$stagesJson}"""
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(base, "stats.json"), statsJson + "\n")
-        // incremental: the SAME record also lands under out/runs/
-        // batch=<id>.json — stats.json only ever holds the LATEST run,
-        // so without this the drift trajectory (the whole point of the
-        // rates) vanishes one batch later. One file per batch,
-        // overwritten on replay: the journal records batches, not
-        // executions, keeping the replay-idempotency contract.
-        if (incremental) {
-          val runsDir = java.nio.file.Paths.get(base, "runs")
-          java.nio.file.Files.createDirectories(runsDir)
-          java.nio.file.Files.writeString(
-            runsDir.resolve(s"batch=${batchId.get}.json"), statsJson + "\n")
-          // retention: keep the journalkeep NEWEST batch ids (by id,
-          // not mtime — a replayed old batch must not evict a newer
-          // record). Foreign files that don't parse as batch=<n>.json
-          // are left alone.
-          if (journalKeep > 0) {
-            import scala.jdk.CollectionConverters._
-            val listing = java.nio.file.Files.list(runsDir)
-            val names = try listing.iterator().asScala.toSeq
-              finally listing.close()
-            val evict = names
-              .flatMap { p =>
-                val n = p.getFileName.toString
-                if (n.startsWith("batch=") && n.endsWith(".json"))
-                  scala.util.Try(
-                    n.stripPrefix("batch=").stripSuffix(".json").toLong)
-                    .toOption.map(_ -> p)
-                else None
-              }.sortBy(-_._1).drop(journalKeep)
-            evict.foreach { case (_, p) => java.nio.file.Files.deleteIfExists(p) }
-            if (evict.nonEmpty)
-              System.err.println(s"[graft] corpus-pipeline journal: pruned " +
-                s"${evict.size} record(s) (journalkeep=$journalKeep)")
-          }
-        }
-        if (cur ne raw) cur.unpersist()
-        raw.unpersist()
-        done(rowsIn, rowsOut)
-        } finally {
-          leaseTimer.foreach(_.close())
-          stateLease.foreach(releaseStateLease(spark, _))
-        }
-      // the journal reader: out/runs/batch=*.json (one record per
-      // incremental batch) rendered as the per-batch trajectory table
-      // an operator reads before trusting a nightly pipeline — walls,
-      // frozen-stage rates vs the seed, drift warnings. spark.read.json
-      // keeps this free of any JSON library and tolerant of record
-      // evolution (a seed written before a field existed reads null);
-      // the collect is bounded by construction — one row per batch.
-      case "runs-report" =>
-        val runsDir = s"${req("out")}/runs"
-        val rp = new org.apache.hadoop.fs.Path(runsDir)
-        val rfs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(rfs.exists(rp),
-          s"no run journal at $runsDir — only incremental corpus-pipeline " +
-            "runs write one (full runs rebuild out/ wholesale; see stats.json)")
-        // bounded read: the report collects one row per journal file,
-        // so an unbounded journal (no journalkeep= retention) must not
-        // turn the reader into a driver OOM years later — refuse with
-        // the retention knob named rather than half-render
-        val nJournal = rfs.listStatus(rp).length
-        require(nJournal <= 100000,
-          s"runs-report: $nJournal journal files under $runsDir — prune with " +
-            "corpus-pipeline journalkeep=N (retention) before reporting")
-        val df = spark.read.json(runsDir)
-        def opt[T](r: org.apache.spark.sql.Row, field: String): Option[T] =
-          if (!r.schema.fieldNames.contains(field) || r.isNullAt(r.fieldIndex(field))) None
-          else Some(r.getAs[T](field))
-        // numeric reads tolerate whatever type inference picked: a
-        // foreign writer emitting "sec":2 (no decimal point anywhere
-        // in the column) infers LongType and a bare getAs[Double]
-        // would throw on the unbox
-        def num(r: org.apache.spark.sql.Row, field: String): Option[Double] =
-          opt[Any](r, field).collect { case n: java.lang.Number => n.doubleValue() }
-        // guarded, not cast: a journal whose every record carries
-        // "rates":null infers the column as StringType
-        val rateKeys = df.schema.fields.find(_.name == "rates").map(_.dataType).collect {
-          case st: org.apache.spark.sql.types.StructType => st.fieldNames.toSeq.sorted
-        }.getOrElse(Nil)
-        val recs = df.collect()
-          .sortBy(r => num(r, "batch").map(_.toLong).getOrElse(Long.MaxValue))
-        val warnings = scala.collection.mutable.ArrayBuffer[(Long, String)]()
-        // scratch column only when some record carries the pre-flight
-        // numbers (a journal of scratchcheck=off batches stays narrow)
-        val hasScratch = df.columns.contains("scratch_predicted_bytes")
-        val header = Seq(f"${"batch"}%8s", f"${"in"}%12s", f"${"out"}%12s",
-          f"${"wall_s"}%9s") ++ rateKeys.map(k => f"$k%14s") ++
-          (if (hasScratch) Seq(f"${"scr_mb/free"}%16s") else Nil) ++
-          Seq(f"${"drift"}%6s")
-        println(header.mkString(" "))
-        recs.foreach { r =>
-          val batch = num(r, "batch").map(_.toLong).getOrElse(-1L)
-          // collection.Seq, not the 2.13 immutable default: Spark
-          // hands array columns back as mutable.ArraySeq
-          val stages =
-            opt[scala.collection.Seq[org.apache.spark.sql.Row]](r, "stages").getOrElse(Nil)
-          def stageDocs(name: String): Option[Long] =
-            stages.find(s => opt[String](s, "stage").contains(name))
-              .flatMap(s => num(s, "docs").map(_.toLong))
-          val wall = stages.flatMap(s => num(s, "sec")).sum
-          val rates =
-            if (rateKeys.isEmpty) None else opt[org.apache.spark.sql.Row](r, "rates")
-          val drift = opt[scala.collection.Seq[String]](r, "drift_warnings").getOrElse(Nil)
-          drift.foreach(w => warnings += batch -> w)
-          val cells = Seq(f"$batch%8d",
-            f"${stageDocs("input").map(_.toString).getOrElse("-")}%12s",
-            f"${stageDocs("survivors").map(_.toString).getOrElse("-")}%12s",
-            f"$wall%9.1f") ++
-            rateKeys.map { k =>
-              f"${rates.flatMap(rr => num(rr, k)).fold("-")(v => f"$v%.6f")}%14s"
-            } ++
-            (if (hasScratch)
-              Seq(f"${num(r, "scratch_predicted_bytes").map(p =>
-                f"${p / 1e6}%.1f/${num(r, "scratch_free_bytes")
-                  .fold(-1.0)(_ / 1e6)}%.0f").getOrElse("-")}%16s")
-            else Nil) ++
-            Seq(f"${if (drift.isEmpty) "-" else s"DRIFT(${drift.size})"}%6s")
-          println(cells.mkString(" "))
-        }
-        warnings.foreach { case (b, w) => println(s"  [batch $b] $w") }
-        done(recs.length.toLong, warnings.length.toLong)
-      // write=true materializes the sharded corpus itself (one file
-      // per shard=N dir, rows in shard_pos order — the layout a
-      // training job streams); default emits the assignment table
-      case "corpus-shard" =>
-        val docs = spark.read.parquet(req("in"))
-        val shards = opts.getOrElse("shards", "16").toInt
-        if (opts.getOrElse("write", "false").toBoolean) {
-          graft.queries.PipelineQueries.writeShards(docs, shards, req("out"))
-          done(docs.count(), spark.read.parquet(req("out")).count())
-        } else {
-          val sharded = graft.queries.PipelineQueries.shardDocs(docs, shards)
-            .localCheckpoint()
-          sharded.write.mode("overwrite").parquet(req("out"))
-          done(docs.count(), sharded.count())
-        }
-      case "dsir-select" =>
-        val docs = spark.read.parquet(req("in"))
-        val targets = spark.read.parquet(req("targets"))
-        val sel = graft.queries.PipelineQueries.corpusDsirSelectDocs(
-          docs, targets, opts.getOrElse("frac", "0.2").toDouble).localCheckpoint()
-        sel.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), sel.count())
-      // repeated-span removal; rowsOut counts docs that LOST a span
-      // (the number a curator inspects), the output holds every doc
-      case "corpus-scrub" =>
-        val docs = spark.read.parquet(req("in")).select("doc_id", "text")
-        val scrubbed = graft.queries.PipelineQueries.scrubDocs(docs,
-          opts.getOrElse("w", graft.queries.PipelineQueries.ScrubChunkWords.toString).toInt,
-          opts.getOrElse("mindocs", graft.queries.PipelineQueries.ScrubMinDocs.toString).toInt)
-          .localCheckpoint()
-        scrubbed.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), scrubbed.filter(col("n_scrubbed") > 0).count())
-      // the EXPLICIT re-fit the incremental scrub's emergent-span
-      // report keeps pointing at, made cheap: rebuild the frozen
-      // hot-span table from the ACCUMULATED per-batch span
-      // frequencies under state/scrub/freq (summing df across
-      // doc-disjoint batches IS the union corpus's distinct-doc
-      // count), so a re-fit costs one groupBy over ~16 B/span rows —
-      // the corpus text is never re-read. Deliberately a separate
-      // operator command, never a DAG side effect: the frozen-model
-      // discipline is that models change only by operator decision.
-      // The re-fit governs FUTURE batches; history stays scrubbed
-      // under the table it was scrubbed with (the CDC contract).
-      // mindocs= here CHANGES the frozen threshold (it is the point
-      // of a refit); w= cannot change (the evidence was chunked at
-      // the frozen width) and refuses on conflict. The stale drift
-      // baseline is retired with the old model: the next incremental
-      // scrub batch re-establishes it from its own realized rate.
-      // describe() for the incremental DAG's state dir — the stores
-      // have index-stats/text-index-stats/sig-stats; this is the same
-      // k=v report for the frozen-model stages: which are fitted,
-      // their frozen knobs, accumulated evidence batch counts, drift
-      // baselines, interrupted-refit flags, lease holder. ALL metadata
-      // reads (sidecar text files + directory listings) — no Spark
-      // job, so an operator can run it against a state dir another
-      // writer currently leases. Unfitted/absent stages report
-      // fitted=false; an empty or missing state dir never crashes.
-      case "pipeline-stats" =>
-        val state = req("state")
-        val hconf0 = spark.sparkContext.hadoopConfiguration
-        def hp(s0: String) = new org.apache.hadoop.fs.Path(s0)
-        val fs0 = hp(state).getFileSystem(hconf0)
-        def ex(s0: String): Boolean = fs0.exists(hp(s0))
-        def cntBatches(d: String): Long =
-          if (!ex(d)) 0L
-          else fs0.listStatus(hp(d)).count(_.getPath.getName.startsWith("batch=")).toLong
-        def sc(stage: String, name: String): Option[Long] =
-          readLongSidecarIfExists(spark, s"$state/$stage", name)
-        val kv = scala.collection.mutable.ArrayBuffer[(String, String)]()
-        kv += "state" -> state
-        // open-then-catch, not exists-then-open: a writer releasing
-        // between the two calls must read as free, not crash the
-        // report that documents itself safe to run against a leased dir
-        kv += "lease" -> readLeaseText(fs0, hp(s"$state/$LeaseFile")).getOrElse("free")
-        // with stage-boundary heartbeats (r13) the lease file's mtime
-        // is the holder's LIVENESS signal, so its age is the first
-        // thing an operator wants next to the holder line: a small age
-        // = actively progressing, an age near leasettl = crashed or
-        // hung (the break is imminent)
-        try {
-          val st = fs0.getFileStatus(hp(s"$state/$LeaseFile"))
-          kv += "lease_age_s" ->
-            ((System.currentTimeMillis() - st.getModificationTime) / 1000).toString
-        } catch { case _: java.io.IOException => () }
-        kv += "clean_sig_index" -> ex(s"$state/sig").toString
-        val decFit = sc("decontaminate", "shinglek")
-        kv += "decontaminate_fitted" -> decFit.isDefined.toString
-        decFit.foreach(v => kv += "decontaminate_shinglek" -> v.toString)
-        sc("decontaminate", "minjmicro").foreach(v =>
-          kv += "decontaminate_minj" -> (v / 1e6).toString)
-        sc("decontaminate", "fingerprint").foreach(v =>
-          kv += "decontaminate_evals_fingerprint" -> v.toString)
-        // fitted flags key on the SAME commit markers the pipeline's
-        // own stages check (langid: profile_rows/_SUCCESS; select: the
-        // lambda parquet's _SUCCESS — the threshold sidecar is written
-        // first and must not read as fitted alone), so the report can
-        // never contradict what the next batch will do
-        kv += "langid_fitted" -> ex(s"$state/langid/profile_rows/_SUCCESS").toString
-        sc("langid", "fingerprint").foreach(v =>
-          kv += "langid_profiles_fingerprint" -> v.toString)
-        kv += "select_fitted" -> ex(s"$state/select/lambda/_SUCCESS").toString
-        sc("select", "threshold").foreach(v =>
-          kv += "select_threshold_milli" -> v.toString)
-        sc("select", "fracmicro").foreach(v => kv += "select_frac" -> (v / 1e6).toString)
-        sc("select", "seedkeepmicro").foreach(v =>
-          kv += "select_seed_keep" -> (v / 1e6).toString)
-        val scrubFit = ex(s"$state/scrub/spans/_SUCCESS")
-        kv += "scrub_fitted" -> scrubFit.toString
-        // interrupted = the state the refusal guard keys on: an aside
-        // generation WITHOUT a live one. A completed swap that crashed
-        // only in its post-commit aside cleanup is healthy, not
-        // interrupted — flagging it would tell the operator to re-run
-        // a refit the model doesn't need
-        if (!scrubFit && ex(s"$state/scrub/spans.old.tmp/_SUCCESS"))
-          kv += "scrub_interrupted_refit" -> "true"
-        sc("scrub", "chunkwords").foreach(v => kv += "scrub_w" -> v.toString)
-        sc("scrub", "mindocs").foreach(v => kv += "scrub_mindocs" -> v.toString)
-        sc("scrub", "seedhitmicro").foreach(v =>
-          kv += "scrub_seed_hit" -> (v / 1e6).toString)
-        kv += "scrub_freq_batches" -> cntBatches(s"$state/scrub/freq").toString
-        kv += "scrub_emergent_evidence" -> ex(s"$state/scrub/emergent").toString
-        val thrDir = s"$state/mix/thresholds"
-        val mixFit = ex(s"$thrDir/$KnobsFile")
-        kv += "mix_fitted" -> mixFit.toString
-        if (mixFit) {
-          val mk = readKnobsFile(spark, thrDir)
-          kv += "mix_budget" -> mk("budget").toString
-          kv += "mix_alpha" -> (mk("alphamicro") / 1e6).toString
-          kv += "mix_tokens" -> (if (mk("bpemode") == 1L) "bpe" else "pre")
-        }
-        if (!mixFit && ex(s"$thrDir.old.tmp/$KnobsFile"))
-          kv += "mix_interrupted_refit" -> "true"
-        sc("mix", "seedkeepmicro").foreach(v =>
-          kv += "mix_seed_keep" -> (v / 1e6).toString)
-        kv += "mix_supply_batches" -> cntBatches(s"$state/mix/supply").toString
-        val packFit = sc("pack", "packbudget")
-        kv += "pack_fitted" -> packFit.isDefined.toString
-        packFit.foreach(v => kv += "pack_budget" -> v.toString)
-        sc("pack", "packbuckets").foreach(v => kv += "pack_buckets" -> v.toString)
-        sc("pack", "nmerges").foreach(v => kv += "pack_bpe_nmerges" -> v.toString)
-        kv += "pack_batches" -> cntBatches(s"$state/packs").toString
-        readLongSidecarIfExists(spark, state, "shards").foreach(v =>
-          kv += "shard_count" -> v.toString)
-        kv += "shard_batches" -> cntBatches(s"$state/shards").toString
-        kv += "survivors" -> ex(s"$state/survivors").toString
-        kv += "text_index" -> ex(s"$state/text_index").toString
-        kv += "vector_index" -> ex(s"$state/index").toString
-        // takedown journal: the proof-of-removal totals without
-        // re-scanning any store (records are 1-row parquets — reading
-        // them all is metadata-scale)
-        if (ex(s"$state/takedowns")) {
-          val td = spark.read.parquet(s"$state/takedowns")
-            .agg(count(lit(1)), coalesce(sum(col("n_ids")), lit(0L)),
-              coalesce(sum(col("rows_removed")), lit(0L))).head()
-          kv += "takedown_records" -> td.getLong(0).toString
-          kv += "takedown_ids" -> td.getLong(1).toString
-          kv += "takedown_rows_removed" -> td.getLong(2).toString
-        }
-        kv.foreach { case (k0, v) => println(s"$k0=$v") }
-        done(0, kv.size.toLong)
-      case "scrub-refit" =>
-        val scrState = s"${req("state")}/scrub"
-        val spansPath = s"$scrState/spans"
-        // refits mutate the same frozen-model state the incremental
-        // batches read AND write — same exclusive-writer lease
-        val refitTtl = opts.getOrElse("leasettl", DefaultLeaseTtlMs.toString).toLong
-        val refitLease = acquireStateLease(spark, req("state"), "scrub-refit", refitTtl)
-        val refitHb = startLeaseHeartbeat(spark, refitLease, refitTtl)
-        try {
-        def pEx(p: String): Boolean = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-        }
-        // a refit that crashed between its two swap renames leaves
-        // the old generation at .old.tmp and no live spans — that
-        // still counts as "a model exists" (the fit knobs live in
-        // scrState sidecars, which survive); this re-run completes
-        // the swap from the accumulated evidence
-        val spansDataDir =
-          if (pEx(s"$spansPath/_SUCCESS")) spansPath
-          else s"$spansPath.old.tmp"
-        require(pEx(s"$spansDataDir/_SUCCESS"),
-          s"scrub-refit: no frozen scrub model under $scrState — seed one with " +
-            "corpus-pipeline incremental=true steps=...,scrub first")
-        require(pEx(s"$scrState/freq"),
-          s"scrub-refit: no accumulated span frequencies under $scrState/freq " +
-            "(written by every incremental scrub batch) — nothing to re-fit from")
-        val frozenW = readLongSidecar(spark, scrState, "chunkwords")
-        opts.get("w").foreach(v => require(v.toLong == frozenW,
-          s"scrub-refit: w=$v conflicts with the frozen chunk width $frozenW — " +
-            "the accumulated evidence was chunked at that width; re-seed to change it"))
-        val md = opts.get("mindocs").map(_.toLong)
-          .getOrElse(readLongSidecar(spark, scrState, "mindocs"))
-        val oldN = spark.read.parquet(spansDataDir).count()
-        val hot = graft.queries.PipelineQueries.hotSpansFromFreq(
-          spark.read.parquet(s"$scrState/freq")
-            .groupBy("h").agg(sum("df").as("df")), md.toInt)
-        // NOT the seed's sidecar-first discipline: a refit REPLACES a
-        // live committed model, so the hazard is inverted — a
-        // mode(overwrite) straight onto spansPath deletes the old
-        // spans before the new data commits, and a crash mid-write
-        // leaves no spans/_SUCCESS: the next incremental scrub batch
-        // would see fitted=false and silently RE-SEED the "frozen"
-        // model from its single delta (with opts-default w/mindocs,
-        // not the retired model's), after which the old-width freq
-        // dirs would be summed against new-width hashes. Stage the new
-        // table to a temp dir and commit by rename-ASIDE (the
-        // mix-refit discipline): the old generation parks at .old.tmp
-        // while the staged table goes live, so no crash point leaves
-        // fitted=false WITHOUT a surviving generation — and the
-        // incremental scrub stage refuses on an orphaned aside instead
-        // of re-seeding. The drift baseline and emergent evidence are
-        // retired only AFTER the swap.
-        val hconf = spark.sparkContext.hadoopConfiguration
-        def rm(p: String): Unit = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hconf).delete(hp, true)
-        }
-        val tmpSpans = s"$spansPath.refit.tmp"
-        rm(tmpSpans)
-        locally {
-          import spark.implicits._
-          hot.toSeq.toDF("h").coalesce(1).write.mode("overwrite").parquet(tmpSpans)
-        }
-        locally {
-          val fs = new org.apache.hadoop.fs.Path(spansPath)
-            .getFileSystem(hconf)
-          val aside = new org.apache.hadoop.fs.Path(s"$spansPath.old.tmp")
-          val live = new org.apache.hadoop.fs.Path(spansPath)
-          if (fs.exists(live)) {
-            fs.delete(aside, true)
-            require(fs.rename(live, aside),
-              s"scrub-refit: rename-aside $spansPath failed")
-          }
-          // recovery case (live absent, aside = the only surviving
-          // generation): commit the staged table FIRST, only then
-          // drop the aside — delete-first would re-open the no-model
-          // crash window
-          require(fs.rename(new org.apache.hadoop.fs.Path(tmpSpans), live),
-            s"scrub-refit: rename $tmpSpans -> $spansPath failed")
-          fs.delete(aside, true)
-        }
-        writeLongSidecar(spark, scrState, "mindocs", md)
-        // the stale drift baseline retires with the old model; the
-        // emergent evidence is now incorporated — a stale report
-        // would read as still-unscrubbed templates
-        rm(s"$scrState/seedhitmicro.txt")
-        rm(s"$scrState/emergent")
-        System.err.println(s"[graft] scrub-refit: ${oldN} -> ${hot.length} spans " +
-          s"(mindocs=$md) from the accumulated batch frequencies")
-        done(oldN, hot.length.toLong)
-        } finally { refitHb.close(); releaseStateLease(spark, refitLease) }
-      // the mix model's explicit re-calibration, scrub-refit's shape:
-      // rebuild the frozen per-language thresholds from the
-      // ACCUMULATED per-batch supply evidence under state/mix/supply
-      // (summing token mass across doc-disjoint batches IS the union
-      // corpus's supply), so a re-fit costs one groupBy over
-      // ~24 B/(lang·batch) rows — no corpus text re-read. budget= and
-      // alpha= may change (they are threshold knobs — changing them
-      // is the point of a refit); the token DENOMINATION cannot (the
-      // evidence was counted in it) and refuses like scrub's w=. The
-      // refit governs FUTURE batches; history stays mixed under the
-      // thresholds it was mixed with (the CDC contract).
-      case "mix-refit" =>
-        val mixState = s"${req("state")}/mix"
-        val thrPath = s"$mixState/thresholds"
-        val refitTtl = opts.getOrElse("leasettl", DefaultLeaseTtlMs.toString).toLong
-        val refitLease = acquireStateLease(spark, req("state"), "mix-refit", refitTtl)
-        val refitHb = startLeaseHeartbeat(spark, refitLease, refitTtl)
-        try {
-        def pEx(p: String): Boolean = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-        }
-        // an interrupted previous refit (crash between the two swap
-        // renames) leaves the old generation at .old.tmp — recover
-        // its knobs from there; this re-run completes the swap
-        val knobsDir =
-          if (pEx(s"$thrPath/$KnobsFile")) thrPath
-          else s"$thrPath.old.tmp"
-        require(pEx(s"$knobsDir/$KnobsFile"),
-          s"mix-refit: no frozen mix model under $mixState — seed one with " +
-            "corpus-pipeline incremental=true steps=...,mix budget=... first")
-        require(pEx(s"$mixState/supply"),
-          s"mix-refit: no accumulated supply under $mixState/supply " +
-            "(written by every incremental mix batch) — nothing to re-fit from")
-        val oldKnobs = readKnobsFile(spark, knobsDir)
-        opts.get("tokens").foreach { v =>
-          require((if (v == "bpe") 1L else 0L) == oldKnobs("bpemode"),
-            s"mix-refit: tokens=$v conflicts with the frozen denomination — " +
-              "the accumulated supply was counted in it; re-seed to change it")
-        }
-        val budget = opts.get("budget").map(_.toLong).getOrElse(oldKnobs("budget"))
-        val alpha = opts.get("alpha").map(_.toDouble)
-          .getOrElse(oldKnobs("alphamicro") / 1e6)
-        // isNotNull: evidence written before r12's caller-side filter
-        // may carry a null-lang row — it has no share (kept-whole
-        // contract) and would NPE mixKeepPoints' String sort
-        val supply = spark.read.parquet(s"$mixState/supply")
-          .filter(col("lang").isNotNull)
-          .groupBy("lang").agg(sum("lang_tokens").as("lang_tokens"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-        val oldN = spark.read.parquet(knobsDir).count()
-        val thr = graft.queries.PipelineQueries.mixKeepPoints(supply, budget, alpha)
-        // commit by rename (the scrub-refit discipline): a mid-refit
-        // crash must never leave fitted=false. The knobs file rides
-        // INSIDE the staged dir, so the rename commits thresholds AND
-        // knobs in one metadata op — no window where new thresholds
-        // are live under the old budget/alpha (r11 review finding).
-        val hconf2 = spark.sparkContext.hadoopConfiguration
-        def rm2(p: String): Unit = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(hconf2).delete(hp, true)
-        }
-        val tmpThr = s"$thrPath.refit.tmp"
-        rm2(tmpThr)
-        locally {
-          import spark.implicits._
-          thr.toDF("lang", "keep_points").coalesce(1)
-            .write.mode("overwrite").parquet(tmpThr)
-        }
-        writeKnobsFile(spark, tmpThr, Seq(
-          "budget" -> budget,
-          "alphamicro" -> math.round(alpha * 1e6),
-          "bpemode" -> oldKnobs("bpemode")))
-        // the stale drift baseline retires BEFORE the swap: a crash
-        // in the swap window leaves the OLD model baseline-less (the
-        // next batch re-establishes it — advisory only), never the
-        // NEW model judged against the retired baseline
-        rm2(s"$mixState/seedkeepmicro.txt")
-        // swap by rename-ASIDE, not delete-then-rename: a crash
-        // between the two renames leaves thrPath absent but the old
-        // generation intact at .old.tmp — which the incremental mix
-        // detects and REFUSES on (never a silent re-seed), and a
-        // re-run mix-refit recovers from (it reads knobs from the
-        // aside dir and re-stages from the accumulated supply)
-        locally {
-          val fs = new org.apache.hadoop.fs.Path(thrPath).getFileSystem(hconf2)
-          val aside = new org.apache.hadoop.fs.Path(s"$thrPath.old.tmp")
-          val live = new org.apache.hadoop.fs.Path(thrPath)
-          if (fs.exists(live)) {
-            // normal swap: any aside present is a COMPLETED earlier
-            // generation's leftover — safe to clear before reusing
-            // the slot
-            fs.delete(aside, true)
-            require(fs.rename(live, aside),
-              s"mix-refit: rename-aside $thrPath failed")
-          }
-          // in the recovery case (live absent, aside = the ONLY
-          // surviving calibration) the staged generation must go
-          // live BEFORE the aside is touched: deleting first would
-          // re-open the exact no-model crash window this rename
-          // discipline exists to close
-          require(fs.rename(new org.apache.hadoop.fs.Path(tmpThr), live),
-            s"mix-refit: rename $tmpThr -> $thrPath failed")
-          fs.delete(aside, true)
-        }
-        System.err.println(s"[graft] mix-refit: $oldN -> ${thr.size} language " +
-          s"thresholds (budget=$budget alpha=$alpha) from the accumulated " +
-          "batch supplies")
-        done(oldN, thr.size.toLong)
-        } finally { refitHb.close(); releaseStateLease(spark, refitLease) }
-      // model-based quality filter: weights=<parquet with (bucket,
-      // weight_milli)> is the trained-model input; absent ⇒ the
-      // deterministic stand-in table (the gate configuration)
-      case "quality-score" =>
-        val docs = spark.read.parquet(req("in")).select("doc_id", "text")
-        val lam = opts.get("weights") match {
-          case Some(p) => readQualityWeights(spark, p)
-          case None => graft.queries.TextQueries.qualityModelWeights
-        }
-        val scored = graft.queries.TextQueries.qualityModelScore(docs, lam)
-          .localCheckpoint()
-        scored.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), scored.filter(col("keep")).count())
-      // trigram language ID: profiles=<(lang, text) parquet> derives
-      // the profile table from a real corpus slice (new languages ride
-      // along free); absent ⇒ the built-in passages. Input lang column
-      // is optional — it is echoed for evaluation, not consumed.
-      case "langid" =>
-        val in = spark.read.parquet(req("in"))
-        val docs = (if (in.columns.contains("lang")) in
-          else in.withColumn("lang", lit(null).cast("string")))
-          .select("doc_id", "lang", "text")
-        val profiles = opts.get("profiles") match {
-          case Some(p) => graft.queries.TextQueries.deriveLangProfiles(
-            spark.read.parquet(p).select("lang", "text"))
-          case None => graft.functions.LangProfiles.builtin
-        }
-        val out = graft.queries.TextQueries.langIdNgram(docs, profiles)
-          .localCheckpoint()
-        out.write.mode("overwrite").parquet(req("out"))
-        done(docs.count(), out.count())
-      // train the quality filter: NB log-count-ratio weights from a
-      // labeled (good=curated, bad=rejected) pair of (doc_id, text)
-      // corpora, written as the full 4096-row (bucket, weight_milli)
-      // table quality-score weights= ingests
-      case "quality-train" =>
-        val good = spark.read.parquet(req("good")).select("doc_id", "text")
-        val bad = spark.read.parquet(req("bad")).select("doc_id", "text")
-        val lam = graft.queries.TextQueries.qualityModelFit(good, bad)
-        graft.queries.TextQueries.qualityWeightsTable(spark, lam)
-          .coalesce(1).write.mode("overwrite").parquet(req("out"))
-        done(good.count() + bad.count(), lam.length.toLong)
-      case other => sys.error(s"unknown pipeline command: $other")
-    }
-  }
-
-  /** Frozen-model long-valued sidecars (`<dir>/<name>.txt` — the
-    * select threshold/frac, the scrub chunk width/mindocs). Publish
-    * is a genuinely atomic replace (FileContext rename with
-    * OVERWRITE — delete-then-rename would leave a no-file window),
-    * and the fit paths write EVERY sidecar BEFORE committing the
-    * data artifact whose _SUCCESS marks the model fitted: a crash
-    * mid-fit leaves `fitted` false and the next seed run re-fits —
-    * self-healing, never a stuck half-model. */
-  private def writeLongSidecar(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, name: String, value: Long): Unit =
-    writeTextFileAtomic(spark, s"$dir/$name.txt", s"$value\n")
-
-  /** Exclusive-writer lease on an incremental state dir. The frozen-
-    * model publishes under state/ are crash-safe but not RACE-safe:
-    * two cron-overlapping batches (or a batch racing a refit) can
-    * interleave seed fits, refit swaps, and supply evidence — each
-    * step individually atomic, the composition silently corrupt. The
-    * lease is an atomic create-exclusive file (`FileSystem.create
-    * (overwrite = false)` — exclusive on HDFS and local FS alike);
-    * the second writer REFUSES loudly, naming the holder, its age,
-    * and both remedies. A crashed holder leaves the file behind:
-    * after `ttlMs` (leasettl=, default 24 h; 0 = never auto-break) a
-    * new writer breaks the stale lease and proceeds — and below the
-    * TTL the refusal names the exact file for a manual override.
-    * Readers are unaffected (snapshot isolation is the stores' job);
-    * this guards WRITER-writer interleaving only. */
-  private val LeaseFile = ".lease.txt"
-  private val DefaultLeaseTtlMs: Long = 24L * 3600 * 1000
-  /** The acquire returns (path, nonce); release deletes ONLY if the
-    * file still carries this holder's nonce — an over-TTL holder whose
-    * lease was legitimately broken by a newer writer must not, in its
-    * finally block, delete THAT writer's lease and re-open the door. */
-  private[graft] def acquireStateLease(spark: org.apache.spark.sql.SparkSession,
-                                       state: String, command: String,
-                                       ttlMs: Long): (org.apache.hadoop.fs.Path, String) = {
-    val p = new org.apache.hadoop.fs.Path(s"$state/$LeaseFile")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nonce = java.util.UUID.randomUUID().toString
-    val content = s"holder=$command pid=${ProcessHandle.current().pid()} " +
-      s"acquired_ms=${System.currentTimeMillis()} nonce=$nonce\n"
-    def tryCreate(): Boolean =
-      try {
-        // parent must exist for create(); mkdirs is idempotent
-        fs.mkdirs(p.getParent)
-        if ("file" == fs.getUri.getScheme) {
-          // Hadoop's local FS implements create(overwrite=false) as a
-          // non-atomic exists-then-create; java.io.File.createNewFile
-          // is O_CREAT|O_EXCL — the atomic primitive two same-machine
-          // writers actually race on
-          val f = new java.io.File(p.toUri.getPath)
-          if (!f.createNewFile()) false
-          else {
-            val os = new java.io.FileOutputStream(f)
-            try os.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally os.close()
-            true
-          }
-        } else {
-          val out = fs.create(p, false)
-          try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          true
-        }
-      } catch { case _: java.io.IOException => false }
-    if (!tryCreate()) {
-      val (holder, ageMs) =
-        try {
-          val st = fs.getFileStatus(p)
-          (readLeaseText(fs, p).getOrElse("<holder vanished>"),
-            System.currentTimeMillis() - st.getModificationTime)
-        } catch { case _: java.io.IOException => ("<holder vanished>", 0L) }
-      if (ttlMs > 0 && ageMs > ttlMs) {
-        // break-by-RENAME, not delete: rename(src, dst) fails when src
-        // is already gone, so of two writers that both observed the
-        // stale lease, exactly ONE wins the break — the loser's rename
-        // fails and it refuses, instead of deleting the winner's
-        // freshly created lease (the check-then-act hole a bare
-        // delete leaves open)
-        val tomb = new org.apache.hadoop.fs.Path(s"$state/.lease.broken.$nonce")
-        if (fs.rename(p, tomb)) {
-          System.err.println(s"[graft] $command: state lease at $p was STALE " +
-            s"(${ageMs / 1000} s old > leasettl ${ttlMs / 1000} s; $holder) — " +
-            "broke it (the holder crashed without releasing)")
-          fs.delete(tomb, false)
-          require(tryCreate(),
-            s"$command: lost the race re-acquiring the state lease at $p — " +
-              "another writer took it; retry")
-        } else
-          throw new IllegalArgumentException(
-            s"$command: the stale state lease at $p was broken by another " +
-              "writer first — it now holds the dir; retry later")
-      } else
-        throw new IllegalArgumentException(
-          s"$command: the dir $state is LEASED by another writer " +
-            s"($holder, ${ageMs / 1000} s old) — two concurrent writers would " +
-            "interleave frozen-model fits or stage outputs. Wait for it to " +
-            s"finish, or if it crashed: delete $p (or pass leasettl=<ms> " +
-            "below its age)")
-    }
-    (p, nonce)
-  }
-  /** One lease-file reader for the three consumers (acquire's holder
-    * line, release's ownership check, pipeline-stats' report) — None
-    * when the file is gone; other IO errors propagate to the caller's
-    * policy. */
-  private def readLeaseText(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
-  private[graft] def releaseStateLease(spark: org.apache.spark.sql.SparkSession,
-                                       lease: (org.apache.hadoop.fs.Path, String)): Unit = {
-    val (p, nonce) = lease
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Ownership check IN PLACE first, rename-aside only when the
-    // nonce matches: an unconditional rename-aside briefly removes a
-    // SUCCESSOR's lease (rename → check → rename back), and a third
-    // writer acquiring in that window makes the restore rename fail —
-    // successor and third writer would both believe they hold the
-    // dir. Reading first confines the aside dance to leases we
-    // believe are OURS; the post-rename re-verify + restore covers
-    // only the now-tiny read→rename window (a successor breaking our
-    // genuinely-stale lease in that instant), where the restore's
-    // failure mode is benign: the third writer in that scenario broke
-    // a lease that was ALREADY over-TTL, which the release warns
-    // about either way.
-    try {
-      readLeaseText(fs, p) match {
-        case None => () // already gone — nothing to release
-        case Some(text) if !text.contains(s"nonce=$nonce") =>
-          // a successor broke our stale lease and holds the dir:
-          // theirs, untouched — never taken aside, no removal window
-          System.err.println(s"[graft] state lease at $p is no longer ours " +
-            "(a newer writer broke a stale lease) — left in place; this run " +
-            "overstayed its leasettl and may have interleaved with that writer")
-        case Some(_) =>
-          val aside = new org.apache.hadoop.fs.Path(s"${p}.release.$nonce")
-          if (fs.rename(p, aside)) {
-            if (readLeaseText(fs, aside).exists(_.contains(s"nonce=$nonce")))
-              fs.delete(aside, false) // ours — released
-            else {
-              // the read→rename window: a successor replaced the file
-              // between our check and the rename; give theirs back
-              // (if they re-created meanwhile, leave their new one
-              // and just drop the aside copy)
-              if (!fs.rename(aside, p)) fs.delete(aside, false)
-              System.err.println(s"[graft] state lease at $p was no longer ours " +
-                "(a newer writer broke a stale lease) — restored; this run " +
-                "overstayed its leasettl and may have interleaved with that writer")
-            }
-          } // else: vanished between read and rename — nothing to release
-      }
-    } catch {
-      case e: java.io.IOException =>
-        // a transient release failure must be LOUD: the lease left
-        // behind blocks every later batch until the TTL
-        System.err.println(s"[graft] WARNING: releasing the state lease at $p " +
-          s"failed (${e.getMessage}) — later batches will refuse until it is " +
-          "removed or leasettl expires")
-    }
-  }
-
-  /** Lease HEARTBEAT — refresh the lease file's mtime so the TTL
-    * measures INACTIVITY, not total runtime: without this, an active
-    * holder whose batch legitimately outlives `leasettl=` gets its
-    * lease broken mid-run (the break targets crashed holders; a
-    * heartbeating one is demonstrably alive). Called at every stage
-    * boundary of the pipeline loop — stage walls bound the gap
-    * between touches, so a holder is only breakable after a full
-    * `ttl` with NO stage progress, which is the crashed/hung case the
-    * break exists for. Ownership is checked first (same nonce
-    * discipline as release): if a successor already broke us — a
-    * legacy no-heartbeat overstay, or a genuine hang that outlived
-    * the TTL between stages — we must not touch THEIR file; warn
-    * loudly instead, because the interleave hazard is now live.
-    * Best-effort: an IO failure warns and the run continues (a missed
-    * touch only matters if the run then stalls a whole TTL). */
-  private[graft] def heartbeatStateLease(spark: org.apache.spark.sql.SparkSession,
-                                         lease: (org.apache.hadoop.fs.Path, String)): Unit = {
-    val (p, nonce) = lease
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      readLeaseText(fs, p) match {
-        case Some(text) if text.contains(s"nonce=$nonce") =>
-          fs.setTimes(p, System.currentTimeMillis(), -1)
-          // read-nonce-then-setTimes window (r13 ADVICE): a successor
-          // breaking our stale lease between the read and the touch
-          // gets ITS fresh file's mtime refreshed — benign in
-          // direction (only delays a later break) but it is a touch
-          // of another writer's file; mirror the release path's
-          // re-verify and warn so the interleave hazard is named
-          if (!readLeaseText(fs, p).exists(_.contains(s"nonce=$nonce")))
-            System.err.println(s"[graft] WARNING: state lease at $p changed " +
-              "hands during the heartbeat touch — a newer writer broke it " +
-              "mid-run (the touch refreshed THEIR lease's mtime); this run " +
-              "may now be interleaving with that writer")
-        case Some(_) =>
-          System.err.println(s"[graft] WARNING: state lease at $p is no longer " +
-            "ours (a newer writer broke it mid-run) — this run may now be " +
-            "interleaving with that writer; finish or abort deliberately")
-        case None =>
-          System.err.println(s"[graft] WARNING: state lease at $p vanished " +
-            "mid-run — another writer may enter the state dir; finish or " +
-            "abort deliberately")
-      }
-    } catch {
-      case e: java.io.IOException =>
-        System.err.println(s"[graft] WARNING: heartbeating the state lease at " +
-          s"$p failed (${e.getMessage}) — the lease ages toward leasettl")
-    }
-  }
-
-  /** Intra-stage heartbeat TIMER (r13 VERDICT #7): the stage-boundary
-    * touches bound the breakable gap by STAGE wall — but the sf1000
-    * seed's clean stage alone ran 1315 s, so a `leasettl=` tighter
-    * than one stage could still break an ACTIVE holder mid-stage. A
-    * daemon timer touches the lease every ttl/4 (clamped to
-    * [1 s, 60 s]) independent of Spark progress, so the breakable gap
-    * is bounded by wall-clock, not stage structure — a holder is only
-    * breakable after a full TTL with the whole PROCESS silent (dead
-    * or wedged past even the timer), which is exactly the crashed
-    * case the break exists for. Each touch goes through
-    * [[heartbeatStateLease]] — the ownership-nonce + re-verify
-    * discipline applies to timer touches too. ttl <= 0 (never
-    * auto-break) needs no heartbeat: returns a no-op handle. Close
-    * the handle in the same finally that releases the lease. */
-  private[graft] def startLeaseHeartbeat(spark: org.apache.spark.sql.SparkSession,
-                                         lease: (org.apache.hadoop.fs.Path, String),
-                                         ttlMs: Long): AutoCloseable =
-    if (ttlMs <= 0) new AutoCloseable { def close(): Unit = () }
-    else {
-      val period = math.max(1000L, math.min(ttlMs / 4, 60000L))
-      val exec = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-lease-heartbeat")
-          t.setDaemon(true)
-          t
-        })
-      // swallow EVERYTHING inside the tick: scheduleAtFixedRate
-      // silently cancels all future runs if a task throws, and a
-      // dead timer is a silent regression to boundary-only touches —
-      // the heartbeat already warns on its own failure modes
-      exec.scheduleAtFixedRate(
-        () => try heartbeatStateLease(spark, lease)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[graft] WARNING: lease heartbeat tick " +
-              s"failed (${e.getMessage}) — the timer stays alive")
-        },
-        period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
-      new AutoCloseable { def close(): Unit = { exec.shutdownNow(); () } }
-    }
-
-  /** The clean stage's measured scratch constant: MinHash state
-    * (numPerm=128 longs/signature, localCheckpoint'd for the band
-    * exchange and the verify join) materializes ≈ 2× the batch's TEXT
-    * bytes of shuffle scratch on the executors' local disks — the
-    * PLANS r12 arithmetic that predicted both observed sf1000 ENOSPC
-    * deaths (45M- and 27M-doc batches on a 52 GB filesystem). */
-  private[graft] val CleanScratchFactor = 2L
-  /** Spec injection point for the free-space probe — production reads
-    * the configured Spark local dirs' usable space. */
-  private[graft] var scratchFreeBytesOverride: Option[Long] = None
-  private def scratchFreeBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    scratchFreeBytesOverride.getOrElse {
-      // where shuffle spill actually lands; summing distinct dirs
-      // over-counts when they share a filesystem — acceptable for a
-      // pre-flight bound (the refusal triggers on the CERTAIN-death
-      // case; a shared-FS overcount only softens it toward the warn)
-      val dirs = spark.conf.getOption("spark.local.dir")
-        .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
-      dirs.split(",").map(_.trim).filter(_.nonEmpty).distinct
-        .map { d =>
-          // getUsableSpace returns 0 for a configured-but-not-yet-
-          // created dir (Spark creates local dirs lazily), and 0 free
-          // would make the refuse spuriously block every healthy
-          // batch (r13 ADVICE) — walk up to the nearest EXISTING
-          // ancestor: the filesystem the dir will land on is the
-          // ancestor's, so its usable space is the true budget
-          var f = new java.io.File(d).getAbsoluteFile
-          while (f != null && !f.exists()) f = f.getParentFile
-          if (f == null) 0L else f.getUsableSpace
-        }.sum
-    }
-  /** Pre-flight disk check for the clean stage — refuse (or warn)
-    * BEFORE the batch dies hours into its shuffle: predicted scratch
-    * is [[CleanScratchFactor]] × the batch's text bytes (one columnar
-    * length pass over a frame the callers have already cached or must
-    * read anyway — trivial next to the MinHash passes it protects).
-    * `mode`: `refuse` throws when predicted > free, `warn` prints,
-    * `off` skips (including the length pass). The default is refuse
-    * in LOCAL mode — where driver-local free space IS the scratch
-    * budget and the r12 probe measured two certain-death batches —
-    * and warn on a cluster, where scratch is distributed across
-    * executor disks the driver cannot see (the check then bounds the
-    * single-worst case, not the real budget). */
-  /** Returns (predicted, free) bytes when the check ran (mode != off)
-    * — the numbers the run journal records so an operator sizes the
-    * NEXT batch from `runs-report` instead of re-running the probe
-    * (r13 VERDICT #8); None when skipped. */
-  private[graft] def cleanScratchPreflight(spark: org.apache.spark.sql.SparkSession,
-                                           docs: org.apache.spark.sql.DataFrame,
-                                           mode: String, label: String): Option[(Long, Long)] = {
-    require(Set("refuse", "warn", "off").contains(mode),
-      s"scratchcheck=$mode — known modes: refuse, warn, off")
-    if (mode == "off") None
-    else {
-      val textBytes = docs.agg(coalesce(sum(octet_length(col("text"))), lit(0L)))
-        .head().getLong(0)
-      val predicted = CleanScratchFactor * textBytes
-      val free = scratchFreeBytes(spark)
-      if (predicted > free) {
-        val msg = s"$label: the clean stage needs ≈ $predicted bytes of shuffle " +
-          s"scratch (${CleanScratchFactor}x the batch's $textBytes text bytes — " +
-          "the measured MinHash state constant, PLANS r12) but the local dirs " +
-          s"have $free free. The batch would die on ENOSPC mid-shuffle — split " +
-          "it into smaller batches (the remedy), free disk, or pass " +
-          "scratchcheck=warn/off if scratch is distributed across executors"
-        if (mode == "refuse") throw new IllegalArgumentException(msg)
-        else System.err.println(s"[graft] WARNING $msg")
-      }
-      Some((predicted, free))
-    }
-  }
-
-  /** Frozen-model fit knobs stored INSIDE the data artifact's
-    * directory (underscore-prefixed, so parquet discovery ignores it)
-    * rather than as per-knob sidecars NEXT to it: a refit that
-    * replaces the artifact by rename then commits thresholds AND
-    * knobs in the ONE atomic metadata op — no window where new
-    * thresholds are live under old knobs (the crash class the r11
-    * review found in mix-refit). The file is also the fitted-model
-    * completion marker: it is written LAST at seed (after the parquet
-    * commits), so a crashed seed is simply not fitted and re-seeds. */
-  private val KnobsFile = "_knobs.txt"
-  private def writeKnobsFile(spark: org.apache.spark.sql.SparkSession,
-                             artifactDir: String, kvs: Seq[(String, Long)]): Unit =
-    writeTextFileAtomic(spark, s"$artifactDir/$KnobsFile",
-      kvs.map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n"))
-  private def readKnobsFile(spark: org.apache.spark.sql.SparkSession,
-                            artifactDir: String): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$artifactDir/$KnobsFile")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"frozen model incomplete: $p missing — " +
-      s"delete $artifactDir and re-run the seed fit")
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    text.linesIterator.filter(_.contains("=")).map { l =>
-      val Array(k, v) = l.split("=", 2); k -> v.trim.toLong
-    }.toMap
-  }
-
-  /** [[readLongSidecar]] that tolerates absence — for sidecars ADDED
-    * to the frozen-model set after states already existed in the wild
-    * (the drift-baseline rates): an old state tree simply has no
-    * baseline, so the drift check is skipped rather than refused. */
-  private def readLongSidecarIfExists(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String, name: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.txt")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(readLongSidecar(spark, dir, name)) else None
-  }
-
-  /** Atomic small-text publish — the ONE implementation of the
-    * sidecar rename discipline ([[writeLongSidecar]] delegates here;
-    * the resume plan record uses it directly). */
-  private def writeTextFileAtomic(spark: org.apache.spark.sql.SparkSession,
-                                  pathStr: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"${p.getParent}/.tmp-${p.getName}-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def readTextFile(spark: org.apache.spark.sql.SparkSession,
-                           pathStr: String): String = {
-    val p = new org.apache.hadoop.fs.Path(pathStr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  private def readLongSidecar(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, name: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.txt")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // sidecars are written before the data artifact commits, so this
-    // can only fire on manual tampering — name the actual remedy
-    require(fs.exists(p), s"frozen model incomplete: $p missing — " +
-      s"delete $dir and re-run the seed fit")
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    text.trim.toLong
-  }
-
-  /** Weights ingestion with loud validation: a model file is OPERATOR
-    * INPUT, and a malformed one must fail with the problem named, not
-    * an ArrayIndexOutOfBounds/NPE three stages later — and a duplicate
-    * bucket must never silently last-write-win (two rows for one
-    * bucket means the file is not the table the trainer wrote).
-    * Buckets ABSENT from the file default to weight 0 (no evidence ⇒
-    * no score contribution — the NB-natural neutral); the in-repo
-    * trainer always writes full coverage, so the zero-fill only fires
-    * on hand-built partial tables, and the count is logged. */
-  private[graft] def readQualityWeights(
-      spark: org.apache.spark.sql.SparkSession, path: String): Array[Long] = {
-    val b = graft.queries.PipelineQueries.DsirBuckets
-    val w = new Array[Long](b)
-    val seen = new java.util.BitSet(b)
-    spark.read.parquet(path).select(col("bucket").cast("int"),
-        col("weight_milli").cast("long"))
-      .collect().foreach { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1),
-          s"weights $path: null bucket/weight_milli row")
-        val k = r.getInt(0)
-        require(k >= 0 && k < b,
-          s"weights $path: bucket $k outside [0, $b)")
-        require(!seen.get(k), s"weights $path: duplicate bucket $k")
-        seen.set(k); w(k) = r.getLong(1)
-      }
-    if (seen.cardinality() < b)
-      System.err.println(
-        s"[graft] weights $path: ${b - seen.cardinality()} of $b buckets absent, defaulting to 0")
-    w
+    val a = Args(spark, args)
+    Commands.getOrElse(a.command, sys.error(s"unknown pipeline command: ${a.command}"))(a)
   }
 
   private def pipelineJson(p: PipelineStats): String =

@@ -1,5 +1,6 @@
 package graft
 
+import graft.pipeline.StateDir
 import graft.sources.DataQuality
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -999,6 +1000,23 @@ class MainSpec extends SparkSpec {
     assert(e.getMessage.contains("unknown pipeline command"))
   }
 
+  test("entry points the benchmark build calls keep their names and signatures") {
+    // perfbench compiles graft's sources and calls these by name: a
+    // signature break must fail this compile, not only that build
+    val run: (org.apache.spark.sql.SparkSession, GraftConfig, Seq[String]) => Main.RunStats =
+      Main.run
+    val runPipeline: (org.apache.spark.sql.SparkSession, Seq[String]) => Main.PipelineStats =
+      Main.runPipeline
+    val stats = Main.RunStats("full", 2L, 3L, Map(1 -> 2L), Seq((9, "bad")),
+      Seq("t"), 0L, 1.5)
+    assert(stats.missingAfterWrite == 0L && stats.perTagHits == Map(1 -> 2L))
+    assert(run ne null)
+    val listed = Console.withOut(new java.io.ByteArrayOutputStream()) {
+      runPipeline(spark, Seq("query", "name=list"))
+    }
+    assert(listed.command == "query" && listed.rowsOut == SparkEntry.queries.size.toLong)
+  }
+
   test("corpus-pipeline: the one-shot curation DAG drops each planted defect at its stage") {
     val s = spark
     import s.implicits._
@@ -1358,7 +1376,7 @@ class MainSpec extends SparkSpec {
     assert(java.nio.file.Files.readString(thrPath) == thr0,
       "a later batch must never re-fit the frozen model")
     // the decision IS the frozen per-doc score: verify directly
-    val lam = Main.readQualityWeights(spark, s"$base/state/select/lambda")
+    val lam = StateDir.readQualityWeights(spark, s"$base/state/select/lambda")
     val direct = graft.queries.PipelineQueries.dsirScoreDocs(
         deltaDocs.toDF("doc_id", "lang", "text").select("doc_id", "text"), lam)
       .filter(col("weight_milli") >= thr0.trim.toLong)
@@ -1647,17 +1665,17 @@ class MainSpec extends SparkSpec {
     // ownership at release: an overstaying holder whose stale lease a
     // successor broke and replaced must NOT delete the successor's
     // lease in its finally — release verifies the nonce and restores
-    val mine = Main.acquireStateLease(spark, s"$base/state", "test-holder", 1000L)
+    val mine = StateDir.acquireStateLease(spark, s"$base/state", "test-holder", 1000L)
     java.nio.file.Files.writeString(leasePath,
       "holder=successor pid=1 acquired_ms=0 nonce=theirs\n")
-    Main.releaseStateLease(spark, mine)
+    StateDir.releaseStateLease(spark, mine)
     assert(Files.exists(leasePath) &&
       Files.readString(leasePath).contains("nonce=theirs"),
       "release must leave (restore) a successor's lease untouched")
     java.nio.file.Files.delete(leasePath)
     // and releasing one's own lease removes it
-    val own = Main.acquireStateLease(spark, s"$base/state", "test-holder", 1000L)
-    Main.releaseStateLease(spark, own)
+    val own = StateDir.acquireStateLease(spark, s"$base/state", "test-holder", 1000L)
+    StateDir.releaseStateLease(spark, own)
     assert(!Files.exists(leasePath))
   }
 
@@ -1666,31 +1684,31 @@ class MainSpec extends SparkSpec {
     val leasePath = java.nio.file.Paths.get(s"$base/state/.lease.txt")
     def ageLease(ms: Long): Unit = java.nio.file.Files.setLastModifiedTime(leasePath,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - ms))
-    val holder = Main.acquireStateLease(spark, s"$base/state", "hb-holder", 60000L)
+    val holder = StateDir.acquireStateLease(spark, s"$base/state", "hb-holder", 60000L)
     // the holder runs long: its lease ages past any reasonable TTL,
     // but a stage-boundary heartbeat refreshes the mtime — a second
     // writer with ttl=30s must REFUSE (the holder is demonstrably
     // alive), where the r12 design broke it mid-run
     ageLease(3600L * 1000)
-    Main.heartbeatStateLease(spark, holder)
+    StateDir.heartbeatStateLease(spark, holder)
     val e = intercept[IllegalArgumentException](
-      Main.acquireStateLease(spark, s"$base/state", "second", 30000L))
+      StateDir.acquireStateLease(spark, s"$base/state", "second", 30000L))
     assert(e.getMessage.contains("LEASED"), e.getMessage)
     // a holder that STOPS heartbeating (crashed/hung) is still broken
     // after a full TTL of silence — the break path heartbeats protect
     // active holders, not dead ones
     ageLease(3600L * 1000)
-    val second = Main.acquireStateLease(spark, s"$base/state", "second", 30000L)
+    val second = StateDir.acquireStateLease(spark, s"$base/state", "second", 30000L)
     assert(Files.readString(leasePath).contains(s"nonce=${second._2}"),
       "the silent holder's lease must be broken and replaced")
     // the broken original heartbeats into the successor's lease: it
     // must NOT touch their file (ownership nonce), only warn
     val mtime = java.nio.file.Files.getLastModifiedTime(leasePath)
-    Main.heartbeatStateLease(spark, holder)
+    StateDir.heartbeatStateLease(spark, holder)
     assert(Files.readString(leasePath).contains(s"nonce=${second._2}") &&
       java.nio.file.Files.getLastModifiedTime(leasePath) == mtime,
       "a broken holder's heartbeat must leave the successor's lease untouched")
-    Main.releaseStateLease(spark, second)
+    StateDir.releaseStateLease(spark, second)
     assert(!Files.exists(leasePath))
   }
 
@@ -1701,12 +1719,12 @@ class MainSpec extends SparkSpec {
     // design's breakable window (heartbeats fired only between
     // stages; the sf1000 clean stage alone ran 1315 s); the timer
     // (period ttl/4, floored to 1 s) must keep the holder alive
-    val holder = Main.acquireStateLease(spark, s"$base/state", "hbt-holder", 2000L)
-    val timer = Main.startLeaseHeartbeat(spark, holder, 2000L)
+    val holder = StateDir.acquireStateLease(spark, s"$base/state", "hbt-holder", 2000L)
+    val timer = StateDir.startLeaseHeartbeat(spark, holder, 2000L)
     try {
       Thread.sleep(5000L)
       val e = intercept[IllegalArgumentException](
-        Main.acquireStateLease(spark, s"$base/state", "second", 2000L))
+        StateDir.acquireStateLease(spark, s"$base/state", "second", 2000L))
       assert(e.getMessage.contains("LEASED"),
         s"a timer-heartbeating holder mid-stage must not be broken: ${e.getMessage}")
     } finally timer.close()
@@ -1714,11 +1732,11 @@ class MainSpec extends SparkSpec {
     // still breaks the lease — the timer protects active holders only
     java.nio.file.Files.setLastModifiedTime(leasePath,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 10000L))
-    val second = Main.acquireStateLease(spark, s"$base/state", "second", 2000L)
+    val second = StateDir.acquireStateLease(spark, s"$base/state", "second", 2000L)
     assert(Files.readString(leasePath).contains(s"nonce=${second._2}"))
-    Main.releaseStateLease(spark, second)
+    StateDir.releaseStateLease(spark, second)
     // ttl=0 (never auto-break) needs no timer: the no-op handle closes
-    Main.startLeaseHeartbeat(spark, second, 0L).close()
+    StateDir.startLeaseHeartbeat(spark, second, 0L).close()
   }
 
   test("full-run output lease: a second full run into the same out= refuses naming the holder; completed runs leave none") {
@@ -1771,7 +1789,7 @@ class MainSpec extends SparkSpec {
     // injected free-space probe: 10 bytes free vs KBs of predicted
     // scratch — the batch would die on ENOSPC mid-shuffle; it must
     // refuse UP FRONT, naming the batch-size remedy and the knob
-    Main.scratchFreeBytesOverride = Some(10L)
+    StateDir.scratchFreeBytesOverride = Some(10L)
     try {
       val e = intercept[IllegalArgumentException](runClean())
       assert(e.getMessage.contains("ENOSPC") && e.getMessage.contains("batches") &&
@@ -1784,7 +1802,7 @@ class MainSpec extends SparkSpec {
       // scratchcheck=warn downgrades to a loud warning and proceeds
       val r = runClean("scratchcheck=warn")
       assert(r.rowsOut > 0, s"warn mode must still run the batch: $r")
-    } finally Main.scratchFreeBytesOverride = None
+    } finally StateDir.scratchFreeBytesOverride = None
     // a roomy filesystem (the real probe) passes the default refuse mode
     val r2 = Main.runPipeline(spark, Seq("corpus-clean",
       s"in=$base/in.parquet", s"index=$base/sig2", s"out=$base/clean2", "batch=1"))
@@ -2947,25 +2965,25 @@ class MainSpec extends SparkSpec {
     Seq((5000, 1L)).toDF("bucket", "weight_milli")
       .write.parquet(s"$base/oob.parquet")
     val oob = intercept[IllegalArgumentException] {
-      Main.readQualityWeights(spark, s"$base/oob.parquet")
+      StateDir.readQualityWeights(spark, s"$base/oob.parquet")
     }
     assert(oob.getMessage.contains("outside"), oob.getMessage)
     Seq((7, 1L), (7, 2L)).toDF("bucket", "weight_milli")
       .write.parquet(s"$base/dup.parquet")
     val dup = intercept[IllegalArgumentException] {
-      Main.readQualityWeights(spark, s"$base/dup.parquet")
+      StateDir.readQualityWeights(spark, s"$base/dup.parquet")
     }
     assert(dup.getMessage.contains("duplicate"), dup.getMessage)
     Seq((Some(3), Some(1L)), (None, Some(2L)))
       .toDF("bucket", "weight_milli").write.parquet(s"$base/nul.parquet")
     val nul = intercept[IllegalArgumentException] {
-      Main.readQualityWeights(spark, s"$base/nul.parquet")
+      StateDir.readQualityWeights(spark, s"$base/nul.parquet")
     }
     assert(nul.getMessage.contains("null"), nul.getMessage)
     // partial coverage is legal: absent buckets zero-fill (documented)
     Seq((3, 42L)).toDF("bucket", "weight_milli")
       .write.parquet(s"$base/part.parquet")
-    val w = Main.readQualityWeights(spark, s"$base/part.parquet")
+    val w = StateDir.readQualityWeights(spark, s"$base/part.parquet")
     assert(w(3) == 42L && w.sum == 42L)
   }
 
