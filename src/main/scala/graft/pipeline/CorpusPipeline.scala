@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
-import java.nio.file.{Files, Paths}
-
 /** The curation DAG ([[Stages]]) and the commands that read or refit
   * its state:
   * {{{
@@ -239,7 +237,12 @@ private[graft] object CorpusPipeline {
       // so an unbounded journal (no journalkeep= retention) must not
       // turn the reader into a driver OOM years later — refuse with
       // the retention knob named rather than half-render
-      val nJournal = rfs.listStatus(rp).length
+      // (files Spark's reader skips — hidden, like the file system's
+      // .crc checksums, or underscored — are not records)
+      val nJournal = rfs.listStatus(rp).count { st =>
+        val n = st.getPath.getName
+        !n.startsWith(".") && !n.startsWith("_")
+      }
       require(nJournal <= 100000,
         s"runs-report: $nJournal journal files under $runsDir — prune with " +
           "corpus-pipeline journalkeep=N (retention) before reporting")
@@ -651,35 +654,33 @@ private[graft] object CorpusPipeline {
         run.mixBudget.map(_.toString).getOrElse("null")},""" +
         ratesField + driftField + emergentField + scratchField +
         s""""stages":$stagesJson}"""
-    Files.createDirectories(Paths.get(run.base))
-    Files.writeString(Paths.get(run.base, "stats.json"), statsJson + "\n")
+    // through Hadoop's FileSystem like every other output under out=,
+    // so an HDFS or object-store out= holds its own run record
+    writeTextFileAtomic(run.spark, s"${run.base}/stats.json", statsJson + "\n")
     // incremental: the SAME record also lands under out/runs/
     // batch=<id>.json — stats.json only holds the LATEST run, and the
     // drift trajectory needs every batch. A replay overwrites its own
     // record: the journal records batches, not executions.
     if (run.incremental) {
-      val runsDir = Paths.get(run.base, "runs")
-      Files.createDirectories(runsDir)
-      Files.writeString(runsDir.resolve(s"batch=${run.batch}.json"), statsJson + "\n")
+      val runsDir = s"${run.base}/runs"
+      writeTextFileAtomic(run.spark, s"$runsDir/batch=${run.batch}.json", statsJson + "\n")
       // retention: keep the journalkeep NEWEST batch ids (by id,
       // not mtime — a replayed old batch must not evict a newer
       // record). Foreign files that don't parse as batch=<n>.json
       // are left alone.
       if (journalKeep > 0) {
-        import scala.jdk.CollectionConverters._
-        val listing = Files.list(runsDir)
-        val names = try listing.iterator().asScala.toSeq
-          finally listing.close()
-        val evict = names
-          .flatMap { p =>
-            val n = p.getFileName.toString
+        val rp = new Path(runsDir)
+        val fs = rp.getFileSystem(run.spark.sparkContext.hadoopConfiguration)
+        val evict = fs.listStatus(rp).toSeq
+          .flatMap { st =>
+            val n = st.getPath.getName
             if (n.startsWith("batch=") && n.endsWith(".json"))
               scala.util.Try(
                 n.stripPrefix("batch=").stripSuffix(".json").toLong)
-                .toOption.map(_ -> p)
+                .toOption.map(_ -> st.getPath)
             else None
           }.sortBy(-_._1).drop(journalKeep)
-        evict.foreach { case (_, p) => Files.deleteIfExists(p) }
+        evict.foreach { case (_, p) => fs.delete(p, false) }
         if (evict.nonEmpty)
           System.err.println(s"[graft] corpus-pipeline journal: pruned " +
             s"${evict.size} record(s) (journalkeep=$journalKeep)")

@@ -78,11 +78,28 @@ import SnapshotStore._
   * [[delete]] and [[compact]] also read through masks and replace
   * every file of the buckets they rewrite.
   *
+  * BUCKET COUNT. Every open file costs a scan task and every written
+  * file a task-side write, whatever its size, so the count follows
+  * bytes: a write that lays out the store (its first write, or an
+  * [[overwrite]]) without an explicit count takes
+  * [[SnapshotStore.suggestBuckets]] of the frame's optimized-plan size
+  * estimate (no job) against the session's
+  * `spark.sql.files.maxPartitionBytes` — one bucket file is then at
+  * most one scan task (a one-row-group file cannot split), so sizing
+  * never serialises a read. The count a store recorded is its layout
+  * from then on; a store recorded without one, or a frame Spark cannot
+  * size, takes [[SnapshotStore.LegacyBuckets]].
+  *
   * On a lakehouse table format the same calls map to `MERGE INTO` —
   * the API is the contract, not the file layout.
+  *
+  * @param buckets the bucket count a layout-writing write uses; 0 (the
+  *                default) sizes it from the written frame's bytes.
+  *                Upserts, deletes, compactions and reads always hash
+  *                with the count the store recorded.
   */
 final class SnapshotStore(spark: SparkSession, path: String, key: String = "user_id",
-                          buckets: Int = 32, partitionCol: Option[String] = None) {
+                          buckets: Int = 0, partitionCol: Option[String] = None) {
 
   private val BucketCol = "snap_bucket"
   private val PartDir = "snap_part"
@@ -113,8 +130,29 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def withBucket(df: DataFrame, bucketCount: Int = buckets): DataFrame =
+  private def withBucket(df: DataFrame, bucketCount: Int): DataFrame =
     df.withColumn(BucketCol, pmod(hash(col(key)), lit(bucketCount)))
+
+  /** The bucket count a layout-writing write of `df` uses: the explicit
+    * constructor count, else `df`'s optimized-plan size estimate against
+    * the scan split size — or [[LegacyBuckets]] when Spark cannot size
+    * the frame (an RDD-backed relation estimates as
+    * `spark.sql.defaultSizeInBytes`). */
+  private def layoutBuckets(df: DataFrame): Int =
+    if (buckets > 0) buckets
+    else {
+      val conf = spark.sessionState.conf
+      val estimate = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (estimate >= BigInt(conf.defaultSizeInBytes)) LegacyBuckets
+      else suggestBuckets(estimate.toLong, 1, conf.filesMaxPartitionBytes)
+    }
+
+  /** The count `m` was written with — an upsert MUST hash with it (see
+    * [[latestRaw]]). A manifest recorded without one predates the header
+    * and was written with the constructor's count, [[LegacyBuckets]]
+    * unless one was given. */
+  private def recordedBuckets(m: Manifest): Int =
+    m.recordedBuckets.getOrElse(if (buckets > 0) buckets else LegacyBuckets)
 
   /** Duplicate the partition column into the internal layout column:
     * `partitionBy` strips its columns from the data files, so the
@@ -700,8 +738,8 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   def exists: Boolean = latestManifest().isDefined
 
   /** Bucket count the last commit recorded — the layout truth every
-    * reader resolves against (the constructor's `buckets` is only the
-    * fallback for a store with no manifest yet). */
+    * reader resolves against (the constructor's `buckets` only lays out
+    * a store with no manifest yet, or an [[overwrite]]). */
   def bucketCount: Option[Int] = latestRaw().flatMap(_.recordedBuckets)
 
   /** Data files the newest manifest references — the number every
@@ -779,10 +817,17 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private[graft] def filesForKeys(probe: DataFrame): Seq[String] =
     latestRaw().map(filesForKeys(probe, _)).getOrElse(Nil)
 
+  /** The files of the buckets `probe`'s keys hash into. In a one-bucket
+    * store every key hashes to bucket 0, so its files are the answer
+    * without the distinct-bucket job — an empty probe then yields them
+    * too, where a multi-bucket store yields none; either way the probe
+    * matches no row. */
   private def filesForKeys(probe: DataFrame, m: Manifest): Seq[String] = {
-    val bc = m.recordedBuckets.getOrElse(buckets)
-    val touched = withBucket(probe.select(key).distinct(), bc)
-      .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+    val bc = recordedBuckets(m)
+    val touched =
+      if (bc == 1) Set(0)
+      else withBucket(probe.select(key).distinct(), bc)
+        .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
     touched.toSeq.sorted.flatMap(m.mapping.getOrElse(_, Nil))
   }
 
@@ -822,16 +867,18 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     }
 
   /** Full overwrite: new data files + new manifest listing only them
-    * (the whole layout is replaced, so the constructor's bucket count
-    * and partition column take effect). */
+    * (the whole layout is replaced, so the constructor's partition
+    * column takes effect, and its bucket count — or, with none, the
+    * count sized from `df`'s bytes). */
   def overwrite(df: DataFrame): Unit = {
-    val files = writeData(withPart(withBucket(df), partitionCol), partitionCol)
+    val bc = layoutBuckets(df)
+    val files = writeData(withPart(withBucket(df, bc), partitionCol), partitionCol)
     // data files are version-independent (immutable, unique dir); only
     // the version number races, so a conflict retries the commit alone
     withConflictRetry {
       val v = latestRaw().map(_.version).getOrElse(0L)
       onBeforeCommit()
-      commit(v + 1, buckets, files, partitionCol)
+      commit(v + 1, bc, files, partitionCol)
     }
   }
 
@@ -878,7 +925,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       // unpartitioned snapshot may predate the column entirely);
       // migrating the layout is an explicit overwrite()/compact-cycle,
       // never a silent per-upsert drift.
-      val bc = m.recordedBuckets.getOrElse(buckets)
+      val bc = recordedBuckets(m)
       val pcol = m.recordedPcol
       val incoming = withPart(withBucket(df, bc), pcol)
       // The blooms clear most buckets of a fresh-keyed delta without
@@ -976,7 +1023,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private def deleteOnce(keys: DataFrame): Long = latestRaw() match {
     case None => 0L
     case Some(m) =>
-      val bc = m.recordedBuckets.getOrElse(buckets)
+      val bc = recordedBuckets(m)
       val pcol = m.recordedPcol
       val doomed = keys.select(key).distinct()
       val p = probe(withBucket(doomed, bc), m.mapping)
@@ -1036,7 +1083,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private def compactOnce(maxFilesPerBucket: Int, maxBuckets: Int): Int = latestRaw() match {
     case None => 0
     case Some(m) =>
-      val bc = m.recordedBuckets.getOrElse(buckets)
+      val bc = recordedBuckets(m)
       val pcol = m.recordedPcol
       val masked = maskedBuckets(m)
       // with a partition column the layout floor is one file per
@@ -1150,6 +1197,11 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 object SnapshotStore {
   private val BloomFpp = 0.001
 
+  /** The fixed bucket count every store had before counts were sized by
+    * bytes: the count of a manifest recorded without `#buckets=`, and of
+    * a frame Spark cannot size. */
+  val LegacyBuckets = 32
+
   /** One committed version: its recorded layout, bucket → live files,
     * and the generations among them whose masks hide older rows. */
   private final case class Manifest(version: Long, recordedBuckets: Option[Int],
@@ -1187,17 +1239,18 @@ object SnapshotStore {
     def masks(file: String): Boolean = masking(file.takeWhile(_ != '/'))
   }
 
-  /** Bucket-count guideline for a PARTITIONED store: the layout floor
-    * is one file per (bucket, partition), so the only reason to raise
-    * buckets above 1 is per-partition data outgrowing the target file
-    * size — buckets ≈ bytes / (partitions × 64 MiB). The floor really
-    * is 1: any fixed bucket floor multiplies the partition count into
-    * a small-file explosion exactly when partitions are corpus-sized
-    * (the legacy 32 default is for UNPARTITIONED key stores, where 32
-    * buckets = 32 files total). Fewer buckets mean coarser key-probe
-    * pruning and copy-on-write — acceptable because bytes per bucket
-    * is bounded by construction (it only shrinks as the corpus grows
-    * buckets). Cap 4096 bounds driver-side manifest/bloom
+  /** Bucket-count guideline: the layout floor is one file per
+    * (bucket, partition), so the only reason to raise buckets above 1
+    * is per-partition data outgrowing the target file size — buckets ≈
+    * bytes / (partitions × target). The floor really is 1: any fixed
+    * bucket floor multiplies the partition count into a small-file
+    * explosion exactly when partitions are corpus-sized, and in an
+    * unpartitioned store it writes that many files however small the
+    * data. Fewer buckets mean coarser key-probe pruning and
+    * copy-on-write — acceptable because bytes per bucket is bounded by
+    * construction (it only shrinks as the corpus grows buckets).
+    * Unpartitioned stores pass `partitions = 1` and the scan split
+    * size as the target. Cap 4096 bounds driver-side manifest/bloom
     * bookkeeping. */
   def suggestBuckets(totalBytes: Long, partitions: Int,
                      targetFileBytes: Long = 64L << 20): Int = {

@@ -80,6 +80,39 @@ class MainSpec extends SparkSpec {
     assert(incr.usersTagged == 0)
   }
 
+  test("full, incremental and tag-subset runs leave the same tags on a fresh (one-bucket) snapshot as on a 32-bucket one") {
+    val s = spark
+    import s.implicits._
+    def runs(preBuckets: Option[Int]): (Map[Long, List[Int]], Option[Int]) = {
+      val (base, env) = freshEnv()
+      val cfg = GraftConfig.fromEnv(env)
+      // an empty overwrite records the layout before any user is written
+      preBuckets.foreach(b => new graft.sources.SnapshotStore(spark, cfg.snapshotPath, buckets = b)
+        .overwrite(Seq.empty[(Long, Seq[Int])].toDF("user_id", "tag_ids")))
+      Main.run(spark, cfg, Seq("full"))
+      // new users arrive for the incremental run; then user 5 gains assets,
+      // which the tag-1 subset run merges into its existing tags
+      Seq((5L, 10L, "ok"), (6L, 2000L, "no"), (7L, 3L, "pending"))
+        .toDF("uid", "assets", "kyc").write.mode("append").parquet(s"$base/app_users.parquet")
+      Main.run(spark, cfg, Seq("incremental"))
+      spark.read.parquet(s"$base/app_users.parquet")
+        .withColumn("assets", when(col("uid") === 5L, lit(9000L)).otherwise(col("assets")))
+        .write.parquet(s"$base/app_users2.parquet")
+      spark.read.parquet(s"$base/rules.parquet")
+        .withColumn("source_table", lit("app_users2"))
+        .write.parquet(s"$base/rules2.parquet")
+      Main.run(spark, GraftConfig.fromEnv(env + ("GRAFT_RULES" -> s"$base/rules2.parquet") +
+        ("GRAFT_USER_COLS" -> "app_users2=uid")), Seq("full", "tags=1"))
+      (snapshot(cfg), new graft.sources.SnapshotStore(spark, cfg.snapshotPath).bucketCount)
+    }
+    val (fresh, freshBuckets) = runs(None)
+    val (legacy, legacyBuckets) = runs(Some(32))
+    assert(freshBuckets.contains(1) && legacyBuckets.contains(32))
+    assert(fresh == Map(1L -> List(1, 2), 2L -> List(2), 3L -> List(1), 4L -> List(2),
+      5L -> List(1, 2), 6L -> List(1)), s"fresh: $fresh")
+    assert(fresh == legacy)
+  }
+
   test("quality gate skips a table that fails its null-rate threshold") {
     val s = spark
     import s.implicits._
@@ -1968,6 +2001,33 @@ class MainSpec extends SparkSpec {
     assert(eFull.getMessage.contains("incremental"), eFull.getMessage)
   }
 
+  test("corpus-pipeline run record goes through the Hadoop file system: a file:// out= is reported and pruned") {
+    val s = spark
+    import s.implicits._
+    val base = Files.createTempDirectory("graft_main_jfs").toString
+    def write(name: String, ids: Seq[Long]): String = {
+      val p = s"$base/$name.parquet"
+      ids.map(i => (i, "en", s"alpha beta gamma delta body $i"))
+        .toDF("doc_id", "lang", "text").write.mode("overwrite").parquet(p)
+      p
+    }
+    // a Hadoop URI: java.nio would read it as a relative "file:" directory
+    val out = s"file://$base/out"
+    def run(batch: Long): Unit =
+      Main.runPipeline(spark, Seq("corpus-pipeline",
+        s"in=${write(s"b$batch", batch * 10 until batch * 10 + 3)}",
+        s"out=$out", "steps=clean", "incremental=true",
+        s"state=$base/state", s"batch=$batch", "journalkeep=1"))
+    run(1L)
+    assert(new java.io.File(s"$base/out/stats.json").isFile, "stats.json under out=")
+    assert(Main.runPipeline(spark, Seq("runs-report", s"out=$out")).rowsIn == 1L)
+    run(2L)
+    val records = new java.io.File(s"$base/out/runs").listFiles()
+      .map(_.getName).filter(_.startsWith("batch=")).sorted.toSeq
+    assert(records == Seq("batch=2.json"), s"journalkeep=1 prunes through the URI: $records")
+    assert(Main.runPipeline(spark, Seq("runs-report", s"out=$out")).rowsIn == 1L)
+  }
+
   test("corpus-pipeline incremental select: a delta whose keep rate drifts from the seed calibration warns; healthy deltas stay quiet") {
     val s = spark
     import s.implicits._
@@ -2783,7 +2843,8 @@ class MainSpec extends SparkSpec {
     assert(runRec(2L).contains(""""batch":2,"""), runRec(2L))
     assert(stats() == runRec(2L), "stats.json is the latest batch's record")
     run(s"$base/state", "b.parquet", 2L, maint)
-    assert(new java.io.File(s"$outDir/runs").list().sorted.toSeq ==
+    // (the local Hadoop file system keeps a hidden .crc beside each record)
+    assert(new java.io.File(s"$outDir/runs").list().filterNot(_.startsWith(".")).sorted.toSeq ==
       Seq("batch=1.json", "batch=2.json"), "replay overwrites, never appends")
     assert(hits(s"$base/state") == hits(s"$base/state2"), "replay + re-compact is idempotent")
 

@@ -285,6 +285,150 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(reopened.read().get.count() == 50)
   }
 
+  /** `body` with `spark.sql.files.maxPartitionBytes` set to `bytes`,
+    * the session's value restored after. */
+  private def withSplitBytes[T](bytes: Long)(body: => T): T = {
+    val k = "spark.sql.files.maxPartitionBytes"
+    val was = spark.conf.getOption(k)
+    spark.conf.set(k, bytes.toString)
+    try body finally was.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  test("byte-sized buckets: an unpinned store's first write of a small frame records one bucket; an explicit count is honoured") {
+    val s = spark
+    import s.implicits._
+    val base = Files.createTempDirectory("graft_snap_sized").toString
+    val rows = (1L to 200L).map(i => (i, s"v$i")).toDF("user_id", "v")
+    val sized = new SnapshotStore(spark, s"$base/sized")
+    sized.upsert(rows)
+    assert(sized.bucketCount.contains(1))
+    assert(sized.liveFiles.forall(_.contains("/snap_bucket=0/")), s"${sized.liveFiles}")
+    val pinned = new SnapshotStore(spark, s"$base/pinned", buckets = 8)
+    pinned.upsert(rows)
+    assert(pinned.bucketCount.contains(8))
+    // an explicit overwrite re-lays the store out by its own bytes
+    val relaid = new SnapshotStore(spark, s"$base/pinned")
+    relaid.overwrite(rows)
+    assert(relaid.bucketCount.contains(1))
+    assert(relaid.read().get.count() == 200)
+  }
+
+  test("byte-sized buckets: an unpinned store over a recorded 32 keeps hashing with 32") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_kept").toString + "/snap"
+    new SnapshotStore(spark, dir, buckets = 32)
+      .overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    val reopened = new SnapshotStore(spark, dir)
+    // a small delta (one bucket's worth of bytes) must not re-bucket
+    reopened.upsert(Seq((7L, "a"), (8L, "b"), (1000L, "new")).toDF("user_id", "v"))
+    assert(reopened.bucketCount.contains(32))
+    val all = reopened.read().get
+    assert(all.count() == 101 && all.select("user_id").distinct().count() == 101,
+      "no key duplicated across buckets")
+    val probe = Seq(7L, 8L, 1000L, 50L).toDF("user_id")
+    assert(reopened.readForKeys(probe).get.join(probe, Seq("user_id"), "left_semi")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(7L -> "a", 8L -> "b", 1000L -> "new", 50L -> "v50"))
+    assert(reopened.keysFor(probe).join(probe, Seq("user_id"), "left_semi").count() == 4)
+    // the probed files are the keys' buckets only, hashed mod 32
+    val wanted = probe.select(pmod(hash(col("user_id")), lit(32))).distinct()
+      .collect().map(_.getInt(0)).toSet
+    assert(reopened.filesForKeys(probe).map(f =>
+      f.split('/').find(_.startsWith("snap_bucket=")).get.stripPrefix("snap_bucket=").toInt)
+      .toSet == wanted)
+  }
+
+  test("byte-sized buckets: a manifest without #buckets= reads and upserts with 32") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_nohdr").toString + "/snap"
+    new SnapshotStore(spark, dir, buckets = 32)
+      .overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    // strip the header, as a store written before it existed
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = new Path(dir, "manifest-000000000001.txt")
+    val in = fs.open(m)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    fs.delete(m, false)
+    val out = fs.create(m)
+    try out.write(text.linesIterator.filterNot(_.startsWith("#buckets=")).mkString("\n")
+      .getBytes("UTF-8")) finally out.close()
+    val legacy = new SnapshotStore(spark, dir)
+    assert(legacy.bucketCount.isEmpty)
+    assert(legacy.read().get.count() == 100)
+    legacy.upsert(Seq((7L, "updated")).toDF("user_id", "v"))
+    assert(legacy.bucketCount.contains(SnapshotStore.LegacyBuckets))
+    val sevens = legacy.read().get.filter(col("user_id") === 7L).collect()
+    assert(sevens.map(_.getString(1)).toSeq == Seq("updated"), s"key 7 once: ${sevens.toSeq}")
+    assert(legacy.read().get.count() == 100)
+  }
+
+  test("byte-sized buckets: a frame Spark cannot size gets the legacy 32") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_rdd").toString + "/snap"
+    val frame = (1L to 50L).map(i => (i, s"v$i")).toDF("user_id", "v")
+    val unsized = spark.createDataFrame(frame.rdd, frame.schema)
+    assert(unsized.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      BigInt(spark.sessionState.conf.defaultSizeInBytes), "precondition: no estimate")
+    val store = new SnapshotStore(spark, dir)
+    store.upsert(unsized)
+    assert(store.bucketCount.contains(SnapshotStore.LegacyBuckets))
+    assert(store.read().get.count() == 50)
+  }
+
+  test("byte-sized buckets: a frame estimated at N x the split size gets N buckets, capped at 4096") {
+    val s = spark
+    import s.implicits._
+    val base = Files.createTempDirectory("graft_snap_nx").toString
+    val frame = (1L to 60L).map(i => (i, s"value-$i")).toDF("user_id", "v")
+    val estimate = frame.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val three = new SnapshotStore(spark, s"$base/three")
+    // target just over a third of the estimate: ceil(estimate / target) = 3
+    withSplitBytes(estimate / 3 + 1)(three.upsert(frame))
+    assert(three.bucketCount.contains(3), s"estimate $estimate")
+    assert(three.read().get.count() == 60)
+    // a large estimate over few rows: the count caps, the files follow rows
+    val wide = spark.range(0, 1000000).filter(col("id") < 10).withColumnRenamed("id", "user_id")
+    assert(wide.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(4096L * 64),
+      "precondition: estimate past the cap")
+    val capped = new SnapshotStore(spark, s"$base/capped")
+    withSplitBytes(64)(capped.upsert(wide))
+    assert(capped.bucketCount.contains(4096))
+    assert(capped.read().get.count() == 10 && capped.liveFileCount <= 10)
+  }
+
+  test("a one-bucket store answers keyed reads without a bucket job, as a multi-bucket store does") {
+    val s = spark
+    import s.implicits._
+    val base = Files.createTempDirectory("graft_snap_one").toString
+    val rows = (1L to 80L).map(i => (i, s"v$i", i % 3)).toDF("user_id", "v", "p")
+    val one = new SnapshotStore(spark, s"$base/one", buckets = 1, partitionCol = Some("p"))
+    val four = new SnapshotStore(spark, s"$base/four", buckets = 4, partitionCol = Some("p"))
+    Seq(one, four).foreach(_.overwrite(rows))
+    def matched(df: Option[DataFrame], probe: DataFrame): Seq[String] =
+      df.map(_.join(probe, Seq("user_id"), "left_semi").select("user_id", "v")
+        .collect().map(_.toString).sorted.toSeq).getOrElse(Nil)
+    def answers(st: SnapshotStore, probe: DataFrame) = (
+      st.keysFor(probe).join(probe, Seq("user_id"), "left_semi").collect().map(_.getLong(0)).sorted.toSeq,
+      probe.join(st.keysFor(probe), Seq("user_id"), "left_anti").collect().map(_.getLong(0)).sorted.toSeq,
+      matched(st.readForKeys(probe), probe),
+      matched(st.readForKeysAndPartitions(probe, Seq(1L, 2L)), probe),
+      st.validateWrite(probe))
+    val probes = Seq(
+      "empty" -> Seq.empty[Long].toDF("user_id"),
+      "non-empty" -> Seq(3L, 4L, 40L, 500L).toDF("user_id"))
+    probes.foreach { case (what, probe) =>
+      assert(answers(one, probe) == answers(four, probe), s"$what probe")
+    }
+    assert(answers(one, probes(1)._2)._5 == 1L, "key 500 is missing")
+    val (files, jobs, _) = recorded(one.filesForKeys(probes(1)._2))
+    assert(files.toSet == one.liveFiles.toSet && jobs.isEmpty, s"jobs: $jobs")
+    val (_, jobs4, _) = recorded(four.filesForKeys(probes(1)._2))
+    assert(jobs4.nonEmpty, "a multi-bucket store still runs its bucket job")
+  }
+
   test("partitioned layout: readPartitions opens only the requested values' files") {
     val s = spark
     import s.implicits._
