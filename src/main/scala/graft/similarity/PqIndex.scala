@@ -111,14 +111,15 @@ class PqIndex(spark: SparkSession, dir: String,
   // of codes, nProbe 8-32 of 4k-64k cells) that is the difference
   // between a full-table scan per micro-batch and <1% of it.
   //
-  // The constructor-level store uses the explicit bucket count if
-  // given, else the legacy default — but only as a FALLBACK for a
-  // store with no manifest yet: every post-build read/upsert resolves
-  // the real layout from recordedBuckets.
+  // The constructor-level store passes the explicit bucket count
+  // through (0 = the store sizes it by bytes); it only lays out a store
+  // with no manifest, which never happens here — [[build]] lays out
+  // its own stores, and every later read/upsert resolves the recorded
+  // layout.
   private def storeWith(bucketCount: Int) =
     new graft.sources.SnapshotStore(spark, s"$dir/codes", key = "neighbor_id",
       buckets = bucketCount, partitionCol = Some("cell"))
-  private val store = storeWith(if (buckets > 0) buckets else 32)
+  private val store = storeWith(buckets)
   // the optional SQ8 re-rank sidecar: same key, same cell partitioning
   // (guaranteed by the shared encode pass — Pq.encodeIvfPqSq8), same
   // manifest-commit isolation. Post-build reads resolve the real
@@ -126,7 +127,7 @@ class PqIndex(spark: SparkSession, dir: String,
   private def sqStoreWith(bucketCount: Int) =
     new graft.sources.SnapshotStore(spark, s"$dir/sq8", key = "neighbor_id",
       buckets = bucketCount, partitionCol = Some("cell"))
-  private val sqStore = sqStoreWith(if (buckets > 0) buckets else 32)
+  private val sqStore = sqStoreWith(buckets)
 
   /** Whether the SQ8 re-rank tier exists on disk (a committed sidecar
     * manifest — presence is the truth, the constructor flag only

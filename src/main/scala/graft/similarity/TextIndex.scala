@@ -95,12 +95,14 @@ class TextIndex(spark: SparkSession, dir: String,
   // buckets = 0 ⇒ sized at build with the generic partitioned-store
   // rule (postings bytes / (termParts × 64 MiB target), floor 1 — the
   // file floor is buckets × termParts, see SnapshotStore.suggestBuckets).
-  // The constructor-level store only needs a fallback for a store
-  // with no manifest yet; post-build ops resolve recordedBuckets.
+  // The constructor-level store passes the explicit count through
+  // (0 = the store sizes it by bytes); it only lays out a store with
+  // no manifest, which never happens here — build lays out its own
+  // store, and post-build ops resolve recordedBuckets.
   private def storeWith(bucketCount: Int) = new graft.sources.SnapshotStore(
     spark, s"$dir/postings", key = "doc_id",
     buckets = bucketCount, partitionCol = Some("tpart"))
-  private val store = storeWith(if (buckets > 0) buckets else 32)
+  private val store = storeWith(buckets)
   private val statsPath = new Path(s"$dir/stats.txt")
   private val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graftbridge.FileRelation
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
@@ -47,15 +49,27 @@ import SnapshotStore._
   * The manifest is also the store's FILE INDEX. Each data generation
   * (one `data-*` dir, one write) carries a `.files` sidecar, written
   * before the manifest commit that publishes it: the generation's
-  * Spark schema and every data file's byte size and modification
-  * time. A read resolves the manifest's file list against those
-  * sidecars and opens a parquet relation directly — no listing job
-  * (Spark lists named files in a job with one task per file past 32
-  * paths) and no footer-merge job; the schema is the generations'
-  * schemas merged exactly as `mergeSchema` merges footers. A read
-  * naming any generation without a sidecar (a store written before
-  * the sidecar existed) falls back to the `mergeSchema` parquet read
-  * for all its files, so old stores read back identically.
+  * Spark schema, its distinct keys per bucket, and every data file's
+  * byte size and modification time. Every read resolves the
+  * manifest's file list against those records and opens one parquet
+  * relation directly — no listing job (Spark lists named files in a
+  * job with one task per file past 32 paths) and no footer-merge job;
+  * the schema is the generations' schemas merged exactly as
+  * `mergeSchema` merges footers. A generation whose sidecar is
+  * missing (written before sidecars existed), torn, or lacks a file
+  * the manifest names gets its record built in memory from a listing
+  * of its dir and the schema a `mergeSchema` read of its files infers,
+  * with no key counts — so old and damaged stores read back
+  * identically through the same path.
+  *
+  * LAYOUT. Every write clusters its rows by the layout columns, so a
+  * generation holds one file per bucket (per partition value when the
+  * store has a partition column) — except that an unpartitioned
+  * overwrite, copy-on-write upsert or delete whose buckets average
+  * more bytes than AQE's advisory partition size is rebalanced, and
+  * AQE splits such a bucket across tasks, one file per split, rather
+  * than write it from one task. [[compact]] folds a split bucket back
+  * into one file.
   *
   * MERGE-ON-READ for small upserts (Iceberg v2 equality deletes, per
   * bucket): a delta key that may already be stored does not force its
@@ -71,10 +85,10 @@ import SnapshotStore._
   * always present in the generation that masks it. A bucket FOLDS
   * (the key probe plus a copy-on-write rewrite through its mask)
   * instead of masking when the delta holds a large share of its keys,
-  * when it already holds many files, when it already carries a live
-  * mask (so a bucket has at most one), or when its key count is
-  * unknown (a generation written before key counts were recorded —
-  * such stores keep copy-on-write until rewritten).
+  * when it already holds many files, or when it already carries a live
+  * mask (so a bucket has at most one). A generation without recorded
+  * key counts counts as holding no keys, so a bucket made only of such
+  * generations always folds by the share rule.
   * [[delete]] and [[compact]] also read through masks and replace
   * every file of the buckets they rewrite.
   *
@@ -104,6 +118,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private val BucketCol = "snap_bucket"
   private val PartDir = "snap_part"
   private val ManifestPrefix = "manifest-"
+  private val TmpManifestPrefix = ".tmp-manifest-"
   private val BloomFile = ".blooms"
   private val FilesFile = ".files"
   private val MaskFile = ".mask"
@@ -133,19 +148,29 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private def withBucket(df: DataFrame, bucketCount: Int): DataFrame =
     df.withColumn(BucketCol, pmod(hash(col(key)), lit(bucketCount)))
 
-  /** The bucket count a layout-writing write of `df` uses: the explicit
-    * constructor count, else `df`'s optimized-plan size estimate against
-    * the scan split size — or [[LegacyBuckets]] when Spark cannot size
-    * the frame (an RDD-backed relation estimates as
+  /** `df`'s optimized-plan size estimate (no job), or None when Spark
+    * cannot size the frame (an RDD-backed relation estimates as
     * `spark.sql.defaultSizeInBytes`). */
-  private def layoutBuckets(df: DataFrame): Int =
+  private def estimatedBytes(df: DataFrame): Option[Long] = {
+    val estimate = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (estimate >= BigInt(spark.sessionState.conf.defaultSizeInBytes)) None
+    else Some(estimate.toLong)
+  }
+
+  /** The bucket count a layout-writing write of a frame of `estimate`
+    * bytes uses: the explicit constructor count, else the estimate
+    * against the scan split size — or [[LegacyBuckets]] when Spark
+    * cannot size the frame. */
+  private def layoutBuckets(estimate: Option[Long]): Int =
     if (buckets > 0) buckets
-    else {
-      val conf = spark.sessionState.conf
-      val estimate = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (estimate >= BigInt(conf.defaultSizeInBytes)) LegacyBuckets
-      else suggestBuckets(estimate.toLong, 1, conf.filesMaxPartitionBytes)
-    }
+    else estimate.fold(LegacyBuckets)(
+      suggestBuckets(_, 1, spark.sessionState.conf.filesMaxPartitionBytes))
+
+  /** The bytes of the stored files `df`, a read built by [[readFiles]],
+    * scans: the sizes its file relations were built from (no I/O). */
+  private def storedBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectLeaves()
+      .collect { case l: LogicalRelation => l.relation.sizeInBytes }.sum
 
   /** The count `m` was written with — an upsert MUST hash with it (see
     * [[latestRaw]]). A manifest recorded without one predates the header
@@ -209,25 +234,32 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     val body = (header ++ mapping.toSeq.sortBy(_._1)
       .flatMap { case (b, files) => files.sorted.map(f => s"$b\t$f") })
       .mkString("\n")
-    val tmp = new Path(path, s".tmp-manifest-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val tmp = new Path(path, s"$TmpManifestPrefix${java.util.UUID.randomUUID}")
     val dst = manifestPath(version)
-    // the rename IS the publish — a silent failure (concurrent writer,
-    // cross-FS move, transient error) would leave the new data files
-    // as unreferenced orphans that vacuum() later deletes, i.e. a
-    // silently lost write. The existence check matters on POSIX, where
-    // rename REPLACES an existing destination and returns true — that
-    // would overwrite a concurrent writer's committed manifest (lost
-    // update) rather than fail. Object stores with atomic
-    // if-none-match publish make the check-then-rename race-free;
-    // locally it narrows the race to the commit instant.
-    if (fs.exists(dst))
-      throw new java.io.IOException(
-        s"manifest version $version already published — concurrent writer conflict ($dst)")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"manifest commit conflict/failure for version $version ($tmp -> $dst)")
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+      // the rename IS the publish — a silent failure (concurrent writer,
+      // cross-FS move, transient error) would leave the new data files
+      // as unreferenced orphans that vacuum() later deletes, i.e. a
+      // silently lost write. The existence check matters on POSIX, where
+      // rename REPLACES an existing destination and returns true — that
+      // would overwrite a concurrent writer's committed manifest (lost
+      // update) rather than fail. Object stores with atomic
+      // if-none-match publish make the check-then-rename race-free;
+      // locally it narrows the race to the commit instant.
+      if (fs.exists(dst))
+        throw new CommitConflict(
+          s"manifest version $version already published — concurrent writer conflict ($dst)")
+      if (!fs.rename(tmp, dst))
+        throw new CommitConflict(
+          s"manifest commit conflict/failure for version $version ($tmp -> $dst)")
+    } catch {
+      case NonFatal(e) =>
+        // a temp this cannot delete is left to vacuum's age gate
+        scala.util.Try(fs.delete(tmp, false))
+        throw e
+    }
   }
 
   /** Test hook: runs after an upsert attempt has read its base version
@@ -236,59 +268,62 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * commit here to exercise the retry deterministically. */
   private[sources] var onBeforeCommit: () => Unit = () => ()
 
-  private def isCommitConflict(e: Throwable): Boolean = e match {
-    case io: java.io.IOException =>
-      val m = Option(io.getMessage).getOrElse("")
-      m.contains("concurrent writer") || m.contains("manifest commit conflict")
-    case _ => false
-  }
-
   /** Retry ONLY on commit conflicts (capped backoff): every other
     * failure propagates on first occurrence — a schema error or a dead
     * filesystem is not a race to wait out. The body must re-read the
     * latest manifest itself so each retry merges against the winner's
     * state. */
-  private def withConflictRetry[T](f: => T): T = {
-    var attempt = 1
-    var backoff = 50L
-    while (true) {
-      try return f
-      catch {
-        case e: Throwable if isCommitConflict(e) && attempt < UpsertAttempts =>
-          System.err.println(s"[graft] snapshot commit conflict, retry $attempt: ${e.getMessage}")
-          Thread.sleep(backoff)
-          backoff = math.min(backoff * 2, 2000L)
-          attempt += 1
-      }
+  private def withConflictRetry[T](f: => T, attempt: Int = 1, backoff: Long = 50L): T =
+    try f catch {
+      case e: CommitConflict if attempt < UpsertAttempts =>
+        System.err.println(s"[graft] snapshot commit conflict, retry $attempt: ${e.getMessage}")
+        Thread.sleep(backoff)
+        withConflictRetry(f, attempt + 1, math.min(backoff * 2, 2000L))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Write `df` (already bucketed/partitioned) into a fresh immutable
     * data dir with its bloom, file-index and (given `masks`) mask
     * sidecars; return bucket → relative file paths. With a partition
     * column the files sit one level deeper (`snap_bucket=B/snap_part=V/…`),
-    * which is what [[readPartitions]] prunes on. `known` is the write's
-    * distinct keys per bucket when the caller already collected them:
-    * the blooms and key counts are then built on the driver, and the
-    * write is the only Spark job. */
-  private def writeData(bucketed: DataFrame, pcol: Option[String],
+    * which is what [[readPartitions]] prunes on. `spread` is the number
+    * of buckets the write covers. `bytes` is the write's size where the
+    * caller lets a large bucket split: the stored bytes a copy-on-write
+    * rewrite or a delete reads, an overwrite's estimate (`Long.MaxValue`
+    * when Spark cannot size it); 0 for an append and a compaction.
+    * `known` is the write's distinct keys per bucket when the caller
+    * already collected them: the blooms and key counts are then built
+    * on the driver, and the write is the only Spark job. */
+  private def writeData(bucketed: DataFrame, pcol: Option[String], spread: Int, bytes: Long,
                         known: Option[Map[Int, Seq[Any]]] = None,
                         masks: Map[Int, MaskEntry] = Map.empty): Map[Int, Seq[String]] = {
     val dataDir = s"data-${java.util.UUID.randomUUID}"
     val layoutCols = BucketCol +: (if (pcol.isDefined) Seq(PartDir) else Nil)
-    // partitionBy fans each task out to every layout dir it holds rows
-    // for, so an unclustered write leaves tasks × dirs files. With a
-    // partition column that is unbounded (measured: a 450k-doc
-    // band-store seed began writing ~65k small files), so the write is
-    // clustered here: one exchange keyed on the layout writes exactly
-    // one file per populated (bucket, value). Without one, the caller
-    // clusters by bucket where the fan-out matters — the copy-on-write
-    // merge rebalances its rewrite, appends and compaction repartition
-    // by bucket — and compact() folds whatever is left.
+    // The layout rule, for every writer: partitionBy fans each task out
+    // to every layout dir it holds rows for, so an unclustered write
+    // leaves tasks × dirs files (measured: a 450k-doc band-store seed
+    // began writing ~65k small files; a 4-slice overwrite wrote 4 files
+    // into a one-bucket store). One exchange keyed on the layout puts
+    // each populated (bucket, value) in one task, so each gets one file.
+    //  - With a partition column the exchange takes the session's
+    //    shuffle partitions and AQE sizes it.
+    //  - A write whose buckets average more than AQE's advisory
+    //    partition size is REBALANCED: AQE splits such a bucket across
+    //    tasks (one file per split) instead of one task writing all of
+    //    it, and still spreads the write over the cores.
+    //  - Any other write takes min(buckets, cores) tasks, explicitly:
+    //    AQE coalesces a small write onto ONE task that writes every
+    //    bucket's file in series, and none of its buckets is big enough
+    //    for a split to pay.
+    // An append passes no size: a delta's estimate is unreliable (an
+    // inner join's estimate is its sides' product), and an inflated one
+    // would cost the small appends their explicit count.
+    val cols = layoutCols.map(col)
+    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val clustered =
-      if (pcol.isDefined) bucketed.repartition(col(BucketCol), col(PartDir))
-      else bucketed
+      if (pcol.isDefined) bucketed.repartition(cols: _*)
+      else if (bytes / math.max(1, spread) > advisory) bucketed.hint("rebalance", cols: _*)
+      else bucketed.repartition(math.max(1, math.min(spread, spark.sparkContext.defaultParallelism)),
+        cols: _*)
     clustered.write.partitionBy(layoutCols: _*).parquet(s"$path/$dataDir")
     val keyCounts = known match {
       case Some(keys) =>
@@ -301,10 +336,9 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       case None => writeBlooms(bucketed, dataDir)
     }
     if (masks.nonEmpty) writeMask(dataDir, bucketed.schema(key).dataType, masks)
-    val prefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
     val written = parquetFilesUnder(new Path(s"$path/$dataDir"))
     val out = written.map { st =>
-      val rel = st.getPath.toUri.getPath.stripPrefix(prefix)
+      val rel = relative(st)
       bucketOf(rel).getOrElse(sys.error(s"no bucket segment in $rel")) -> rel
     }.groupBy(_._1).map { case (b, fs0) => b -> fs0.map(_._2) }
     // partitionBy strips the layout columns from the files: the data
@@ -313,6 +347,11 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       StructType(bucketed.schema.filterNot(f => layoutCols.contains(f.name))), written, keyCounts)
     out
   }
+
+  private lazy val rootPrefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
+
+  /** `st`'s path relative to the store root. */
+  private def relative(st: FileStatus): String = st.getPath.toUri.getPath.stripPrefix(rootPrefix)
 
   /** Every parquet file under `dir`. Walks with `listStatus`: on the
     * local file system `listFiles` builds a `LocatedFileStatus` per
@@ -331,24 +370,26 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * file, paths relative to the generation dir. */
   private def writeFileIndex(dataDir: String, schema: StructType, files: Seq[FileStatus],
                              keyCounts: Map[Int, Long]): Unit = {
-    val dirPath = fs.makeQualified(new Path(s"$path/$dataDir")).toUri.getPath.stripSuffix("/") + "/"
     val counts = keyCounts.toSeq.sorted.map { case (b, n) => s"$b:$n" }.mkString("#keys=", ",", "")
     val body = (s"#schema=${schema.json}" +: counts +: files.map { st =>
-      s"${st.getPath.toUri.getPath.stripPrefix(dirPath)}\t${st.getLen}\t${st.getModificationTime}"
+      s"${relative(st).stripPrefix(dataDir + "/")}\t${st.getLen}\t${st.getModificationTime}"
     }).mkString("\n")
     val out = fs.create(new Path(s"$path/$dataDir/$FilesFile"), true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  /** One generation's file index; None when the sidecar is missing or
-    * unreadable (callers fall back to the listing read). */
-  private def generation(dataDir: String): Option[Generation] =
-    try {
+  /** One generation's record: its `.files` sidecar — or, when that is
+    * missing, torn, or lacks one of `named` (paths relative to the
+    * generation dir), one built in memory from a listing of the dir and
+    * the schema a `mergeSchema` read of the listed files infers (a
+    * footer job), with no key counts. Throws when a named file is not
+    * on disk either. */
+  private def generation(dataDir: String, named: Seq[String]): Generation = {
+    val recorded = try {
       val in = fs.open(new Path(s"$path/$dataDir/$FilesFile"))
       val lines = try new String(in.readAllBytes(), StandardCharsets.UTF_8).linesIterator.toVector
         finally in.close()
-      if (!lines.headOption.exists(_.startsWith("#schema="))) None
-      else Some(Generation(
+      Some(Generation(
         DataType.fromJson(lines.head.stripPrefix("#schema=")).asInstanceOf[StructType],
         lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>
           val Array(f, len, mtime) = l.split("\t")
@@ -359,8 +400,24 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
             val Array(b, n) = e.split(':')
             b.toInt -> n.toLong
           }.toMap
-        }))
+        }.getOrElse(Map.empty)))
     } catch { case NonFatal(_) => None }
+    recorded.filter(g => named.forall(g.files.contains)).getOrElse {
+      val listed = parquetFilesUnder(new Path(s"$path/$dataDir"))
+      val files = listed.map(st =>
+        relative(st).stripPrefix(dataDir + "/") -> (st.getLen, st.getModificationTime)).toMap
+      named.find(!files.contains(_)).foreach(f =>
+        throw new java.io.FileNotFoundException(s"snapshot $path: live file $dataDir/$f is missing"))
+      Generation(spark.read.option("mergeSchema", "true")
+        .parquet(listed.map(_.getPath.toString): _*).schema, files, Map.empty)
+    }
+  }
+
+  /** The records of the generations among `files`, by generation dir. */
+  private def generations(files: Seq[String]): Map[String, Generation] =
+    files.groupBy(generationDir).map { case (d, fs0) =>
+      d -> generation(d, fs0.map(_.substring(d.length + 1)))
+    }
 
   private def generationDir(file: String): String = file.takeWhile(_ != '/')
 
@@ -368,53 +425,37 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     case seg if seg.startsWith(s"$BucketCol=") => seg.stripPrefix(s"$BucketCol=").toInt
   }
 
-  /** The relation over `files` built from their generations' sidecars,
-    * or None when any generation lacks one (or lacks one of the files).
-    * Generations merge in dir-name order, which is the file-path order
-    * a `mergeSchema` read folds footers in (a generation's files share
-    * its dir prefix and one schema). */
-  private def resolvedRead(files: Seq[String]): Option[DataFrame] = {
-    val dirs = files.map(generationDir).distinct.sorted
-    val gens = dirs.flatMap(d => generation(d).map(d -> _)).toMap
-    if (gens.size < dirs.size) return None
-    val fsys = fs
-    val blockSize = fsys.getDefaultBlockSize(new Path(path))
-    val statuses = files.map { f =>
-      val d = generationDir(f)
-      gens(d).files.get(f.substring(d.length + 1)).map { case (len, mtime) =>
-        new FileStatus(len, false, 1, blockSize, mtime, fsys.makeQualified(new Path(s"$path/$f")))
-      }
-    }
-    if (statuses.exists(_.isEmpty)) None
-    else Some(FileRelation.parquet(spark, statuses.flatten,
-      FileRelation.mergeSchemas(spark, dirs.map(gens(_).schema))))
-  }
-
-  // mergeSchema: a snapshot legitimately mixes file generations
-  // (upsert rewrites only touched buckets), so after a schema
-  // evolution the live file set has both pre- and post-evolution
-  // footers — a plain read takes ONE footer's schema and silently
-  // drops or surfaces the evolved column depending on file order.
-  // Merging unions the footers (missing columns null), which is the
-  // same contract upsert's allowMissingColumns union promises. The
-  // sidecar-resolved relation merges the same way without the jobs.
-  // The masks of the masking generations among `files` apply.
+  // mergeSchema semantics: a snapshot legitimately mixes file
+  // generations (upsert rewrites only touched buckets), so after a
+  // schema evolution the live file set has both pre- and
+  // post-evolution footers — a plain read takes ONE footer's schema
+  // and silently drops or surfaces the evolved column depending on
+  // file order. Merging unions the footers (missing columns null),
+  // which is the same contract upsert's allowMissingColumns union
+  // promises. Generations merge in dir-name order, which is the
+  // file-path order a `mergeSchema` read folds footers in (a
+  // generation's files share its dir prefix and one schema). The masks
+  // of the masking generations among `files` apply.
   private def readFiles(files: Seq[String], masking: Set[String]): Option[DataFrame] =
     if (files.isEmpty) None
-    else Some(withMasks(resolvedRead(files).getOrElse(
-      spark.read.option("mergeSchema", "true").parquet(files.map(f => s"$path/$f"): _*)),
-      files, masking))
+    else {
+      val gens = generations(files)
+      val fsys = fs
+      val blockSize = fsys.getDefaultBlockSize(new Path(path))
+      val statuses = files.map { f =>
+        val d = generationDir(f)
+        val (len, mtime) = gens(d).files(f.substring(d.length + 1))
+        new FileStatus(len, false, 1, blockSize, mtime, fsys.makeQualified(new Path(s"$path/$f")))
+      }
+      Some(withMasks(FileRelation.parquet(spark, statuses,
+        FileRelation.mergeSchemas(spark, gens.keys.toSeq.sorted.map(gens(_).schema))),
+        files, masking))
+    }
 
   // key-column-only read, masks NOT applied: a masked key is always
-  // present in the generation that masks it, so the key set is the
-  // same. The fallback skips schema merging: the key column is the
-  // store's identity and exists in every file generation by
-  // construction, so the collision probe skips the per-footer merge
-  // pass a wide mixed-generation file set would otherwise pay
+  // present in the generation that masks it, so the key set is the same
   private def readKeys(files: Seq[String]): Option[DataFrame] =
-    if (files.isEmpty) None
-    else Some(resolvedRead(files).getOrElse(
-      spark.read.parquet(files.map(f => s"$path/$f"): _*)).select(key))
+    readFiles(files, Set.empty).map(_.select(key))
 
   // ---- mask sidecar: merge-on-read deltas ----
   //
@@ -630,21 +671,18 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private def loadBlooms(dataDir: String): Option[Map[Int, BloomFilter]] = {
     val p = new Path(s"$path/$dataDir/$BloomFile")
     try {
-      if (!fs.exists(p)) None
-      else {
-        val in = new java.io.DataInputStream(fs.open(p))
-        try {
-          val n = in.readInt()
-          Some((0 until n).map { _ =>
-            val b = in.readInt()
-            val len = in.readInt()
-            val bytes = new Array[Byte](len)
-            in.readFully(bytes)
-            b -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-          }.toMap)
-        } finally in.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      val in = new java.io.DataInputStream(fs.open(p))
+      try {
+        val n = in.readInt()
+        Some((0 until n).map { _ =>
+          val b = in.readInt()
+          val len = in.readInt()
+          val bytes = new Array[Byte](len)
+          in.readFully(bytes)
+          b -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+        }.toMap)
+      } finally in.close()
+    } catch { case NonFatal(_) => None }
   }
 
   /** Probe telemetry of the last upsert or delete: (buckets the blooms
@@ -694,9 +732,8 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * bucket folds when it already carries a live mask — so a bucket has
     * at most one, and its live key count is the sum of its generations'
     * recorded counts — when the delta holds ≥ 1/[[FoldShare]] of those
-    * keys, when it would pass [[MaxFilesPerBucket]] files, or when a
-    * live generation of it has no recorded key count (written before
-    * counts were recorded, or without a file index). Deltas past
+    * keys — a generation without recorded counts counts as none — or
+    * when it would pass [[MaxFilesPerBucket]] files. Deltas past
     * [[ProbeKeyBound]] keys, and keys of a type a mask cannot persist,
     * always fold. */
   private def maskPlan(m: Manifest, p: Probe, keyType: DataType): Map[Int, MaskEntry] = {
@@ -705,28 +742,23 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       case _ => return Map.empty
     }
     val masked = maskedBuckets(m)
-    val genCache = scala.collection.mutable.Map.empty[String, Option[Generation]]
+    val gens = generations(p.hits.keys.toSeq.flatMap(m.mapping.getOrElse(_, Nil)))
     p.hits.flatMap { case (b, hit) =>
       val files = m.mapping.getOrElse(b, Nil)
-      val gens = files.map(generationDir).distinct
-      val counts = gens.map(g => genCache.getOrElseUpdate(g, generation(g))
-        .flatMap(_.keyCounts).map(_.getOrElse(b, 0L)))
-      val fold = masked(b) || counts.exists(_.isEmpty) ||
-        keys(b).size.toLong * FoldShare >= counts.flatten.sum ||
+      val dirs = files.map(generationDir).distinct
+      val fold = masked(b) ||
+        keys(b).size.toLong * FoldShare >= dirs.map(gens(_).keyCounts.getOrElse(b, 0L)).sum ||
         files.size >= MaxFilesPerBucket
-      if (fold) None else Some(b -> MaskEntry(gens, hit))
+      if (fold) None else Some(b -> MaskEntry(dirs, hit))
     }
   }
 
   /** Buckets among `scanned` holding a row whose key is in `probe` —
     * the key-column-only collision scan. */
   private def collisions(m: Manifest, scanned: Seq[Int], probe: DataFrame, bc: Int): Set[Int] =
-    readKeys(scanned.flatMap(m.mapping.getOrElse(_, Nil))) match {
-      case None => Set.empty
-      case Some(existing) =>
-        withBucket(existing, bc)
-          .join(probe, Seq(key), "left_semi")
-          .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+    readKeys(scanned.flatMap(m.mapping.getOrElse(_, Nil))).fold(Set.empty[Int]) { existing =>
+      withBucket(existing, bc).join(probe, Seq(key), "left_semi")
+        .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
     }
 
   /** Buckets of `m` that a live mask applies to. */
@@ -871,8 +903,10 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * column takes effect, and its bucket count — or, with none, the
     * count sized from `df`'s bytes). */
   def overwrite(df: DataFrame): Unit = {
-    val bc = layoutBuckets(df)
-    val files = writeData(withPart(withBucket(df, bc), partitionCol), partitionCol)
+    val estimate = estimatedBytes(df)
+    val bc = layoutBuckets(estimate)
+    val files = writeData(withPart(withBucket(df, bc), partitionCol), partitionCol, bc,
+      estimate.getOrElse(Long.MaxValue))
     // data files are version-independent (immutable, unique dir); only
     // the version number races, so a conflict retries the commit alone
     withConflictRetry {
@@ -895,12 +929,11 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     *    older rows of the keys the blooms might hold (merge-on-read —
     *    see the class doc);
     *  - bloom-hit and the fold rule fires (large share of the bucket,
-    *    too many files, a live mask already, unknown key count — see
-    *    `maskPlan`): a key-column-only probe finds the buckets that
-    *    really collide, and those are rewritten copy-on-write through
-    *    their mask (one key-partitioned anti-join + union evaluated
-    *    once, one new file per bucket unless a bucket is too large for
-    *    one task); the others append.
+    *    too many files, a live mask already — see `maskPlan`): a
+    *    key-column-only probe finds the buckets that really collide,
+    *    and those are rewritten copy-on-write through their mask (one
+    *    key-partitioned anti-join + union evaluated once, one new file
+    *    per bucket); the others append.
     *
     * All appends — fresh and masked rows — go out in one write job,
     * one file per bucket, with their blooms, key counts and masks built
@@ -949,17 +982,13 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       // conservatively include unpartitioned files, so correctness is
       // unchanged, and the next compact() folds them into the
       // clustered layout — the standard ingest-then-recluster trade.
-      // An explicit partition count: with AQE coalescing, a plain
-      // repartition(bucket) of a small delta ran as ONE task writing
-      // every bucket's file in series.
       val inserted =
         if (appending.isEmpty) Map.empty[Int, Seq[String]]
         else {
           val ins = if (colliding.isEmpty) incoming
             else incoming.filter(!col(BucketCol).isin(colliding.toSeq: _*))
-          val tasks = math.max(1, math.min(appending.size, spark.sparkContext.defaultParallelism))
-          writeData(pcol.fold(ins)(_ => ins.drop(PartDir)).repartition(tasks, col(BucketCol)),
-            None, p.keys.map(_.filter { case (b, _) => appending(b) }), masks)
+          writeData(pcol.fold(ins)(_ => ins.drop(PartDir)), None, appending.size, 0L,
+            p.keys.map(_.filter { case (b, _) => appending(b) }), masks)
         }
       val merged: Map[Int, Seq[String]] =
         if (colliding.isEmpty) Map.empty
@@ -976,15 +1005,8 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
             incoming.filter(col(BucketCol).isin(colliding.toSeq: _*)),
             allowMissingColumns = true)
           // checkpointed so the write and both bloom passes read ONE
-          // evaluation of the anti-join. Unpartitioned rows are
-          // rebalanced by bucket first: each bucket lands in one task
-          // (one file per bucket instead of one per task holding its
-          // rows), while AQE still coalesces a small rewrite into few
-          // tasks and splits a large one — a plain repartition(bucket)
-          // would cap a big rewrite at one task per bucket. writeData
-          // clusters a partitioned layout itself.
-          val staged = if (pcol.isDefined) rows else rows.hint("rebalance", col(BucketCol))
-          writeData(staged.localCheckpoint(), pcol)
+          // evaluation of the anti-join
+          writeData(rows.localCheckpoint(), pcol, colliding.size, storedBytes(existing))
         }
       // appended buckets keep their existing files AND gain the new
       // ones; colliding buckets are replaced wholesale
@@ -1041,7 +1063,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
         // an all-deleted bucket writes no files and must leave the
         // manifest; writeData only returns buckets it wrote (kept
         // holds only colliding buckets' rows — existing read just them)
-        val rewritten = writeData(kept, pcol)
+        val rewritten = writeData(kept, pcol, colliding.size, storedBytes(existing))
         onBeforeCommit()
         commit(m.version + 1, bc, (m.mapping -- colliding) ++ rewritten, pcol, m.masking)
         removed
@@ -1058,11 +1080,10 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * (and mask) cost forever. Compaction is layout-only: rows are
     * untouched (the merge is a read through the masks + union), readers
     * of older versions keep their pinned file lists (snapshot
-    * isolation), and the superseded files become vacuum food. Each
-    * compacted bucket lands in exactly one partition (repartition on
-    * the bucket column) so the rewrite emits exactly one file per
-    * bucket (per partition value when partitioned). Returns the number
-    * of buckets compacted.
+    * isolation), and the superseded files become vacuum food. Like
+    * every write, the rewrite emits one file per bucket (per partition
+    * value when partitioned), and a compaction never splits a bucket,
+    * however large. Returns the number of buckets compacted.
     *
     * `maxBuckets` bounds one call's rewrite to the FATTEST that many
     * buckets — a billions-row store compacts incrementally (each call
@@ -1113,20 +1134,22 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
         val merged = fat.keys.toSeq.sorted
           .map(b => readFiles(fat(b), m.masking).get.withColumn(BucketCol, lit(b)))
           .reduce(_.unionByName(_, allowMissingColumns = true))
-          .repartition(fat.size, col(BucketCol))
-        val rewritten = writeData(withPart(merged, pcol), pcol)
+        // no size: a compaction's output is one file per bucket, and a
+        // split bucket would stay fat and be rewritten by every call
+        val rewritten = writeData(withPart(merged, pcol), pcol, fat.size, 0L)
         onBeforeCommit()
         commit(m.version + 1, bc, m.mapping ++ rewritten, pcol, m.masking)
         fat.size
       }
   }
 
-  /** Delete data files no manifest version references and manifests
-    * older than the newest `keepVersions`. `minAgeMs` is the retention
-    * grace: files younger than it are NEVER deleted, because an
-    * in-flight writer may have produced them but not yet committed its
-    * manifest (the same reason every lakehouse vacuum has a retention
-    * window). Run out-of-band. Returns the number of files deleted. */
+  /** Delete data files no manifest version references, manifests
+    * older than the newest `keepVersions`, and the temp manifests of
+    * failed commits. `minAgeMs` is the retention grace: files younger
+    * than it are NEVER deleted, because an in-flight writer may have
+    * produced them but not yet committed its manifest (the same reason
+    * every lakehouse vacuum has a retention window). Run out-of-band.
+    * Returns the number of data files deleted. */
   def vacuum(keepVersions: Int = 1, minAgeMs: Long = 3600L * 1000L): Long =
     versions().lastOption match {
     case None => 0L
@@ -1134,14 +1157,12 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       val keep = versions().filter(_ > latest - keepVersions).toSet
       val live = keep.flatMap(v => readManifest(v).files)
       val cutoff = System.currentTimeMillis() - minAgeMs
-      val prefix = fs.makeQualified(new Path(path)).toUri.getPath.stripSuffix("/") + "/"
       var deleted = 0L
       for (entry <- fs.listStatus(new Path(path))) {
         val name = entry.getPath.getName
         if (entry.isDirectory && name.startsWith("data-")) {
           for (f <- parquetFilesUnder(entry.getPath)) {
-            val rel = f.getPath.toUri.getPath.stripPrefix(prefix)
-            if (!live.contains(rel) && f.getModificationTime < cutoff) {
+            if (!live.contains(relative(f)) && f.getModificationTime < cutoff) {
               fs.delete(f.getPath, false); deleted += 1
             }
           }
@@ -1152,9 +1173,10 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
             val p = new Path(entry.getPath, sidecar)
             if (fs.exists(p) && fs.getFileStatus(p).getModificationTime < cutoff) fs.delete(p, false)
           }
-        } else if (name.startsWith(ManifestPrefix) &&
-          !keep.contains(name.stripPrefix(ManifestPrefix).stripSuffix(".txt").toLong) &&
-          entry.getModificationTime < cutoff) {
+        } else if (entry.getModificationTime < cutoff && (name.startsWith(TmpManifestPrefix) ||
+          name.startsWith(ManifestPrefix) &&
+            !keep.contains(name.stripPrefix(ManifestPrefix).stripSuffix(".txt").toLong))) {
+          // a temp manifest this old is a commit that failed or crashed
           fs.delete(entry.getPath, false)
         }
       }
@@ -1213,11 +1235,15 @@ object SnapshotStore {
       (version, scala.util.hashing.MurmurHash3.orderedHash(files.sorted))
   }
 
+  /** The manifest publish lost to a concurrent writer's commit of the
+    * same version; writers retry it against the winner's state. */
+  final class CommitConflict(message: String) extends java.io.IOException(message)
+
   /** One generation's file index. `keyCounts` is its distinct keys per
-    * bucket — the fold rule's input; None for a generation written
-    * before key counts were recorded. */
+    * bucket — the fold rule's input; empty for a generation without
+    * recorded counts. */
   private final case class Generation(schema: StructType, files: Map[String, (Long, Long)],
-                                      keyCounts: Option[Map[Int, Long]])
+                                      keyCounts: Map[Int, Long])
 
   /** One bucket's mask: the generations it hides rows in, and the keys. */
   private final case class MaskEntry(gens: Seq[String], keys: Seq[Any])

@@ -212,13 +212,38 @@ class SnapshotStoreSpec extends SparkSpec {
     val fs = conflicting.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(conflicting, true)
     out.write("#buckets=4\n".getBytes("UTF-8")); out.close()
-    val e = intercept[java.io.IOException] {
+    val e = intercept[SnapshotStore.CommitConflict] {
       store.commit(v1 + 1, 4, Map.empty)
     }
     assert(e.getMessage.contains("concurrent writer"))
     // the concurrent writer's manifest survives untouched
     val in = fs.open(conflicting)
     assert(new String(in.readAllBytes(), "UTF-8").startsWith("#buckets=4")); in.close()
+    // and the losing commit leaves no temp manifest behind
+    assert(!fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith(".tmp-manifest-")))
+  }
+
+  test("vacuum removes a failed commit's temp manifest once it is older than the grace") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_tmp").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 2)
+    store.overwrite(Seq((1L, "a"), (2L, "b")).toDF("user_id", "v"))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def orphan(name: String): Path = {
+      val p = new Path(dir, s".tmp-manifest-$name")
+      val out = fs.create(p, true)
+      try out.write("#buckets=2\n".getBytes("UTF-8")) finally out.close()
+      p
+    }
+    val young = orphan("young")
+    val aged = orphan("aged")
+    fs.setTimes(aged, System.currentTimeMillis() - 2L * 3600L * 1000L, -1L)
+    store.vacuum()
+    assert(fs.exists(young), "a young temp may be an in-flight commit")
+    assert(!fs.exists(aged), "a temp older than the grace is a lost commit")
+    assert(store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(1L -> "a", 2L -> "b"))
   }
 
   test("snapshot isolation: a reader opened before an upsert keeps its version") {
@@ -287,12 +312,14 @@ class SnapshotStoreSpec extends SparkSpec {
 
   /** `body` with `spark.sql.files.maxPartitionBytes` set to `bytes`,
     * the session's value restored after. */
-  private def withSplitBytes[T](bytes: Long)(body: => T): T = {
-    val k = "spark.sql.files.maxPartitionBytes"
+  private def withConf[T](k: String, v: String)(body: => T): T = {
     val was = spark.conf.getOption(k)
-    spark.conf.set(k, bytes.toString)
+    spark.conf.set(k, v)
     try body finally was.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
+
+  private def withSplitBytes[T](bytes: Long)(body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes", bytes.toString)(body)
 
   test("byte-sized buckets: an unpinned store's first write of a small frame records one bucket; an explicit count is honoured") {
     val s = spark
@@ -302,7 +329,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val sized = new SnapshotStore(spark, s"$base/sized")
     sized.upsert(rows)
     assert(sized.bucketCount.contains(1))
-    assert(sized.liveFiles.forall(_.contains("/snap_bucket=0/")), s"${sized.liveFiles}")
+    assert(sized.liveFiles.size == 1, s"${sized.liveFiles}")
     val pinned = new SnapshotStore(spark, s"$base/pinned", buckets = 8)
     pinned.upsert(rows)
     assert(pinned.bucketCount.contains(8))
@@ -766,7 +793,11 @@ class SnapshotStoreSpec extends SparkSpec {
     import s.implicits._
     val dir = Files.createTempDirectory("graft_snap_jobs").toString + "/snap"
     val store = new SnapshotStore(spark, dir, buckets = 4)
-    store.overwrite((1L to 400L).map(i => (i, s"v$i")).toDF("user_id", "v").repartition(40))
+    // every write lands one file per bucket, so the 40 files are a base
+    // generation and nine fresh-key insert generations
+    store.overwrite((1L to 40L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    for (g <- 1L to 9L)
+      store.upsert((g * 40 + 1 to g * 40 + 40).map(i => (i, s"v$i")).toDF("user_id", "v"))
     val probe = (1L to 40L).toDF("user_id")
     assert(store.filesForKeys(probe).size > 32, "setup: the probe must name more than 32 files")
 
@@ -1029,5 +1060,85 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(before.forall { case (b, files) => files.forall(after(b).contains) }, "nothing rewritten")
     val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got.size == 401 && got(7L) == "u7" && got(301L) == "u301" && got(8L) == "v8")
+  }
+
+  test("layout: after every writer each generation holds at most one file per bucket (per partition value)") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft_snap_layout").toString
+    val rows = (1L to 200L).map(i => (i, s"v$i", (i % 3).toInt)).toDF("user_id", "v", "p")
+    val writers = Seq[(String, SnapshotStore => Unit)](
+      "overwrite of a 4-slice frame" -> (_.overwrite(rows.repartition(4))),
+      "upsert fold" -> (_.upsert(rows.filter(col("user_id") <= 100L)
+        .withColumn("v", concat(lit("u"), col("v"))).repartition(4))),
+      "masked append" -> { st =>
+        st.upsert(Seq((7L, "m7", 1), (1000L, "n", 1)).toDF("user_id", "v", "p").repartition(2))
+        assert(masking(st).nonEmpty, "setup: key 7's bucket is masked")
+      },
+      "compact" -> (st => assert(st.compact() > 0)),
+      "delete" -> (st => assert(st.delete(Seq(8L, 9L).toDF("user_id").repartition(3)) == 2L)))
+    for (store <- Seq(new SnapshotStore(spark, s"$root/sized"),
+                      new SnapshotStore(spark, s"$root/partitioned", buckets = 4, partitionCol = Some("p")));
+         (what, write) <- writers) {
+      val before = store.versions().lastOption
+      write(store)
+      assert(store.versions().lastOption != before, s"$what: setup commits a version")
+      // a file's dir is generation/bucket[/partition value]
+      val fanOut = store.liveFiles.groupBy(f => f.substring(0, f.lastIndexOf('/'))).filter(_._2.size > 1)
+      assert(fanOut.isEmpty, s"$what: more than one file in ${fanOut.keys.toSeq.sorted}")
+    }
+  }
+
+  test("layout: a copy-on-write rewrite of a bucket past the advisory size splits across tasks; compact folds it") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_split").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 1)
+    // ~75 incompressible bytes a row: the one bucket is ~300 KB
+    def frame(tag: String) = (1L to 4000L).map { i =>
+      val u = java.util.UUID.nameUUIDFromBytes(s"$i".getBytes("UTF-8")).toString
+      (i, s"$tag$u$u")
+    }.toDF("user_id", "v").repartition(4)
+    store.overwrite(frame("v"))
+    assert(store.liveFiles.size == 1, "setup: one file")
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k") {
+      // every key: the fold rule rewrites the bucket copy-on-write
+      store.upsert(frame("u"))
+      // each task writes one file per layout dir, so files are tasks
+      val files = store.liveFiles
+      assert(files.size > 1 && files.map(_.takeWhile(_ != '/')).distinct.size == 1,
+        s"the rewrite of the one bucket must run in more than one task, got $files")
+      assert(store.compact() == 1 && store.liveFiles.size == 1, "compact folds the split bucket into one file")
+    }
+    val got = store.read().get.as[(Long, String)].collect()
+    assert(got.length == 4000 && got.map(_._1).distinct.length == 4000 && got.forall(_._2.startsWith("u")))
+  }
+
+  test("a torn .files sidecar reads through its listing and footers: rows equal, masked rows stay hidden") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_torn").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    store.upsert(Seq((7L, "u7"), (1000L, "n")).toDF("user_id", "v"))
+    assert(masking(store).nonEmpty, "setup: key 7's bucket is masked")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val probe = Seq(7L, 8L, 1000L).toDF("user_id")
+    val intact = (rows(store.read().get), rows(store.readForKeys(probe).get), store.keys().count())
+    // cut every live generation's file index in the middle of its first
+    // file line: no file of the generation is left in it
+    val fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (gen <- store.liveFiles.map(_.takeWhile(_ != '/')).distinct) {
+      val p = new Path(s"$dir/$gen/.files")
+      val in = fsys.open(p)
+      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val lines = text.split("\n")
+      val cut = lines(0).length + lines(1).length + 2 + lines(2).length / 2
+      val out = fsys.create(p, true)
+      try out.write(text.take(cut).getBytes("UTF-8")) finally out.close()
+    }
+    assert((rows(store.read().get), rows(store.readForKeys(probe).get), store.keys().count()) == intact)
+    assert(store.read().get.filter(col("user_id") === 7L).select("v").as[String].collect().toSeq == Seq("u7"),
+      "the masked key's superseded row stays hidden")
   }
 }
