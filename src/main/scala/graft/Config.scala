@@ -14,7 +14,6 @@ import org.apache.spark.sql.SparkSession
   */
 final case class GraftConfig(
     master: String,
-    cores: Int,
     shufflePartitions: Int,
     dataDir: String,
     snapshotPath: String,
@@ -22,7 +21,6 @@ final case class GraftConfig(
     rulesJdbcUrl: Option[String],
     rulesJdbcTable: String,
     anchorDate: Option[String],
-    incrementalDays: Int,
     minRowCount: Long,
     maxNullRate: Double,
     userCols: Map[String, String]) {
@@ -43,7 +41,6 @@ object GraftConfig {
     val cores = env.getOrElse("GRAFT_CORES", "4").toInt
     GraftConfig(
       master = env.getOrElse("GRAFT_MASTER", s"local[$cores]"),
-      cores = cores,
       shufflePartitions = env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", cores.toString).toInt,
       dataDir = env.getOrElse("GRAFT_DATA_DIR", "/root/testdata/sf0.001"),
       snapshotPath = env.getOrElse("GRAFT_SNAPSHOT", "/tmp/graft_snapshot/user_tags"),
@@ -54,7 +51,6 @@ object GraftConfig {
       rulesJdbcUrl = env.get("GRAFT_RULES_JDBC_URL"),
       rulesJdbcTable = env.getOrElse("GRAFT_RULES_JDBC_TABLE", "tag_rules"),
       anchorDate = env.get("GRAFT_ANCHOR"),
-      incrementalDays = env.getOrElse("GRAFT_INCREMENTAL_DAYS", "120").toInt,
       minRowCount = env.getOrElse("GRAFT_MIN_ROWS", "1").toLong,
       maxNullRate = env.getOrElse("GRAFT_MAX_NULL_RATE", "0.5").toDouble,
       userCols = parseUserCols(env.getOrElse("GRAFT_USER_COLS", "")))

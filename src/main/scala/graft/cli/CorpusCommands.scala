@@ -18,7 +18,7 @@ import org.apache.spark.storage.StorageLevel
   *     # or warn (cluster default) BEFORE the batch dies on ENOSPC hours in
   *   runMain graft.Main corpus-mix    in=<docs.parquet> out=<dir> [budget=20000 alpha=<t^a shares> tokens=pre|bpe]
   *   runMain graft.Main corpus-split  in=<docs.parquet> out=<dir> [valpct=2 testpct=2]
-  *   runMain graft.Main select-budget in=<docs.parquet> out=<dir> [budget=4000 pruned=true tokens=pre|bpe]
+  *   runMain graft.Main select-budget in=<docs.parquet> out=<dir> [budget=4000 tokens=pre|bpe]
   *   runMain graft.Main corpus-stats  in=<docs.parquet> out=<dir>
   *   runMain graft.Main decontaminate in=<docs.parquet> evals=<eval.parquet> out=<dir> [k=5 bloom=false near=false minjaccard=0.8]
   *   runMain graft.Main contamination-score in=<docs.parquet> evals=<eval.parquet> out=<dir> [k=5]
@@ -96,13 +96,9 @@ private[graft] object CorpusCommands {
       // unmaterialized frame would tokenize + score the corpus twice
       // (sf10: 77 s → 44 s, see PLANS.md)
       val scored = a.score(docs).persist(StorageLevel.MEMORY_AND_DISK)
-      // pruned (histogram-edge) form by default — bit-identical to
-      // the exact window, sort ∝ budget instead of corpus
-      val picked = try (if (a.opts.getOrElse("pruned", "true").toBoolean)
-        P.selectBudgetPrunedFromScored(scored, budget)
-      else
-        P.selectBudgetFromScored(scored, budget))
-        .localCheckpoint()
+      // the pruned (histogram-edge) form — bit-identical to the exact
+      // window, sort ∝ budget instead of corpus
+      val picked = try P.selectBudgetPrunedFromScored(scored, budget).localCheckpoint()
       finally scored.unpersist()
       a.emit(docs.count(), picked)
     },

@@ -87,7 +87,7 @@ final class Scenarios(engine: TagEngine, store: SnapshotStore) {
     val tags = newTags.localCheckpoint()
     store.readForKeys(tags) match {
       case Some(existing) =>
-        TagMerger.mergeWithExisting(tags, existing.select("user_id", "tag_ids"))
+        TagMerger.mergeWithExisting(tags, existing)
           .select(tags.columns.map(col): _*)
       case None => tags
     }

@@ -144,9 +144,4 @@ object LangProfiles {
   def sqlValues: String =
     rows.map { case (l, t, w) => s"('$l', '${t.replace("'", "''")}', $w)" }
       .mkString(", ")
-
-  /** Tie-break priority as SQL. */
-  def prioritySql(col: String): String =
-    "CASE " + Languages.map { case (l, p) => s"WHEN $col = '$l' THEN $p" }
-      .mkString(" ") + " END"
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import graft.sources.ReplaceFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,26 +29,19 @@ private[graft] object StateDir {
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
-  /** Atomic small-text publish — the ONE implementation of the
-    * sidecar rename discipline ([[writeLongSidecar]] delegates here;
-    * the resume plan record uses it directly). */
+  /** Atomic small-text publish through [[graft.sources.ReplaceFile]]
+    * ([[writeLongSidecar]] delegates here; the knobs file, the resume
+    * plan and the run records use it directly). */
   def writeTextFileAtomic(spark: SparkSession, pathStr: String, content: String): Unit = {
     val p = new Path(pathStr)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(s"${p.getParent}/.tmp-${p.getName}-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
+    ReplaceFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, content.getBytes(UTF_8))
   }
 
   /** Frozen-model long-valued sidecars (`<dir>/<name>.txt` — the
     * select threshold/frac, the scrub chunk width/mindocs). Publish
-    * is a genuinely atomic replace (FileContext rename with
-    * OVERWRITE — delete-then-rename would leave a no-file window),
-    * and the fit paths write EVERY sidecar BEFORE committing the
+    * is an atomic replace (a reader finds the old value or the new,
+    * never no file: see [[graft.sources.ReplaceFile]]), and the fit
+    * paths write EVERY sidecar BEFORE committing the
     * data artifact whose _SUCCESS marks the model fitted: a crash
     * mid-fit leaves `fitted` false and the next seed run re-fits —
     * self-healing, never a stuck half-model. */

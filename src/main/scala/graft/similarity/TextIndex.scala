@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.{wordsLower, wordCountLower}
+import graft.sources.ReplaceFile
 
 /** Persistent inverted index: the lexical twin of [[PqIndex]] — BM25
   * serving over a term-partitioned postings store.
@@ -461,16 +462,9 @@ class TextIndex(spark: SparkSession, dir: String,
       .distinct().collect().map(_.getLong(0)).toSeq
   }
 
-  private def saveStats(n: Long, sumDl: Long, parts: Int): Unit = {
-    val tmp = new Path(s"$dir/.tmp-stats-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(s"n_docs=$n sum_dl=$sumDl term_parts=$parts\n"
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(statsPath)) fs.delete(statsPath, false)
-    if (!fs.rename(tmp, statsPath))
-      throw new java.io.IOException(s"stats publish failed for $statsPath")
-  }
+  private def saveStats(n: Long, sumDl: Long, parts: Int): Unit =
+    ReplaceFile(fs, statsPath,
+      s"n_docs=$n sum_dl=$sumDl term_parts=$parts\n".getBytes(StandardCharsets.UTF_8))
 
   private def loadStats(): (Long, Long, Int) = {
     require(fs.exists(statsPath), s"no index stats at $statsPath — build() first")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -92,6 +92,23 @@ import SnapshotStore._
   * [[delete]] and [[compact]] also read through masks and replace
   * every file of the buckets they rewrite.
   *
+  * WRITE. Every writer takes one protocol, in this order:
+  *  1. read the newest manifest, the write's base version;
+  *  2. plan against it: the probe and fold rule of an upsert, the key
+  *     scan of an upsert or delete, the fat buckets of a compaction;
+  *  3. write the new generations — one for an overwrite's or an
+  *     upsert's appended rows, one for the REWRITE STEP's output (the
+  *     rewritten buckets' live rows read through their masks, minus the
+  *     replaced or deleted keys, plus the delta's rows of those buckets,
+  *     checkpointed once) — each as its data files, then its `.blooms`,
+  *     its `.mask` (masked appends only) and its `.files` sidecars;
+  *  4. the PUBLISH STEP: the test hook, a temp manifest, and its rename
+  *     to the base version + 1. A lost publish (the version exists)
+  *     re-runs the write from step 1 against the winner's state, except
+  *     that an [[overwrite]] keeps its data and retries only the publish.
+  * A write with nothing to change (a delete of absent keys, a
+  * compaction with nothing fat) publishes no version.
+  *
   * BUCKET COUNT. Every open file costs a scan task and every written
   * file a task-side write, whatever its size, so the count follows
   * bytes: a write that lays out the store (its first write, or an
@@ -133,10 +150,10 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * reader of the bucket opens; past this many the bucket is rewritten
     * back to one file. */
   private val MaxFilesPerBucket = 8
-  /** Commit-conflict retries for [[upsert]]: enough for realistic
-    * writer fan-in (each retry re-merges against the winner's state),
-    * small enough that a livelocked store fails loudly. */
-  private val UpsertAttempts = 5
+  /** Commit attempts of one write: enough for realistic writer fan-in
+    * (each retry re-plans against the winner's state), few enough that a
+    * livelocked store fails loudly. */
+  private val CommitAttempts = 5
   /** Delta sizes up to this take the bloom-cleared probe (keys are
     * collected driver-side to test against the sidecar blooms); larger
     * deltas fall back to the column-scan probe, whose cost the delta
@@ -262,23 +279,66 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     }
   }
 
-  /** Test hook: runs after an upsert attempt has read its base version
-    * and written its data files, immediately before its commit — the
-    * window a concurrent writer races in. Specs inject a competing
-    * commit here to exercise the retry deterministically. */
+  /** Test hook: runs inside the publish step, after a write has read its
+    * base version and written its data files, immediately before its
+    * commit — the window a concurrent writer races in. Specs inject a
+    * competing commit here to exercise the retry deterministically. */
   private[sources] var onBeforeCommit: () => Unit = () => ()
 
-  /** Retry ONLY on commit conflicts (capped backoff): every other
-    * failure propagates on first occurrence — a schema error or a dead
-    * filesystem is not a race to wait out. The body must re-read the
-    * latest manifest itself so each retry merges against the winner's
-    * state. */
-  private def withConflictRetry[T](f: => T, attempt: Int = 1, backoff: Long = 50L): T =
-    try f catch {
-      case e: CommitConflict if attempt < UpsertAttempts =>
-        System.err.println(s"[graft] snapshot commit conflict, retry $attempt: ${e.getMessage}")
+  /** The publish step, the one commit sequence of every writer: read the
+    * newest manifest (None: an empty store), let `attempt` plan and write
+    * against it, run the test hook, and commit the manifest `attempt`
+    * returns — its layout, live files and masking generations — as the
+    * next version (the publish numbers it). An attempt that returns no
+    * manifest publishes nothing. A commit lost to a concurrent writer
+    * re-runs the attempt against the winner's state, so both writes land
+    * in some serial order; the loser's data files become orphans that
+    * [[vacuum]] reclaims. Only conflicts retry (capped backoff, at most
+    * [[CommitAttempts]] attempts): a schema error or a dead file system
+    * is not a race to wait out. */
+  private def publish[T](attempt: Option[Manifest] => (T, Option[Manifest]),
+                         tries: Int = 1, backoff: Long = 50L): T =
+    try {
+      val base = latestRaw()
+      val (out, next) = attempt(base)
+      next.foreach { n =>
+        onBeforeCommit()
+        commit(base.fold(0L)(_.version) + 1, recordedBuckets(n), n.mapping, n.recordedPcol, n.masking)
+      }
+      out
+    } catch {
+      case e: CommitConflict if tries < CommitAttempts =>
+        System.err.println(s"[graft] snapshot commit conflict, retry $tries: ${e.getMessage}")
         Thread.sleep(backoff)
-        withConflictRetry(f, attempt + 1, math.min(backoff * 2, 2000L))
+        publish(attempt, tries + 1, math.min(backoff * 2, 2000L))
+    }
+
+  /** The rewrite step, the one copy-on-write of every rewriting writer:
+    * the live rows of `rewritten` (buckets of `m`), read through their
+    * masks, without the rows of the keys in `dropped`, plus `added` (rows
+    * of those buckets, laid out; a column either side lacks is null on
+    * the other, so a schema evolution lands), checkpointed so the write
+    * and both bloom passes read one evaluation, then written as one
+    * generation. `split` lets a bucket past AQE's advisory size split
+    * across write tasks; [[compact]] passes false, because a split bucket
+    * would stay fat. Returns `m`'s mapping with those buckets replaced (a
+    * bucket left without rows drops out) and the number of stored rows
+    * dropped, counted by observations on the checkpoint's one job. */
+  private def rewrite(m: Manifest, rewritten: Set[Int], dropped: Option[DataFrame] = None,
+                      added: Option[DataFrame] = None,
+                      split: Boolean = true): (Map[Int, Seq[String]], Long) =
+    if (rewritten.isEmpty) (m.mapping, 0L)
+    else {
+      val stored = readFiles(rewritten.toSeq.sorted.flatMap(m.mapping.getOrElse(_, Nil)), m.masking).get
+      val (read, kept) = (Observation(), Observation())
+      val live = withPart(withBucket(stored, recordedBuckets(m)), m.recordedPcol)
+        .observe(read, count(lit(1)).as("n"))
+      val keep = dropped.fold(live)(live.join(_, Seq(key), "left_anti"))
+        .observe(kept, count(lit(1)).as("n"))
+      val rows = added.fold(keep)(keep.unionByName(_, allowMissingColumns = true)).localCheckpoint()
+      val files = writeData(rows, m.recordedPcol, rewritten.size, if (split) storedBytes(stored) else 0L)
+      ((m.mapping -- rewritten) ++ files,
+        read.get("n").asInstanceOf[Long] - kept.get("n").asInstanceOf[Long])
     }
 
   /** Write `df` (already bucketed/partitioned) into a fresh immutable
@@ -901,23 +961,27 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   /** Full overwrite: new data files + new manifest listing only them
     * (the whole layout is replaced, so the constructor's partition
     * column takes effect, and its bucket count — or, with none, the
-    * count sized from `df`'s bytes). */
+    * count sized from `df`'s bytes). The data files are
+    * version-independent (immutable, unique dir) and only the version
+    * number races, so the data is written once and a conflict retries
+    * the publish alone. */
   def overwrite(df: DataFrame): Unit = {
+    val next = layOut(df)
+    publish(_ => ((), Some(next)))
+  }
+
+  /** `df` written as a new layout, and the manifest that lists its files
+    * alone (its version is the publish step's to number). */
+  private def layOut(df: DataFrame): Manifest = {
     val estimate = estimatedBytes(df)
     val bc = layoutBuckets(estimate)
-    val files = writeData(withPart(withBucket(df, bc), partitionCol), partitionCol, bc,
-      estimate.getOrElse(Long.MaxValue))
-    // data files are version-independent (immutable, unique dir); only
-    // the version number races, so a conflict retries the commit alone
-    withConflictRetry {
-      val v = latestRaw().map(_.version).getOrElse(0L)
-      onBeforeCommit()
-      commit(v + 1, bc, files, partitionCol)
-    }
+    Manifest(0L, Some(bc), partitionCol, writeData(withPart(withBucket(df, bc), partitionCol),
+      partitionCol, bc, estimate.getOrElse(Long.MaxValue)), Set.empty)
   }
 
   /** UPSERT: rows in `df` replace snapshot rows with the same key; all
-    * other snapshot rows are kept (mysql_writer UPSERT semantics).
+    * other snapshot rows are kept (mysql_writer UPSERT semantics). The
+    * first write of an empty store lays it out as [[overwrite]] does.
     * Only the buckets the incoming keys hash into are touched; every
     * other bucket keeps its files verbatim. Per touched bucket, from one
     * bounded collect of the delta's (bucket, key) pairs tested against
@@ -931,93 +995,67 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     *  - bloom-hit and the fold rule fires (large share of the bucket,
     *    too many files, a live mask already — see `maskPlan`): a
     *    key-column-only probe finds the buckets that really collide,
-    *    and those are rewritten copy-on-write through their mask (one
-    *    key-partitioned anti-join + union evaluated once, one new file
-    *    per bucket); the others append.
+    *    and those go through the rewrite step with the delta's rows;
+    *    the others append.
     *
     * All appends — fresh and masked rows — go out in one write job,
     * one file per bucket, with their blooms, key counts and masks built
     * on the driver from the collected pairs. Deltas past
     * [[ProbeKeyBound]] keys skip the blooms and masks and probe every
-    * touched bucket. One manifest publish commits everything.
-    *
-    * Concurrent writers: the manifest publish detects a lost race and
-    * the whole merge re-runs against the winner's state (bounded
-    * attempts, capped backoff) — two interleaved upserts BOTH land, in
-    * some serial order, instead of the loser failing. The loser's
-    * first-attempt data files become unreferenced orphans that
-    * [[vacuum]] reclaims. */
-  def upsert(df: DataFrame): Unit = withConflictRetry(upsertOnce(df))
+    * touched bucket. One manifest publish commits everything; a lost
+    * publish re-runs the whole merge against the winner's state, so two
+    * interleaved upserts both land, in some serial order. */
+  def upsert(df: DataFrame): Unit = publish {
+    case None => ((), Some(layOut(df)))
+    case Some(m) => ((), Some(upserted(m, df)))
+  }
 
-  private def upsertOnce(df: DataFrame): Unit = latestRaw() match {
-    case None => overwrite(df)
-    case Some(m) =>
-      // hash with the count the snapshot was WRITTEN with — a store
-      // opened with a different constructor value must not re-bucket.
-      // Same for the partition column: the RECORDED layout wins (an
-      // unpartitioned snapshot may predate the column entirely);
-      // migrating the layout is an explicit overwrite()/compact-cycle,
-      // never a silent per-upsert drift.
-      val bc = recordedBuckets(m)
-      val pcol = m.recordedPcol
-      val incoming = withPart(withBucket(df, bc), pcol)
-      // The blooms clear most buckets of a fresh-keyed delta without
-      // touching data at all, and masks absorb small replacements, so
-      // a continuously maintained store's ingest stays O(delta): a
-      // delta over a uniform hash touches EVERY bucket, and rewriting
-      // each touched bucket cost ~the whole snapshot per batch
-      // (measured at sf10: a 1% codes delta cost a 23 s full rewrite).
-      // Replays stay safe by construction — a replayed batch's keys
-      // ARE present, so they mask or fold, never duplicate.
-      val p = probe(incoming, m.mapping)
-      val masks = maskPlan(m, p, incoming.schema(key).dataType)
-      lastProbeStats = (p.hits.size, p.cleared.size)
-      val colliding = collisions(m, (p.hits.keySet -- masks.keySet).toSeq.sorted,
-        df.select(key).distinct(), bc)
-      val appending = p.touched -- colliding
-      // appends land UNCLUSTERED (one file per bucket, no partition
-      // dirs): clustering every micro-delta would write one tiny file
-      // per (bucket, value) it touches — thousands per streaming batch
-      // (measured: a 2k-vec add appended ~1200 files). Pruned reads
-      // conservatively include unpartitioned files, so correctness is
-      // unchanged, and the next compact() folds them into the
-      // clustered layout — the standard ingest-then-recluster trade.
-      val inserted =
-        if (appending.isEmpty) Map.empty[Int, Seq[String]]
-        else {
-          val ins = if (colliding.isEmpty) incoming
-            else incoming.filter(!col(BucketCol).isin(colliding.toSeq: _*))
-          writeData(pcol.fold(ins)(_ => ins.drop(PartDir)), None, appending.size, 0L,
-            p.keys.map(_.filter { case (b, _) => appending(b) }), masks)
-        }
-      val merged: Map[Int, Seq[String]] =
-        if (colliding.isEmpty) Map.empty
-        else {
-          val existing = readFiles(colliding.toSeq.sorted
-            .flatMap(m.mapping.getOrElse(_, Nil)), m.masking).get
-          val kept = withPart(withBucket(existing, bc), pcol)
-            .join(df.select(key).distinct(), Seq(key), "left_anti")
-          // schema evolution: a column the incoming frame adds (e.g. a
-          // later code version's batch_id) must land in the snapshot,
-          // null-filled on kept rows — projecting incoming onto kept's
-          // columns would silently drop it forever
-          val rows = kept.unionByName(
-            incoming.filter(col(BucketCol).isin(colliding.toSeq: _*)),
-            allowMissingColumns = true)
-          // checkpointed so the write and both bloom passes read ONE
-          // evaluation of the anti-join
-          writeData(rows.localCheckpoint(), pcol, colliding.size, storedBytes(existing))
-        }
-      // appended buckets keep their existing files AND gain the new
-      // ones; colliding buckets are replaced wholesale
-      val appended = inserted.map { case (b, fs0) =>
-        b -> (m.mapping.getOrElse(b, Nil) ++ fs0)
+  private def upserted(m: Manifest, df: DataFrame): Manifest = {
+    // hash with the count the snapshot was WRITTEN with — a store opened
+    // with a different constructor value must not re-bucket. Same for the
+    // partition column: the RECORDED layout wins (an unpartitioned
+    // snapshot may predate the column entirely); migrating the layout is
+    // an explicit overwrite()/compact-cycle, never a silent per-upsert
+    // drift.
+    val bc = recordedBuckets(m)
+    val pcol = m.recordedPcol
+    val incoming = withPart(withBucket(df, bc), pcol)
+    // The blooms clear most buckets of a fresh-keyed delta without
+    // touching data at all, and masks absorb small replacements, so a
+    // continuously maintained store's ingest stays O(delta): a delta
+    // over a uniform hash touches EVERY bucket, and rewriting each
+    // touched bucket cost ~the whole snapshot per batch (measured at
+    // sf10: a 1% codes delta cost a 23 s full rewrite). Replays stay
+    // safe by construction — a replayed batch's keys ARE present, so
+    // they mask or fold, never duplicate.
+    val p = probe(incoming, m.mapping)
+    val masks = maskPlan(m, p, incoming.schema(key).dataType)
+    lastProbeStats = (p.hits.size, p.cleared.size)
+    val replaced = df.select(key).distinct()
+    val colliding = collisions(m, (p.hits.keySet -- masks.keySet).toSeq.sorted, replaced, bc)
+    val appending = p.touched -- colliding
+    // appends land UNCLUSTERED (one file per bucket, no partition dirs):
+    // clustering every micro-delta would write one tiny file per (bucket,
+    // value) it touches — thousands per streaming batch (measured: a
+    // 2k-vec add appended ~1200 files). Pruned reads conservatively
+    // include unpartitioned files, so correctness is unchanged, and the
+    // next compact() folds them into the clustered layout — the standard
+    // ingest-then-recluster trade.
+    val inserted =
+      if (appending.isEmpty) Map.empty[Int, Seq[String]]
+      else {
+        val ins = if (colliding.isEmpty) incoming
+          else incoming.filter(!col(BucketCol).isin(colliding.toSeq: _*))
+        writeData(pcol.fold(ins)(_ => ins.drop(PartDir)), None, appending.size, 0L,
+          p.keys.map(_.filter { case (b, _) => appending(b) }), masks)
       }
-      val newMasking = if (masks.isEmpty) Set.empty[String]
-        else inserted.values.flatten.map(generationDir).toSet
-      onBeforeCommit()
-      commit(m.version + 1, bc, (m.mapping -- colliding) ++ appended ++ merged, pcol,
-        m.masking ++ newMasking)
+    val (merged, _) = rewrite(m, colliding, Some(replaced),
+      Some(incoming.filter(col(BucketCol).isin(colliding.toSeq: _*))))
+    val newMasking = if (masks.isEmpty) Set.empty[String]
+      else inserted.values.flatten.map(generationDir).toSet
+    // appended buckets keep their existing files AND gain the new ones
+    m.copy(mapping = merged ++ inserted.map { case (b, fs0) => b -> (m.mapping.getOrElse(b, Nil) ++ fs0) },
+      masking = m.masking ++ newMasking)
   }
 
   /** Keyed DELETE: remove every row whose key appears in `keys`; all
@@ -1027,8 +1065,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * only the buckets the keys hash into are considered, the sidecar
     * blooms clear buckets that provably hold none of them (zero I/O),
     * the rest take a key-column-only scan, and only buckets that
-    * actually contain a key are rewritten (anti-join, read through
-    * their masks, every file of the bucket replaced) — O(touched
+    * actually contain a key go through the rewrite step — O(touched
     * buckets), not O(snapshot). A bucket whose every row is deleted
     * drops out of the manifest entirely. Deleting absent keys is a
     * no-op: no rewrite, NO new manifest version (idempotent replays
@@ -1036,37 +1073,23 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * their version's files (snapshot isolation — a takedown becomes
     * visible to NEW reads; [[vacuum]] is what makes the bytes
     * unrecoverable, so run it after legally-binding deletes).
-    * Concurrent writers: same conflict-retry as upsert, each attempt
-    * re-reads the winner's state. Returns rows removed (rows, not
-    * keys — a multi-row-per-key store like a postings table removes
-    * every row of the key). */
-  def delete(keys: DataFrame): Long = withConflictRetry(deleteOnce(keys))
-
-  private def deleteOnce(keys: DataFrame): Long = latestRaw() match {
-    case None => 0L
+    * Concurrent writers: the publish re-runs a lost delete against the
+    * winner's state. Returns rows removed (rows, not keys — a
+    * multi-row-per-key store like a postings table removes every row of
+    * the key). */
+  def delete(keys: DataFrame): Long = publish {
+    case None => (0L, None)
     case Some(m) =>
       val bc = recordedBuckets(m)
-      val pcol = m.recordedPcol
       val doomed = keys.select(key).distinct()
       val p = probe(withBucket(doomed, bc), m.mapping)
       lastProbeStats = (p.hits.size, p.cleared.size)
       // buckets that actually hold a doomed key (key-column-only scan)
       val colliding = collisions(m, p.hits.keySet.toSeq.sorted, doomed, bc)
-      if (colliding.isEmpty) 0L
+      if (colliding.isEmpty) (0L, None)
       else {
-        val existing = readFiles(colliding.toSeq.sorted
-          .flatMap(m.mapping.getOrElse(_, Nil)), m.masking).get
-        val kept = withPart(withBucket(
-          existing.join(doomed, Seq(key), "left_anti"), bc), pcol)
-          .localCheckpoint() // pin counts + write input to ONE evaluation
-        val removed = existing.count() - kept.count()
-        // an all-deleted bucket writes no files and must leave the
-        // manifest; writeData only returns buckets it wrote (kept
-        // holds only colliding buckets' rows — existing read just them)
-        val rewritten = writeData(kept, pcol, colliding.size, storedBytes(existing))
-        onBeforeCommit()
-        commit(m.version + 1, bc, (m.mapping -- colliding) ++ rewritten, pcol, m.masking)
-        removed
+        val (mapping, removed) = rewrite(m, colliding, dropped = Some(doomed))
+        (removed, Some(m.copy(mapping = mapping)))
       }
   }
 
@@ -1078,12 +1101,12 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * a generation per touched bucket, so N batches leave O(N) live
     * files per hot bucket; every reader then pays that open/footer
     * (and mask) cost forever. Compaction is layout-only: rows are
-    * untouched (the merge is a read through the masks + union), readers
-    * of older versions keep their pinned file lists (snapshot
-    * isolation), and the superseded files become vacuum food. Like
-    * every write, the rewrite emits one file per bucket (per partition
-    * value when partitioned), and a compaction never splits a bucket,
-    * however large. Returns the number of buckets compacted.
+    * untouched (the rewrite step with nothing dropped or added),
+    * readers of older versions keep their pinned file lists (snapshot
+    * isolation), and the superseded files become vacuum food. A
+    * compaction never splits a bucket, however large. Returns the
+    * number of buckets compacted; with nothing fat it publishes no
+    * version.
     *
     * `maxBuckets` bounds one call's rewrite to the FATTEST that many
     * buckets — a billions-row store compacts incrementally (each call
@@ -1091,21 +1114,14 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * every over-split bucket in a single monolithic commit; repeat
     * until it returns 0.
     *
-    * Concurrent-writer safety: compaction publishes a manifest like
-    * any writer, so it can lose the commit race to an upsert/delete
-    * that landed between its read and its publish — committing the
-    * stale mapping anyway would resurrect replaced rows. Same
-    * conflict-retry as upsert: each attempt re-reads the winner's
-    * manifest and re-plans (the loser attempt's rewrite files become
-    * vacuum food). Both writers land, in some serial order. */
-  def compact(maxFilesPerBucket: Int = 1, maxBuckets: Int = Int.MaxValue): Int =
-    withConflictRetry(compactOnce(maxFilesPerBucket, maxBuckets))
-
-  private def compactOnce(maxFilesPerBucket: Int, maxBuckets: Int): Int = latestRaw() match {
-    case None => 0
+    * Concurrent-writer safety: compaction can lose the commit race to
+    * an upsert/delete that landed between its read and its publish —
+    * committing the stale mapping anyway would resurrect replaced rows.
+    * The publish re-plans a lost compaction against the winner's
+    * manifest, so both writers land, in some serial order. */
+  def compact(maxFilesPerBucket: Int = 1, maxBuckets: Int = Int.MaxValue): Int = publish {
+    case None => (0, None)
     case Some(m) =>
-      val bc = recordedBuckets(m)
-      val pcol = m.recordedPcol
       val masked = maskedBuckets(m)
       // with a partition column the layout floor is one file per
       // (bucket, partition value), so the threshold applies per value —
@@ -1117,30 +1133,16 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
       // live mask: every read of the bucket pays for it until a fold
       val fat = m.mapping.filter { case (b, files) =>
         if (masked(b)) true
-        else if (pcol.isEmpty) files.size > maxFilesPerBucket
+        else if (m.recordedPcol.isEmpty) files.size > maxFilesPerBucket
         else {
           val groups = files.groupBy(
             _.split('/').find(_.startsWith(s"$PartDir=")).getOrElse(""))
           groups.contains("") || groups.values.exists(_.size > maxFilesPerBucket)
         }
       }.toSeq.sortBy { case (b, files) => (-files.size, b) }
-        .take(maxBuckets).toMap
-      if (fat.isEmpty) 0
-      else {
-        // schema evolution must survive compaction exactly as it
-        // survives upsert: readFiles merges mixed-generation footers
-        // per bucket, and buckets at different schema versions union
-        // with missing columns nulled
-        val merged = fat.keys.toSeq.sorted
-          .map(b => readFiles(fat(b), m.masking).get.withColumn(BucketCol, lit(b)))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-        // no size: a compaction's output is one file per bucket, and a
-        // split bucket would stay fat and be rewritten by every call
-        val rewritten = writeData(withPart(merged, pcol), pcol, fat.size, 0L)
-        onBeforeCommit()
-        commit(m.version + 1, bc, m.mapping ++ rewritten, pcol, m.masking)
-        fat.size
-      }
+        .take(maxBuckets).map(_._1).toSet
+      if (fat.isEmpty) (0, None)
+      else (fat.size, Some(m.copy(mapping = rewrite(m, fat, split = false)._1)))
   }
 
   /** Delete data files no manifest version references, manifests

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.ReplaceFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -135,10 +136,9 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
           // Freeze the width NOW, at the first non-empty append —
           // verified against the history's own witness first (one
           // column-pruned max(band) scan; an empty history witnesses
-          // nothing), then published with the same tmp + rename +
-          // re-read discipline as bandParts (the rename may need a
-          // delete first on no-overwrite filesystems; the re-read
-          // makes every interleaving fail loudly, never silently).
+          // nothing), then replaced atomically (a reader never finds
+          // the meta missing) and re-read, which makes every
+          // interleaving fail loudly, never silently.
           val observed = bands.read() match {
             case None => 0
             case Some(df) =>
@@ -148,13 +148,8 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
             s"index at $dir carries history with bands=$observed per doc; " +
               s"this batch carries $bandsPerDoc — one banding config per " +
               "index (a different writer must use its own directory)")
-          val tmp = new Path(s"$dir/.tmp-meta-${java.util.UUID.randomUUID}")
-          val out = fs.create(tmp, true)
-          try out.write(s"bandParts=$resolvedBandParts\nbands=$bandsPerDoc\n"
+          ReplaceFile(fs, metaPath, s"bandParts=$resolvedBandParts\nbands=$bandsPerDoc\n"
             .getBytes(StandardCharsets.UTF_8))
-          finally out.close()
-          fs.delete(metaPath, false)
-          fs.rename(tmp, metaPath)
           require(readMeta().contains(resolvedBandParts) &&
             readMetaBands().contains(bandsPerDoc),
             s"index at $dir lost the bands=$bandsPerDoc publish race " +
@@ -186,15 +181,10 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
     bNew.select(hb(col("band"), col("h")).as("hb")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
 
-  /** Big-delta controls (see [[candidates]]): once a batch's keys
+  /** Big-delta control (see [[candidates]]): once a batch's keys
     * touch at least this fraction of the band layout, the partition
-    * prune has stopped biting and the delta-key bloom prefilter takes
-    * over on the history side. */
+    * prune has stopped biting and the read warning arms. */
   private val PruneDeadFrac = 0.5
-  /** Bloom FPP for the prefilter — a false positive only reaches the
-    * exact equi-join and dies there, so this buys size, not
-    * correctness (~8.7 bits/key at 0.02). */
-  private val BloomFpp = 0.02
   /** Reads predicted above this warn loudly with the batch-size rule
     * (spec injection point; default 1 GiB so sub-scale batches — which
     * trivially touch every partition of a 64-part test layout — stay
@@ -204,19 +194,6 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
     * dead, and the predicted read bytes of the touched partitions
     * (spec/monitoring). */
   private[graft] var lastCandidateProbe: (Boolean, Long) = (false, 0L)
-  /** Opt-in delta-key bloom prefilter on the history side of a
-    * prune-dead probe. MEASURED OFF by default: at 45M history band
-    * rows on local[32] the bloom lost ~2× to the plain equi-join
-    * (PLANS r13 A/B — build 4-16 s for an 8 MB bloom over 12.8M
-    * delta keys, plus ~6 random probes/row thrashing the shared L3
-    * across 32 threads), because the shuffle it eliminates is
-    * intra-machine memcpy there. The win it buys — only colliding
-    * history rows ever serialize into the join exchange — is
-    * network-bound-cluster shaped; enable it deliberately on
-    * deployments where the band store shuffles across racks, and
-    * measure (the correctness spec pins bloom == plain on identical
-    * input either way: an FP only reaches the exact join and dies). */
-  var bloomPrefilter: Boolean = false
 
   /** Historical candidate pairs for a batch: `(<id>, old_id)` sharing
     * any (band, h) key, this batch's own (replayed) writes excluded.
@@ -237,34 +214,20 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
     *    as the delta grows 50k → 200k → 800k against a 2.8M-doc
     *    history). When the predicted read exceeds
     *    [[warnReadBytesFloor]] the batch warns, naming that rule and
-    *    the layout knob. [[bloomPrefilter]] optionally also cuts the
-    *    history SHUFFLE to key-colliding rows (+ [[BloomFpp]] false
-    *    positives, which the exact equi-join then discards) through
-    *    Spark's codegen `BloomFilterMightContain` over the same
-    *    `xxhash64(band, h)` both sides hash — semantics-preserving by
-    *    construction, but measured a net LOSS on a single node (see
-    *    the field doc), so it is opt-in for network-bound clusters. */
+    *    the layout knob. */
   def candidates(bNew: DataFrame, batchId: Long): DataFrame = {
-    // n = band ROWS per partition (duplicate (band,h) keys counted);
-    // nd = DISTINCT keys per partition — hb is a pure function of
-    // (band,h), so per-partition distincts sum to the global distinct
-    // count, and it is measured on exactly the xxhash64(band,h) value
-    // set the bloom will hold, so the bloom is sized to its true
-    // item count instead of the row count (the r13 ADVICE oversize:
-    // total rows overstate keys whenever docs share band hashes)
+    // n = band ROWS per partition (duplicate (band,h) keys counted)
     val keyed = bNew.groupBy(hb(col("band"), col("h")).as("hb"))
-      .agg(count(lit(1)).as("n"),
-        count_distinct(xxhash64(col("band"), col("h"))).as("nd")).collect()
+      .agg(count(lit(1)).as("n")).collect()
     val parts = keyed.map(_.getInt(0)).toSeq.sorted
     val nRows = keyed.map(_.getLong(1)).sum
-    val nKeys = keyed.map(_.getLong(2)).sum
     // reset up front: every exit (including the empty-store one)
     // reports THIS call, never a previous batch's probe
     lastCandidateProbe = (false, 0L)
     bands.readPartitions(parts) match {
       case None => bNew.select(col(idCol), col(idCol).as("old_id")).limit(0)
-      case Some(hist0) =>
-        val hist1 = excludeBatch(hist0, batchId)
+      case Some(stored) =>
+        val hist = excludeBatch(stored, batchId)
         val pruneDead =
           parts.size >= math.max(1.0, resolvedBandParts * PruneDeadFrac)
         if (pruneDead) {
@@ -279,7 +242,7 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
           lastCandidateProbe = (true, readBytes)
           if (readBytes > warnReadBytesFloor)
             System.err.println(s"[graft] SigIndex.candidates WARNING: this " +
-              s"batch's $nRows band rows ($nKeys distinct keys) touch ${parts.size} of " +
+              s"batch's $nRows band rows touch ${parts.size} of " +
               s"$resolvedBandParts band partitions — the partition prune is " +
               s"dead and the history probe will READ ~$readBytes bytes of " +
               "signature state (columnar, never text). The read is per-batch: " +
@@ -288,22 +251,6 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
               "divide by YOUR band count) to keep the prune biting, or batch " +
               "bigger deltas to amortize it; create the NEXT index with " +
               "bandParts=SigIndex.suggestBandParts(target docs)")
-        }
-        val hist = if (!(pruneDead && bloomPrefilter)) hist1
-        else {
-          val tB = System.nanoTime()
-          val bloom = bNew.select(xxhash64(col("band"), col("h")).as("hk"))
-            .stat.bloomFilter("hk", math.max(nKeys, 1L), BloomFpp)
-          val bos = new java.io.ByteArrayOutputStream()
-          bloom.writeTo(bos)
-          System.err.println(f"[graft] SigIndex bloom prefilter: built in " +
-            f"${(System.nanoTime() - tB) / 1e9}%.2f s, ${bos.size} bytes")
-          import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ofExpr, expression => toExpr}
-          hist1.filter(ofExpr(
-            org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-              org.apache.spark.sql.catalyst.expressions.Literal(
-                bos.toByteArray, org.apache.spark.sql.types.BinaryType),
-              toExpr(xxhash64(col("band"), col("h"))))))
         }
         bNew.join(hist.select(col(idCol).as("old_id"), col("band"), col("h")),
             Seq("band", "h"))

@@ -161,16 +161,6 @@ object ScaleGen {
     if (id % 50 == 1 && id >= 1) { val b = rawVec(id - 1, clustered, dim); b(0) += 0.01f; b }
     else rawVec(id, clustered, dim)
 
-  /** The gaussian-mixture mode whose center [[embVec]](id) perturbs
-    * (a planted dup belongs to its BASE vector's mode). The clustered
-    * corpus's true neighbors are mode-mates by construction, so this
-    * is the ground-truth prune for scales where full brute force is
-    * unaffordable — and the candMult rule's modeSize denominator. */
-  def embMode(id: Long): Int = {
-    val base = if (id % 50 == 1 && id >= 1) id - 1 else id
-    (((base * 0x9E3779B97F4A7C15L) >>> 40) % EmbModes).toInt
-  }
-
   private def writeEmbeddings(spark: org.apache.spark.sql.SparkSession,
                               out: String, copies: Int, clustered: Boolean,
                               dim: Int = 64): Unit = {

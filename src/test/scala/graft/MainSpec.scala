@@ -854,12 +854,11 @@ class MainSpec extends SparkSpec {
       s"in=$base/docs.parquet", s"out=$base/picked", "budget=500"))
     val pk = spark.read.parquet(s"$base/picked")
     assert(picked.rowsOut < 210, "the budget must truncate the over-supplied language")
-    // pruned=true (default) is bit-identical to the exact window form
-    Main.runPipeline(spark, Seq("select-budget",
-      s"in=$base/docs.parquet", s"out=$base/picked_exact", "budget=500", "pruned=false"))
-    val exact = spark.read.parquet(s"$base/picked_exact")
+    // the CLI's pruned form is bit-identical to the exact window form
+    val exact = graft.queries.PipelineQueries.corpusSelectBudgetDocs(
+      spark.read.parquet(s"$base/docs.parquet"), 500L)
     assert(pk.orderBy("doc_id").collect().toSeq ==
-      exact.orderBy("doc_id").collect().toSeq,
+      exact.select(pk.columns.map(col): _*).orderBy("doc_id").collect().toSeq,
       "pruned and exact select-budget must agree bit-identically")
   }
 

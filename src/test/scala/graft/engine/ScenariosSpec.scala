@@ -64,6 +64,29 @@ class ScenariosSpec extends SparkSpec {
     assert(snapshotTags(store) == Map(1L -> Seq(1, 2, 3)))
   }
 
+  test("tag-subset merges keep every stored tag_details in step with its tag_ids (scenarios 2 and 6)") {
+    val store = freshStore()
+    val s = new Scenarios(engine, store)
+    def assertDetailsMatchTags(what: String): Unit =
+      store.read().get
+        .select(col("user_id"), col("tag_ids"), expr("json_object_keys(tag_details)"),
+          get_json_object(col("tag_details"), "$.2.tag_name"))
+        .collect().foreach { r =>
+          assert(r.getSeq[String](2).map(_.toInt).sorted == r.getSeq[Int](1).sorted,
+            s"$what: user ${r.getLong(0)} holds tags ${r.getSeq[Int](1)} but details for ${r.getSeq[String](2)}")
+          if (r.getSeq[Int](1).contains(2)) assert(r.getString(3) == "fresh", s"$what: tag 2's details")
+        }
+    s.fullUsersFullTags(users, rules)
+    // scenario 2 recomputes tag 1 only; user 1 keeps tags 2 and 3 and their details
+    s.fullUsersSpecificTags(users, rules, Set(1))
+    assert(snapshotTags(store).filter(_._1 == 1L) == Map(1L -> Seq(1, 2, 3)))
+    assertDetailsMatchTags("scenario 2")
+    // scenario 6 recomputes tag 3 for user 1 only
+    s.specificUsersSpecificTags(users, rules, Seq(1L), Set(3))
+    assert(snapshotTags(store).filter(_._1 == 1L) == Map(1L -> Seq(1, 2, 3)))
+    assertDetailsMatchTags("scenario 6")
+  }
+
   test("snapshot upsert keeps untouched users and replaces matched keys") {
     val store = freshStore()
     store.overwrite(Seq((7L, Seq(9))).toDF("user_id", "tag_ids"))

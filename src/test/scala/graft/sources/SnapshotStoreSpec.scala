@@ -625,6 +625,22 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(store.versions().size == 3, s"expected 3 versions, got ${store.versions()}")
   }
 
+  test("an upsert that loses the first write of an empty store merges into the winner") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_first").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    val other = new SnapshotStore(spark, dir, buckets = 4)
+    var fired = false
+    store.onBeforeCommit = () =>
+      if (!fired) { fired = true; other.upsert(Seq((2L, "concurrent")).toDF("user_id", "v")) }
+    try store.upsert(Seq((1L, "mine")).toDF("user_id", "v"))
+    finally store.onBeforeCommit = () => ()
+    assert(fired, "the race hook must have fired")
+    val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(1L -> "mine", 2L -> "concurrent"), s"the winner's row must survive, got $got")
+  }
+
   test("delete removes keys O(touched buckets); absent keys are a version-free no-op") {
     val s = spark
     import s.implicits._
@@ -1140,5 +1156,33 @@ class SnapshotStoreSpec extends SparkSpec {
     assert((rows(store.read().get), rows(store.readForKeys(probe).get), store.keys().count()) == intact)
     assert(store.read().get.filter(col("user_id") === 7L).select("v").as[String].collect().toSeq == Seq("u7"),
       "the masked key's superseded row stays hidden")
+  }
+
+  test("writer job counts: each writer runs at most its pinned number of Spark jobs") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft_snap_jobcount").toString
+    def rows(keys: Seq[Long], tag: String) = keys.map(i => (i, s"$tag$i")).toDF("user_id", "v")
+    // (writer, set-up on a fresh 4-bucket store of keys 1-400, the write,
+    // its bound on all jobs, its bound on jobs outside any SQL execution).
+    // The bounds are the measured counts, so a writer that gains a job
+    // fails here; the one bare RDD job of a rewrite is its bloom build.
+    val cases = Seq[(String, SnapshotStore => Unit, SnapshotStore => Any, Int, Int)](
+      ("fresh-key append", _ => (), _.upsert(rows(Seq(1001L, 1002L), "n")), 4, 0),
+      ("masked upsert", _ => (), _.upsert(rows(Seq(7L, 1001L), "u")), 4, 0),
+      ("folding upsert", _ => (), _.upsert(rows(1L to 200L, "u")), 15, 1),
+      ("delete", _ => (), _.delete(Seq(7L, 8L).toDF("user_id")), 15, 1),
+      ("compact", _.upsert(rows(Seq(7L, 1001L), "u")), _.compact(), 8, 1))
+    for (((what, setUp, write, maxJobs, maxRddJobs), i) <- cases.zipWithIndex) {
+      val store = new SnapshotStore(spark, s"$root/$i", buckets = 4)
+      store.overwrite(rows(1L to 400L, "v"))
+      setUp(store)
+      val before = store.versions().last
+      val (_, jobs, _, rddJobs) = recordedWithRdd(write(store))
+      info(s"$what: ${jobs.size} jobs, $rddJobs outside SQL")
+      assert(store.versions().last == before + 1, s"$what: the write commits one version")
+      assert(jobs.size <= maxJobs, s"$what: ${jobs.size} jobs > $maxJobs: $jobs")
+      assert(rddJobs <= maxRddJobs, s"$what: $rddJobs bare RDD jobs > $maxRddJobs")
+    }
   }
 }

@@ -478,7 +478,7 @@ class StreamingSpec extends SparkSpec {
     assert(got == got.sorted, s"must be monotone in expected docs, got $got")
   }
 
-  test("big-delta band probe: the bloom-prefilter path returns exactly the naive join's candidates; the read warning names the batch-size rule") {
+  test("big-delta band probe: the prune-dead path returns exactly the naive join's candidates; the read warning names the batch-size rule") {
     val s = spark
     import s.implicits._
     import graft.dedup.Dedup
@@ -494,20 +494,16 @@ class StreamingSpec extends SparkSpec {
       .withColumn("bh", Dedup.bandHashes(col("sig"), 16, 8))
       .select(col("doc_id"), posexplode(col("bh")).as(Seq("band", "h")))
     // a BIG batch: 25 docs / 7 texts ⇒ ~112 distinct band keys touch
-    // well over half the 64-part layout — the partition prune is dead;
-    // run it through the OPT-IN bloom-prefilter path (the correctness
-    // pin: an FP can only reach the exact join and die there)
+    // well over half the 64-part layout — the partition prune is dead
     val bNewBig = bandsOf((100L until 125L).map(doc).toDF("doc_id", "text"))
       .localCheckpoint()
-    index.bloomPrefilter = true
     val got = index.candidates(bNewBig, batchId = 1).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(index.lastCandidateProbe._1,
       "a batch whose keys cover the layout must report the prune dead")
     assert(index.lastCandidateProbe._2 > 0, "predicted read bytes must be real")
     // ground truth: the plain equi-join against the FULL band store
-    // (no partition prune, no bloom) — the prefilter may only remove
-    // rows the join would drop anyway, so the candidate sets are EQUAL
+    // (no partition prune): the candidate sets are EQUAL
     val full = index.bands.read().get
       .filter(col("batch_id").isNull || col("batch_id") =!= lit(1L))
     val expected = bNewBig
@@ -518,13 +514,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(expected.nonEmpty, "vacuous fixture: no cross-batch collisions")
     assert(got == expected,
-      s"bloom path must equal the naive join:\ngot $got\nexpected $expected")
-    // the DEFAULT (bloom off, measured faster single-node) is the
-    // same set — the two paths differ only in shuffle bytes
-    index.bloomPrefilter = false
-    assert(index.candidates(bNewBig, batchId = 1).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet == expected,
-      "the default prune-dead path must also equal the naive join")
+      s"the prune-dead path must equal the naive join:\ngot $got\nexpected $expected")
     // a SMALL batch (1 doc, ≤16 keys) keeps the pruned fast path
     index.candidates(bandsOf(Seq(doc(200L)).toDF("doc_id", "text")), 2L).count()
     assert(!index.lastCandidateProbe._1, "a small batch must keep the partition prune")
