@@ -15,13 +15,21 @@ import org.apache.spark.sql.functions._
   * rules table → per-source-table quality gate → single-pass tag
   * compute per table → memory merge → snapshot upsert → run statistics.
   *
-  * Usage (all configuration via GRAFT_* env, see [[GraftConfig]]):
+  * [[run]] is graft's one implementation of the reference's six batch
+  * scenarios (scenario_scheduler.py:118-470). All configuration comes
+  * from GRAFT_* env (see [[GraftConfig]]):
   * {{{
-  *   runMain graft.Main full                   # all users × all tags
-  *   runMain graft.Main incremental            # users absent from the snapshot
-  *   runMain graft.Main full tags=1,3,8        # tag subset, merged with snapshot
-  *   runMain graft.Main full users=1,7,13      # user subset
+  *   runMain graft.Main full                       # 1 all users × all tags
+  *   runMain graft.Main full tags=1,3,8            # 2 all users × tag subset, merged with snapshot
+  *   runMain graft.Main incremental                # 3 users absent from the snapshot × all tags
+  *   runMain graft.Main incremental tags=1,3       # 4 users absent from the snapshot × tag subset
+  *   runMain graft.Main full users=1,7,13          # 5 listed users × all tags
+  *   runMain graft.Main full users=1,7 tags=3      # 6 listed users × tag subset, merged with snapshot
   * }}}
+  * The command word may be left out (`full`); any other argument is
+  * refused before a Spark job runs. As in the reference, only scenarios
+  * 2 and 6 merge with the stored tags. A windowed incremental run points
+  * GRAFT_DATA_DIR at the window's partition.
   *
   * The LLM-pipeline half is operable from the same entry point — the
   * scheduler surface the reference gives its tag jobs, extended to the
@@ -32,12 +40,9 @@ import org.apache.spark.sql.functions._
   * [[graft.cli.CorpusCommands]] and [[graft.pipeline.CorpusPipeline]].
   *
   * Unlike the reference — which runs one Spark job per rule and eagerly
-  * counts each result (tag_computer.py:60) — every run here is,
-  * regardless of rule count: one quality-gate aggregation and one tag
-  * scan per source table, one merge shuffle, a pruned snapshot key
-  * probe (incremental runs) or snapshot merge (tag subsets), one
-  * upsert, one pruned validation read, and two stats actions over the
-  * checkpointed result.
+  * counts each result (tag_computer.py:60) — a run's Spark job count
+  * does not grow with the rule count; MainSpec's "tag-run job counts"
+  * spec pins it per scenario.
   */
 object Main {
 
@@ -63,9 +68,20 @@ object Main {
   def run(spark: org.apache.spark.sql.SparkSession, cfg: GraftConfig,
           args: Seq[String]): RunStats = {
     val t0 = System.nanoTime()
-    val command = args.headOption.filterNot(_.contains("=")).getOrElse("full")
-    val tagScope = argIds(args, "tags=").map(_.map(_.toInt).toSet)
-    val userScope = argIds(args, "users=")
+    val (command, scopes) = args match {
+      case Seq(c @ ("full" | "incremental"), rest @ _*) => (c, rest)
+      case _ => ("full", args)
+    }
+    val scopeIds = scopes.map { a =>
+      val (key, list) = a.span(_ != '=')
+      val ids = list.drop(1).split(",", -1).toSeq.map(_.trim.toLongOption)
+      require(Set("tags", "users")(key) && ids.forall(_.exists(i => key == "users" || i.isValidInt)),
+        s"bad argument '$a': a tag run takes [full|incremental] [tags=ids] [users=ids]")
+      key -> ids.flatten
+    }.toMap
+    require(scopeIds.size == scopes.size, s"repeated argument: ${args.mkString(" ")}")
+    val tagScope = scopeIds.get("tags").map(_.map(_.toInt).toSet)
+    val userScope = scopeIds.get("users")
 
     val store = new SnapshotStore(spark, cfg.snapshotPath)
     val engine = cfg.anchorDate.map(TagEngine.at).getOrElse(new TagEngine())
@@ -110,26 +126,25 @@ object Main {
     val profiles = TagMerger.memoryMerge(Seq(assignments)).localCheckpoint()
 
     // incremental = only users absent from the snapshot
-    // (main_scheduler.run_incremental_compute); a tag subset merges
-    // with existing tags so out-of-scope tags survive. keysFor prunes
-    // the snapshot side to the buckets this run's users hash into —
-    // a small nightly delta probes a few buckets of a billions-row
-    // snapshot instead of scanning every live file. Profiles and users
-    // are checkpointed: the key probe, upsert, validation and stats all
-    // read them, and must not re-run the merge shuffle or the anti-join
+    // (main_scheduler.run_incremental_compute). keysFor prunes the
+    // snapshot side to the buckets this run's users hash into — a small
+    // nightly delta probes a few buckets of a billions-row snapshot
+    // instead of scanning every live file. Profiles and users are
+    // checkpointed: the key probe, upsert, validation and stats all read
+    // them, and must not re-run the merge shuffle or the anti-join
     val scopedUsers =
       if (command == "incremental")
         profiles.join(store.keysFor(profiles), Seq("user_id"), "left_anti").localCheckpoint()
       else profiles
-    // the snapshot is only read where a tag subset merges with it, and
-    // only the scoped users' buckets: mergeWithExisting left-joins from
-    // scopedUsers, so rows of other buckets could never match
-    val snap = tagScope.flatMap(_ => store.readForKeys(scopedUsers)) match {
-      case Some(existing) =>
-        TagMerger.mergeWithExisting(scopedUsers, existing.select("user_id", "tag_ids"))
-          .localCheckpoint()
-      case None => scopedUsers
-    }
+    // a tag subset merges with the stored tags so out-of-scope tags
+    // survive — scenarios 2 and 6 only, as in the reference: an
+    // incremental run's users are absent from the snapshot by its
+    // anti-join. Only the scoped users' buckets are read:
+    // mergeWithExisting left-joins from scopedUsers, so rows of other
+    // buckets could never match
+    val existing =
+      if (tagScope.isEmpty || command == "incremental") None else store.readForKeys(scopedUsers)
+    val snap = existing.fold(scopedUsers)(TagMerger.mergeWithExisting(scopedUsers, _).localCheckpoint())
     store.upsert(snap)
     val missing = store.validateWrite(snap)
 
@@ -180,10 +195,6 @@ object Main {
   private def pipelineJson(p: PipelineStats): String =
     s"""{"command":"${p.command}","rows_in":${p.rowsIn},"rows_out":${p.rowsOut},""" +
       s""""duration_sec":${p.durationSec}}"""
-
-  private def argIds(args: Seq[String], prefix: String): Option[Seq[Long]] =
-    args.find(_.startsWith(prefix))
-      .map(_.stripPrefix(prefix).split(",").toSeq.filter(_.nonEmpty).map(_.trim.toLong))
 
   private def statsJson(s: RunStats): String = {
     val hits = s.perTagHits.toSeq.sortBy(_._1)

@@ -24,7 +24,8 @@ final case class TagRule(tagId: Int, tagName: String, tagCategory: String, rule:
   * between N passes over the fact table and one.
   *
   * Input contract: `df` has one row per user (pre-aggregate behavioral
-  * tables first — see Scenarios); `userCol` identifies the user.
+  * tables first); `userCol` identifies the user. The six batch
+  * scenarios that drive it are [[graft.Main.run]]'s arguments.
   */
 final class TagEngine(anchor: Column = current_date()) {
 
@@ -80,7 +81,7 @@ final class TagEngine(anchor: Column = current_date()) {
 
   /** The single-projection heart: array of hit tag ids (sorted,
     * distinct-by-construction since each rule contributes once). */
-  private def hitArray(rules: Seq[TagRule]): Column =
+  private[graft] def hitArray(rules: Seq[TagRule]): Column =
     // array_sort stays although a profiler points at it: ArraySort is
     // a CodegenFallback, interpreted per row and keeping the explode
     // stage out of whole-stage codegen (136 of 664 executor samples of

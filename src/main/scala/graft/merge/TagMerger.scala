@@ -2,7 +2,6 @@ package graft.merge
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{MapType, StringType, StructField, StructType}
 
 /** Tag merging — the Spark-native counterpart of the reference's
   * `TagMerger` / `AdvancedTagMerger` / `UnifiedTagMerger`
@@ -30,36 +29,16 @@ object TagMerger {
   /** Merge new per-user tag arrays with an existing snapshot
     * (advanced_tag_merger.py:20-92): LEFT join — only users present in
     * the new batch are produced (the snapshot writer's upsert keeps
-    * untouched users). `sorted(set(old ∪ new))` per user. When both
-    * frames carry `tag_details` (the JSON map tag_id → {tag_name,
-    * tag_category}), the details merge the same way: the stored entries
-    * of tags the batch did not compute stay and the batch's entries win,
-    * so the keys stay exactly the merged `tag_ids`. */
+    * untouched users). `sorted(set(old ∪ new))` per user. */
   def mergeWithExisting(newTags: DataFrame, existing: DataFrame): DataFrame = {
-    val details = Seq(newTags, existing).forall(_.columns.contains("tag_details"))
-    val e = existing.select(col("user_id") +: col("tag_ids").as("existing_tag_ids") +:
-      (if (details) Seq(col("tag_details").as("existing_tag_details")) else Nil): _*)
-    val merged = newTags.join(e, Seq("user_id"), "left")
+    val e = existing.select(col("user_id"), col("tag_ids").as("existing_tag_ids"))
+    newTags.join(e, Seq("user_id"), "left")
       .withColumn("tag_ids",
         array_sort(array_union(
           coalesce(col("existing_tag_ids"), array().cast("array<int>")),
           col("tag_ids"))))
       .drop("existing_tag_ids")
-    if (!details) merged
-    else {
-      val fresh = from_json(col("tag_details"), DetailsType)
-      val kept = map_filter(coalesce(from_json(col("existing_tag_details"), DetailsType),
-        map().cast(DetailsType)), (k, _) => !array_contains(map_keys(fresh), k))
-      val byTagId = array_sort(map_entries(map_concat(kept, fresh)), (l, r) =>
-        signum(l.getField("key").cast("int") - r.getField("key").cast("int")).cast("int"))
-      merged.withColumn("tag_details", to_json(map_from_entries(byTagId)))
-        .drop("existing_tag_details")
-    }
   }
-
-  /** `tag_details` parsed: tag id → its name and category. */
-  private val DetailsType = MapType(StringType,
-    StructType(Seq(StructField("tag_name", StringType), StructField("tag_category", StringType))))
 
   /** Merge-result validation (tag_merger.py:253-287): structurally
     * sound = one row per user, no null/empty tag arrays. Returns the

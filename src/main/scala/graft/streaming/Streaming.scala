@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.engine.TagRule
+import graft.engine.{TagEngine, TagRule}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -63,16 +63,12 @@ object Streaming {
         col("s.n").as("n"), col("s.items.item").as("items"))
   }
 
-  /** Rule-driven tagging on a stream: the SAME compiled rule Columns
-    * as the batch TagEngine — stateless projection, so it runs on a
+  /** Rule-driven tagging on a stream: the batch TagEngine's own hit
+    * array (sorted tag ids) — stateless projection, so it runs on a
     * stream unchanged (reference tags users in nightly batches; this
     * is the real-time path the reference lacks). */
   def tagStream(events: DataFrame, rules: Seq[TagRule], anchor: org.apache.spark.sql.Column): DataFrame =
-    events.select(
-      col("user_id"),
-      col("ts"),
-      array_compact(array(rules.map(r =>
-        when(r.rule.compile(anchor), lit(r.tagId))): _*)).as("tag_ids"))
+    events.select(col("user_id"), col("ts"), new TagEngine(anchor).hitArray(rules).as("tag_ids"))
       .filter(size(col("tag_ids")) > 0)
 
   /** Stream-stream attribution join: each purchase matched to the same

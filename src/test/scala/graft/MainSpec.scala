@@ -113,6 +113,148 @@ class MainSpec extends SparkSpec {
     assert(fresh == legacy)
   }
 
+  /** [[freshEnv]] with the scenario fixture as its only source table:
+    * users with a registration date, three rules (tag 2 counts days back
+    * from GRAFT_ANCHOR), anchored at 2024-01-10. */
+  private def scenarioEnv(users: Seq[(Long, Long, String, String)] = Seq(
+      (1L, 5000L, "2024-01-09", "ok"), (2L, 100L, "2024-01-01", "ok"), (3L, 2000L, "2023-06-15", "no"))
+  ): (String, GraftConfig) = {
+    val s = spark
+    import s.implicits._
+    val (base, env) = freshEnv()
+    users.toDF("user_id", "assets", "d", "kyc")
+      .withColumn("reg_date", col("d").cast("date")).drop("d")
+      .write.parquet(s"$base/scn_users.parquet")
+    def rule(field: String, op: String, value: String) =
+      s"""{"conditions":[{"field":"$field","operator":"$op","value":$value}]}"""
+    Seq(
+      (1, "rich", "wealth", rule("assets", ">=", "1000")),
+      (2, "fresh", "lifecycle", rule("reg_date", "recent_days", "7")),
+      (3, "verified", "compliance", rule("kyc", "=", "\"ok\"")))
+      .map { case (id, name, cat, json) => (id, name, cat, "scn_users", json) }
+      .toDF("tag_id", "tag_name", "tag_category", "source_table", "rule_json")
+      .write.parquet(s"$base/scn_rules.parquet")
+    (base, GraftConfig.fromEnv(env +
+      ("GRAFT_RULES" -> s"$base/scn_rules.parquet", "GRAFT_ANCHOR" -> "2024-01-10")))
+  }
+
+  test("scenario 1: full users × full tags") {
+    val (_, cfg) = scenarioEnv()
+    Main.run(spark, cfg, Seq("full"))
+    assert(snapshot(cfg) == Map(1L -> List(1, 2, 3), 2L -> List(3), 3L -> List(1)))
+  }
+
+  test("scenario 2: specific tags merge with existing snapshot") {
+    val (_, cfg) = scenarioEnv()
+    Main.run(spark, cfg, Seq("full"))
+    // recompute only tag 1; users keep their other tags
+    Main.run(spark, cfg, Seq("full", "tags=1"))
+    assert(snapshot(cfg) == Map(1L -> List(1, 2, 3), 2L -> List(3), 3L -> List(1)))
+  }
+
+  test("scenario 3: incremental users only tags users absent from snapshot") {
+    val (_, cfg) = scenarioEnv()
+    Main.run(spark, cfg, Seq("full", "users=2,3")) // pre-existing users
+    val out = Main.run(spark, cfg, Seq("incremental"))
+    assert(out.usersTagged == 1L) // only user 1 is new
+    assert(snapshot(cfg) == Map(1L -> List(1, 2, 3), 2L -> List(3), 3L -> List(1)))
+  }
+
+  test("scenario 4: incremental users × specific tags writes only the new users' subset") {
+    val (_, cfg) = scenarioEnv()
+    Main.run(spark, cfg, Seq("full", "users=2,3"))
+    val out = Main.run(spark, cfg, Seq("incremental", "tags=1,2"))
+    assert(out.usersTagged == 1L && out.perTagHits == Map(1 -> 1L, 2 -> 1L))
+    // stored users are not re-tagged: user 3 hits tag 1 and keeps its stored tags
+    assert(snapshot(cfg) == Map(1L -> List(1, 2), 2L -> List(3), 3L -> List(1)))
+  }
+
+  test("scenario 5/6: specific users; 6 merges with existing") {
+    val (_, cfg) = scenarioEnv()
+    Main.run(spark, cfg, Seq("full", "users=1"))
+    assert(snapshot(cfg) == Map(1L -> List(1, 2, 3)))
+    // scenario 6: same user, only tag 3 recomputed — union preserved
+    Main.run(spark, cfg, Seq("full", "users=1", "tags=3"))
+    assert(snapshot(cfg) == Map(1L -> List(1, 2, 3)))
+  }
+
+  test("a tag-subset run over users in 2 of 8 buckets opens only those buckets' files") {
+    val s = spark
+    import s.implicits._
+    val (_, cfg) = scenarioEnv(
+      (1L to 40L).map(i => (i, i * 100L, "2024-01-01", if (i % 2 == 0) "ok" else "no")))
+    val dir = cfg.snapshotPath
+    // an empty overwrite records the layout before any user is written
+    val store = new graft.sources.SnapshotStore(spark, dir, buckets = 8)
+    store.overwrite(Seq.empty[(Long, Seq[Int])].toDF("user_id", "tag_ids"))
+    Main.run(spark, cfg, Seq("full"))
+    val full = snapshot(cfg)
+    // each key's bucket, read off the file that holds it
+    val bucketOf = store.read().get.select(col("user_id"), col("_metadata.file_path")).collect()
+      .map(r => r.getLong(0) -> r.getString(1).split('/').find(_.startsWith("snap_bucket=")).get).toMap
+    val two = bucketOf.values.toSeq.distinct.sorted.take(2).toSet
+    val scoped = bucketOf.collect { case (u, b) if two(b) => u }.toSeq.sorted
+    // every other bucket's data files move away: opening one fails the run
+    val fsys = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val away = store.liveFiles.filterNot(f => two.exists(b => f.contains(s"/$b/")))
+    assert(away.nonEmpty && away.size < store.liveFiles.size)
+    def move(from: String, to: String) =
+      assert(fsys.rename(new org.apache.hadoop.fs.Path(from), new org.apache.hadoop.fs.Path(to)))
+    away.foreach(f => move(s"$dir/$f", s"$dir/$f.away"))
+    // scenario 6: the two buckets' users, tag 1 only
+    try Main.run(spark, cfg, Seq("full", "tags=1", scoped.mkString("users=", ",", "")))
+    finally away.foreach(f => move(s"$dir/$f.away", s"$dir/$f"))
+    // tag 1 recomputed over the same users: every user keeps its tags
+    assert(snapshot(cfg) == full)
+  }
+
+  test("a tag run refuses an argument it does not know, before any Spark job") {
+    val (_, env) = freshEnv()
+    val cfg = GraftConfig.fromEnv(env)
+    Main.run(spark, cfg, Seq("full"))
+    val store = new graft.sources.SnapshotStore(spark, cfg.snapshotPath)
+    val version = store.versions().last
+    val bad = Seq(
+      Seq("incremntal"), Seq("full", "user=1,7"), Seq("corpus-clen", "in=docs"),
+      Seq("full", "full"), Seq("full", "users=1", "extra"), Seq("tags"), Seq("full", "tags="),
+      Seq("full", "users="), Seq("full", "tags=1,x"), Seq("users=1,,2"), Seq("full", "tags=3000000000"),
+      Seq("full", "tags=1", "tags=2"))
+    for (args <- bad) {
+      val (_, jobs, _, _) = recordedWithRdd(intercept[IllegalArgumentException](Main.run(spark, cfg, args)))
+      assert(jobs.isEmpty, s"$args ran ${jobs.size} Spark jobs before it was refused")
+      assert(store.versions().last == version, s"$args moved the snapshot")
+    }
+  }
+
+  test("tag-run job counts: each scenario runs at most its pinned number of Spark jobs") {
+    val s = spark
+    import s.implicits._
+    // (args, bound on all jobs, bound on jobs outside any SQL execution),
+    // each run on a snapshot of users 1-4 after users 5-7 arrive. The
+    // bounds are the measured counts, so a scenario that gains a job
+    // fails here.
+    val cases = Seq(
+      (Seq("full"), 31, 3),
+      (Seq("full", "tags=1"), 33, 3),
+      (Seq("incremental"), 23, 2),
+      (Seq("incremental", "tags=1"), 23, 2),
+      (Seq("full", "users=1,5"), 31, 3),
+      (Seq("full", "users=1,5", "tags=1"), 33, 3))
+    for ((args, maxJobs, maxRddJobs) <- cases) {
+      val (base, env) = freshEnv()
+      val cfg = GraftConfig.fromEnv(env)
+      Main.run(spark, cfg, Seq("full"))
+      Seq((5L, 10L, "ok"), (6L, 2000L, "no"), (7L, 3L, "pending"))
+        .toDF("uid", "assets", "kyc").write.mode("append").parquet(s"$base/app_users.parquet")
+      val (stats, jobs, _, rddJobs) = recordedWithRdd(Main.run(spark, cfg, args))
+      val what = args.mkString(" ")
+      info(s"$what: ${jobs.size} jobs, $rddJobs outside SQL")
+      assert(stats.usersTagged > 0 && stats.missingAfterWrite == 0L, s"$what: $stats")
+      assert(jobs.size <= maxJobs, s"$what: ${jobs.size} jobs > $maxJobs: $jobs")
+      assert(rddJobs <= maxRddJobs, s"$what: $rddJobs bare RDD jobs > $maxRddJobs")
+    }
+  }
+
   test("quality gate skips a table that fails its null-rate threshold") {
     val s = spark
     import s.implicits._

@@ -2,63 +2,16 @@ package graft.sources
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
 
 class SnapshotStoreSpec extends SparkSpec {
 
-  /** Job descriptions and SQL physical plans started while `body` runs.
-    * Listener events arrive asynchronously but in order, so a marker
-    * job run before and after `body` brackets exactly its events. */
+  /** [[recordedWithRdd]] without the bare RDD job count. */
   private def recorded[T](body: => T): (T, Seq[String], Seq[String]) = {
     val (out, jobs, plans, _) = recordedWithRdd(body)
     (out, jobs, plans)
-  }
-
-  /** [[recorded]], plus the number of jobs that ran outside any SQL
-    * execution (bare RDD actions). */
-  private def recordedWithRdd[T](body: => T): (T, Seq[String], Seq[String], Int) = {
-    val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val plans = new ConcurrentLinkedQueue[String]()
-    val rddJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markers = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        val d = props.flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        if (d == "spec-marker") markers.incrementAndGet()
-        else {
-          jobs.add(d)
-          if (props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).isEmpty)
-            rddJobs.incrementAndGet()
-        }
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription)
-        case _ =>
-      }
-    }
-    def drain(): Unit = {
-      val seen = markers.get
-      sc.setJobDescription("spec-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 60000
-      while (markers.get == seen && System.currentTimeMillis() < deadline) Thread.sleep(10)
-      assert(markers.get > seen, "listener never saw the marker job")
-    }
-    sc.addSparkListener(listener)
-    try {
-      drain(); jobs.clear(); plans.clear(); rddJobs.set(0)
-      val out = body
-      drain()
-      (out, jobs.asScala.toSeq, plans.asScala.toSeq, rddJobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   /** The reference read a manifest-resolved read must equal: Spark's
@@ -746,6 +699,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val got = store.read().get.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "a", 2L -> "B", 9L -> "c"))
+    assert(store.keys().as[Long].collect().toSet == Set(1L, 2L, 9L))
     assert(store.validateWrite(Seq((9L, "c")).toDF("user_id", "v")) == 0L)
   }
 
