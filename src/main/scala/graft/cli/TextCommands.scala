@@ -2,6 +2,7 @@ package graft.cli
 
 import graft.queries.SimilarityQueries
 import graft.similarity.{PqIndex, TextIndex}
+import graft.sources.SmallFile
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -160,8 +161,9 @@ private[graft] object TextCommands {
       // name, wall, rows, ok/failed, the generation tokens that
       // answered it, and whether they were WARM (unchanged since the
       // previous batch). Local filesystems don't support append, so
-      // the log is held in memory and rewritten per batch (~100 B a
-      // record); a restarted serve re-reads it first.
+      // the log is held in memory and replaced per batch (~100 B a
+      // record; a reader finds the previous log or the new one, never
+      // an empty file); a restarted serve re-reads it first.
       val logPath = hp(s"$outDir/serve_log.jsonl")
       val logLines = scala.collection.mutable.ArrayBuffer[String]()
       if (fs0.exists(logPath)) {
@@ -194,9 +196,7 @@ private[graft] object TextCommands {
           s""""rows":$rows,"ok":$ok,"warm":$warm,""" +
           s""""text_token":${tok(tTok)},"vec_token":${tok(vTok)}""" +
           err.map(e => s""","error":"${jesc(e.take(300))}"""").getOrElse("") + "}")
-        val out = fs0.create(logPath, true)
-        try out.write((logLines.mkString("\n") + "\n").getBytes(UTF_8))
-        finally out.close()
+        SmallFile.replace(fs0, logPath, (logLines.mkString("\n") + "\n").getBytes(UTF_8))
       }
       def processOne(name: String): Unit = {
         val t1 = System.nanoTime()

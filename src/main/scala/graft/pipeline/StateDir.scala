@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.sources.ReplaceFile
-import org.apache.hadoop.fs.Path
+import graft.sources.SmallFile
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,18 +29,18 @@ private[graft] object StateDir {
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
-  /** Atomic small-text publish through [[graft.sources.ReplaceFile]]
+  /** Atomic small-text publish through [[graft.sources.SmallFile.replace]]
     * ([[writeLongSidecar]] delegates here; the knobs file, the resume
     * plan and the run records use it directly). */
   def writeTextFileAtomic(spark: SparkSession, pathStr: String, content: String): Unit = {
     val p = new Path(pathStr)
-    ReplaceFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, content.getBytes(UTF_8))
+    SmallFile.replace(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, content.getBytes(UTF_8))
   }
 
   /** Frozen-model long-valued sidecars (`<dir>/<name>.txt` — the
     * select threshold/frac, the scrub chunk width/mindocs). Publish
     * is an atomic replace (a reader finds the old value or the new,
-    * never no file: see [[graft.sources.ReplaceFile]]), and the fit
+    * never no file: see [[graft.sources.SmallFile]]), and the fit
     * paths write EVERY sidecar BEFORE committing the
     * data artifact whose _SUCCESS marks the model fitted: a crash
     * mid-fit leaves `fitted` false and the next seed run re-fits —
@@ -93,8 +93,8 @@ private[graft] object StateDir {
     * two cron-overlapping batches (or a batch racing a refit) can
     * interleave seed fits, refit swaps, and supply evidence — each
     * step individually atomic, the composition silently corrupt. The
-    * lease is an atomic create-exclusive file (`FileSystem.create
-    * (overwrite = false)` — exclusive on HDFS and local FS alike);
+    * lease is a file published through [[graft.sources.SmallFile.create]]
+    * (whole, and only if no other writer holds the name);
     * the second writer REFUSES loudly, naming the holder, its age,
     * and both remedies. A crashed holder leaves the file behind:
     * after `ttlMs` (leasettl=, default 24 h; 0 = never auto-break) a
@@ -137,31 +137,7 @@ private[graft] object StateDir {
     val nonce = java.util.UUID.randomUUID().toString
     val content = s"holder=$command pid=${ProcessHandle.current().pid()} " +
       s"acquired_ms=${System.currentTimeMillis()} nonce=$nonce\n"
-    def tryCreate(): Boolean =
-      try {
-        // parent must exist for create(); mkdirs is idempotent
-        fs.mkdirs(p.getParent)
-        if ("file" == fs.getUri.getScheme) {
-          // Hadoop's local FS implements create(overwrite=false) as a
-          // non-atomic exists-then-create; java.io.File.createNewFile
-          // is O_CREAT|O_EXCL — the atomic primitive two same-machine
-          // writers actually race on
-          val f = new java.io.File(p.toUri.getPath)
-          if (!f.createNewFile()) false
-          else {
-            val os = new java.io.FileOutputStream(f)
-            try os.write(content.getBytes(UTF_8))
-            finally os.close()
-            true
-          }
-        } else {
-          val out = fs.create(p, false)
-          try out.write(content.getBytes(UTF_8))
-          finally out.close()
-          true
-        }
-      } catch { case _: java.io.IOException => false }
-    if (!tryCreate()) {
+    if (!createLease(fs, p, content)) {
       val (holder, ageMs) =
         try {
           val st = fs.getFileStatus(p)
@@ -181,7 +157,7 @@ private[graft] object StateDir {
             s"(${ageMs / 1000} s old > leasettl ${ttlMs / 1000} s; $holder) — " +
             "broke it (the holder crashed without releasing)")
           fs.delete(tomb, false)
-          require(tryCreate(),
+          require(createLease(fs, p, content),
             s"$command: lost the race re-acquiring the state lease at $p — " +
               "another writer took it; retry")
         } else
@@ -199,6 +175,16 @@ private[graft] object StateDir {
     (p, nonce)
   }
 
+  /** Publish a lease file with `content` unless one exists. On the local
+    * file system it goes through the raw file system, so a lease carries
+    * no `.crc` that an in-place edit would leave stale. */
+  private def createLease(fs: FileSystem, p: Path, content: String): Boolean =
+    try {
+      SmallFile.create(fs match { case local: LocalFileSystem => local.getRaw; case other => other },
+        p, content.getBytes(UTF_8))
+      true
+    } catch { case _: FileAlreadyExistsException => false }
+
   /** One lease-file reader for the three consumers (acquire's holder
     * line, release's ownership check, pipeline-stats' report) — None
     * when the file is gone; other IO errors propagate to the caller's
@@ -212,8 +198,8 @@ private[graft] object StateDir {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Ownership check IN PLACE first, rename-aside only when the
     // nonce matches: an unconditional rename-aside briefly removes a
-    // SUCCESSOR's lease (rename → check → rename back), and a third
-    // writer acquiring in that window makes the restore rename fail —
+    // SUCCESSOR's lease (rename → check → restore), and a third
+    // writer acquiring in that window makes the restore fail —
     // successor and third writer would both believe they hold the
     // dir. Reading first confines the aside dance to leases we
     // believe are OURS; the post-rename re-verify + restore covers
@@ -234,14 +220,13 @@ private[graft] object StateDir {
         case Some(_) =>
           val aside = new Path(s"${p}.release.$nonce")
           if (fs.rename(p, aside)) {
-            if (readLeaseText(spark, aside).exists(_.contains(s"nonce=$nonce")))
-              fs.delete(aside, false) // ours — released
-            else {
+            val taken = readLeaseText(spark, aside)
+            fs.delete(aside, false) // ours: released; theirs: restored below
+            taken.filterNot(_.contains(s"nonce=$nonce")).foreach { theirs =>
               // the read→rename window: a successor replaced the file
               // between our check and the rename; give theirs back
-              // (if they re-created meanwhile, leave their new one
-              // and just drop the aside copy)
-              if (!fs.rename(aside, p)) fs.delete(aside, false)
+              // (if a writer re-created it meanwhile, leave that one)
+              createLease(fs, p, theirs + "\n")
               System.err.println(s"[graft] state lease at $p was no longer ours " +
                 "(a newer writer broke a stale lease) — restored; this run " +
                 "overstayed its leasettl and may have interleaved with that writer")

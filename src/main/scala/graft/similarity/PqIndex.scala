@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.sources.SmallFile
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -241,45 +242,36 @@ class PqIndex(spark: SparkSession, dir: String,
     // point land on a LOUDLY-unbuilt index, never a silently
     // mismatched generation pair (new models × old codes decode to
     // meaningless cosines with no error anywhere):
-    //   stage models (tmp) → DELETE live models.txt (isBuilt flips
-    //   false — the index is down for the swap; a fresh build was
-    //   never up) → retire a stale tier-less sidecar inside the down
-    //   window → overwrite codes (+ tier) → rename models live (the
-    //   commit; one atomic metadata op).
+    //   DELETE live models.txt (isBuilt flips false — the index is
+    //   down for the swap; a fresh build was never up) → retire a
+    //   stale tier-less sidecar inside the down window → overwrite
+    //   codes (+ tier) → publish models.txt (the commit; one
+    //   create-if-absent publish of the whole file).
     // Rebuild is an operator-scoped stop-the-world for THIS index:
     // CDC add/remove/serve compose concurrently, a model refresh does
     // not (the codes store is snapshot-isolated, but models.txt and
     // the sidecar directory are not versioned with it).
-    val stagedModels = stageModels(model, coarse, rot)
-    try {
-      if (fs.exists(modelPath)) fs.delete(modelPath, false)
-      if (!sq8 && sqStore.exists) fs.delete(new Path(s"$dir/sq8"), true)
-      if (sq8 && shareEncodePass) {
-        // one encode pass feeds both stores (the PQ encode is the
-        // expensive column); both land before the models commit
-        val enc = Pq.encodeIvfPqSq8(corpus, model, coarse, rot).localCheckpoint()
-        try {
-          buildStore.overwrite(enc.select("neighbor_id", "cell", "codes", "cn"))
-          sqStoreWith(bkts).overwrite(enc.select("neighbor_id", "cell", "sq"))
-        } finally enc.unpersist()
-      } else if (sq8) {
-        // scratch-bounded variant: no corpus-sized checkpoint — each
-        // store re-runs the deterministic encode from the corpus scan
-        def enc = Pq.encodeIvfPqSq8(corpus, model, coarse, rot)
+    fs.delete(modelPath, false)
+    if (!sq8 && sqStore.exists) fs.delete(new Path(s"$dir/sq8"), true)
+    if (sq8 && shareEncodePass) {
+      // one encode pass feeds both stores (the PQ encode is the
+      // expensive column); both land before the models commit
+      val enc = Pq.encodeIvfPqSq8(corpus, model, coarse, rot).localCheckpoint()
+      try {
         buildStore.overwrite(enc.select("neighbor_id", "cell", "codes", "cn"))
         sqStoreWith(bkts).overwrite(enc.select("neighbor_id", "cell", "sq"))
-      } else
-        buildStore.overwrite(Pq.encodeIvfPq(corpus, model, coarse, rot))
-      commitModels(stagedModels)
-    } catch {
-      // a failed overwrite (or live-models delete) leaves the index
-      // loudly unbuilt by design — but the staged tmp file has no
-      // other owner and nothing else (vacuum covers only the stores)
-      // would ever reclaim it, so sweep it on the way out
-      case t: Throwable =>
-        try fs.delete(stagedModels, false) catch { case _: java.io.IOException => () }
-        throw t
-    }
+      } finally enc.unpersist()
+    } else if (sq8) {
+      // scratch-bounded variant: no corpus-sized checkpoint — each
+      // store re-runs the deterministic encode from the corpus scan
+      def enc = Pq.encodeIvfPqSq8(corpus, model, coarse, rot)
+      buildStore.overwrite(enc.select("neighbor_id", "cell", "codes", "cn"))
+      sqStoreWith(bkts).overwrite(enc.select("neighbor_id", "cell", "sq"))
+    } else
+      buildStore.overwrite(Pq.encodeIvfPq(corpus, model, coarse, rot))
+    // the build's COMMIT: isBuilt flips true here, after the data
+    // artifacts exist
+    SmallFile.create(fs, modelPath, modelBytes(model, coarse, rot))
     if (minRecall > 0.0) {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val sample = corpus.select(col("id"), col("vec"), xxhash64(col("id")).as("__h"))
@@ -792,26 +784,15 @@ class PqIndex(spark: SparkSession, dir: String,
     }
 
   // models.txt: line-oriented, Float.toString round-trips exactly
-  /** Stage the frozen models to a temp file (the cheap half of the
-    * two-phase build commit — see [[build]]'s ordering note). */
-  private def stageModels(model: Pq.Model, coarse: Similarity.IvfModel,
-                          rotation: Option[Array[Float]]): Path = {
+  private def modelBytes(model: Pq.Model, coarse: Similarity.IvfModel,
+                         rotation: Option[Array[Float]]): Array[Byte] = {
     val sb = new StringBuilder
     sb.append(s"dim=$dim m=${model.m} k=${model.k} subDim=${model.subDim}\n")
     sb.append("codebooks=").append(model.codebooks.mkString(",")).append('\n')
     rotation.foreach(r => sb.append("rotation=").append(r.mkString(",")).append('\n'))
     coarse.centroids.foreach(c => sb.append("centroid=").append(c.mkString(",")).append('\n'))
-    val tmp = new Path(s"$dir/.tmp-models-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(sb.result().getBytes(StandardCharsets.UTF_8)) finally out.close()
-    tmp
+    sb.result().getBytes(StandardCharsets.UTF_8)
   }
-
-  /** Publish staged models — the build's COMMIT (one atomic rename;
-    * [[isBuilt]] flips true here, after the data artifacts exist). */
-  private def commitModels(tmp: Path): Unit =
-    if (!fs.rename(tmp, modelPath))
-      throw new java.io.IOException(s"model publish failed for $modelPath")
 
   private def loadModels(): (Pq.Model, Similarity.IvfModel, Option[Array[Float]]) = {
     require(fs.exists(modelPath), s"no models at $modelPath — build() first")

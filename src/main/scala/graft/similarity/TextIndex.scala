@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.{wordsLower, wordCountLower}
-import graft.sources.ReplaceFile
+import graft.sources.SmallFile
 
 /** Persistent inverted index: the lexical twin of [[PqIndex]] — BM25
   * serving over a term-partitioned postings store.
@@ -463,7 +463,7 @@ class TextIndex(spark: SparkSession, dir: String,
   }
 
   private def saveStats(n: Long, sumDl: Long, parts: Int): Unit =
-    ReplaceFile(fs, statsPath,
+    SmallFile.replace(fs, statsPath,
       s"n_docs=$n sum_dl=$sumDl term_parts=$parts\n".getBytes(StandardCharsets.UTF_8))
 
   private def loadStats(): (Long, Long, Int) = {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
@@ -102,10 +102,13 @@ import SnapshotStore._
   *     replaced or deleted keys, plus the delta's rows of those buckets,
   *     checkpointed once) — each as its data files, then its `.blooms`,
   *     its `.mask` (masked appends only) and its `.files` sidecars;
-  *  4. the PUBLISH STEP: the test hook, a temp manifest, and its rename
-  *     to the base version + 1. A lost publish (the version exists)
-  *     re-runs the write from step 1 against the winner's state, except
-  *     that an [[overwrite]] keeps its data and retries only the publish.
+  *  4. the PUBLISH STEP: the test hook, then the manifest's create-if-
+  *     absent publish as the base version + 1 ([[SmallFile.create]]:
+  *     written whole to a temp, then hard-linked to the version name
+  *     locally or renamed without overwrite elsewhere, so of two writers
+  *     of one version exactly one publishes). A lost publish re-runs the
+  *     write from step 1 against the winner's state, except that an
+  *     [[overwrite]] keeps its data and retries only the publish.
   * A write with nothing to change (a delete of absent keys, a
   * compaction with nothing fat) publishes no version.
   *
@@ -135,7 +138,6 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private val BucketCol = "snap_bucket"
   private val PartDir = "snap_part"
   private val ManifestPrefix = "manifest-"
-  private val TmpManifestPrefix = ".tmp-manifest-"
   private val BloomFile = ".blooms"
   private val FilesFile = ".files"
   private val MaskFile = ".mask"
@@ -235,47 +237,28 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private[sources] def latestManifest(): Option[(Long, Map[Int, Seq[String]])] =
     latestRaw().map(m => (m.version, m.mapping))
 
-  /** Publish a new manifest version: write to a unique temp name, then
-    * a single-file rename — the one atomic primitive object stores
-    * give us (locally: POSIX rename). `masking` names the generations
-    * whose masks readers must apply; a generation with no file left in
+  /** Publish a new manifest version through [[SmallFile.create]], which
+    * writes it whole and publishes it only if no writer published the
+    * version first; a lost race throws [[CommitConflict]] and leaves the
+    * winner's manifest as it is. `masking` names the generations whose
+    * masks readers must apply; a generation with no file left in
     * `mapping` drops out of the header. */
   private[sources] def commit(version: Long, bucketCount: Int,
                               mapping: Map[Int, Seq[String]],
                               pcol: Option[String] = None,
                               masking: Set[String] = Set.empty): Unit = {
-    fs.mkdirs(new Path(path))
     val liveGens = mapping.values.flatten.map(generationDir).toSet
     val header = (s"#buckets=$bucketCount" +: pcol.map(c => s"#pcol=$c").toSeq) ++
       masking.filter(liveGens).toSeq.sorted.map(MaskMarker + _)
     val body = (header ++ mapping.toSeq.sortBy(_._1)
       .flatMap { case (b, files) => files.sorted.map(f => s"$b\t$f") })
       .mkString("\n")
-    val tmp = new Path(path, s"$TmpManifestPrefix${java.util.UUID.randomUUID}")
     val dst = manifestPath(version)
-    try {
-      val out = fs.create(tmp, true)
-      try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      // the rename IS the publish — a silent failure (concurrent writer,
-      // cross-FS move, transient error) would leave the new data files
-      // as unreferenced orphans that vacuum() later deletes, i.e. a
-      // silently lost write. The existence check matters on POSIX, where
-      // rename REPLACES an existing destination and returns true — that
-      // would overwrite a concurrent writer's committed manifest (lost
-      // update) rather than fail. Object stores with atomic
-      // if-none-match publish make the check-then-rename race-free;
-      // locally it narrows the race to the commit instant.
-      if (fs.exists(dst))
+    try SmallFile.create(fs, dst, body.getBytes(StandardCharsets.UTF_8))
+    catch {
+      case _: FileAlreadyExistsException =>
         throw new CommitConflict(
           s"manifest version $version already published — concurrent writer conflict ($dst)")
-      if (!fs.rename(tmp, dst))
-        throw new CommitConflict(
-          s"manifest commit conflict/failure for version $version ($tmp -> $dst)")
-    } catch {
-      case NonFatal(e) =>
-        // a temp this cannot delete is left to vacuum's age gate
-        scala.util.Try(fs.delete(tmp, false))
-        throw e
     }
   }
 
@@ -1147,10 +1130,13 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
 
   /** Delete data files no manifest version references, manifests
     * older than the newest `keepVersions`, and the temp manifests of
-    * failed commits. `minAgeMs` is the retention grace: files younger
-    * than it are NEVER deleted, because an in-flight writer may have
-    * produced them but not yet committed its manifest (the same reason
-    * every lakehouse vacuum has a retention window). Run out-of-band.
+    * failed commits (every [[SmallFile.TmpPrefix]] name, which covers
+    * the `.tmp-manifest-` temps of stores written before the commit
+    * went through [[SmallFile]]). `minAgeMs` is the retention grace:
+    * files younger than it are NEVER deleted, because an in-flight
+    * writer may have produced them but not yet committed its manifest
+    * (the same reason every lakehouse vacuum has a retention window).
+    * Run out-of-band.
     * Returns the number of data files deleted. */
   def vacuum(keepVersions: Int = 1, minAgeMs: Long = 3600L * 1000L): Long =
     versions().lastOption match {
@@ -1175,7 +1161,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
             val p = new Path(entry.getPath, sidecar)
             if (fs.exists(p) && fs.getFileStatus(p).getModificationTime < cutoff) fs.delete(p, false)
           }
-        } else if (entry.getModificationTime < cutoff && (name.startsWith(TmpManifestPrefix) ||
+        } else if (entry.getModificationTime < cutoff && (name.startsWith(SmallFile.TmpPrefix) ||
           name.startsWith(ManifestPrefix) &&
             !keep.contains(name.stripPrefix(ManifestPrefix).stripSuffix(".txt").toLong))) {
           // a temp manifest this old is a commit that failed or crashed

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.sources.ReplaceFile
-import org.apache.hadoop.fs.Path
+import graft.sources.SmallFile
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
@@ -89,32 +89,27 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
         s"opened with $bandParts")
     recorded.getOrElse(if (bandParts > 0) bandParts else 64)
   }
-  private def ensureMeta(bandsPerDoc: Int): Unit =
-    if (!fs.exists(metaPath)) {
-      val tmp = new Path(s"$dir/.tmp-meta-${java.util.UUID.randomUUID}")
-      val out = fs.create(tmp, true)
-      try {
-        val b = bandsPerDoc
-        // an empty first batch can't witness the banding width; leave
-        // the line out rather than freeze a wrong 0 (delete's scan
-        // fallback covers a meta without it, same as legacy indexes)
-        val bandsLine = if (b > 0) s"bands=$b\n" else ""
-        out.write(s"bandParts=$resolvedBandParts\n$bandsLine"
+  /** The first writer publishes meta.txt through [[SmallFile.create]];
+    * of concurrent first writers one wins, and the others check the
+    * winner's meta like any later writer — a loser with a different
+    * explicit bandParts would hash band rows with a modulus meta.txt
+    * doesn't record (the silent candidate miss this file exists to
+    * prevent), so it fails loudly instead. */
+  private def ensureMeta(bandsPerDoc: Int): Unit = {
+    // an empty first batch can't witness the banding width; leave the
+    // line out rather than freeze a wrong 0 (delete's scan fallback
+    // covers a meta without it, same as legacy indexes)
+    val bandsLine = if (bandsPerDoc > 0) s"bands=$bandsPerDoc\n" else ""
+    val published = !fs.exists(metaPath) &&
+      (try {
+        SmallFile.create(fs, metaPath, s"bandParts=$resolvedBandParts\n$bandsLine"
           .getBytes(StandardCharsets.UTF_8))
-      } finally out.close()
-      fs.rename(tmp, metaPath)
-      // two concurrent FIRST writers with different explicit bandParts
-      // can both pass the exists-check; the loser's rename silently
-      // fails on no-overwrite filesystems and it would proceed to hash
-      // band rows with a modulus meta.txt doesn't record — the silent
-      // candidate miss this file exists to prevent. Re-reading after
-      // the rename makes the loser fail loudly whatever rename did.
-      require(readMeta().contains(resolvedBandParts),
-        s"index at $dir lost the bandParts=$resolvedBandParts publish race " +
-          s"(recorded: ${readMeta().getOrElse(-1)}) — reopen with bandParts=0")
-    } else {
+        true
+      } catch { case _: FileAlreadyExistsException => false })
+    if (!published) {
       require(readMeta().forall(_ == resolvedBandParts),
-        s"index at $dir changed bandParts concurrently")
+        s"index at $dir records bandParts=${readMeta().getOrElse(-1)}, not " +
+          s"$resolvedBandParts — another writer published meta.txt first; reopen with bandParts=0")
       // banding WIDTH gets the same loud-refusal discipline as
       // bandParts: a writer with a different width (e.g. a MinHash
       // 16-band and an RHP 6-band pipeline sharing one dir) would
@@ -148,7 +143,7 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
             s"index at $dir carries history with bands=$observed per doc; " +
               s"this batch carries $bandsPerDoc — one banding config per " +
               "index (a different writer must use its own directory)")
-          ReplaceFile(fs, metaPath, s"bandParts=$resolvedBandParts\nbands=$bandsPerDoc\n"
+          SmallFile.replace(fs, metaPath, s"bandParts=$resolvedBandParts\nbands=$bandsPerDoc\n"
             .getBytes(StandardCharsets.UTF_8))
           require(readMeta().contains(resolvedBandParts) &&
             readMetaBands().contains(bandsPerDoc),
@@ -157,6 +152,7 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
         case None => // empty batch: width stays unfrozen, as at create
       }
     }
+  }
 
   private def hb(band: Column, h: Column): Column =
     pmod(hash(band, h), lit(resolvedBandParts))

@@ -26,9 +26,9 @@ class PqIndexSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft_pqindex_sweep").toString
     // poison the sidecar path: a plain FILE where the sq8 store's
     // directory would go makes the tier overwrite fail at execution —
-    // AFTER stageModels, which is exactly the crash point that used
-    // to leak the staged .tmp-models-* file forever (nothing,
-    // including vacuum, covered it)
+    // after the models are serialized and before their commit, the
+    // crash point that used to leak a staged models temp forever
+    // (nothing, including vacuum, covered it)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/idx"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$base/idx", "sq8"), "not a directory\n")
@@ -36,7 +36,7 @@ class PqIndexSpec extends SparkSpec {
     intercept[Exception](idx.build(corpus))
     assert(!idx.isBuilt, "a failed build must stay loudly unbuilt")
     val leaked = new java.io.File(s"$base/idx").listFiles()
-      .filter(_.getName.startsWith(".tmp-models-"))
+      .filter(_.getName.contains(graft.sources.SmallFile.TmpPrefix))
     assert(leaked.isEmpty,
       s"a failed build must sweep its staged models: ${leaked.mkString(", ")}")
   }

@@ -2,9 +2,11 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.pipeline.StateDir
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileAlreadyExistsException, LocalFileSystem, Path}
 import java.nio.file.Files
+import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import scala.util.{Failure, Success, Try}
 
 class ReplaceFileSpec extends SparkSpec {
 
@@ -47,8 +49,40 @@ class ReplaceFileSpec extends SparkSpec {
     val out = fs.create(target, true)
     try out.write("n_docs=1\n".getBytes("UTF-8")) finally out.close()
     assert(Files.exists(dir.resolve(".stats.txt.crc")), "setup: the first write leaves a checksum")
-    ReplaceFile(fs, target, "n_docs=22\n".getBytes("UTF-8"))
+    SmallFile.replace(fs, target, "n_docs=22\n".getBytes("UTF-8"))
     val in = fs.open(target)
     try assert(new String(in.readAllBytes(), "UTF-8") == "n_docs=22\n") finally in.close()
+  }
+
+  test("create: of 8 threads racing for one name, exactly one publishes and a read returns its bytes") {
+    val dir = Files.createTempDirectory("graft_create_race")
+    val fs = new Path(dir.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .asInstanceOf[LocalFileSystem]
+    val writers = 8
+    val pool = Executors.newFixedThreadPool(writers)
+    try (1 to 200).foreach { round =>
+      val target = new Path(dir.resolve(s"v$round.txt").toString)
+      val start = new CyclicBarrier(writers)
+      // contents of different lengths, so a read pairing one writer's
+      // bytes with another's checksum cannot pass
+      def bytes(w: Int) = s"round=$round writer=$w ${"x" * w}\n".getBytes("UTF-8")
+      val outcomes = (0 until writers).map { w =>
+        pool.submit[Try[Unit]] { () =>
+          start.await(60, TimeUnit.SECONDS)
+          Try(SmallFile.create(fs, target, bytes(w)))
+        }
+      }.map(_.get(60, TimeUnit.SECONDS))
+      val winners = outcomes.zipWithIndex.collect { case (Success(_), w) => w }
+      assert(winners.size == 1, s"round $round: winners ${winners.mkString(",")}")
+      outcomes.collect { case Failure(e) => e }.foreach { e =>
+        assert(e.isInstanceOf[FileAlreadyExistsException], s"round $round: a loser threw $e")
+      }
+      assert(fs.exists(fs.getChecksumFile(target)), s"round $round: the winner's file has no .crc")
+      val in = fs.open(target)
+      try assert(in.readAllBytes().sameElements(bytes(winners.head)), s"round $round: not the winner's bytes")
+      finally in.close()
+    } finally pool.shutdownNow()
+    val temps = Files.list(dir).filter(_.getFileName.toString.contains(SmallFile.TmpPrefix)).count()
+    assert(temps == 0L, s"$temps temp files (or their checksums) left behind")
   }
 }

@@ -176,6 +176,39 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(!fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith(".tmp-manifest-")))
   }
 
+  test("writers on their own threads and stores upsert disjoint keys at once: every key survives, versions stay contiguous") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_threads").toString + "/snap"
+    new SnapshotStore(spark, dir, buckets = 4).overwrite(Seq((0L, "seed")).toDF("user_id", "v"))
+    val writers = 4
+    val rounds = 3
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    val expected = scala.collection.mutable.Map(0L -> "seed")
+    try for (round <- 1 to rounds) {
+      // every writer's first commit of the round starts at one instant
+      val atCommit = new java.util.concurrent.CyclicBarrier(writers)
+      val deltas = (0 until writers).map { w =>
+        (0 until 5).map(i => ((round * writers + w) * 10L + i, s"r$round-w$w"))
+      }
+      deltas.foreach(expected ++= _)
+      val done = deltas.map { rows =>
+        val store = new SnapshotStore(spark, dir)
+        var first = true
+        store.onBeforeCommit = () =>
+          if (first) { first = false; atCommit.await(60, java.util.concurrent.TimeUnit.SECONDS) }
+        pool.submit[Unit](() => store.upsert(rows.toDF("user_id", "v")))
+      }
+      done.foreach(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    val store = new SnapshotStore(spark, dir)
+    val got = store.read().get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == expected.toMap,
+      s"lost keys: ${(expected.keySet -- got.keySet).toSeq.sorted.mkString(",")}")
+    assert(store.versions() == (1L to 1L + writers * rounds),
+      s"versions ${store.versions().mkString(",")}")
+  }
+
   test("vacuum removes a failed commit's temp manifest once it is older than the grace") {
     val s = spark
     import s.implicits._
