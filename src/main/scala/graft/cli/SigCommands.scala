@@ -2,6 +2,7 @@ package graft.cli
 
 import graft.pipeline.StateDir
 import graft.pipeline.StateDir.pathExists
+import graft.sources.DirSwap
 import graft.streaming.SigIndex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
@@ -64,13 +65,12 @@ private[graft] object SigCommands {
     // surface must not be silently skipped).
     //
     // Batch-dir trees (survivors, shards, packs) are plain parquet
-    // (no manifest), so each touched batch dir is rewritten via stage
-    // → park → swap → delete-park, all dot-prefixed (the default
-    // PathFilter hides them from every reader), and a repair pass at
-    // entry finishes whatever a crashed sweep left: the park IS the
-    // original, so original present → drop the stale park; original
-    // missing → restore the park; orphan stages are always dropped
-    // and redone. A re-run is idempotent end to end.
+    // (no manifest), so each touched batch dir is replaced whole by
+    // graft.sources.DirSwap (every name it writes is dot-prefixed, so
+    // the default PathFilter hides it from every reader), and a
+    // repair pass at entry finishes whatever a crashed sweep left: a
+    // completed rewrite goes live, an unfinished one is dropped and
+    // redone. A re-run is idempotent end to end.
     //
     // Pack rewrite semantics: packs never span batches and the
     // (batch, pack_id) key is load-bearing for a training job, so a
@@ -111,32 +111,10 @@ private[graft] object SigCommands {
         var swSigDocs = 0L; var swSigBands = 0L; var swPostings = 0L
         var swVectors = 0L; var swSurvivors = 0L; var swShardRows = 0L
         var swPackMembers = 0L
-        // finish whatever a crashed prior sweep left under a batch-dir
-        // tree (see the takedown doc); shared by survivors/shards/packs
-        def repairSweep(root: String): Unit =
-          fsT.listStatus(hpT(root)).foreach { st =>
-            val n = st.getPath.getName
-            if (n.startsWith(".takedown-old-")) {
-              val orig = hpT(s"$root/${n.stripPrefix(".takedown-old-")}")
-              if (fsT.exists(orig)) fsT.delete(st.getPath, true)
-              else require(fsT.rename(st.getPath, orig),
-                s"takedown: could not restore parked dir $n under $root")
-            } else if (n.startsWith(".takedown-stage-"))
-              fsT.delete(st.getPath, true)
-          }
-        // stage → park → swap → delete-park for one batch dir; the
-        // caller writes the staged replacement (already materialized —
-        // never a plan still reading the files being swapped)
-        def swapIn(root: String, b: String)(writeStage: String => Unit): Unit = {
-          val p = s"$root/batch=$b"
-          val stage = s"$root/.takedown-stage-batch=$b"
-          writeStage(stage)
-          val park = s"$root/.takedown-old-batch=$b"
-          require(fsT.rename(hpT(p), hpT(park)), s"takedown: could not park $p")
-          require(fsT.rename(hpT(stage), hpT(p)),
-            s"takedown: could not swap staged rows into $p")
-          fsT.delete(hpT(park), true)
-        }
+        // finish whatever a crashed prior sweep left, before any read
+        // of the batch-dir trees (see the takedown doc)
+        Seq("survivors", "shards", "packs").map(t => hpT(s"$state/$t"))
+          .filter(fsT.exists).foreach(DirSwap.repairAll(fsT, _))
         val doVacuum = opts.getOrElse("vacuum", "false").toBoolean
         val ageMs = opts.getOrElse("agems", "0").toLong
         // validate every layout up front (schema discovery / marker
@@ -215,14 +193,13 @@ private[graft] object SigCommands {
           val root = s"$state/$tree"
           if (!pathExists(spark, root)) 0L
           else {
-            repairSweep(root)
             val touched = spark.read.parquet(root).join(ids, Seq("doc_id"), "left_semi")
               .groupBy("batch").agg(count(lit(1)).as("n")).collect()
             touched.map(r => r.get(0).toString).sorted.foreach { b =>
               val p = s"$root/batch=$b"
               val kept = spark.read.parquet(p)
                 .join(ids, Seq("doc_id"), "left_anti").localCheckpoint()
-              swapIn(root, b)(stage => write(kept, p, stage))
+              DirSwap.swap(fsT, hpT(p))(dir => write(kept, p, dir.toString))
               kept.unpersist()
               System.err.println(s"[graft] takedown: $tree batch=$b rewritten")
             }
@@ -248,7 +225,6 @@ private[graft] object SigCommands {
         // keep-pack_id / re-encode rationale)
         val packsRoot = s"$state/packs"
         if (pathExists(spark, packsRoot)) {
-          repairSweep(packsRoot)
           val membersAll = spark.read.parquet(packsRoot)
             .select(col("batch"), col("pack_id"),
               posexplode(col("doc_ids")).as(Seq("pos", "doc_id")))
@@ -304,8 +280,7 @@ private[graft] object SigCommands {
               // untouched packs ride along verbatim
               val kept = packs.join(touchedPacks, Seq("pack_id"), "left_anti")
                 .unionByName(rebuilt).localCheckpoint()
-              swapIn(packsRoot, b)(stage =>
-                kept.write.mode("overwrite").parquet(stage))
+              DirSwap.swap(fsT, hpT(p))(dir => kept.write.mode("overwrite").parquet(dir.toString))
               kept.unpersist(); withText.unpersist()
               System.err.println(s"[graft] takedown: packs batch=$b rewritten")
             }
@@ -327,24 +302,14 @@ private[graft] object SigCommands {
         val asofMs = opts.get("asof").map(_.toLong)
           .getOrElse(System.currentTimeMillis())
         val tdDir = s"$state/takedowns/td=$fp"
-        val tdStage = s"$state/takedowns/.td-stage-$fp"
-        def hasParquet(d: String) = pathExists(spark, d) &&
-          fsT.listStatus(hpT(d)).exists(f =>
-            f.getPath.getName.endsWith(".parquet") && f.getLen > 0)
-        // entry-time repair (the sweep's own stage/swap discipline,
-        // applied to the journal): the record is staged then swapped
-        // below, so a crash ANYWHERE in the overwrite leaves either
-        // the old record in place or the newer cumulative record in
-        // the stage — adopt the stage when present (it is strictly
-        // newer), never reset the totals to this replay's zeros and
-        // never die on a parquet-less td= dir forever after
-        if (hasParquet(tdStage)) {
-          fsT.delete(hpT(tdDir), true)
-          require(fsT.rename(hpT(tdStage), hpT(tdDir)),
-            s"takedown: could not repair journal record at $tdDir")
-        } else fsT.delete(hpT(tdStage), true)
+        // the record is replaced by the sweep's own swap, so a crash
+        // ANYWHERE in the overwrite leaves the old record or the newer
+        // cumulative one staged; repair adopts a staged record (it is
+        // strictly newer) before the totals are read, never resetting
+        // them to this replay's zeros
+        DirSwap.repair(fsT, hpT(tdDir))
         val priorRow: Option[Row] =
-          if (!hasParquet(tdDir)) None
+          if (!pathExists(spark, s"$tdDir/_SUCCESS")) None
           else spark.read.parquet(tdDir).take(1).headOption
         val prior: Map[String, Long] = priorRow match {
           case None => Map.empty
@@ -361,18 +326,17 @@ private[graft] object SigCommands {
         def cum(c: String, v: Long) = lit(v + prior.getOrElse(c, 0L)).as(c)
         // prior counts were COLLECTED above (driver literals), so the
         // overwrite never reads the files it replaces
-        spark.range(1).select(
-          lit(fp).as("td_key"), lit(asofMs).as("asof_ms"),
-          lit(nIds).as("n_ids"), cum("rows_removed", removed),
-          cum("sig_docs", swSigDocs), cum("sig_band_rows", swSigBands),
-          cum("posting_rows", swPostings), cum("vectors", swVectors),
-          cum("survivor_rows", swSurvivors), cum("shard_rows", swShardRows),
-          cum("pack_members", swPackMembers),
-          lit(doVacuum || priorVacuumed).as("vacuumed"))
-          .coalesce(1).write.mode("overwrite").parquet(tdStage)
-        fsT.delete(hpT(tdDir), true)
-        require(fsT.rename(hpT(tdStage), hpT(tdDir)),
-          s"takedown: could not swap journal record into $tdDir")
+        DirSwap.swap(fsT, hpT(tdDir)) { dir =>
+          spark.range(1).select(
+            lit(fp).as("td_key"), lit(asofMs).as("asof_ms"),
+            lit(nIds).as("n_ids"), cum("rows_removed", removed),
+            cum("sig_docs", swSigDocs), cum("sig_band_rows", swSigBands),
+            cum("posting_rows", swPostings), cum("vectors", swVectors),
+            cum("survivor_rows", swSurvivors), cum("shard_rows", swShardRows),
+            cum("pack_members", swPackMembers),
+            lit(doVacuum || priorVacuumed).as("vacuumed"))
+            .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+        }
         removed
       }
       a.done(nIds, removed)

@@ -166,11 +166,8 @@ private[graft] object TextCommands {
       // an empty file); a restarted serve re-reads it first.
       val logPath = hp(s"$outDir/serve_log.jsonl")
       val logLines = scala.collection.mutable.ArrayBuffer[String]()
-      if (fs0.exists(logPath)) {
-        val in = fs0.open(logPath)
-        val prior = try new String(in.readAllBytes(), UTF_8) finally in.close()
-        logLines ++= prior.linesIterator.filter(_.nonEmpty)
-      }
+      if (fs0.exists(logPath))
+        logLines ++= SmallFile.read(fs0, logPath).linesIterator.filter(_.nonEmpty)
       def jesc(s0: String): String =
         s0.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
                      case '\n' => "\\n"; case '\r' => ""

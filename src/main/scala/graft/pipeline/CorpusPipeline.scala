@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.cli.Args
 import graft.pipeline.StateDir._
 import graft.queries.PipelineQueries
+import graft.sources.DirSwap
 import graft.streaming.SigIndex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
@@ -357,12 +358,12 @@ private[graft] object CorpusPipeline {
       sc("select_threshold_milli", "select", "threshold")
       sc("select_frac", "select", "fracmicro", micro = true)
       sc("select_seed_keep", "select", "seedkeepmicro", micro = true)
-      // interrupted = the state the refusal guard keys on: an aside
-      // generation WITHOUT a live one. A completed swap that crashed
-      // only in its post-commit aside cleanup is healthy, not
+      // interrupted = the state the refusal guard keys on: a parked
+      // generation WITHOUT a live one (DirSwap.interrupted). A swap
+      // that crashed after its staged dir went live is healthy, not
       // interrupted — flagging it would tell the operator to re-run
       // a refit the model doesn't need
-      if (!fitted(Stages.scrub) && pathExists(spark, s"$state/scrub/spans.old.tmp/_SUCCESS"))
+      if (!fitted(Stages.scrub) && swapInterrupted(spark, s"$state/scrub/spans"))
         kv += "scrub_interrupted_refit" -> "true"
       sc("scrub_w", "scrub", "chunkwords")
       sc("scrub_mindocs", "scrub", "mindocs")
@@ -370,14 +371,13 @@ private[graft] object CorpusPipeline {
       kv += "scrub_freq_batches" -> cntBatches(s"$state/scrub/freq").toString
       kv += "scrub_emergent_evidence" -> pathExists(spark, s"$state/scrub/emergent").toString
       val thrDir = s"$state/mix/thresholds"
-      val mixFit = fitted(Stages.mix)
-      if (mixFit) {
+      if (fitted(Stages.mix)) {
         val mk = readKnobsFile(spark, thrDir)
         kv += "mix_budget" -> mk("budget").toString
         kv += "mix_alpha" -> (mk("alphamicro") / 1e6).toString
         kv += "mix_tokens" -> (if (mk("bpemode") == 1L) "bpe" else "pre")
       }
-      if (!mixFit && pathExists(spark, s"$thrDir.old.tmp/$KnobsFile"))
+      if (swapInterrupted(spark, thrDir))
         kv += "mix_interrupted_refit" -> "true"
       sc("mix_seed_keep", "mix", "seedkeepmicro", micro = true)
       kv += "mix_supply_batches" -> cntBatches(s"$state/mix/supply").toString
@@ -422,15 +422,12 @@ private[graft] object CorpusPipeline {
       // batches read AND write — same exclusive-writer lease
       val ttl = a.opts.getOrElse("leasettl", DefaultLeaseTtlMs.toString).toLong
       withStateLease(spark, a.req("state"), "scrub-refit", ttl) { _ =>
-        // a refit that crashed between its two swap renames leaves
-        // the old generation at .old.tmp and no live spans — that
-        // still counts as "a model exists" (the fit knobs live in
-        // scrState sidecars, which survive); this re-run completes
-        // the swap from the accumulated evidence
-        val spansDataDir =
-          if (pathExists(spark, s"$spansPath/_SUCCESS")) spansPath
-          else s"$spansPath.old.tmp"
-        require(pathExists(spark, s"$spansDataDir/_SUCCESS"),
+        // a refit that crashed mid-swap is finished first (its staged
+        // spans go live, or the parked ones come back), so a model
+        // that still exists is found at spansPath
+        val fs = new Path(spansPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        DirSwap.repair(fs, new Path(spansPath))
+        require(pathExists(spark, s"$spansPath/_SUCCESS"),
           s"scrub-refit: no frozen scrub model under $scrState — seed one with " +
             "corpus-pipeline incremental=true steps=...,scrub first")
         require(pathExists(spark, s"$scrState/freq"),
@@ -442,23 +439,19 @@ private[graft] object CorpusPipeline {
             "the accumulated evidence was chunked at that width; re-seed to change it"))
         val md = a.opts.get("mindocs").map(_.toLong)
           .getOrElse(readLongSidecar(spark, scrState, "mindocs"))
-        val oldN = spark.read.parquet(spansDataDir).count()
+        val oldN = spark.read.parquet(spansPath).count()
         val hot = PipelineQueries.hotSpansFromFreq(
           spark.read.parquet(s"$scrState/freq")
             .groupBy("h").agg(sum("df").as("df")), md.toInt)
         // a refit REPLACES a live model, so an overwrite onto
         // spansPath that crashes mid-write would leave fitted=false
         // and the next batch would silently RE-SEED from its single
-        // delta. Stage the new table and commit by rename-ASIDE; the
-        // drift baseline and emergent evidence retire only AFTER the
-        // swap.
-        val tmpSpans = s"$spansPath.refit.tmp"
-        rm(a, tmpSpans)
-        locally {
+        // delta. The swap keeps a generation at every step; the drift
+        // baseline and emergent evidence retire only AFTER it.
+        DirSwap.swap(fs, new Path(spansPath)) { dir =>
           import spark.implicits._
-          hot.toSeq.toDF("h").coalesce(1).write.mode("overwrite").parquet(tmpSpans)
+          hot.toSeq.toDF("h").coalesce(1).write.mode("overwrite").parquet(dir.toString)
         }
-        swapInRefit(a, "scrub-refit", tmpSpans, spansPath)
         writeLongSidecar(spark, scrState, "mindocs", md)
         // the stale drift baseline retires with the old model; the
         // emergent evidence is now incorporated — a stale report
@@ -482,19 +475,17 @@ private[graft] object CorpusPipeline {
       val thrPath = s"$mixState/thresholds"
       val ttl = a.opts.getOrElse("leasettl", DefaultLeaseTtlMs.toString).toLong
       withStateLease(spark, a.req("state"), "mix-refit", ttl) { _ =>
-        // an interrupted previous refit (crash between the two swap
-        // renames) leaves the old generation at .old.tmp — recover
-        // its knobs from there; this re-run completes the swap
-        val knobsDir =
-          if (pathExists(spark, s"$thrPath/$KnobsFile")) thrPath
-          else s"$thrPath.old.tmp"
-        require(pathExists(spark, s"$knobsDir/$KnobsFile"),
+        // an interrupted previous refit is finished first, so its
+        // surviving generation's knobs are read at thrPath
+        val fs = new Path(thrPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        DirSwap.repair(fs, new Path(thrPath))
+        require(pathExists(spark, s"$thrPath/$KnobsFile"),
           s"mix-refit: no frozen mix model under $mixState — seed one with " +
             "corpus-pipeline incremental=true steps=...,mix budget=... first")
         require(pathExists(spark, s"$mixState/supply"),
           s"mix-refit: no accumulated supply under $mixState/supply " +
             "(written by every incremental mix batch) — nothing to re-fit from")
-        val oldKnobs = readKnobsFile(spark, knobsDir)
+        val oldKnobs = readKnobsFile(spark, thrPath)
         a.opts.get("tokens").foreach { v =>
           require((if (v == "bpe") 1L else 0L) == oldKnobs("bpemode"),
             s"mix-refit: tokens=$v conflicts with the frozen denomination — " +
@@ -510,36 +501,29 @@ private[graft] object CorpusPipeline {
           .filter(col("lang").isNotNull)
           .groupBy("lang").agg(sum("lang_tokens").as("lang_tokens"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-        val oldN = spark.read.parquet(knobsDir).count()
+        val oldN = spark.read.parquet(thrPath).count()
         val thr = PipelineQueries.mixKeepPoints(supply, budget, alpha)
-        // commit by rename (the scrub-refit discipline): a mid-refit
-        // crash must never leave fitted=false. The knobs file rides
-        // INSIDE the staged dir, so the rename commits thresholds AND
-        // knobs in one metadata op — no window where new thresholds
-        // are live under the old budget/alpha (r11 review finding).
-        val tmpThr = s"$thrPath.refit.tmp"
-        rm(a, tmpThr)
-        locally {
-          import spark.implicits._
-          thr.toDF("lang", "keep_points").coalesce(1)
-            .write.mode("overwrite").parquet(tmpThr)
-        }
-        writeKnobsFile(spark, tmpThr, Seq(
-          "budget" -> budget,
-          "alphamicro" -> math.round(alpha * 1e6),
-          "bpemode" -> oldKnobs("bpemode")))
         // the stale drift baseline retires BEFORE the swap: a crash
         // in the swap window leaves the OLD model baseline-less (the
         // next batch re-establishes it — advisory only), never the
         // NEW model judged against the retired baseline
         rm(a, s"$mixState/seedkeepmicro.txt")
-        // swap by rename-ASIDE, not delete-then-rename: a crash
-        // between the two renames leaves thrPath absent but the old
-        // generation intact at .old.tmp — which the incremental mix
-        // detects and REFUSES on (never a silent re-seed), and a
-        // re-run mix-refit recovers from (it reads knobs from the
-        // aside dir and re-stages from the accumulated supply)
-        swapInRefit(a, "mix-refit", tmpThr, thrPath)
+        // the swap (the scrub-refit discipline): a mid-refit crash
+        // never leaves fitted=false, and a crash while thrPath is
+        // parked is one the incremental mix REFUSES on (never a silent
+        // re-seed) until a re-run mix-refit repairs it. The knobs file
+        // rides INSIDE the swapped dir, so thresholds AND knobs go
+        // live in one rename — no window where new thresholds are
+        // live under the old budget/alpha (r11 review finding).
+        DirSwap.swap(fs, new Path(thrPath)) { dir =>
+          import spark.implicits._
+          thr.toDF("lang", "keep_points").coalesce(1)
+            .write.mode("overwrite").parquet(dir.toString)
+          writeKnobsFile(spark, dir.toString, Seq(
+            "budget" -> budget,
+            "alphamicro" -> math.round(alpha * 1e6),
+            "bpemode" -> oldKnobs("bpemode")))
+        }
         System.err.println(s"[graft] mix-refit: $oldN -> ${thr.size} language " +
           s"thresholds (budget=$budget alpha=$alpha) from the accumulated " +
           "batch supplies")
@@ -686,31 +670,6 @@ private[graft] object CorpusPipeline {
             s"${evict.size} record(s) (journalkeep=$journalKeep)")
       }
     }
-  }
-
-  /** Commit a refit's staged generation by rename-ASIDE: the live
-    * generation parks at `<live>.old.tmp` while the staged one goes
-    * live, so no crash point leaves the model without a surviving
-    * generation — the incremental stage refuses on an orphaned aside
-    * instead of re-seeding, and a re-run refit recovers from it. */
-  private def swapInRefit(a: Args, command: String, staged: String, livePath: String): Unit = {
-    val fs = new Path(livePath).getFileSystem(a.spark.sparkContext.hadoopConfiguration)
-    val aside = new Path(s"$livePath.old.tmp")
-    val live = new Path(livePath)
-    if (fs.exists(live)) {
-      // normal swap: any aside present is a COMPLETED earlier
-      // generation's leftover — safe to clear before reusing
-      // the slot
-      fs.delete(aside, true)
-      require(fs.rename(live, aside), s"$command: rename-aside $livePath failed")
-    }
-    // in the recovery case (live absent, aside = the ONLY
-    // surviving generation) the staged generation must go
-    // live BEFORE the aside is touched: deleting first would
-    // re-open the exact no-model crash window this rename
-    // discipline exists to close
-    require(fs.rename(new Path(staged), live), s"$command: rename $staged -> $livePath failed")
-    fs.delete(aside, true)
   }
 
   private def rm(a: Args, p: String): Unit = {

@@ -325,14 +325,14 @@ object Stages {
     val scrState = s"${r.state}/scrub"
     val spansPath = s"$scrState/spans"
     val isFitted = fitted(r, scrub)
-    // a scrub-refit that crashed between its two swap renames
-    // left the old generation at .old.tmp and no live spans —
-    // NOT a seed situation: re-seeding from this batch would
-    // silently replace a calibration that still exists (the
-    // mix stage's rule); re-run scrub-refit to complete the swap
-    require(isFitted || !pathExists(r.spark, s"$spansPath.old.tmp/_SUCCESS"),
+    // a scrub-refit that crashed mid-swap left the old generation
+    // parked and no live spans — NOT a seed situation: re-seeding
+    // from this batch would silently replace a calibration that
+    // still exists (the mix stage's rule); re-run scrub-refit,
+    // whose repair finishes the swap
+    require(isFitted || !swapInterrupted(r.spark, spansPath),
       s"incremental scrub: an interrupted scrub-refit left the frozen " +
-        s"spans at $spansPath.old.tmp — re-run scrub-refit to " +
+        s"spans parked beside $spansPath — re-run scrub-refit to " +
         "complete the swap before scrubbing further batches")
     val textOnly = r.cur.select("doc_id", "text")
     // every batch (seed included) persists its own span
@@ -543,15 +543,15 @@ object Stages {
     // the LAST artifact a seed writes (after the parquet), so
     // a crashed seed is simply not fitted and re-seeds
     val isFitted = fitted(r, mix)
-    // a refit that crashed between its two swap renames left
-    // the old generation at .old.tmp and no live thresholds —
-    // that is NOT a seed situation: re-seeding from this
-    // batch's supply would silently replace a calibration
-    // that still exists; the remedy is re-running mix-refit
-    // (which recovers from the aside dir)
-    require(isFitted || !pathExists(r.spark, s"$thrPath.old.tmp/$KnobsFile"),
+    // a refit that crashed mid-swap left the old generation
+    // parked and no live thresholds — that is NOT a seed
+    // situation: re-seeding from this batch's supply would
+    // silently replace a calibration that still exists; the
+    // remedy is re-running mix-refit (whose repair restores or
+    // rolls forward the swap)
+    require(isFitted || !swapInterrupted(r.spark, thrPath),
       s"incremental mix: an interrupted mix-refit left the frozen " +
-        s"calibration at $thrPath.old.tmp — re-run mix-refit to " +
+        s"calibration parked beside $thrPath — re-run mix-refit to " +
         "complete the swap before mixing further batches")
     if (!isFitted && pathExists(r.spark, thrPath))
       System.err.println("[graft] corpus-pipeline mix: thresholds " +

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.sources.SmallFile
+import graft.sources.{DirSwap, SmallFile}
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,10 +23,14 @@ private[graft] object StateDir {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** A refit swap crashed with `path` parked and not back
+    * ([[graft.sources.DirSwap.interrupted]]). */
+  def swapInterrupted(spark: SparkSession, path: String): Boolean =
+    DirSwap.interrupted(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration), new Path(path))
+
   def readTextFile(spark: SparkSession, pathStr: String): String = {
     val p = new Path(pathStr)
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
+    SmallFile.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
   /** Atomic small-text publish through [[graft.sources.SmallFile.replace]]

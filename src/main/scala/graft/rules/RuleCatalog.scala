@@ -2,6 +2,7 @@ package graft.rules
 
 import graft.engine.TagRule
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import scala.util.{Failure, Success, Try}
 
 /** Rules-as-data: load tag rules from a DataFrame — the reference
@@ -22,9 +23,12 @@ object RuleCatalog {
 
   /** Parse and validate one rule JSON; Left(error) keeps bad rules
     * out of the engine without killing the batch (reference:
-    * rule_reader.validate_rule_format:206-232). */
+    * rule_reader.validate_rule_format:206-232). The rule is also
+    * compiled, against a literal anchor (building a Column runs no
+    * Spark job), so an unknown operator or a malformed value is caught
+    * here instead of failing the whole run at the engine's compile. */
   def validate(json: String): Either[String, Rule] =
-    Try(RuleJson.parse(json)) match {
+    Try { val r = RuleJson.parse(json); r.compile(lit(0)); r } match {
       case Success(r) => Right(r)
       case Failure(e) => Left(e.getMessage)
     }

@@ -796,9 +796,7 @@ class PqIndex(spark: SparkSession, dir: String,
 
   private def loadModels(): (Pq.Model, Similarity.IvfModel, Option[Array[Float]]) = {
     require(fs.exists(modelPath), s"no models at $modelPath — build() first")
-    val in = fs.open(modelPath)
-    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+    val lines = SmallFile.read(fs, modelPath).linesIterator.filter(_.nonEmpty).toSeq
     val head = lines.head.split(' ').map { kv =>
       val Array(a, b) = kv.split('='); a -> b.toInt
     }.toMap

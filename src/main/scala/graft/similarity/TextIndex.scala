@@ -468,9 +468,7 @@ class TextIndex(spark: SparkSession, dir: String,
 
   private def loadStats(): (Long, Long, Int) = {
     require(fs.exists(statsPath), s"no index stats at $statsPath — build() first")
-    val in = fs.open(statsPath)
-    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-    val kv = text.trim.split(' ').map { s =>
+    val kv = SmallFile.read(fs, statsPath).trim.split(' ').map { s =>
       val Array(a, b) = s.split('='); a -> b.toLong
     }.toMap
     (kv("n_docs"), kv("sum_dl"), kv("term_parts").toInt)

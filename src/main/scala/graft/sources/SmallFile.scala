@@ -42,6 +42,13 @@ private[graft] object SmallFile {
   /** The name prefix of every temp this module writes. */
   val TmpPrefix = ".tmp-"
 
+  /** The whole file as UTF-8 text, through `fs` (a checksummed file
+    * system verifies the bytes). */
+  def read(fs: FileSystem, path: Path): String = {
+    val in = fs.open(path)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+  }
+
   def replace(fs: FileSystem, target: Path, bytes: Array[Byte]): Unit = fs match {
     case local: LocalFileSystem =>
       written(local.getRaw, target, bytes) { tmp =>

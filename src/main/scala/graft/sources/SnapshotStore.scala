@@ -210,9 +210,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
   private def manifestPath(version: Long) = new Path(path, f"$ManifestPrefix$version%012d.txt")
 
   private def readManifest(version: Long): Manifest = {
-    val in = fs.open(manifestPath(version))
-    val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+    val lines = SmallFile.read(fs, manifestPath(version)).linesIterator.filter(_.nonEmpty).toSeq
     val recorded = lines.collectFirst {
       case l if l.startsWith("#buckets=") => l.stripPrefix("#buckets=").toInt
     }
@@ -429,9 +427,7 @@ final class SnapshotStore(spark: SparkSession, path: String, key: String = "user
     * on disk either. */
   private def generation(dataDir: String, named: Seq[String]): Generation = {
     val recorded = try {
-      val in = fs.open(new Path(s"$path/$dataDir/$FilesFile"))
-      val lines = try new String(in.readAllBytes(), StandardCharsets.UTF_8).linesIterator.toVector
-        finally in.close()
+      val lines = SmallFile.read(fs, new Path(s"$path/$dataDir/$FilesFile")).linesIterator.toVector
       Some(Generation(
         DataType.fromJson(lines.head.stripPrefix("#schema=")).asInstanceOf[StructType],
         lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")).map { l =>

@@ -49,14 +49,13 @@ import java.nio.charset.StandardCharsets
   * ~64 MiB partitions). An EXPLICIT non-zero value that disagrees
   * with the recorded one still refuses loudly: hashing probes with a
   * different modulus than the writer silently misses candidates. */
-final class SigIndex(spark: SparkSession, dir: String, idCol: String,
-                     idBuckets: Int = 32, bandParts: Int = 0) {
+final class SigIndex(spark: SparkSession, dir: String, idCol: String, bandParts: Int = 0) {
 
   private[graft] val sigs =
-    new graft.sources.SnapshotStore(spark, s"$dir/sigs", key = idCol, buckets = idBuckets)
+    new graft.sources.SnapshotStore(spark, s"$dir/sigs", key = idCol, buckets = SigIndex.IdBuckets)
   private[graft] val bands =
     new graft.sources.SnapshotStore(spark, s"$dir/bands", key = "bk",
-      buckets = idBuckets, partitionCol = Some("hb"))
+      buckets = SigIndex.IdBuckets, partitionCol = Some("hb"))
 
   // hb is baked into the layout at write time: a reader MUST hash its
   // probe keys with the same modulus or pruning silently misses
@@ -67,12 +66,8 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
   private def fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def readMetaLine(prefix: String): Option[Int] =
     if (!fs.exists(metaPath)) None
-    else {
-      val in = fs.open(metaPath)
-      val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-      text.linesIterator.collectFirst {
-        case l if l.startsWith(s"$prefix=") => l.stripPrefix(s"$prefix=").toInt
-      }
+    else SmallFile.read(fs, metaPath).linesIterator.collectFirst {
+      case l if l.startsWith(s"$prefix=") => l.stripPrefix(s"$prefix=").toInt
     }
   private def readMeta(): Option[Int] = readMetaLine("bandParts")
   /** The banding width (bands per doc) the first writer froze — like
@@ -378,6 +373,10 @@ final class SigIndex(spark: SparkSession, dir: String, idCol: String,
 }
 
 object SigIndex {
+  /** Key buckets of both stores. Every index written so far has 32;
+    * whether store bytes should size it instead is open. */
+  val IdBuckets = 32
+
   /** Band-partition guideline for a GROWING index, sized for the
     * TARGET corpus (the layout freezes at the first write): ~16 band
     * rows of ~40 B per doc, one partition per 64 MiB of band rows —

@@ -1719,6 +1719,8 @@ class MainSpec extends SparkSpec {
       s"refit covers every language the batches supplied: $rFit")
     assert(!Files.exists(java.nio.file.Paths.get(
       s"$base/state/mix/thresholds.refit.tmp")), "staging dir renamed away")
+    assert(new java.io.File(s"$base/state/mix").list().forall(!_.startsWith(".swap-")),
+      "swap's writing, staged and parked dirs renamed away")
     val eFitTok = intercept[IllegalArgumentException](Main.runPipeline(spark,
       Seq("mix-refit", s"state=$base/state", "tokens=bpe")))
     assert(eFitTok.getMessage.contains("frozen denomination"), eFitTok.getMessage)
@@ -2307,6 +2309,8 @@ class MainSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(s"$base/state/scrub/spans/_SUCCESS")))
     assert(!Files.exists(java.nio.file.Paths.get(s"$base/state/scrub/spans.refit.tmp")),
       "refit staging dir must be renamed away")
+    assert(new java.io.File(s"$base/state/scrub").list().forall(!_.startsWith(".swap-")),
+      "swap's writing, staged and parked dirs must be renamed away")
     // future batches scrub the formerly-emergent template; history
     // stays as scrubbed (the refit governs forward, the CDC contract)
     val fourthP = write("fourth", Seq(doc(300L, tplY)))

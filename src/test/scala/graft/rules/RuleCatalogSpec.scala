@@ -13,11 +13,17 @@ class RuleCatalogSpec extends SparkSpec {
     val df = Seq(
       (1, "a", "c1", "t1", """{"conditions":[{"field":"x","operator":">","value":1}]}"""),
       (2, "b", "c1", "t2", """{"conditions":[{"field":"y","operator":"in","value":[1,2]}]}"""),
-      (3, "bad", "c1", "t1", """{"conditions":[{"operator":">"}]}"""))
+      (3, "bad", "c1", "t1", """{"conditions":[{"operator":">"}]}"""),
+      // parse, but cannot compile: a scalar where [lo, hi] is due, and
+      // an operator the engine does not know
+      (4, "scalar_range", "c1", "t1", """{"conditions":[{"field":"x","operator":"in_range","value":5}]}"""),
+      (5, "unknown_op", "c1", "t1", """{"conditions":[{"field":"x","operator":"near","value":1}]}"""))
       .toDF("tag_id", "tag_name", "tag_category", "source_table", "rule_json")
     val (entries, invalid) = RuleCatalog.fromDataFrame(df)
     assert(entries.map(_.tagRule.tagId) == Seq(1, 2))
-    assert(invalid.map(_._1) == Seq(3) && invalid.head._2.contains("field+operator"))
+    assert(invalid.map(_._1) == Seq(3, 4, 5) && invalid.head._2.contains("field+operator"))
+    assert(invalid(1)._2.contains("expected [lo, hi]"), invalid(1)._2)
+    assert(invalid(2)._2.contains("unsupported operator"), invalid(2)._2)
     assert(RuleCatalog.byTable(entries).keySet == Set("t1", "t2"))
     assert(RuleCatalog.requiredFields(entries) == Map("t1" -> Seq("x"), "t2" -> Seq("y")))
   }

@@ -1145,6 +1145,59 @@ class SnapshotStoreSpec extends SparkSpec {
       "the masked key's superseded row stays hidden")
   }
 
+  /** Cut `file` to half its bytes. */
+  private def truncate(file: Path): Unit = {
+    val fsys = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fsys.open(file)
+    val bytes = try in.readAllBytes() finally in.close()
+    val out = fsys.create(file, true)
+    try out.write(bytes.take(bytes.length / 2)) finally out.close()
+  }
+
+  test("a torn .mask of a live masking generation fails read, readForKeys and the next upsert; " +
+       "the superseded row is never returned") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_torn_mask").toString + "/snap"
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    store.overwrite((1L to 100L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    store.upsert(Seq((7L, "u7")).toDF("user_id", "v"))
+    val gen = masking(store).head
+    truncate(new Path(s"$dir/$gen/.mask"))
+    val reopened = new SnapshotStore(spark, dir, buckets = 4)
+    val version = reopened.versions().last
+    for ((what, op) <- Seq[(String, () => Any)](
+        "read" -> (() => reopened.read().map(_.collect())),
+        "readForKeys" -> (() => reopened.readForKeys(Seq(7L, 8L).toDF("user_id")).map(_.collect())),
+        "upsert" -> (() => reopened.upsert(Seq((7L, "u7b"), (8L, "u8")).toDF("user_id", "v"))))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("superseded"), s"$what: ${e.getMessage}")
+    }
+    assert(reopened.versions().last == version, "the failed upsert published no version")
+  }
+
+  test("a torn .blooms counts as a hit on every key; an upsert of a stored key still leaves one row") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_torn_bloom").toString + "/snap"
+    new SnapshotStore(spark, dir, buckets = 4)
+      .overwrite((1L to 200L).map(i => (i, s"v$i")).toDF("user_id", "v"))
+    val fsys = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val blooms = fsys.listStatus(new Path(dir)).filter(_.getPath.getName.startsWith("data-"))
+      .map(st => new Path(st.getPath, ".blooms")).filter(fsys.exists)
+    assert(blooms.nonEmpty, "setup: the base generation carries blooms")
+    blooms.foreach(truncate)
+    val store = new SnapshotStore(spark, dir, buckets = 4)
+    // fresh keys: no bucket is cleared by a torn filter
+    store.upsert(Seq((901L, "n1"), (902L, "n2"), (903L, "n3")).toDF("user_id", "v"))
+    assert(store.lastProbeStats._1 > 0 && store.lastProbeStats._2 == 0,
+      s"a torn bloom must count as a hit, got ${store.lastProbeStats}")
+    store.upsert(Seq((7L, "updated")).toDF("user_id", "v"))
+    val got = store.read().get
+    assert(got.filter(col("user_id") === 7L).select("v").as[String].collect().toSeq == Seq("updated"))
+    assert(got.count() == 203L)
+  }
+
   test("writer job counts: each writer runs at most its pinned number of Spark jobs") {
     val s = spark
     import s.implicits._
